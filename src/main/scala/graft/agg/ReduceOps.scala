@@ -88,12 +88,13 @@ object GenericMapTask {
   * executable specifications of the optimized pipelines. */
 object ReferenceTasks {
 
-  /** map1 (tasks.c:13-45): ASCII letter / digit / other character counts. */
+  /** map1 (tasks.c:13-45): ASCII letter / digit / other character counts,
+    * in code points like [[graft.operators.MapReduceTasks.task1]]. */
   def map1(doc: Doc): Seq[KeyValue] = {
     var letters = 0
     var numbers = 0
     var others = 0
-    doc.content.foreach { c =>
+    doc.content.codePoints().forEach { c =>
       if ((c >= 'a' && c <= 'z') || (c >= 'A' && c <= 'Z')) letters += 1
       else if (c >= '0' && c <= '9') numbers += 1
       else others += 1
@@ -114,10 +115,11 @@ object ReferenceTasks {
   }
 
   /** map3 (tasks.c:98-133): emits we/love/cs/3210 cycled len%49 times,
-    * value 1 each. */
+    * value 1 each, len in code points like
+    * [[graft.operators.MapReduceTasks.task3]]. */
   def map3(doc: Doc): Seq[KeyValue] = {
     val keys = Seq("we", "love", "cs", "3210")
-    val count = doc.content.length % 49
+    val count = doc.content.codePointCount(0, doc.content.length) % 49
     Seq.fill(count)(keys).flatten.map(KeyValue(_, 1))
   }
 }

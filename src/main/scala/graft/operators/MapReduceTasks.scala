@@ -74,10 +74,13 @@ object MapReduceTasks {
 
   /** Canonical MapReduce word count over whitespace-delimited tokens —
     * the generic flatMap→reduce shape the reference's pluggable map-fn
-    * surface (main.cpp:83-95) exists to serve. */
+    * surface (main.cpp:83-95) exists to serve. Words come from the native
+    * `word_tokens` expression: maximal runs of non-whitespace, whitespace
+    * being Java regex `\s` (ASCII only), the same words as
+    * `filter(split(content, '\\s+'), x -> x != '')` without the regex
+    * split, the empty tokens and the filter. */
   def wordCount(docs: DataFrame): DataFrame =
-    docs.select(explode(split(col("content"), "\\s+")).as("key"))
-      .filter(length(col("key")) > 0)
+    docs.select(explode(expr("word_tokens(content)")).as("key"))
       .groupBy("key")
       .agg(count(lit(1)).as("value"))
       .orderBy("key")

@@ -1,11 +1,13 @@
 package graft.sources.v2
 
+import java.io.IOException
 import java.util.{Map => JMap, UUID}
 
-import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
 
+import org.apache.spark.sql.GraftOutputMetrics
 import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.classic.SparkSession
 import org.apache.spark.sql.connector.catalog.{SupportsWrite, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.Transform
 import org.apache.spark.sql.connector.write.{
@@ -15,6 +17,8 @@ import org.apache.spark.sql.connector.write.{
 import org.apache.spark.sql.sources.DataSourceRegister
 import org.apache.spark.sql.types.{IntegerType, LongType, StringType, StructType}
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
+import org.apache.spark.unsafe.types.UTF8String
+import org.apache.spark.util.SerializableConfiguration
 
 /** DataSource V2 WRITE path for the reference engine's output format —
   * `"<key> <value>\n"` text lines (main.cpp:171) — the sink counterpart of
@@ -29,10 +33,15 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
   *    (rename-based two-phase commit — the same contract Spark's file
   *    sources use);
   *  - all I/O goes through the Hadoop FileSystem API, so the sink works
-  *    unchanged against HDFS/S3A/local paths at cluster scale;
+  *    unchanged against HDFS/S3A/local paths at cluster scale. The Hadoop
+  *    conf is the session's (`sessionState.newHadoopConf()`, so
+  *    `spark.hadoop.*` settings apply), built once on the driver and
+  *    shipped to the writers inside the writer factory;
+  *  - each writer records its bytes and rows in the task's output metrics;
   *  - one output file per partition: the file count tracks the upstream
-  *    partitioning (the scale path), while golden single-file parity is
-  *    just `coalesce(1)` upstream, exactly like [[graft.sources.TextSink]].
+  *    partitioning (the scale path), while a single file is `coalesce(1)`
+  *    upstream. [[graft.sources.TextSink]] writes both of its modes
+  *    through this sink.
   *
   * Schema contract: exactly (key: string, value: int|long) — validated at
   * planning time, not discovered row-by-row at runtime.
@@ -84,9 +93,10 @@ private[v2] class KvWriteBuilder(path: String, info: LogicalWriteInfo)
   override def build(): Write = {
     KvV2Sink.validate(info.schema())
     val intValue = info.schema().fields(1).dataType == IntegerType
+    val conf = new SerializableConfiguration(SparkSession.active.sessionState.newHadoopConf())
     new Write {
       override def toBatch: BatchWrite =
-        new KvBatchWrite(path, doTruncate, intValue)
+        new KvBatchWrite(path, doTruncate, intValue, conf)
     }
   }
 }
@@ -94,17 +104,17 @@ private[v2] class KvWriteBuilder(path: String, info: LogicalWriteInfo)
 private[v2] case class KvCommitMessage(tempFile: String, rows: Long)
     extends WriterCommitMessage
 
-private[v2] class KvBatchWrite(path: String, truncate: Boolean, intValue: Boolean)
-    extends BatchWrite {
+private[v2] class KvBatchWrite(path: String, truncate: Boolean, intValue: Boolean,
+    conf: SerializableConfiguration) extends BatchWrite {
   private val epoch = UUID.randomUUID().toString
   private def tempDir = new Path(path, s"_temporary/$epoch")
 
   override def createBatchWriterFactory(info: PhysicalWriteInfo): DataWriterFactory =
-    new KvWriterFactory(path, epoch, intValue)
+    new KvWriterFactory(path, epoch, intValue, conf)
 
   override def commit(messages: Array[WriterCommitMessage]): Unit = {
     val out = new Path(path)
-    val fs = out.getFileSystem(new Configuration())
+    val fs = out.getFileSystem(conf.value)
     fs.mkdirs(out)
     if (truncate) {
       val existing = Option(fs.globStatus(new Path(out, "part-*"))).getOrElse(Array())
@@ -112,47 +122,55 @@ private[v2] class KvBatchWrite(path: String, truncate: Boolean, intValue: Boolea
     }
     messages.foreach { case KvCommitMessage(tmp, _) =>
       val src = new Path(tmp)
-      fs.rename(src, new Path(out, src.getName))
+      if (!fs.rename(src, new Path(out, src.getName)))
+        throw new IOException(s"graft-kv: could not move $src into $out")
     }
     fs.delete(tempDir, true)
   }
 
   override def abort(messages: Array[WriterCommitMessage]): Unit = {
-    val fs = tempDir.getFileSystem(new Configuration())
+    val fs = tempDir.getFileSystem(conf.value)
     fs.delete(tempDir, true)
   }
 }
 
-private[v2] class KvWriterFactory(path: String, epoch: String, intValue: Boolean)
-    extends DataWriterFactory {
+private[v2] class KvWriterFactory(path: String, epoch: String, intValue: Boolean,
+    conf: SerializableConfiguration) extends DataWriterFactory {
   override def createWriter(partitionId: Int, taskId: Long): DataWriter[InternalRow] =
-    new KvDataWriter(path, epoch, partitionId, taskId, intValue)
+    new KvDataWriter(path, epoch, partitionId, taskId, intValue, conf)
 }
 
 /** Streams rows to `_temporary/<epoch>/part-<partition>-<task>` — constant
   * memory, no buffering of the partition. The task file name includes the
   * task attempt id, so a speculative duplicate writes a DIFFERENT temp
-  * file and only the committed attempt's file is ever renamed in. */
+  * file and only the committed attempt's file is ever renamed in. Keys are
+  * written as their UTF-8 bytes, unchanged. */
 private[v2] class KvDataWriter(path: String, epoch: String, partitionId: Int,
-    taskId: Long, intValue: Boolean) extends DataWriter[InternalRow] {
+    taskId: Long, intValue: Boolean, conf: SerializableConfiguration)
+    extends DataWriter[InternalRow] {
   private val tmp =
     new Path(path, f"_temporary/$epoch/part-$partitionId%05d-$taskId")
-  private val fs = tmp.getFileSystem(new Configuration())
+  private val fs = tmp.getFileSystem(conf.value)
   private val out = fs.create(tmp, true)
   private var rows = 0L
+  private var bytes = 0L
 
   override def write(row: InternalRow): Unit = {
-    val key = if (row.isNullAt(0)) "" else row.getUTF8String(0).toString
+    val key = if (row.isNullAt(0)) UTF8String.EMPTY_UTF8 else row.getUTF8String(0)
     val value =
       if (row.isNullAt(1)) 0L
       else if (intValue) row.getInt(1).toLong
       else row.getLong(1)
-    out.write(s"$key $value\n".getBytes(java.nio.charset.StandardCharsets.UTF_8))
+    val rest = s" $value\n".getBytes(java.nio.charset.StandardCharsets.US_ASCII)
+    key.writeTo(out)
+    out.write(rest)
     rows += 1
+    bytes += key.numBytes + rest.length
   }
 
   override def commit(): WriterCommitMessage = {
     out.close()
+    GraftOutputMetrics.add(bytes, rows)
     KvCommitMessage(tmp.toString, rows)
   }
 

@@ -23,4 +23,15 @@ object SparkSpec {
 trait SparkSpec extends AnyFunSuite {
   lazy val spark: SparkSession = SparkSpec.spark
   def sfDir: String = SparkSpec.sfDir
+
+  /** Runs `body` with the given session confs set, restoring them after. */
+  def withConf[T](pairs: (String, String)*)(body: => T): T = {
+    val old = pairs.map { case (k, _) => k -> spark.conf.getOption(k) }
+    pairs.foreach { case (k, v) => spark.conf.set(k, v) }
+    try body
+    finally old.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None)    => spark.conf.unset(k)
+    }
+  }
 }

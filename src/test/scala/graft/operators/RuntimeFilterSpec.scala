@@ -16,16 +16,6 @@ import graft.core.Tables
   */
 class RuntimeFilterSpec extends SparkSpec {
 
-  private def withConf[T](pairs: (String, String)*)(body: => T): T = {
-    val old = pairs.map { case (k, _) => k -> spark.conf.getOption(k) }
-    pairs.foreach { case (k, v) => spark.conf.set(k, v) }
-    try body
-    finally old.foreach {
-      case (k, Some(v)) => spark.conf.set(k, v)
-      case (k, None)    => spark.conf.unset(k)
-    }
-  }
-
   test("a selective orders filter injects a bloom runtime filter into the lineitem scan") {
     withConf(
       // force the shuffle-join regime of a real cluster (no broadcast),

@@ -18,16 +18,6 @@ import graft.SparkSpec
 class SkewJoinSpec extends SparkSpec {
   import spark.implicits._
 
-  private def withConf[T](pairs: (String, String)*)(body: => T): T = {
-    val old = pairs.map { case (k, _) => k -> spark.conf.getOption(k) }
-    pairs.foreach { case (k, v) => spark.conf.set(k, v) }
-    try body
-    finally old.foreach {
-      case (k, Some(v)) => spark.conf.set(k, v)
-      case (k, None)    => spark.conf.unset(k)
-    }
-  }
-
   test("AQE splits the skewed partition of a hot-key sort-merge join at runtime") {
     val dir = Files.createTempDirectory("graft-skew").toString
     // key 0 carries 150k rows; 50 other keys carry 200 each

@@ -2,15 +2,23 @@ package graft.sources
 
 import java.nio.file.{Files, Path, Paths}
 
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.DataFrame
+
 import graft.SparkSpec
+import graft.agg.{GenericMapTask, ReduceOps, ReferenceTasks}
+import graft.core.Doc
 import graft.functions.Registry
 import graft.operators.MapReduceTasks
 
-/** The document scan, the three map tasks and the golden-file sink over the
-  * in-repo fixture corpus (`src/test/resources/fixture`, derivation in its
-  * `corpus/notes.md`): multi-byte UTF-8, CRLF, an empty document, and
-  * entries the scan must ignore. Runs on any host. */
+/** The document scan, the three map tasks (native and generic), the word
+  * count and both sinks over the in-repo fixture corpus
+  * (`src/test/resources/fixture`, derivation in its `corpus/notes.md`):
+  * multi-byte UTF-8, CRLF, an empty document, and entries the scan must
+  * ignore. Runs on any host. */
 class FixtureCorpusSpec extends SparkSpec {
+  import spark.implicits._
 
   private val root = Paths.get(getClass.getResource("/fixture").toURI)
   private val corpus = root.resolve("corpus")
@@ -42,13 +50,56 @@ class FixtureCorpusSpec extends SparkSpec {
     assert(empty.head.getString(1) == "")
   }
 
+  private def expected(name: String): String =
+    new String(bytes(root.resolve(s"expected/$name.output")), "UTF-8")
+
+  private def golden(df: DataFrame): String = {
+    val out = Files.createTempDirectory("graft-fixture").resolve("golden.output")
+    TextSink.writeGoldenFile(df, out.toString)
+    new String(bytes(out), "UTF-8")
+  }
+
+  private def parts(dir: Path): Seq[Path] =
+    Files.list(dir).iterator().asScala.filter(_.getFileName.toString.startsWith("part-"))
+      .toSeq.sortBy(_.getFileName.toString)
+
   for ((task, fn) <- Seq(
       1 -> MapReduceTasks.task1 _, 2 -> MapReduceTasks.task2 _, 3 -> MapReduceTasks.task3 _))
     test(s"task $task through TextSink.writeGoldenFile byte-matches expected/$task.output") {
       Registry.register(spark)
-      val out = Files.createTempDirectory("graft-fixture").resolve(s"$task.output")
-      TextSink.writeGoldenFile(fn(docs()), out.toString)
-      assert(new String(bytes(out), "UTF-8") ==
-        new String(bytes(root.resolve(s"expected/$task.output")), "UTF-8"))
+      assert(golden(fn(docs())) == expected(task.toString))
     }
+
+  for ((task, fn) <- Seq(
+      1 -> ReferenceTasks.map1 _, 2 -> ReferenceTasks.map2 _, 3 -> ReferenceTasks.map3 _))
+    test(s"generic map$task + sumReduce through writeGoldenFile byte-matches expected/$task.output") {
+      val typed = docs().select($"doc_id".as("docId"), $"content").as[Doc]
+      assert(golden(ReduceOps.sumReduce(GenericMapTask(fn)(typed)).toDF()) == expected(task.toString))
+    }
+
+  test("task 1 through coalesce(1) + graft-kv byte-matches expected/1.output") {
+    Registry.register(spark)
+    val dir = Files.createTempDirectory("graft-fixture-kv")
+    MapReduceTasks.task1(docs()).coalesce(1)
+      .write.format("graft-kv").mode("overwrite").save(dir.toString)
+    val written = parts(dir)
+    assert(written.size == 1, written)
+    assert(new String(bytes(written.head), "UTF-8") == expected("1"))
+  }
+
+  test("wordCount through TextSink.writeGoldenFile byte-matches expected/wordcount.output") {
+    Registry.register(spark)
+    assert(golden(MapReduceTasks.wordCount(docs())) == expected("wordcount"))
+  }
+
+  test("TextSink.write part files concatenate in name order to the sorted stream") {
+    Registry.register(spark)
+    val dir = Files.createTempDirectory("graft-fixture-parts").resolve("out")
+    withConf("spark.sql.adaptive.coalescePartitions.enabled" -> "false") {
+      TextSink.write(MapReduceTasks.task2(docs()), dir.toString)
+    }
+    val written = parts(dir)
+    assert(written.size > 1, written)
+    assert(written.map(p => new String(bytes(p), "UTF-8")).mkString == expected("2"))
+  }
 }

@@ -3,15 +3,11 @@ package graft.sources.v2
 import java.io.FileNotFoundException
 import java.nio.file.{Files, Path}
 
-import scala.collection.mutable
-
-import org.apache.spark.ListenerBusAccess
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageSubmitted, SparkListenerTaskEnd}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.datasources.v2.BatchScanExec
 import org.apache.spark.sql.functions._
 
-import graft.SparkSpec
+import graft.{JobProbe, SparkSpec}
 import graft.sources.DocSource
 
 /** How the `graft-docs` scan behind DocSource.read plans and fails: one
@@ -39,39 +35,8 @@ class DocScanSpec extends SparkSpec {
     df.select(spark_partition_id().as("p"), octet_length(col("content")).as("n"))
       .groupBy("p").agg(sum("n")).collect().map(_.getLong(1)).toSeq
 
-  /** Runs `body` with a listener attached; returns the jobs it started and
-    * the summed `bytesRead` of their tasks. The listener's events arrive on
-    * one bus thread, and draining the bus publishes them to this one. */
-  private def observed(body: => Unit): (Int, Long) = {
-    val sc = spark.sparkContext
-    val group = s"docscan-${System.nanoTime()}"
-    var jobs = 0
-    var bytes = 0L
-    val stages = mutable.Set.empty[Int]
-    val listener = new SparkListener {
-      private def ours(p: java.util.Properties) =
-        p != null && p.getProperty("spark.jobGroup.id") == group
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        if (ours(e.properties)) jobs += 1
-      override def onStageSubmitted(e: SparkListenerStageSubmitted): Unit =
-        if (ours(e.properties)) stages += e.stageInfo.stageId
-      override def onTaskEnd(e: SparkListenerTaskEnd): Unit =
-        if (stages(e.stageId)) bytes += e.taskMetrics.inputMetrics.bytesRead
-    }
-    sc.addSparkListener(listener)
-    sc.setJobGroup(group, "DocScanSpec")
-    try body
-    finally {
-      sc.clearJobGroup()
-      ListenerBusAccess.drain(sc)
-      sc.removeSparkListener(listener)
-    }
-    (jobs, bytes)
-  }
-
   test("DocSource.read over more than 32 files starts no Spark job") {
-    val (jobs, _) = observed { DocSource.read(spark, dir.toString, 40) }
-    assert(jobs == 0)
+    assert(JobProbe(spark) { DocSource.read(spark, dir.toString, 40) }.jobs == 0)
   }
 
   test("plans min(defaultParallelism, numFiles) partitions within the LPT bound") {
@@ -90,19 +55,18 @@ class DocScanSpec extends SparkSpec {
   test("spark.sql.files.maxPartitionBytes raises the bin count, capped at the documents") {
     val key = "spark.sql.files.maxPartitionBytes"
     val total = sizes(40).sum
-    val before = spark.conf.getOption(key)
-    try {
-      spark.conf.set(key, ((total + 9) / 10).toString)
+    withConf(key -> ((total + 9) / 10).toString) {
       assert(scanOf(DocSource.read(spark, dir.toString, 40)).inputRDD.getNumPartitions == 10)
-      spark.conf.set(key, "1")
+    }
+    withConf(key -> "1") {
       assert(scanOf(DocSource.read(spark, dir.toString, 40)).inputRDD.getNumPartitions == 40)
-    } finally before.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+    }
   }
 
   test("summed task bytesRead equals the selected files' bytes") {
     val df = DocSource.read(spark, dir.toString, 40)
-    val (_, bytes) = observed { df.write.format("noop").mode("overwrite").save() }
-    assert(bytes == sizes(40).sum)
+    val probed = JobProbe(spark) { df.write.format("noop").mode("overwrite").save() }
+    assert(probed.bytesRead == sizes(40).sum)
   }
 
   test("pack is LPT: largest first into the least-loaded bin, no bin empty") {
