@@ -3,7 +3,7 @@ package graft.multimodal
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.core.Tables
+import graft.core.{BucketedCache, Tables}
 
 /** Multimodal column support: image/audio/video payloads ride through the
   * engine as opaque `binary` columns with typed metadata, and
@@ -307,18 +307,6 @@ object GifFramesDecoder extends Serializable {
 }
 
 object Multimodal {
-
-  /** Corpus fingerprint key for the media-derived caches: every media
-    * table is a pure function of `documents` (ImageSynth / AudioSynth
-    * keyed by doc_id), so the documents fingerprint uniquely keys them —
-    * the same docfp memo the substring/dup-cluster indexes use. */
-  private def corpusKey(spark: SparkSession, dir: String): String =
-    graft.core.ModelMemo.cached(s"docfp:$dir") {
-      val fp = Tables.documents(spark, dir)
-        .agg(count(lit(1)), max(col("doc_id")), sum(col("n_chars"))).head()
-      graft.core.BucketedCache.fingerprint(
-        dir, fp.getLong(0), fp.getLong(1), fp.getLong(2))
-    }
 
   /** Synthesizes a media table from `documents` (no binary table ships in
     * the testdata): payload = UTF-8 bytes of the text, media_type cycles
@@ -716,10 +704,12 @@ object Multimodal {
     * dedups then read 5-long fingerprint rows. The gated mm_ahash /
     * mm_dhash witnesses keep decoding inline, so the codecs stay
     * exercised per rep; fingerprint VALUES are identical by construction
-    * (same decode, same halves), so both dedup gates stay hash-green. */
+    * (same decode, same halves), so both dedup gates stay hash-green.
+    * Like every media artifact it is keyed on the documents table, from
+    * which the media tables are synthesized. */
   private def imgFingerprints(spark: SparkSession, dir: String): DataFrame =
-    graft.core.BucketedCache.getOrBuild(
-      spark, "graft_imgfp", corpusKey(spark, dir), 16, "doc_id", "doc_id") {
+    BucketedCache.getOrBuild(spark, "graft_imgfp",
+      BucketedCache.key(spark, dir, "documents"), "doc_id", "doc_id") {
       imagePhash128s(spark, dir).toDF()
     }
 
@@ -1357,8 +1347,8 @@ object Multimodal {
     // the landmark index and the excerpt probe are hash arithmetic over
     // the cached energies. mm_audio_fingerprint stays the inline decode
     // witness; values identical by construction.
-    val fps = graft.core.BucketedCache.getOrBuild(
-      spark, "graft_afp", corpusKey(spark, dir), 16, "doc_id", "doc_id") {
+    val fps = BucketedCache.getOrBuild(spark, "graft_afp",
+      BucketedCache.key(spark, dir, "documents"), "doc_id", "doc_id") {
       audioFpFullTable(spark, dir).toDF()
     }
     val idx = fpIndex(fps)

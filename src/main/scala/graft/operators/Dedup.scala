@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.core.Tables
+import graft.core.{BucketedCache, Tables}
 
 /** Training-data deduplication over the `documents` table: exact
   * (content-hash), near-dup via n-gram Jaccard (inverted shingle index),
@@ -56,16 +56,6 @@ object Dedup {
       .select(col("doc_id"), split(col("text"), "\\s+").as("toks"))
   }
 
-  /** Corpus fingerprint for the dedup-family cache keys (same docfp memo
-    * the substring/media indexes share). */
-  private[operators] def corpusKey(spark: SparkSession, dir: String): String =
-    graft.core.ModelMemo.cached(s"docfp:$dir") {
-      val fp = Tables.documents(spark, dir)
-        .agg(count(lit(1)), max(col("doc_id")), sum(col("n_chars"))).head()
-      graft.core.BucketedCache.fingerprint(
-        dir, fp.getLong(0), fp.getLong(1), fp.getLong(2))
-    }
-
   /** Distinct (doc_id, h) rows where h = h60 of a word 3-gram shingle.
     * One codegen pass ([[graft.functions.ShingleHashes]]) — no 3-gram
     * strings are ever materialized; values are definitionally
@@ -79,8 +69,8 @@ object Dedup {
     * trigramCoverage all arrive pre-partitioned on `h`. */
   private[operators] def shingleHashes(spark: SparkSession, dir: String): DataFrame = {
     graft.functions.Registry.register(spark)
-    graft.core.BucketedCache.getOrBuild(
-      spark, "graft_shidx", corpusKey(spark, dir), 32, "h", "h") {
+    BucketedCache.getOrBuild(spark, "graft_shidx",
+      BucketedCache.key(spark, dir, "documents"), "h", "h") {
       tokenized(spark, dir)
         .select(col("doc_id"), explode(expr("shingle_hashes(toks)")).as("h"))
         .distinct()
@@ -104,8 +94,8 @@ object Dedup {
     * containment cutoff, and the prefix self-joins arrive pre-partitioned
     * on the bucket key. */
   private[operators] def orderedShingles(spark: SparkSession, dir: String): DataFrame =
-    graft.core.BucketedCache.getOrBuild(
-      spark, "graft_shord", corpusKey(spark, dir), 32, "h", "h") {
+    BucketedCache.getOrBuild(spark, "graft_shord",
+      BucketedCache.key(spark, dir, "documents"), "h", "h") {
       val sh = shingleHashes(spark, dir)
       val dfc = sh.groupBy("h").agg(count(lit(1)).as("df"))
         .filter(col("df") <= ShingleMaxDf)
@@ -121,8 +111,8 @@ object Dedup {
     * family, bucketed on doc_id so both per-pair hs joins read
     * pre-partitioned state instead of re-collecting the sets per rep. */
   private[operators] def shingleSets(spark: SparkSession, dir: String): DataFrame =
-    graft.core.BucketedCache.getOrBuild(
-      spark, "graft_shset", corpusKey(spark, dir), 32, "doc_id", "doc_id") {
+    BucketedCache.getOrBuild(spark, "graft_shset",
+      BucketedCache.key(spark, dir, "documents"), "doc_id", "doc_id") {
       orderedShingles(spark, dir).groupBy("doc_id")
         .agg(sort_array(collect_list(col("h"))).as("hs"))
     }
@@ -149,7 +139,13 @@ object Dedup {
     * Because rare shingles sort first, the quadratic hot-shingle blowup of
     * a naive shingle join largely disappears on its own; the residual maxDf
     * cap stays as a hard guard. */
-  def ngramJaccard(spark: SparkSession, dir: String): DataFrame = {
+  def ngramJaccard(spark: SparkSession, dir: String): DataFrame =
+    jaccardPairs(spark, dir).orderBy("doc_a", "doc_b")
+
+  /** The unsorted (doc_a, doc_b, jaccard) relation of [[ngramJaccard]];
+    * the graft_dupcc build reads it directly, since the CC union and
+    * aggregation discard any order. */
+  private def jaccardPairs(spark: SparkSession, dir: String): DataFrame = {
     val t = 0.8
     // r17: prefix state from the graft_shord ingest table (df agg +
     // df-cap join + per-doc ordering window paid once per corpus), sets
@@ -178,7 +174,6 @@ object Dedup {
         (col("common").cast("double") /
           (col("ca") + col("cb") - col("common"))).as("jaccard"))
       .filter(col("jaccard") >= t)
-      .orderBy("doc_a", "doc_b")
   }
 
   /** The production dedup CASCADE as one attrition report: stage 1 exact
@@ -291,8 +286,8 @@ object Dedup {
     // verify joins arrive bucket-aligned. dedup_incremental keeps the
     // whole signature computation inline per rep as the gated witness,
     // and every consumer stays oracle-gated against raw text.
-    graft.core.BucketedCache.getOrBuild(
-      spark, "graft_mhsig", corpusKey(spark, dir), 32, "doc_id", "doc_id") {
+    BucketedCache.getOrBuild(spark, "graft_mhsig",
+      BucketedCache.key(spark, dir, "documents"), "doc_id", "doc_id") {
       minhashPerDocFresh(spark, dir)
     }
 
@@ -467,8 +462,8 @@ object Dedup {
     // token ran per rep before, for a table of (doc_id, sh) longs. The
     // 32-bit declared-baseline twin and the dedup_simhash group query
     // keep fingerprinting inline as the decode witnesses.
-    val sim = graft.core.BucketedCache.getOrBuild(
-      spark, "graft_sh64", corpusKey(spark, dir), 16, "doc_id", "doc_id") {
+    val sim = BucketedCache.getOrBuild(spark, "graft_sh64",
+      BucketedCache.key(spark, dir, "documents"), "doc_id", "doc_id") {
       tokenized(spark, dir)
         .select(col("doc_id"), expr("simhash64(toks)").as("sh"))
     }
@@ -536,10 +531,10 @@ object Dedup {
     * label table — the duplicate-cluster index a deployment maintains at
     * ingest. */
   private[operators] def ccLabels(spark: SparkSession, dir: String): DataFrame = {
-    graft.core.BucketedCache.getOrBuild(
-      spark, "graft_dupcc", corpusKey(spark, dir), 32, "doc_id", "doc_id") {
+    BucketedCache.getOrBuild(spark, "graft_dupcc",
+      BucketedCache.key(spark, dir, "documents"), "doc_id", "doc_id") {
       connectedComponents(
-        ngramJaccard(spark, dir).select(col("doc_a"), col("doc_b")))
+        jaccardPairs(spark, dir).select(col("doc_a"), col("doc_b")))
         .select(col("v").as("doc_id"), col("lbl").as("cluster_id"))
         .withColumn("cluster_size",
           count(lit(1)).over(Window.partitionBy(col("cluster_id"))))

@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.core.Tables
+import graft.core.{BucketedCache, Tables}
 
 /** Graph analytics over a behavioral co-presence graph derived from the
   * `events` table: two users are connected when they acted on the same
@@ -96,15 +96,12 @@ object Graph {
       .filter(col("w") >= minWeight)
   }
 
-  /** Bucket count of the persisted co-presence edge table. */
-  private val EdgeBuckets = 32
-
   /** Undirected user–user edge list (u1 < u2) with co-presence weight
     * `w` = number of distinct shared (k, hour) buckets; `minWeight`
     * sparsifies (weight ≥ 2 keeps only repeated co-presence).
     *
     * Served from a PERSISTED BUCKETED TABLE keyed (and sorted) on `u1`,
-    * built once per corpus fingerprint ([[graft.core.BucketedCache]]).
+    * built once per events listing ([[graft.core.BucketedCache]]).
     * The round-9 shape localCheckpoint'ed the projection PER QUERY, which
     * fixed fan-out recomputation within one query but still paid the
     * events scan + the quadratic bucket projection + the checkpoint for
@@ -117,16 +114,19 @@ object Graph {
     * join, the wedge self-join's src side, and PageRank's rank join all
     * key on it), and let queries start from a pre-partitioned scan.
     * `minWeight` > 1 is a filter over the cached table, not a rebuild. */
-  private def eventsFingerprint(spark: SparkSession, dir: String): String =
-    // Memoized: the fingerprint aggregate is itself a full events scan,
-    // and 14 graph queries x reps would re-run it for an identical key
-    // (a dir pins its contents for a live JVM — see ModelMemo's scaladoc).
-    graft.core.ModelMemo.cached(s"evfp:$dir") {
-      val fp = Tables.events(spark, dir)
-        .agg(count(lit(1)), max(col("event_id")), max(col("user_id"))).head()
-      graft.core.BucketedCache.fingerprint(
-        dir, fp.getLong(0), fp.getLong(1), fp.getLong(2))
+  private[operators] def copresenceEdges(
+      spark: SparkSession, dir: String, minWeight: Long,
+      cap: Long = HubCap): DataFrame = {
+    // a non-default cap gets its own cached table — the cap applies to
+    // buckets BEFORE projection, so no cap's edges derive from another's
+    val prefix =
+      if (cap == HubCap) "graft_coedges" else s"graft_coedges$cap"
+    val edges = BucketedCache.getOrBuild(spark, prefix,
+      BucketedCache.key(spark, dir, "events"), "u1", "u1") {
+      capAndProject(presence(spark, dir), 1L, cap)
     }
+    if (minWeight > 1L) edges.filter(col("w") >= minWeight) else edges
+  }
 
   /** The distinct (user_id, k, hour) presence relation every co-presence
     * artifact derives from. */
@@ -155,21 +155,6 @@ object Graph {
       val pairs = CapLadder.map(c => c -> row.getAs[Long](s"p$c")).toMap
       java.lang.Long.valueOf(pickCap(pairs, row.getAs[Long]("n_rows")))
     }.longValue()
-
-  private[operators] def copresenceEdges(
-      spark: SparkSession, dir: String, minWeight: Long,
-      cap: Long = HubCap): DataFrame = {
-    val key = eventsFingerprint(spark, dir)
-    // a non-default cap gets its own cached table — the cap applies to
-    // buckets BEFORE projection, so no cap's edges derive from another's
-    val prefix =
-      if (cap == HubCap) "graft_coedges" else s"graft_coedges$cap"
-    val edges = graft.core.BucketedCache.getOrBuild(
-      spark, prefix, key, EdgeBuckets, "u1", "u1") {
-      capAndProject(presence(spark, dir), 1L, cap)
-    }
-    if (minWeight > 1L) edges.filter(col("w") >= minWeight) else edges
-  }
 
   /** Per-node degree on the weight≥1 co-presence graph. */
   private def degrees(edges: DataFrame): DataFrame =
@@ -643,15 +628,13 @@ object Graph {
     * pointer-doubling rounds run ONCE per corpus — [[ccSizes]] and
     * [[modularity]] (and every bench rep) start from the label table,
     * exactly how a deployment maintains its component index at ingest. */
-  private def ccLabels2(spark: SparkSession, dir: String): DataFrame = {
-    val key = eventsFingerprint(spark, dir)
-    graft.core.BucketedCache.getOrBuild(
-      spark, "graft_cclab2", key, EdgeBuckets, "v", "v") {
+  private def ccLabels2(spark: SparkSession, dir: String): DataFrame =
+    BucketedCache.getOrBuild(spark, "graft_cclab2",
+      BucketedCache.key(spark, dir, "events"), "v", "v") {
       Dedup.connectedComponents(
         copresenceEdges(spark, dir, 2L)
           .select(col("u1").as("doc_a"), col("u2").as("doc_b")))
     }
-  }
 
   def modularity(spark: SparkSession, dir: String): DataFrame = {
     val e = copresenceEdges(spark, dir, 2L).select("u1", "u2")

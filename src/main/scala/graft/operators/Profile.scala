@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
-import graft.core.Tables
+import graft.core.{BucketedCache, Tables}
 
 /** Generic table profiler: per-column null counts, exact distinct counts
   * and typed min/max for ANY input DataFrame, derived from its schema —
@@ -360,20 +360,8 @@ object Profile {
     * exact-distinct arm exists ONLY as the gate harness — the deployment
     * plan is the pure sketch, whose shape ProfileFastHashSpec pins
     * against the md5 twin (2 scans, no distinct aggregation anywhere). */
-  /** Lineitem corpus fingerprint for the exact-distinct gate cache
-    * (memoized; the driver regenerates testdata between sessions, so a
-    * path alone is never a cache key). */
-  private def liFingerprint(spark: SparkSession, dir: String): String =
-    graft.core.ModelMemo.cached(s"lifp:$dir") {
-      val fp = Tables.lineitem(spark, dir)
-        .agg(count(lit(1)), max(col("l_orderkey")),
-          sum(col("l_quantity")).cast("long")).head()
-      graft.core.BucketedCache.fingerprint(
-        dir, fp.getLong(0), fp.getLong(1), fp.getLong(2))
-    }
-
   /** SHARED EXACT-DISTINCT GATE CACHE (r13 verdict item 5): the gate's
-    * exact per-column distincts, built ONCE per corpus fingerprint as a
+    * exact per-column distincts, built ONCE per lineitem listing as a
     * managed table and served to the `_fast` gate — the sim family's
     * ground-truth-cache discipline. The exact-distinct arm is HARNESS
     * (the DuckDB gate needs exact values to envelope-check the
@@ -387,9 +375,8 @@ object Profile {
   private def exactDistincts(spark: SparkSession, dir: String): DataFrame = {
     val li = Tables.lineitem(spark, dir)
     val fields = li.schema.fields
-    graft.core.BucketedCache.getOrBuild(
-      spark, "graft_pfnd", liFingerprint(spark, dir), 1,
-      "col_name", "col_name") {
+    BucketedCache.getOrBuild(spark, "graft_pfnd",
+      BucketedCache.key(spark, dir, "lineitem"), "col_name", "col_name") {
       val ndAggs = fields.toSeq.map(f =>
         countDistinct(col(f.name)).as(s"nd_${f.name}"))
       val stacked = fields.map(f => s"'${f.name}', nd_${f.name}")

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.core.Tables
+import graft.core.{BucketedCache, Tables}
 import graft.functions.Registry
 
 /** Similarity search over the `embeddings` table (`array<float>` vectors),
@@ -133,21 +133,11 @@ object Similarity {
     * no additional measurement power. */
   val KnnProbeN = 500L
 
-  /** Corpus fingerprint for the ground-truth cache key (memoized: a dir
-    * pins its contents for a live JVM — see ModelMemo's scaladoc). */
-  private def embFingerprint(spark: SparkSession, dir: String): String =
-    graft.core.ModelMemo.cached(s"embfp:$dir") {
-      val fp = Tables.embeddings(spark, dir)
-        .agg(count(lit(1)), max(col("vec_id")), sum(col("label"))).head()
-      graft.core.BucketedCache.fingerprint(
-        dir, fp.getLong(0), fp.getLong(1), fp.getLong(2))
-    }
-
   /** SHARED EXACT-kNN GROUND TRUTH (r11 verdict item 2): the exact
     * cosine top-5 over the full corpus for the UNION of the family's two
     * probe sets — the classifier batch (vec_id < [[KnnProbeN]]) and the
-    * recall sample (vec_id % 5 = 0, < 1000) — built ONCE per corpus
-    * fingerprint into a bucketed table ([[graft.core.BucketedCache]])
+    * recall sample (vec_id % 5 = 0, < 1000) — built ONCE per embeddings
+    * listing into a bucketed table ([[graft.core.BucketedCache]])
     * and served to every consumer: [[knnClassify]], [[knnNprobe]]'s
     * exact side, [[ivfRecall]]/[[annRecall]]/[[matryoshkaRecall]]'s
     * exact top-3. Before this cache each of those queries re-paid the
@@ -163,9 +153,8 @@ object Similarity {
     * consumers take a prefix of the same ordering. Doubles round-trip
     * parquet bit-exactly, so cached sims hash-gate identically. */
   private def exactNeighbors(spark: SparkSession, dir: String): DataFrame = {
-    val key = embFingerprint(spark, dir)
-    graft.core.BucketedCache.getOrBuild(
-      spark, "graft_simgt", key, 8, "query_id", "query_id") {
+    BucketedCache.getOrBuild(spark, "graft_simgt",
+      BucketedCache.key(spark, dir, "embeddings"), "query_id", "query_id") {
       val emb = normed(spark, dir)
       val q = emb.filter(col("vec_id") < KnnProbeN ||
           (col("vec_id") % 5 === 0 && col("vec_id") < 1000))

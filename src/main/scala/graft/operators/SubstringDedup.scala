@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.core.Tables
+import graft.core.{BucketedCache, Tables}
 
 /** Character-level duplicate-substring detection and incremental
   * (new-vs-corpus) dedup — the two corpus-hygiene shapes the document-level
@@ -41,18 +41,14 @@ object SubstringDedup {
     * so the cap is semantically invisible at gate scale. */
   private val MaxDf = 100000
 
-  /** Bucket count of the persisted window inverted index. */
-  private val WinIdxBuckets = 32
-
   /** Distinct (doc_id, h) rows, h = rolling double-hash of each L-char
     * window. Docs shorter than L contribute nothing (explode of the empty
     * array), matching the oracles' `length(text) >= L` prefilter.
     *
     * Served from a PERSISTED BUCKETED TABLE keyed (and sorted) on `h`:
     * the inverted-index build — explode + distinct + one shuffle into
-    * `h`-buckets — is paid ONCE PER CORPUS (cached per corpus
-    * fingerprint; a cheap 3-number aggregate guards against testdata
-    * regeneration), and every downstream join or aggregation on `h`
+    * `h`-buckets — is paid ONCE PER CORPUS (keyed on the documents file
+    * listing, so a regenerated or rewritten corpus rebuilds), and every downstream join or aggregation on `h`
     * (the df counts, [[substringProfile]]'s semi join, and both sides of
     * [[substringPairs]]'s pair join) then arrives pre-partitioned —
     * ZERO-EXCHANGE at query time. This replaced a per-query
@@ -65,25 +61,14 @@ object SubstringDedup {
     * ids so each bucket is one file, not one-per-task fragments. */
   private def windowHashes(spark: SparkSession, dir: String): DataFrame = {
     graft.functions.Registry.register(spark)
-    graft.core.BucketedCache.getOrBuild(
-      spark, "graft_winidx", corpusKey(spark, dir), WinIdxBuckets, "h", "h") {
+    BucketedCache.getOrBuild(spark, "graft_winidx",
+      BucketedCache.key(spark, dir, "documents"), "h", "h") {
       Tables.documents(spark, dir)
         .select(col("doc_id"),
           explode(expr(s"char_window_hashes(text, $L)")).as("h"))
         .distinct()
     }
   }
-
-  /** Corpus fingerprint for the cache keys of every substring-family
-    * index. Memoized: it is itself a documents scan, re-run per
-    * substring query and bench rep for an identical key otherwise. */
-  private def corpusKey(spark: SparkSession, dir: String): String =
-    graft.core.ModelMemo.cached(s"docfp:$dir") {
-      val fp = Tables.documents(spark, dir)
-        .agg(count(lit(1)), max(col("doc_id")), sum(col("n_chars"))).head()
-      graft.core.BucketedCache.fingerprint(
-        dir, fp.getLong(0), fp.getLong(1), fp.getLong(2))
-    }
 
   /** Per-document duplication profile: how much of each document's window
     * set is shared with at least one other document. `dup_ratio` is the
@@ -170,7 +155,13 @@ object SubstringDedup {
     * non-rolling via a window-min/argmax SQL formulation, so the gate
     * proves the deque and the declarative definition agree position by
     * position. */
-  def substringWinnow(spark: SparkSession, dir: String): DataFrame = {
+  def substringWinnow(spark: SparkSession, dir: String): DataFrame =
+    winnowPairs(spark, dir).orderBy("doc_a", "doc_b")
+
+  /** The unsorted (doc_a, doc_b, shared_fp) relation of
+    * [[substringWinnow]]; the graft_subcc build reads it directly, since
+    * the CC union and aggregation discard any order. */
+  private def winnowPairs(spark: SparkSession, dir: String): DataFrame = {
     val fp = winnowFps(spark, dir)
     val rare = fp.groupBy("h").agg(count(lit(1)).as("df"))
       .filter(col("df") <= MaxDf).select("h")
@@ -181,7 +172,6 @@ object SubstringDedup {
       .groupBy("doc_a", "doc_b")
       .agg(count(lit(1)).as("shared_fp"))
       .filter(col("shared_fp") >= 2)
-      .orderBy("doc_a", "doc_b")
   }
 
   /** Distinct (doc_id, h) winnowed fingerprints, served — like the
@@ -192,13 +182,13 @@ object SubstringDedup {
     * the df-cap join and BOTH sides of the pair self-join in
     * [[substringWinnow]] then arrive pre-partitioned on `h` —
     * zero-exchange at query time, exactly how the winnow index of a
-    * 100 TB corpus is maintained. Same corpus-fingerprint cache key as
+    * 100 TB corpus is maintained. Same documents-listing key as
     * the window index; rows are identical to the inline explode by
     * construction, so both gates stay hash-green. */
   private def winnowFps(spark: SparkSession, dir: String): DataFrame = {
     graft.functions.Registry.register(spark)
-    graft.core.BucketedCache.getOrBuild(
-      spark, "graft_wfpidx", corpusKey(spark, dir), WinIdxBuckets, "h", "h") {
+    BucketedCache.getOrBuild(spark, "graft_wfpidx",
+      BucketedCache.key(spark, dir, "documents"), "h", "h") {
       Tables.documents(spark, dir)
         .select(col("doc_id"),
           explode(expr(s"winnow_hashes(text, $L, $WinW)")).as("h"))
@@ -223,10 +213,10 @@ object SubstringDedup {
     // component's label is the min member doc_id (itself labeled), so
     // no singleton's doc_id can collide with a stored cluster_id and
     // coalesce(stored, 1) equals the old post-join window count.
-    val labeled = graft.core.BucketedCache.getOrBuild(
-      spark, "graft_subcc", corpusKey(spark, dir), 32, "doc_id", "doc_id") {
+    val labeled = BucketedCache.getOrBuild(spark, "graft_subcc",
+      BucketedCache.key(spark, dir, "documents"), "doc_id", "doc_id") {
       import org.apache.spark.sql.expressions.Window
-      val edges = substringWinnow(spark, dir).select(col("doc_a"), col("doc_b"))
+      val edges = winnowPairs(spark, dir).select(col("doc_a"), col("doc_b"))
       Dedup.connectedComponents(edges)
         .select(col("v").as("doc_id"), col("lbl").as("cluster_id"))
         .withColumn("cluster_size",

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.core.Tables
+import graft.core.{BucketedCache, Tables}
 
 /** Text-analysis operators for a training-data pipeline, over `documents`:
   * language identification (stopword-profile scoring), per-corpus quality
@@ -59,8 +59,8 @@ object TextAnalysis {
     * gated witness of the tokenize→tf semantics, and all three consumers
     * stay oracle-gated against raw text. */
   private[operators] def termFreqs(spark: SparkSession, dir: String): DataFrame =
-    graft.core.BucketedCache.getOrBuild(
-      spark, "graft_tfidx", Dedup.corpusKey(spark, dir), 32, "token", "token") {
+    BucketedCache.getOrBuild(spark, "graft_tfidx",
+      BucketedCache.key(spark, dir, "documents"), "token", "token") {
       tokenized(spark, dir)
         .select(col("doc_id"), explode(col("toks")).as("token"))
         .filter(col("token") =!= "")

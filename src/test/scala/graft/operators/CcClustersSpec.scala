@@ -1,6 +1,13 @@
 package graft.operators
 
-import graft.SparkSpec
+import java.nio.file.{Files, Paths}
+
+import org.apache.spark.sql.catalyst.expressions.AttributeReference
+import org.apache.spark.sql.catalyst.plans.physical.RangePartitioning
+import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+
+import graft.{JobProbe, SparkSpec}
 
 /** The transitivity case that motivates connected-components dedup: a
   * chain A~B~C where A~B and B~C clear the 0.8 Jaccard threshold but A~C
@@ -42,5 +49,23 @@ class CcClustersSpec extends SparkSpec {
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
     assert(clusters.toSeq == Seq((0L, 0L, 3L), (1L, 0L, 3L), (2L, 0L, 3L)),
       s"wrong clustering: ${clusters.toSeq}")
+  }
+
+  test("graft_subcc and graft_dupcc builds persist no range-sorted pair relation") {
+    // a private corpus copy: fresh keys, so both builds run inside the probe
+    val dir = Files.createTempDirectory("graft_cc_plans").toString
+    Files.copy(Paths.get(s"$sfDir/documents.parquet"), Paths.get(s"$dir/documents.parquet"))
+    val probed = JobProbe(spark) {
+      SubstringDedup.substringClusters(spark, dir).collect()
+      Dedup.ccClusters(spark, dir).collect()
+    }
+    val cached = probed.nodes.collect { case s: InMemoryTableScanExec => s.relation.cachedPlan }
+    assert(cached.nonEmpty, "the CC builds persist their symmetric edge lists")
+    val rangeKeys = (probed.plans ++ cached).flatMap(JobProbe.collectAll).collect {
+      case e: ShuffleExchangeExec => e.outputPartitioning
+    }.collect { case r: RangePartitioning =>
+      r.ordering.flatMap(_.child.collect { case a: AttributeReference => a.name })
+    }
+    assert(rangeKeys.forall(_ == Seq("doc_id")), s"range partitionings on $rangeKeys")
   }
 }
