@@ -33,8 +33,6 @@ import org.apache.spark.sql.SparkSession
   *     2000-char tail capture and cost the round its official total).
   */
 object Bench {
-  @volatile private var calibSink: Long = 0L
-
   /** One query's measured reps (rep 1 = cold/JIT warmup). `builds` names
     * the one-time cache/model builds that ran INSIDE this query's reps
     * (almost always rep 1) with their seconds — the attribution that lets
@@ -50,8 +48,8 @@ object Bench {
 
   /** Multi-thread steal calibration: `threads` concurrent xorshift spins
     * (2^27 sequentially-dependent steps each — the data dependence defeats
-    * closed-form folding and vectorization; the volatile sink keeps it
-    * live), reporting the WORST per-thread wall time. Saturating every
+    * closed-form folding and vectorization; a test of the result keeps
+    * it live), reporting the WORST per-thread wall time. Saturating every
     * slot for ~0.2-0.4 s makes pool-level steal visible in the slowest
     * thread, which is the view a 32-way Spark stage actually has: a stage
     * is as slow as its most-stolen task. On an unloaded host the worst
@@ -68,7 +66,9 @@ object Bench {
           x ^= x << 13; x ^= x >>> 7; x ^= x << 17
           i += 1
         }
-        calibSink = x
+        // xorshift never reaches 0 from a non-zero seed; testing for it
+        // keeps the spin's result live
+        if (x == 0L) throw new IllegalStateException("xorshift reached 0")
         val dt = System.nanoTime() - t0
         var cur = worst.get()
         while (dt > cur && !worst.compareAndSet(cur, dt)) cur = worst.get()

@@ -107,7 +107,6 @@ object PlanAudit {
       val scans = count("Scan parquet")
       val pushed = count("PushedFilters: \\[[A-Z]")
       val exchanges = count("Exchange (hash|range|SinglePartition)")
-      val codegen = count("\\*\\(\\d+\\)")
       val joins = Seq(
         "BroadcastHashJoin" -> count("BroadcastHashJoin"),
         "SortMergeJoin" -> count("SortMergeJoin"),

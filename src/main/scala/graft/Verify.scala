@@ -1,6 +1,5 @@
 package graft
 import org.apache.spark.sql.SparkSession
-import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {

@@ -20,8 +20,8 @@ import org.apache.spark.sql.SparkSession
   * [[free]] unpersists EVERY persistent RDD registered with the context.
   * That blanket sweep is safe exactly when nothing long-lived parks
   * state in the block manager, which is this repo's standing discipline:
-  * cross-query caches are managed DISK tables ([[BucketedCache]]) or
-  * driver-side model objects ([[ModelMemo]]) — never cached RDDs — and
+  * cross-query caches ([[Artifacts]]) are managed DISK tables or
+  * driver-side model objects — never cached RDDs — and
   * BlockHygieneSpec pins that contract by sweeping after checkpoint-heavy
   * gated queries and asserting the registry empties without breaking a
   * following rerun. Callers must be SEQUENTIAL (Bench's rep loop, a spec):

@@ -1,8 +1,8 @@
 package graft.core
 
 /** JVM-lifetime registry of one-time ingest-amortized build costs: every
-  * [[BucketedCache]] table build, [[ModelMemo]] training run, and WARC
-  * container pack records its wall time here. graft.Bench emits the
+  * [[Artifacts]] table build, model training run and WARC container pack
+  * records its wall time here. graft.Bench emits the
   * registry as its own JSON line so a consumer can separate query-time
   * cost (the converged headline, which rides these caches) from the
   * ingest cost paid once per JVM in rep 1 — without this, converged

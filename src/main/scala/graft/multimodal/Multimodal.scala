@@ -3,7 +3,7 @@ package graft.multimodal
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.core.{BucketedCache, Tables}
+import graft.core.{Artifacts, Tables}
 
 /** Multimodal column support: image/audio/video payloads ride through the
   * engine as opaque `binary` columns with typed metadata, and
@@ -708,8 +708,7 @@ object Multimodal {
     * Like every media artifact it is keyed on the documents table, from
     * which the media tables are synthesized. */
   private def imgFingerprints(spark: SparkSession, dir: String): DataFrame =
-    BucketedCache.getOrBuild(spark, "graft_imgfp",
-      BucketedCache.key(spark, dir, "documents"), "doc_id", "doc_id") {
+    Artifacts.table(spark, dir, "documents", "graft_imgfp", "doc_id") {
       imagePhash128s(spark, dir).toDF()
     }
 
@@ -1347,8 +1346,7 @@ object Multimodal {
     // the landmark index and the excerpt probe are hash arithmetic over
     // the cached energies. mm_audio_fingerprint stays the inline decode
     // witness; values identical by construction.
-    val fps = BucketedCache.getOrBuild(spark, "graft_afp",
-      BucketedCache.key(spark, dir, "documents"), "doc_id", "doc_id") {
+    val fps = Artifacts.table(spark, dir, "documents", "graft_afp", "doc_id") {
       audioFpFullTable(spark, dir).toDF()
     }
     val idx = fpIndex(fps)

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 
-import graft.core.Tables
+import graft.core.{Artifacts, Tables}
 
 /** Advanced aggregation shapes: exact interpolated percentiles, pivot
   * (cross-tab), and salted two-stage aggregation — the standard hot-key
@@ -264,8 +264,6 @@ object AdvancedAggs {
     * deliberately written m2·sqrt(m2): sqrt and · are correctly rounded
     * everywhere, libm pow is not. */
   def skewKurtQty(spark: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.types.DecimalType
-    val d38 = DecimalType(38, 0)
     // Whole-unit quantities (≤ 50, integral in TPC-H), NOT cents: q⁴ ≤
     // 6.25e6, so every power sum stays below 2^53 through ~10⁹ rows per
     // group and the decimal→double cast is EXACT on both engines. The
@@ -1034,12 +1032,13 @@ object AdvancedAggs {
     // count straight off the bitmaps — nothing row-scale ever shuffles
     // again. Values are identical by construction: bit i AND bit j set
     // ⇔ the order contains both brands ⇔ the old distinct-pair row.
-    // The dictionary is trained once per corpus (ModelMemo) and bounded
-    // by the bitmap width.
-    val brands: Array[String] = graft.core.ModelMemo.cached(s"brandbits:$dir") {
-      raw.select("brand").distinct().orderBy("brand")
-        .collect().map(_.getString(0))
-    }
+    // The dictionary is trained once per lineitem and part listing
+    // (Artifacts.model) and bounded by the bitmap width.
+    val brands: Array[String] =
+      Artifacts.model(spark, dir, "brandbits", "lineitem", "part") {
+        raw.select("brand").distinct().orderBy("brand")
+          .collect().map(_.getString(0))
+      }
     require(brands.length <= 63,
       s"brand bitmap needs <= 63 distinct brands, got ${brands.length}")
     val B = brands.length

@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.core.Tables
+import graft.core.{Artifacts, Tables}
 
 /** Distributed byte-pair-encoding tokenizer training (Sennrich, Haddow &
   * Birch, "Neural Machine Translation of Rare Words with Subword Units",
@@ -489,7 +489,7 @@ object Bpe {
          Array[(String, Long, Array[String])]) =
     // Memoized per corpus: three queries (merge table, sample encode,
     // corpus-wide encode) and every bench rep start from one training run.
-    graft.core.ModelMemo.cached(s"phrasebpe:$dir") {
+    Artifacts.model(spark, dir, "phrasebpe", "documents") {
       val init = phraseVocab0(spark, dir).collect().map(r =>
         (r.getString(0), r.getLong(1), r.getSeq[String](2).toArray))
       val (merges, fin) = trainDriver(init, PhraseSteps, " ")

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.core.{BucketedCache, Tables}
+import graft.core.{Artifacts, Tables}
 
 /** Training-data deduplication over the `documents` table: exact
   * (content-hash), near-dup via n-gram Jaccard (inverted shingle index),
@@ -43,12 +43,6 @@ import graft.core.{BucketedCache, Tables}
   */
 object Dedup {
 
-  /** Portable 60-bit hash: first 15 hex chars of md5, as a long —
-    * definitionally `cast(conv(substr(md5(x),1,15),16,10) as bigint)`,
-    * computed by the codegen expression [[graft.functions.PortableHash60]]
-    * (same value, no hex-string round trip). */
-  private def h60(x: String): String = s"portable_hash60($x)"
-
   /** (doc_id, toks) with whitespace tokenization. */
   private[operators] def tokenized(spark: SparkSession, dir: String): DataFrame = {
     graft.functions.Registry.register(spark)
@@ -69,8 +63,7 @@ object Dedup {
     * trigramCoverage all arrive pre-partitioned on `h`. */
   private[operators] def shingleHashes(spark: SparkSession, dir: String): DataFrame = {
     graft.functions.Registry.register(spark)
-    BucketedCache.getOrBuild(spark, "graft_shidx",
-      BucketedCache.key(spark, dir, "documents"), "h", "h") {
+    Artifacts.table(spark, dir, "documents", "graft_shidx", "h") {
       tokenized(spark, dir)
         .select(col("doc_id"), explode(expr("shingle_hashes(toks)")).as("h"))
         .distinct()
@@ -94,8 +87,7 @@ object Dedup {
     * containment cutoff, and the prefix self-joins arrive pre-partitioned
     * on the bucket key. */
   private[operators] def orderedShingles(spark: SparkSession, dir: String): DataFrame =
-    BucketedCache.getOrBuild(spark, "graft_shord",
-      BucketedCache.key(spark, dir, "documents"), "h", "h") {
+    Artifacts.table(spark, dir, "documents", "graft_shord", "h") {
       val sh = shingleHashes(spark, dir)
       val dfc = sh.groupBy("h").agg(count(lit(1)).as("df"))
         .filter(col("df") <= ShingleMaxDf)
@@ -111,8 +103,7 @@ object Dedup {
     * family, bucketed on doc_id so both per-pair hs joins read
     * pre-partitioned state instead of re-collecting the sets per rep. */
   private[operators] def shingleSets(spark: SparkSession, dir: String): DataFrame =
-    BucketedCache.getOrBuild(spark, "graft_shset",
-      BucketedCache.key(spark, dir, "documents"), "doc_id", "doc_id") {
+    Artifacts.table(spark, dir, "documents", "graft_shset", "doc_id") {
       orderedShingles(spark, dir).groupBy("doc_id")
         .agg(sort_array(collect_list(col("h"))).as("hs"))
     }
@@ -286,8 +277,7 @@ object Dedup {
     // verify joins arrive bucket-aligned. dedup_incremental keeps the
     // whole signature computation inline per rep as the gated witness,
     // and every consumer stays oracle-gated against raw text.
-    BucketedCache.getOrBuild(spark, "graft_mhsig",
-      BucketedCache.key(spark, dir, "documents"), "doc_id", "doc_id") {
+    Artifacts.table(spark, dir, "documents", "graft_mhsig", "doc_id") {
       minhashPerDocFresh(spark, dir)
     }
 
@@ -462,8 +452,7 @@ object Dedup {
     // token ran per rep before, for a table of (doc_id, sh) longs. The
     // 32-bit declared-baseline twin and the dedup_simhash group query
     // keep fingerprinting inline as the decode witnesses.
-    val sim = BucketedCache.getOrBuild(spark, "graft_sh64",
-      BucketedCache.key(spark, dir, "documents"), "doc_id", "doc_id") {
+    val sim = Artifacts.table(spark, dir, "documents", "graft_sh64", "doc_id") {
       tokenized(spark, dir)
         .select(col("doc_id"), expr("simhash64(toks)").as("sh"))
     }
@@ -524,15 +513,14 @@ object Dedup {
 
   /** The near-dup cluster label table (doc_id, cluster_id, cluster_size;
     * only edge-participating docs — consumers add singletons), served
-    * from a persisted bucketed table ([[graft.core.BucketedCache]]): the
+    * from a persisted bucketed table ([[graft.core.Artifacts]]): the
     * MinHash candidate generation + O(log d) propagation run once per
     * corpus; [[ccClusters]]' own gate, pipeline_cluster_weights AND
     * pipeline_leakage_safe_split (plus every bench rep) start from the
     * label table — the duplicate-cluster index a deployment maintains at
     * ingest. */
   private[operators] def ccLabels(spark: SparkSession, dir: String): DataFrame = {
-    BucketedCache.getOrBuild(spark, "graft_dupcc",
-      BucketedCache.key(spark, dir, "documents"), "doc_id", "doc_id") {
+    Artifacts.table(spark, dir, "documents", "graft_dupcc", "doc_id") {
       connectedComponents(
         jaccardPairs(spark, dir).select(col("doc_a"), col("doc_b")))
         .select(col("v").as("doc_id"), col("lbl").as("cluster_id"))

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 
-import graft.core.Tables
+import graft.core.{Artifacts, Tables}
 
 /** Data-distribution diagnostics — the queries an operator of a 100 TB
   * pipeline runs BEFORE picking a physical strategy: per-key skew profiles
@@ -176,7 +176,7 @@ object Diagnostics {
   def advisedSaltFactor(
       spark: SparkSession, dir: String,
       table: String, key: String): Long =
-    graft.core.ModelMemo.cached(s"saltf:$dir:$table:$key") {
+    Artifacts.model(spark, dir, s"saltf:$table:$key", table) {
       val df = table match {
         case "orders" => Tables.orders(spark, dir)
         case "lineitem" => Tables.lineitem(spark, dir)
@@ -293,7 +293,7 @@ object Diagnostics {
     * inner product — never an undercount (every true pair shares a
     * cell), memoized per corpus like every advisor scalar. */
   def cmsJoinEstimate(spark: SparkSession, dir: String): Long =
-    graft.core.ModelMemo.cached(s"jsest:$dir") {
+    Artifacts.model(spark, dir, "jsest", "events") {
       java.lang.Long.valueOf(
         cmsProds(spark, dir).agg(min(col("inner_product"))).head().getLong(0))
     }.longValue()
@@ -385,7 +385,7 @@ object Diagnostics {
     * batch and the planner reads 4 integers); memoized per corpus like
     * every advisor scalar. */
   def cmsHotKeyEstimate(spark: SparkSession, dir: String): Long =
-    graft.core.ModelMemo.cached(s"haest:$dir") {
+    Artifacts.model(spark, dir, "haest", "events") {
       graft.functions.Registry.register(spark)
       java.lang.Long.valueOf(
         Tables.events(spark, dir)

@@ -5,7 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 
-import graft.core.Tables
+import graft.core.{Artifacts, Tables}
 
 /** Event-stream (time-series) analytics over the `events` table: tumbling
   * windows and gap-based sessionization — the batch formulations of the
@@ -20,11 +20,10 @@ import graft.core.Tables
   */
 object Events {
 
-  private def dec(c: Column): Column = c.cast(DecimalType(15, 2))
-
-  /** Exact hundredths in codegen longs — equals (dec(x)·100)::BIGINT on
-    * 2-dp data without the per-row BigDecimal detour; see the equivalence
-    * note in AdvancedAggs.cents (r16). */
+  /** Exact hundredths in codegen longs — equals
+    * (cast(x as decimal(15,2))·100)::BIGINT on 2-dp data without the
+    * per-row BigDecimal detour; see the equivalence note in
+    * AdvancedAggs.cents (r16). */
   private def cents(c: Column): Column =
     floor(c * 100 + lit(0.5d)).cast("long")
 
@@ -559,7 +558,7 @@ object Events {
     * SQL, so the knob is a hash-gated artifact, not driver prose. */
   private[operators] def adaptiveOverlapBucket(
       spark: SparkSession, dir: String): Long =
-    graft.core.ModelMemo.cached(s"ovbw:$dir") {
+    Artifacts.model(spark, dir, "ovbw", "events") {
       val s = sessionize(spark, dir)
         .filter(col("n_events") >= 2)
         .select(col("session_start").cast("long").as("st"),

@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.core.{BucketedCache, Tables}
+import graft.core.{Artifacts, Tables}
 
 /** Graph analytics over a behavioral co-presence graph derived from the
   * `events` table: two users are connected when they acted on the same
@@ -101,7 +101,7 @@ object Graph {
     * sparsifies (weight ≥ 2 keeps only repeated co-presence).
     *
     * Served from a PERSISTED BUCKETED TABLE keyed (and sorted) on `u1`,
-    * built once per events listing ([[graft.core.BucketedCache]]).
+    * built once per events listing ([[graft.core.Artifacts]]).
     * The round-9 shape localCheckpoint'ed the projection PER QUERY, which
     * fixed fan-out recomputation within one query but still paid the
     * events scan + the quadratic bucket projection + the checkpoint for
@@ -121,8 +121,7 @@ object Graph {
     // buckets BEFORE projection, so no cap's edges derive from another's
     val prefix =
       if (cap == HubCap) "graft_coedges" else s"graft_coedges$cap"
-    val edges = BucketedCache.getOrBuild(spark, prefix,
-      BucketedCache.key(spark, dir, "events"), "u1", "u1") {
+    val edges = Artifacts.table(spark, dir, "events", prefix, "u1") {
       capAndProject(presence(spark, dir), 1L, cap)
     }
     if (minWeight > 1L) edges.filter(col("w") >= minWeight) else edges
@@ -145,7 +144,7 @@ object Graph {
     * Serves [[triangleCount]]/[[localClustering]] — the two quadratic-
     * wedge queries — and the [[adaptiveCapCensus]] gate. */
   private[operators] def adaptiveCap(spark: SparkSession, dir: String): Long =
-    graft.core.ModelMemo.cached(s"adcap:$dir") {
+    Artifacts.model(spark, dir, "adcap", "events") {
       val sizes = presence(spark, dir)
         .groupBy("k", "hr").agg(count(lit(1)).as("bn"))
       val aggs = CapLadder.map(c =>
@@ -624,13 +623,12 @@ object Graph {
     * rounds), then two broadcast-scalar joins; the community aggregate
     * is component-count-sized. */
   /** Component labels of the weight≥2 co-presence graph, persisted as a
-    * bucketed table on `v` ([[graft.core.BucketedCache]]): the O(log d)
+    * bucketed table on `v` ([[graft.core.Artifacts]]): the O(log d)
     * pointer-doubling rounds run ONCE per corpus — [[ccSizes]] and
     * [[modularity]] (and every bench rep) start from the label table,
     * exactly how a deployment maintains its component index at ingest. */
   private def ccLabels2(spark: SparkSession, dir: String): DataFrame =
-    BucketedCache.getOrBuild(spark, "graft_cclab2",
-      BucketedCache.key(spark, dir, "events"), "v", "v") {
+    Artifacts.table(spark, dir, "events", "graft_cclab2", "v") {
       Dedup.connectedComponents(
         copresenceEdges(spark, dir, 2L)
           .select(col("u1").as("doc_a"), col("u2").as("doc_b")))
@@ -785,7 +783,6 @@ object Graph {
     * graph orders of magnitude smaller than the last, which is exactly
     * why Louvain scales; everything else reuses the level-1 shapes. */
   def louvainTwoLevel(spark: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     // lab1 feeds the collapse, the degree rollup, the final mapping AND
     // two scoring passes — uncheckpointed, the recomputation measured
     // 28 s vs ~4 s checkpointed at sf0.1.

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.core.Tables
+import graft.core.{Artifacts, Tables}
 
 /** KLL quantile sketch (Karnin–Lang–Liberty, FOCS 2016) with
   * DETERMINISTIC hash-driven compaction — the mergeable quantile sketch
@@ -47,8 +47,9 @@ import graft.core.Tables
   * n/K chunks. Each level is localCheckpoint'ed (the repo's lineage
   * discipline: the next level AND the retained branch both read it).
   * The finished sketch is ≤ K·(#levels) rows — bounded model metadata —
-  * memoized per corpus ([[graft.core.ModelMemo]]) and served to both
-  * gated queries, the sim-family ground-truth-cache pattern.
+  * memoized per lineitem listing ([[graft.core.Artifacts.model]]) and
+  * served to both gated queries, the sim-family ground-truth-cache
+  * pattern.
   *
   * `sketch_kll_content` gates the sketch itself; `sketch_kll_quantiles`
   * gates the estimate-vs-exact rank error: for each target φ the
@@ -77,7 +78,7 @@ object Kll {
       n: Long, errBound: Long)
 
   private[operators] def build(spark: SparkSession, dir: String): KllModel =
-    graft.core.ModelMemo.cached(s"kll:$dir") {
+    Artifacts.model(spark, dir, "kll", "lineitem") {
       graft.functions.Registry.register(spark)
       val base = Tables.lineitem(spark, dir)
         .select(col("l_extendedprice").as("v"),

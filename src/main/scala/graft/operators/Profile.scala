@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
-import graft.core.{BucketedCache, Tables}
+import graft.core.{Artifacts, Tables}
 
 /** Generic table profiler: per-column null counts, exact distinct counts
   * and typed min/max for ANY input DataFrame, derived from its schema —
@@ -375,8 +375,7 @@ object Profile {
   private def exactDistincts(spark: SparkSession, dir: String): DataFrame = {
     val li = Tables.lineitem(spark, dir)
     val fields = li.schema.fields
-    BucketedCache.getOrBuild(spark, "graft_pfnd",
-      BucketedCache.key(spark, dir, "lineitem"), "col_name", "col_name") {
+    Artifacts.table(spark, dir, "lineitem", "graft_pfnd", "col_name") {
       val ndAggs = fields.toSeq.map(f =>
         countDistinct(col(f.name)).as(s"nd_${f.name}"))
       val stacked = fields.map(f => s"'${f.name}', nd_${f.name}")

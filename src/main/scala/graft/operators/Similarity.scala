@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.core.{BucketedCache, Tables}
+import graft.core.{Artifacts, Tables}
 import graft.functions.Registry
 
 /** Similarity search over the `embeddings` table (`array<float>` vectors),
@@ -137,7 +137,7 @@ object Similarity {
     * cosine top-5 over the full corpus for the UNION of the family's two
     * probe sets — the classifier batch (vec_id < [[KnnProbeN]]) and the
     * recall sample (vec_id % 5 = 0, < 1000) — built ONCE per embeddings
-    * listing into a bucketed table ([[graft.core.BucketedCache]])
+    * listing into a bucketed table ([[graft.core.Artifacts]])
     * and served to every consumer: [[knnClassify]], [[knnNprobe]]'s
     * exact side, [[ivfRecall]]/[[annRecall]]/[[matryoshkaRecall]]'s
     * exact top-3. Before this cache each of those queries re-paid the
@@ -153,8 +153,7 @@ object Similarity {
     * consumers take a prefix of the same ordering. Doubles round-trip
     * parquet bit-exactly, so cached sims hash-gate identically. */
   private def exactNeighbors(spark: SparkSession, dir: String): DataFrame = {
-    BucketedCache.getOrBuild(spark, "graft_simgt",
-      BucketedCache.key(spark, dir, "embeddings"), "query_id", "query_id") {
+    Artifacts.table(spark, dir, "embeddings", "graft_simgt", "query_id") {
       val emb = normed(spark, dir)
       val q = emb.filter(col("vec_id") < KnnProbeN ||
           (col("vec_id") % 5 === 0 && col("vec_id") < 1000))
@@ -318,7 +317,7 @@ object Similarity {
     * (kpick in [[kmeansCte]]), and [[ivfKmeans]] gates the chosen k as
     * the `k_cells` column. Memoized per corpus like the model itself. */
   private def ivfK(spark: SparkSession, dir: String): Int =
-    graft.core.ModelMemo.cached(s"ivfk:$dir") {
+    Artifacts.model(spark, dir, "ivfk", "embeddings") {
       val n = Tables.embeddings(spark, dir).count()
       java.lang.Integer.valueOf(
         math.min(256L, math.max(8L, n / 1000L)).toInt)
@@ -382,12 +381,12 @@ object Similarity {
     // downstream self-join doesn't re-run training per branch and the
     // assignment costs one codegen'd argmin per row, no crossJoin, no
     // window, no shuffle. Training itself (both Lloyd passes) runs fully
-    // distributed — and exactly ONCE PER CORPUS per JVM: a dozen sim
-    // queries (and every bench rep) start from the same coarse model, so
-    // the centroid table memoizes ([[graft.core.ModelMemo]]) the way a
-    // deployed IVF index trains once at ingest.
+    // distributed — and exactly ONCE PER EMBEDDINGS LISTING per JVM: a
+    // dozen sim queries (and every bench rep) start from the same coarse
+    // model, so the centroid table memoizes ([[graft.core.Artifacts.model]])
+    // the way a deployed IVF index trains once at ingest.
     val cents: Array[(Int, Array[Double])] =
-      graft.core.ModelMemo.cached(s"kmeans:$dir") {
+      Artifacts.model(spark, dir, "kmeans", "embeddings") {
         update(assign(init))
           .collect()
           .map(r => (r.getInt(0), r.getSeq[Double](1).toArray))
@@ -531,7 +530,7 @@ object Similarity {
     // total — memoized per corpus like the coarse model (train once,
     // every ADC/PQ query and bench rep starts from the codebook).
     val cb: Map[Int, Array[(Int, Array[Double])]] =
-      graft.core.ModelMemo.cached(s"pq:$dir") {
+      Artifacts.model(spark, dir, "pq", "embeddings") {
         trained.collect()
           .map(r => (r.getInt(0), r.getInt(1), r.getSeq[Double](2).toArray))
           .groupBy(_._1)
@@ -671,7 +670,8 @@ object Similarity {
     * `rv` column. Kept separate from pqAssigned rather than
     * parameterized so the three raw-code gates keep their byte-exact
     * plans. Returns (frame with rcode/rd columns, residual codebook). */
-  private def pqResidualAssigned(res: DataFrame, memoKey: String)
+  private def pqResidualAssigned(res: DataFrame, spark: SparkSession,
+      dir: String)
       : (DataFrame, Map[Int, Array[(Int, Array[Double])]]) = {
     // `res` carries the COARSE cell as `cid`; the PQ cells reuse that
     // column name inside training, so train on a trimmed projection.
@@ -702,7 +702,7 @@ object Similarity {
       .groupBy(col("s"), col("cid"))
       .agg(expr("transform(array_sort(collect_list(struct(i, m))), x -> x.m)").as("c"))
     val cb: Map[Int, Array[(Int, Array[Double])]] =
-      graft.core.ModelMemo.cached(memoKey) {
+      Artifacts.model(spark, dir, "pqres", "embeddings") {
         trained.collect()
           .map(r => (r.getInt(0), r.getInt(1), r.getSeq[Double](2).toArray))
           .groupBy(_._1)
@@ -782,7 +782,7 @@ object Similarity {
     val rawCodes = rawDists.select(col("vec_id"),
       col("code0"), col("code1"), col("code2"), col("code3"),
       col("d0"), col("d1"), col("d2"), col("d3"))
-    val (resDists, resCb) = pqResidualAssigned(res, s"pqres:$dir")
+    val (resDists, resCb) = pqResidualAssigned(res, spark, dir)
     val resCodes = resDists.select(col("vec_id"), col("cid").as("rcid"),
       col("rcode0"), col("rcode1"), col("rcode2"), col("rcode3"),
       col("rd0"), col("rd1"), col("rd2"), col("rd3"))
@@ -877,7 +877,7 @@ object Similarity {
     import spark.implicits._
     val (asg, kcents) = kmeansModel(spark, dir)
     val res = residualFrame(asg, kcents).localCheckpoint()
-    val (resDists, resCb) = pqResidualAssigned(res, s"pqres:$dir")
+    val (resDists, resCb) = pqResidualAssigned(res, spark, dir)
     val resCodes = resDists.select(col("vec_id"), col("cid"),
       col("rcode0"), col("rcode1"), col("rcode2"), col("rcode3"))
 

@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.core.{BucketedCache, Tables}
+import graft.core.{Artifacts, Tables}
 
 /** Character-level duplicate-substring detection and incremental
   * (new-vs-corpus) dedup — the two corpus-hygiene shapes the document-level
@@ -61,8 +61,7 @@ object SubstringDedup {
     * ids so each bucket is one file, not one-per-task fragments. */
   private def windowHashes(spark: SparkSession, dir: String): DataFrame = {
     graft.functions.Registry.register(spark)
-    BucketedCache.getOrBuild(spark, "graft_winidx",
-      BucketedCache.key(spark, dir, "documents"), "h", "h") {
+    Artifacts.table(spark, dir, "documents", "graft_winidx", "h") {
       Tables.documents(spark, dir)
         .select(col("doc_id"),
           explode(expr(s"char_window_hashes(text, $L)")).as("h"))
@@ -187,8 +186,7 @@ object SubstringDedup {
     * construction, so both gates stay hash-green. */
   private def winnowFps(spark: SparkSession, dir: String): DataFrame = {
     graft.functions.Registry.register(spark)
-    BucketedCache.getOrBuild(spark, "graft_wfpidx",
-      BucketedCache.key(spark, dir, "documents"), "h", "h") {
+    Artifacts.table(spark, dir, "documents", "graft_wfpidx", "h") {
       Tables.documents(spark, dir)
         .select(col("doc_id"),
           explode(expr(s"winnow_hashes(text, $L, $WinW)")).as("h"))
@@ -213,8 +211,7 @@ object SubstringDedup {
     // component's label is the min member doc_id (itself labeled), so
     // no singleton's doc_id can collide with a stored cluster_id and
     // coalesce(stored, 1) equals the old post-join window count.
-    val labeled = BucketedCache.getOrBuild(spark, "graft_subcc",
-      BucketedCache.key(spark, dir, "documents"), "doc_id", "doc_id") {
+    val labeled = Artifacts.table(spark, dir, "documents", "graft_subcc", "doc_id") {
       import org.apache.spark.sql.expressions.Window
       val edges = winnowPairs(spark, dir).select(col("doc_a"), col("doc_b"))
       Dedup.connectedComponents(edges)

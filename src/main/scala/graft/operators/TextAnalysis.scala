@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.core.{BucketedCache, Tables}
+import graft.core.{Artifacts, Tables}
 
 /** Text-analysis operators for a training-data pipeline, over `documents`:
   * language identification (stopword-profile scoring), per-corpus quality
@@ -59,8 +59,7 @@ object TextAnalysis {
     * gated witness of the tokenize→tf semantics, and all three consumers
     * stay oracle-gated against raw text. */
   private[operators] def termFreqs(spark: SparkSession, dir: String): DataFrame =
-    BucketedCache.getOrBuild(spark, "graft_tfidx",
-      BucketedCache.key(spark, dir, "documents"), "token", "token") {
+    Artifacts.table(spark, dir, "documents", "graft_tfidx", "token") {
       tokenized(spark, dir)
         .select(col("doc_id"), explode(col("toks")).as("token"))
         .filter(col("token") =!= "")

@@ -7,8 +7,8 @@ import graft.sources.v2.WarcContainer
 
 /** Oracle gates for the WARC-shaped container ingestion path
   * ([[graft.sources.v2.WarcV2Source]]): each query PACKS the `documents`
-  * table into multi-record container files (cached per corpus
-  * fingerprint), reads them back through the `graft-warc` DataSource V2
+  * table into multi-record container files (cached per listing of
+  * the table), reads them back through the `graft-warc` DataSource V2
   * connector, and aggregates — while the DuckDB oracle computes the same
   * aggregate straight from the parquet table. A green gate therefore
   * proves the whole loop: record synthesis, container layout, header

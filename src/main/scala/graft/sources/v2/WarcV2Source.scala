@@ -24,6 +24,8 @@ import org.apache.spark.sql.types.{LongType, StringType, StructType}
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.unsafe.types.UTF8String
 
+import graft.core.Artifacts
+
 /** WARC-shaped multi-record CONTAINER format + DataSource V2 reader — the
   * ingestion end of the 100 TB story. A real crawl corpus does not arrive
   * one-document-per-file ([[DocV2Source]]'s reference contract,
@@ -101,10 +103,10 @@ object WarcV2Source {
   * (hash repartition on the bucket id) and are written id-ascending; the
   * whole directory is staged and ATOMIC_MOVE'd into place, so readers
   * never see a half-written corpus (the same two-phase discipline as
-  * [[KvV2Sink]]). The synthesized corpus is cached per (path, corpus
-  * fingerprint) under java.io.tmpdir — the fingerprint (count, max id,
-  * Σ n_chars) is one cheap columnar aggregate and guards against the
-  * driver regenerating testdata between sessions.
+  * [[KvV2Sink]]). The synthesized corpus is cached under java.io.tmpdir,
+  * in a root named from the qualified directory and the documents
+  * table's [[graft.core.Artifacts.key]], so a rewritten documents table
+  * is packed anew and two directories never share a pack.
   *
   * DEPLOYMENT ASSUMPTION: the pack job writes through java.io/java.nio
   * against a path that executors and driver must SHARE — true in local
@@ -119,34 +121,25 @@ object WarcContainer {
   val NumContainers = 8
 
   /** Container files for `dir`'s documents table, writing them if this
-    * corpus fingerprint hasn't been packed yet. Returns the container
+    * listing of the table hasn't been packed yet. Returns the container
     * directory. Synchronized: concurrent queries in one JVM (Verify's
     * thread pool) share one build; a cross-JVM race is settled by the
-    * ATOMIC_MOVE publish below. */
+    * ATOMIC_MOVE publish in [[write]]. A cache hit lists the table's
+    * files and runs no Spark job. */
   def ensureWritten(spark: SparkSession, dir: String): String = this.synchronized {
-    // fingerprint memoized: one documents scan per JVM instead of one
-    // per warc query per bench rep (a dir pins its contents for a live
-    // JVM — see ModelMemo's scaladoc)
-    val (key, maxId) = graft.core.ModelMemo.cached(s"warcfp:$dir") {
-      val fp = graft.core.Tables.documents(spark, dir)
-        .agg(count(lit(1)), max(col("doc_id")), sum(col("n_chars")))
-        .head()
-      val (n, mx, sumChars) = (fp.getLong(0), fp.getLong(1), fp.getLong(2))
-      (java.lang.Long.toHexString(
-        java.util.Objects.hash(dir, n, mx, sumChars).toLong & 0xffffffffL), mx)
-    }
-    // "warcz": layout v2 (gzip-per-record) — a distinct cache root so a
-    // stale v1 (uncompressed) corpus from an earlier session never
-    // satisfies a v2 fingerprint hit. The "c" key suffix marks the
-    // with-CDX layout so a pre-CDX v2 corpus repacks rather than serving
-    // without its seek index (it shares the root prefix, so the sweep
-    // collects pre-CDX leftovers).
-    val out = Paths.get(sys.props("java.io.tmpdir"), s"graft_warcz_${key}c")
-    sweepStale(out)
+    val docs = new org.apache.hadoop.fs.Path(dir)
+    val qualified = docs.getFileSystem(spark.sessionState.newHadoopConf())
+      .makeQualified(docs).toString
+    val key = Artifacts.hash(Seq(qualified, Artifacts.key(spark, dir, "documents")))
+    // "warcz": layout v2 (gzip-per-record), a root distinct from the
+    // retired v1 `graft_warc_` packs, which the sweep still collects.
+    val name = s"graft_warcz_$key"
+    val out = Paths.get(sys.props("java.io.tmpdir"), name)
+    Artifacts.sweepStale(out.getParent, Seq("graft_warc_", "graft_warcz_"), _ == name)
     if (!Files.exists(out.resolve("_SUCCESS")))
-      graft.core.BuildLog.timed("pack:warc")(write(spark, dir, out, maxId))
+      graft.core.BuildLog.timed("pack:warc")(write(spark, dir, out))
     else {
-      // A pre-existing pack (same fingerprint, earlier session) must (a)
+      // A pre-existing pack (same key, earlier session) must (a)
       // never age past the 24 h sweep cutoff while actively serving — the
       // mtime refresh here makes every resolution reset the clock, so an
       // in-use corpus cannot be collected mid-scan by this JVM reading a
@@ -163,34 +156,9 @@ object WarcContainer {
     out.toString
   }
 
-  /** Best-effort sweep of packed corpora orphaned by earlier sessions —
-    * both the retired v1 root (`graft_warc_`, which nothing else ever
-    * deletes since the v2 rename) and v2 roots whose fingerprint no live
-    * session can hit anymore. 24 h cutoff and per-entry NonFatal guard
-    * mirror [[graft.core.BucketedCache]]'s sweepStale; the corpus being
-    * (re)built this call (`keep`) is always skipped regardless of age. */
-  private def sweepStale(keep: Path): Unit = {
-    val tmpdir = Paths.get(sys.props("java.io.tmpdir"))
-    if (!Files.isDirectory(tmpdir)) return
-    val cutoff = System.currentTimeMillis() - 24L * 3600 * 1000
-    val listing = Files.list(tmpdir)
-    try listing.forEach { p =>
-      try {
-        val n = p.getFileName.toString
-        if ((n.startsWith("graft_warc_") || n.startsWith("graft_warcz_")) &&
-            p != keep &&
-            Files.getLastModifiedTime(p).toMillis < cutoff) {
-          val walk = Files.walk(p)
-          try walk.sorted(java.util.Comparator.reverseOrder())
-            .forEach(f => Files.deleteIfExists(f))
-          finally walk.close()
-        }
-      } catch { case scala.util.control.NonFatal(_) => () }
-    } finally listing.close()
-  }
-
-  private def write(spark: SparkSession, dir: String, out: Path,
-      maxId: Long): Unit = {
+  private def write(spark: SparkSession, dir: String, out: Path): Unit = {
+    val maxId = graft.core.Tables.documents(spark, dir)
+      .agg(max(col("doc_id"))).head().getLong(0)
     val span = (maxId + NumContainers) / NumContainers // ceil((maxId+1)/k)
     val tmp = Paths.get(out.toString + ".tmp-" +
       java.util.UUID.randomUUID().toString.take(8))
@@ -246,11 +214,10 @@ object WarcContainer {
       // Another JVM won the publish race (rename onto an existing dir
       // surfaces as FileAlreadyExists / DirectoryNotEmpty / a generic
       // ENOTEMPTY FileSystemException depending on the FS) — its corpus
-      // is identical by fingerprint key, so drop our staging copy.
-      case e: java.nio.file.FileSystemException
+      // is identical by key, so drop our staging copy.
+      case _: java.nio.file.FileSystemException
           if Files.exists(out.resolve("_SUCCESS")) =>
-        Files.walk(tmp).sorted(java.util.Comparator.reverseOrder())
-          .forEach(p => Files.delete(p))
+        Artifacts.deleteRec(tmp)
     }
   }
 

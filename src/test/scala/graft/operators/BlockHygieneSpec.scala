@@ -20,8 +20,8 @@ class BlockHygieneSpec extends SparkSpec {
   /** Checkpoint-heavy gated queries: Louvain (two localCheckpoints +
     * label rounds), connected components (persist + per-round eager
     * checkpoints), LPA (per-round checkpoints). KLL is excluded only
-    * because its ModelMemo entry makes the second run blockless — the
-    * sweep still covers it in Bench. */
+    * because its memoized model (graft.core.Artifacts.model) makes the
+    * second run blockless — the sweep still covers it in Bench. */
   private val heavy =
     Seq("graph_louvain_twolevel", "dedup_cc_clusters",
       "graph_label_propagation")
