@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.core.{Artifacts, Tables}
+import graft.core.{Artifacts, Fixpoint, Tables}
 
 /** Training-data deduplication over the `documents` table: exact
   * (content-hash), near-dup via n-gram Jaccard (inverted shingle index),
@@ -507,7 +507,8 @@ object Dedup {
     * converges in 2-3 rounds in practice; a hard cap of 20 guards
     * pathological chains. The edge set is persisted so the expensive
     * candidate-pair computation runs once, not once per round; each round's
-    * convergence check is a metadata-sized count, not a collect. */
+    * convergence tally is observed inside the round's own checkpoint job
+    * ([[graft.core.Fixpoint]]), with no separate count and no collect. */
   def ccClusters(spark: SparkSession, dir: String): DataFrame =
     ccLabels(spark, dir).orderBy("doc_id")
 
@@ -532,66 +533,57 @@ object Dedup {
   /** Min-label propagation over an undirected edge list (doc_a, doc_b) →
     * (v, lbl) labels, lbl = min vertex reachable. Only vertices that
     * appear in at least one edge are labeled — callers add singletons.
-    * See [[ccClusters]] for the algorithmic/lineage contract. */
+    * See [[ccClusters]] for the algorithmic/lineage contract. The rounds
+    * run through [[graft.core.Fixpoint]] until one lowers no label. */
   private[operators] def connectedComponents(edges: DataFrame): DataFrame = {
     import org.apache.spark.storage.StorageLevel
     val sym = edges.union(
         edges.select(col("doc_b").as("doc_a"), col("doc_a").as("doc_b")))
       .persist(StorageLevel.MEMORY_AND_DISK)
     sym.count() // materialize the candidate-pair computation exactly once
-    // initial label = min(v, min neighbor): one aggregation that IS the
-    // first propagation round (near-dup clusters usually converge on the
-    // next round)
-    var labels = sym
-      .groupBy(col("doc_a").as("v"))
-      .agg(least(col("v"), min(col("doc_b"))).as("lbl"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    var prevCache = labels
-    var changed = 1L
-    var iter = 0
-    while (changed > 0 && iter < 20) {
-      val prop = sym.join(labels.withColumnRenamed("v", "doc_a"), "doc_a")
-        .select(col("doc_b").as("v"), col("lbl"), lit(false).as("own"))
-      // Pointer-doubling shortcut: besides the one-hop neighbor
-      // propagation, each vertex also adopts its label vertex's own
-      // current label (lbl(v) → lbl(lbl(v))). Neighbor propagation alone
-      // moves the component min one hop per round — O(diameter) rounds,
-      // and per-round job latency is the whole cost on a high-diameter
-      // graph; composing with the label map doubles the covered distance
-      // every round, so convergence is O(log diameter). Labels stay
-      // component-member vertex ids, so the fixpoint argument (no change
-      // ⇒ labels constant across every edge ⇒ per-component min) is
-      // untouched — only the round count changes.
-      val hop = labels.as("x")
-        .join(labels.select(col("v").as("lv"), col("lbl").as("llbl")),
-          col("lbl") === col("lv"))
-        .select(col("v"), col("llbl").as("lbl"), lit(false).as("own"))
-      // one aggregation yields both the new label and the old one, so the
-      // convergence check and the label update share a single job/shuffle
-      val merged = labels.select(col("v"), col("lbl"), lit(true).as("own"))
-        .union(prop).union(hop)
-        .groupBy("v")
-        .agg(min(col("lbl")).as("lbl"),
-          min(when(col("own"), col("lbl"))).as("old_lbl"))
-        .persist(StorageLevel.MEMORY_AND_DISK)
-      changed = merged.filter(col("lbl") < col("old_lbl")).count()
-      prevCache.unpersist()
-      prevCache = merged
-      labels = merged.select(col("v"), col("lbl"))
-      iter += 1
-      // Bounded-lineage contract: each round's plan references the
-      // previous round's `labels` THREE times (own-label branch, neighbor
-      // propagation, shortcut), so without a cut the logical plan is a
-      // 3^k-traversal DAG — plan analysis alone OOMs after ~15 rounds. An
-      // eager localCheckpoint every round replaces the plan with an O(1)
-      // LogicalRDD leaf while staying executor-local (no distributed-FS
-      // round trip); it is nearly free because `merged` was just fully
-      // materialized by the convergence count, and it doubles as the
-      // executor-loss recompute guard at cluster scale.
-      if (changed > 0) labels = labels.localCheckpoint(true)
-    }
+    val labels = Fixpoint.converge(ccInit(sym), 20)(ccRound(sym))
     sym.unpersist()
     labels
+  }
+
+  /** Initial labels of [[connectedComponents]], lbl = min(v, min neighbor):
+    * one aggregation that IS the first propagation round (near-dup
+    * clusters usually converge on the next round). */
+  private[operators] def ccInit(sym: DataFrame): DataFrame =
+    sym.groupBy(col("doc_a").as("v"))
+      .agg(least(col("v"), min(col("doc_b"))).as("lbl"))
+
+  /** One [[connectedComponents]] round over the symmetric edges `sym`,
+    * tallying the vertices whose label fell. The round reads `labels`
+    * three times (own label, neighbor propagation, shortcut), so without
+    * the per-round cut the plan is a 3^k-traversal DAG — plan analysis
+    * alone OOMs after ~15 rounds. */
+  private[operators] def ccRound(sym: DataFrame)(labels: DataFrame,
+      tally: Fixpoint.Tally): DataFrame = {
+    val prop = sym.join(labels.withColumnRenamed("v", "doc_a"), "doc_a")
+      .select(col("doc_b").as("v"), col("lbl"), lit(false).as("own"))
+    // Pointer-doubling shortcut: besides the one-hop neighbor
+    // propagation, each vertex also adopts its label vertex's own
+    // current label (lbl(v) → lbl(lbl(v))). Neighbor propagation alone
+    // moves the component min one hop per round — O(diameter) rounds,
+    // and per-round job latency is the whole cost on a high-diameter
+    // graph; composing with the label map doubles the covered distance
+    // every round, so convergence is O(log diameter). Labels stay
+    // component-member vertex ids, so the fixpoint argument (no change
+    // ⇒ labels constant across every edge ⇒ per-component min) is
+    // untouched — only the round count changes.
+    val hop = labels.as("x")
+      .join(labels.select(col("v").as("lv"), col("lbl").as("llbl")),
+        col("lbl") === col("lv"))
+      .select(col("v"), col("llbl").as("lbl"), lit(false).as("own"))
+    // one aggregation yields both the new label and the old one, so the
+    // change tally rides the round's own checkpoint job
+    val merged = labels.select(col("v"), col("lbl"), lit(true).as("own"))
+      .union(prop).union(hop)
+      .groupBy("v")
+      .agg(min(col("lbl")).as("lbl"),
+        min(when(col("own"), col("lbl"))).as("old_lbl"))
+    tally(merged, col("lbl") < col("old_lbl")).select(col("v"), col("lbl"))
   }
 
   /** Word-order-insensitive exact dedup: the fingerprint is md5 of the

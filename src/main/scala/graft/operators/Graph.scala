@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.core.{Artifacts, Tables}
+import graft.core.{Artifacts, Fixpoint, Tables}
 
 /** Graph analytics over a behavioral co-presence graph derived from the
   * `events` table: two users are connected when they acted on the same
@@ -36,7 +36,9 @@ import graft.core.{Artifacts, Tables}
   *     join on the partitioned edge list + one aggregation; the rank
   *     vector never touches the driver.
   *   - **Components reuse [[Dedup.connectedComponents]]** (min-label
-  *     propagation with persist/localCheckpoint lineage hygiene).
+  *     propagation); it, the k-core peel, label propagation and
+  *     personalized PageRank run their rounds through
+  *     [[graft.core.Fixpoint]], one checkpoint job set per round.
   *
   * Not in the reference (it has no graph surface); built for the
   * training-pipeline brief alongside dedup/similarity.
@@ -341,7 +343,7 @@ object Graph {
   val KCoreK = 3
 
   /** Peel rounds — fixed so the oracle can mirror the exact computation
-    * with staged CTEs; KCoreSpec asserts the peel has reached its
+    * with staged CTEs; Round7Spec asserts the peel has reached its
     * fixpoint by round [[KCoreRounds]] at gate scale (one extra round
     * changes nothing), so the fixed bound computes the true k-core, not
     * a truncation. Peeling depth grows with the graph's degeneracy, not
@@ -351,37 +353,29 @@ object Graph {
   /** Iterative k-core peeling over ANY canonical (u1 < u2) edge list:
     * each round drops nodes with degree < k and their edges (Matula &
     * Beck, JACM 1983 — repeated low-degree removal yields the maximal
-    * subgraph with min degree ≥ k). Factored out for KCoreSpec. Each
-    * round is one degree aggregation + two semi-joins, checkpointed so
-    * plan depth stays O(1) per round (the CC lineage-hygiene pattern). */
-  private[operators] def kcoreEdges(e0: DataFrame, k: Int, rounds: Int): DataFrame = {
-    var e = e0
-    var fixpoint = false
-    for (_ <- 1 to rounds if !fixpoint) {
-      // The degree table is per-node metadata (≪ edges); checkpointing it
-      // lets the fixpoint probe and the two semi-joins share one
-      // computation instead of re-aggregating the edge list three times.
-      val deg = degrees(e).localCheckpoint(true)
-      if (deg.filter(col("deg") < k).isEmpty) {
-        // Early fixpoint exit (r16 optimization): a peel round only ever
-        // REMOVES nodes, so when no node sits below k the semi-joins keep
-        // every edge and this round — and by induction every later one —
-        // is the identity. Skipping them changes the plan, never the
-        // result (Round7Spec's at-vs-beyond fixpoint test pins this), and
-        // saves (rounds − r_fix) full join+checkpoint passes: the peel
-        // converges in 2-3 rounds on every gate corpus while the fixed
-        // bound must stay high enough for adversarial degeneracy.
-        fixpoint = true
-      } else {
-        val keep = deg.filter(col("deg") >= k)
-        e = e
-          .join(keep.select(col("v").as("u1")), Seq("u1"), "left_semi")
-          .join(keep.select(col("v").as("u2")), Seq("u2"), "left_semi")
-          .select("u1", "u2")
-          .localCheckpoint(true)
-      }
-    }
-    e
+    * subgraph with min degree ≥ k). Factored out for Round7Spec. Each
+    * round joins both endpoints' degrees onto the edges and keeps the
+    * edges whose endpoints both reach k, in one [[graft.core.Fixpoint]]
+    * checkpoint that also counts the edges it drops. A round that drops
+    * none ends the peel: peeling only ever REMOVES nodes, so every later
+    * round would be the identity (Round7Spec's at-vs-beyond fixpoint test
+    * pins this). The peel converges in 2-3 rounds on every gate corpus
+    * while `rounds` must stay high enough for adversarial degeneracy. */
+  private[operators] def kcoreEdges(e0: DataFrame, k: Int, rounds: Int): DataFrame =
+    Fixpoint.converge(e0, rounds)(kcoreRound(k))
+
+  /** One [[kcoreEdges]] round: the edges of `e` whose endpoints both have
+    * degree ≥ k in `e`, tallying the edges dropped (observed before the
+    * filter that drops them). */
+  private[operators] def kcoreRound(k: Int)(e: DataFrame,
+      tally: Fixpoint.Tally): DataFrame = {
+    val deg = degrees(e)
+    val rows = e
+      .join(deg.select(col("v").as("u1"), col("deg").as("d1")), "u1")
+      .join(deg.select(col("v").as("u2"), col("deg").as("d2")), "u2")
+    tally(rows, col("d1") < k || col("d2") < k)
+      .filter(col("d1") >= k && col("d2") >= k)
+      .select("u1", "u2")
   }
 
   /** The 3-core of the co-presence graph: (user_id, core_deg) for every
@@ -491,24 +485,21 @@ object Graph {
     * graph and pin the tie-break semantics. */
   private[operators] def lpaLabels(sym: DataFrame, rounds: Int): DataFrame = {
     graft.functions.Registry.register(sym.sparkSession)
-    var lab = sym.select(col("u1").as("v")).distinct()
+    val init = sym.select(col("u1").as("v")).distinct()
       .select(col("v"), col("v").as("lbl"))
-    for (_ <- 1 to rounds) {
-      val cnt = sym
-        .join(lab.select(col("v").as("u1"), col("lbl")), "u1")
-        .groupBy(col("u2").as("v"), col("lbl"))
-        .agg(count(lit(1)).as("c"))
+    Fixpoint.rounds(init, rounds) { lab =>
       // r17: the per-v argmax (most frequent label, ties to the SMALLEST)
       // is lex_max(c, -lbl) — a mutable-buffer hash aggregation instead
       // of the row_number window's exchange + per-partition SORT of the
       // (v, lbl, c) relation, once per round. Same winner by definition:
       // max c, then max(-lbl) = min lbl.
-      lab = cnt.groupBy("v")
+      sym.join(lab.select(col("v").as("u1"), col("lbl")), "u1")
+        .groupBy(col("u2").as("v"), col("lbl"))
+        .agg(count(lit(1)).as("c"))
+        .groupBy("v")
         .agg(expr("lex_max(c, -lbl)").as("mx"))
         .select(col("v"), (-col("mx.b")).as("lbl"))
-        .localCheckpoint()
     }
-    lab
   }
 
   /** Label-propagation community detection (Raghavan, Albert & Kumara,
@@ -521,22 +512,23 @@ object Graph {
     * SMALLEST label), run for a fixed [[LpaRounds]] rounds — async LPA's
     * visit-order dependence can never hash-gate across engines.
     *
-    * Scale shape: each round is one co-partitioned join of the symmetric
-    * edge list against the ≤|V|-row label table plus one (v, lbl) count
-    * and a per-v argmax window (PARTITIONED by v — never global). The
-    * label table is localCheckpoint'd per round, the same iterative
-    * lineage hygiene as [[Dedup.connectedComponents]]; the edge list is
-    * checkpointed once and reused by all rounds. Output is the
+    * Scale shape: the labels are a bucketed table on `v`
+    * ([[graft.core.Artifacts]], `graft_lpalab`, keyed on the `events`
+    * listing), built once per corpus the way [[ccSizes]] reads
+    * `graft_cclab2`; a query is the two histogram aggregations over it.
+    * The build runs [[LpaRounds]] [[graft.core.Fixpoint]] rounds, each one
+    * co-partitioned join of the symmetric edge list against the ≤|V|-row
+    * label table, one (v, lbl) count and one per-v `lex_max` argmax
+    * aggregation (hash-partitioned by v — never global). Output is the
     * community-size histogram (size, n_communities). */
-  def labelPropagation(spark: SparkSession, dir: String): DataFrame = {
-    val e = copresenceEdges(spark, dir, 1L).select("u1", "u2")
-    val sym = e.union(e.select(col("u2").as("u1"), col("u1").as("u2")))
-      .localCheckpoint()
-    lpaLabels(sym, LpaRounds).groupBy("lbl").agg(count(lit(1)).as("sz"))
+  def labelPropagation(spark: SparkSession, dir: String): DataFrame =
+    Artifacts.table(spark, dir, "events", "graft_lpalab", "v") {
+      val e = copresenceEdges(spark, dir, 1L).select("u1", "u2")
+      lpaLabels(e.union(e.select(col("u2").as("u1"), col("u1").as("u2"))), LpaRounds)
+    }.groupBy("lbl").agg(count(lit(1)).as("sz"))
       .groupBy(col("sz").as("community_size"))
       .agg(count(lit(1)).as("n_communities"))
       .orderBy("community_size")
-  }
 
   /** Personalized PageRank (Haveliwala, "Topic-sensitive PageRank",
     * WWW 2002) — [[pagerankInt]]'s topic-conditioned twin: the teleport
@@ -559,11 +551,11 @@ object Graph {
     val deg = sym.groupBy(col("u1").as("v")).agg(count(lit(1)).as("deg"))
     val seeds = deg.select("v").orderBy("v").limit(PprSeeds)
       .withColumn("tp", lit(150000L / PprSeeds))
-    var pr = deg.join(broadcast(seeds), Seq("v"), "left")
+    val pr0 = deg.join(broadcast(seeds), Seq("v"), "left")
       .select(col("v"),
         when(col("tp").isNotNull, lit(1000000L / PprSeeds)).otherwise(0L)
           .as("pr"))
-    for (_ <- 1 to 3) {
+    val pr = Fixpoint.rounds(pr0, 3) { pr =>
       // r17: node-scale pr⋈deg first, ONE edge-scale join (see
       // [[pagerankInt]]) — contributions and sums unchanged.
       val cs = pr.join(deg, "v")
@@ -571,13 +563,12 @@ object Graph {
       val contrib = sym.join(cs, "u1")
         .select(col("u2").as("v"), col("c"))
         .groupBy("v").agg(expr("850 * sum(c) div 1000").as("walk"))
-      pr = deg.select("v")
+      deg.select("v")
         .join(contrib, Seq("v"), "left")
         .join(broadcast(seeds), Seq("v"), "left")
         .select(col("v"),
           (coalesce(col("walk"), lit(0L)) + coalesce(col("tp"), lit(0L)))
             .as("pr"))
-        .localCheckpoint()
     }
     pr.filter(col("pr") > 0)
       .orderBy(col("pr").desc, col("v"))

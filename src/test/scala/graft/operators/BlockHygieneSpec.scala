@@ -19,9 +19,11 @@ class BlockHygieneSpec extends SparkSpec {
 
   /** Checkpoint-heavy gated queries: Louvain (two localCheckpoints +
     * label rounds), connected components (persist + per-round eager
-    * checkpoints), LPA (per-round checkpoints). KLL is excluded only
-    * because its memoized model (graft.core.Artifacts.model) makes the
-    * second run blockless — the sweep still covers it in Bench. */
+    * checkpoints), LPA (its first call builds the `graft_lpalab` table in
+    * checkpointed rounds, which keep only the last round's blocks; later
+    * calls read the table and leave none). KLL is excluded only because
+    * its memoized model (graft.core.Artifacts.model) makes the second run
+    * blockless — the sweep still covers it in Bench. */
   private val heavy =
     Seq("graph_louvain_twolevel", "dedup_cc_clusters",
       "graph_label_propagation")

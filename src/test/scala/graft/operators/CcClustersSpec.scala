@@ -36,7 +36,7 @@ class CcClustersSpec extends SparkSpec {
       (3L, unrelated1, "en", "src1", unrelated1.length.toLong),
       (4L, unrelated2, "en", "src1", unrelated2.length.toLong))
       .toDF("doc_id", "text", "lang", "source", "n_chars")
-    val dir = "/tmp/graft_cc_chain"
+    val dir = Files.createTempDirectory("graft_cc_chain").toString
     docs.write.mode("overwrite").parquet(s"$dir/documents.parquet")
 
     // precondition: the pair graph really is a chain (A-B, B-C, no A-C)

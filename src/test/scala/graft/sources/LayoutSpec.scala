@@ -16,6 +16,9 @@ import graft.core.Tables
   * the actual footer statistics, not inferred from plans. */
 class LayoutSpec extends SparkSpec {
 
+  private def tmp(prefix: String): String =
+    java.nio.file.Files.createTempDirectory(prefix).toString
+
   private def fileRanges(dir: String, column: String): Seq[(Long, Long)] = {
     val conf = new Configuration()
     new java.io.File(dir).listFiles()
@@ -41,8 +44,8 @@ class LayoutSpec extends SparkSpec {
 
   test("range-sorted files have disjoint key ranges; scattered files overlap") {
     val li = Tables.lineitem(spark, sfDir).select("l_orderkey", "l_quantity")
-    val sortedDir = "/tmp/graft_layout_sorted"
-    val scatterDir = "/tmp/graft_layout_scattered"
+    val sortedDir = tmp("graft_layout_sorted")
+    val scatterDir = tmp("graft_layout_scattered")
     Layout.writeSorted(li, "l_orderkey", sortedDir, 8)
     Layout.writeScattered(li, "l_orderkey", scatterDir, 8)
 
@@ -73,8 +76,8 @@ class LayoutSpec extends SparkSpec {
     val base = Tables.lineitem(spark, sfDir)
       .selectExpr("cast(l_orderkey % 256 as long) as x",
         "cast(l_partkey % 256 as long) as y")
-    val zDir = "/tmp/graft_layout_zorder"
-    val xDir = "/tmp/graft_layout_xsorted"
+    val zDir = tmp("graft_layout_zorder")
+    val xDir = tmp("graft_layout_xsorted")
     Layout.writeZOrdered(base, "x", "y", zDir, 16, bits = 8)
     Layout.writeSorted(base, "x", xDir, 16)
 
