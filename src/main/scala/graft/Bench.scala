@@ -320,27 +320,9 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    graft.core.Tables.configure(spark)
-    spark.sparkContext.setLogLevel("WARN")
-    // Untimed warmup for one-time JVM statics. The first executed upper()/
-    // lower() triggers CollationAwareUTF8String.<clinit> — Spark 4's ICU
-    // collation-table load — which costs 5-15 s once per JVM (per executor
-    // on a real cluster, amortized over the job). Paying it inside whichever
-    // query happens to run first skewed that query's number by >10x
-    // (observed via jstack: ICU UCharacter.toTitleCase under
-    // CollationSupport.Upper.execBinaryICU on the first fn_string task).
-    spark.range(1)
-      .selectExpr("upper('a') u", "lower('A') l", "initcap('a b') i",
-        "regexp_replace('a','a','b') r", "split('a,b', ',') s")
-      .write.format("noop").mode("overwrite").save()
+    val cpus = graft.core.Session.cpus
+    val spark = graft.core.Session.local(cpus)
+    warmIcu(spark)
     // Per-query CONVERGED time = min over the reps AFTER the first: rep 1
     // pays per-query JIT compilation and is also exposed to the host's
     // episodic CPU-steal bursts (observed 3-10x swings on identical code
@@ -350,7 +332,7 @@ object Bench {
     // cost stays visible; the headline total is quoted on converged reps.
     // Default 3 reps (1 warmup + min-of-2); override via SPARK_GRAFT_BENCH_REPS.
     val reps = math.max(sys.env.getOrElse("SPARK_GRAFT_BENCH_REPS", "3").toInt, 1)
-    val nCalibThreads = cpus.toInt
+    val nCalibThreads = cpus
     // Optional name filter (comma-separated) — lets a driver shard the
     // suite across processes; per-query semantics (reps, caches built in
     // rep 1) are identical to an unsharded run.
@@ -460,6 +442,21 @@ object Bench {
       .foreach(println)
     spark.stop()
   }
+
+  /** Untimed warm-up of one-time JVM statics. The first executed upper()/
+    * lower() triggers CollationAwareUTF8String.<clinit> — Spark 4's ICU
+    * collation-table load — which costs 5-15 s once per JVM (per executor
+    * on a real cluster, amortized over the job). Paying it inside whichever
+    * query happens to run first skewed that query's number by >10x
+    * (observed via jstack: ICU UCharacter.toTitleCase under
+    * CollationSupport.Upper.execBinaryICU on the first fn_string task).
+    * Timing mains call it; a session that never runs upper/lower should
+    * not pay for it, so `Session` leaves it out. */
+  def warmIcu(spark: SparkSession): Unit =
+    spark.range(1)
+      .selectExpr("upper('a') u", "lower('A') l", "initcap('a b') i",
+        "regexp_replace('a','a','b') r", "split('a,b', ',') s")
+      .write.format("noop").mode("overwrite").save()
 
   private def fnRun(fn: (SparkSession, String) => org.apache.spark.sql.DataFrame,
       spark: SparkSession, sfDir: String): Unit =

@@ -1,30 +1,13 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev harness: time specific queries in order, repeating each `reps` times.
   * Usage: runMain graft.BenchOne q1 q2 ... (env: SPARK_GRAFT_SF_DIR, _REPS) */
 object BenchOne {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val reps = sys.env.getOrElse("SPARK_GRAFT_REPS", "1").toInt
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    graft.core.Tables.configure(spark)
-    spark.sparkContext.setLogLevel("WARN")
-    if (!sys.env.contains("SPARK_GRAFT_NO_WARMUP")) {
-      // Same one-time-statics warmup as Bench (ICU collation <clinit>).
-      spark.range(1)
-        .selectExpr("upper('a') u", "lower('A') l", "initcap('a b') i",
-          "regexp_replace('a','a','b') r", "split('a,b', ',') s")
-        .write.format("noop").mode("overwrite").save()
-    }
+    val spark = graft.core.Session.local()
+    Bench.warmIcu(spark)
     val names = if (args.nonEmpty) args.toSeq else SparkEntry.queries.keys.toSeq.sorted
     for (name <- names; r <- 1 to reps) {
       val before = graft.core.BuildLog.snapshot()

@@ -1,19 +1,10 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Smoke CLI mirroring the driver's t1 check: run SparkEntry.entry and
   * print its row count (must be > 0). */
 object EntrySmoke {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    graft.core.Tables.configure(spark)
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.core.Session.local()
     val df = SparkEntry.entry(spark)
     val n = df.count()
     df.show(5, truncate = false)

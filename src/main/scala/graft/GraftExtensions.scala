@@ -2,55 +2,29 @@ package graft
 
 import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
+import org.apache.spark.sql.catalyst.expressions.ExpressionInfo
 
-import graft.functions._
+import graft.functions.Registry
 
-/** Session-extensions entry point: registers the engine's custom Catalyst
-  * expressions for any session, so plain `spark.sql(...)` users get them
-  * without touching [[graft.functions.Registry]]:
+/** Session-extensions entry point: installs graft's native functions for
+  * any session, so plain `spark.sql(...)` users get them without calling
+  * [[graft.functions.Registry.register]]:
   *
   *   spark-submit --conf spark.sql.extensions=graft.GraftExtensions ...
   *
-  * The same five expressions Registry installs per-session, via the
-  * injection API Spark provides for libraries.
+  * The functions are [[Registry.functions]], the same list `register`
+  * installs; the extension adds the whole-operator rewrite that only it
+  * injects.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
 
-  private def info(name: String, usage: String): ExpressionInfo =
-    new ExpressionInfo(classOf[GraftExtensions].getName, null, name, usage,
-      "", "", "", "", "", "", "built-in")
-
   override def apply(ext: SparkSessionExtensions): Unit = {
-    ext.injectFunction((FunctionIdentifier("char_class_counts"),
-      info("char_class_counts", "char_class_counts(str) - [letters, numbers, others] counts"),
-      (exprs: Seq[Expression]) => CharClassCounts(exprs.head)))
-    ext.injectFunction((FunctionIdentifier("letter_histogram"),
-      info("letter_histogram", "letter_histogram(str) - dense 26-slot case-folded histogram"),
-      (exprs: Seq[Expression]) => LetterHistogram(exprs.head)))
-    ext.injectFunction((FunctionIdentifier("cosine_sim"),
-      info("cosine_sim", "cosine_sim(array<float>, array<float>) - cosine similarity"),
-      (exprs: Seq[Expression]) => CosineSimilarity(exprs(0), exprs(1))))
-    ext.injectFunction((FunctionIdentifier("portable_hash60"),
-      info("portable_hash60", "portable_hash60(str) - 60-bit md5-derived hash"),
-      (exprs: Seq[Expression]) => PortableHash60(exprs.head)))
-    ext.injectFunction((FunctionIdentifier("simhash32"),
-      info("simhash32", "simhash32(array<string>) - 32-bit TF-weighted simhash"),
-      (exprs: Seq[Expression]) => Simhash32(exprs.head)))
-    ext.injectFunction((FunctionIdentifier("simhash64"),
-      info("simhash64", "simhash64(array<string>) - 64-bit TF-weighted simhash"),
-      (exprs: Seq[Expression]) => Simhash64(exprs.head)))
-    ext.injectFunction((FunctionIdentifier("sorted_intersect_count"),
-      info("sorted_intersect_count",
-        "sorted_intersect_count(array<bigint>, array<bigint>) - intersection cardinality of sorted distinct arrays"),
-      (exprs: Seq[Expression]) => SortedIntersectCount(exprs(0), exprs(1))))
-    ext.injectFunction((FunctionIdentifier("zvalue2"),
-      info("zvalue2", "zvalue2(bigint, bigint) - 62-bit Morton interleave of two 31-bit dims"),
-      (exprs: Seq[Expression]) => ZValue2(exprs(0), exprs(1))))
-    ext.injectFunction((FunctionIdentifier("shingle_hashes"),
-      info("shingle_hashes",
-        "shingle_hashes(array<string>[, suffix[, width]]) - h60 of every word n-gram in one pass"),
-      (exprs: Seq[Expression]) => ShingleHashes.fromArgs(exprs)))
+    Registry.functions.foreach { case (name, build) =>
+      ext.injectFunction((FunctionIdentifier(name),
+        new ExpressionInfo(classOf[GraftExtensions].getName, null, name, null,
+          "", "", "", "", "", "", "built-in"),
+        build))
+    }
     // whole-operator extension: rank-limit windows → native bounded top-k
     ext.injectOptimizerRule(_ => graft.plans.RewriteRankLimitToTopK)
     ext.injectPlannerStrategy(_ => graft.plans.TopKPerGroupStrategy)

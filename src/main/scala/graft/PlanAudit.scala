@@ -56,17 +56,10 @@ object PlanAudit {
   }
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      // static plans: AQE's wrapper hides codegen annotation pre-execution
-      // (the bench/verify paths keep AQE on; this is audit-only)
-      .config("spark.sql.adaptive.enabled", "false")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    graft.core.Tables.configure(spark)
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.core.Session.local()
+    // static plans: AQE's wrapper hides codegen annotation pre-execution
+    // (the bench/verify paths keep AQE on; this is audit-only)
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
 
     val sb = new StringBuilder
     sb.append(

@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
+import graft.core.Session
 import graft.operators._
 
 /** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt.
@@ -14,10 +15,10 @@ import graft.operators._
 object SparkEntry {
 
   /** Flagship query on /root/testdata/sf0.001; driver smoke-checks rows>0.
-    * This is an entry point (the driver may hand us a fresh session), so
-    * it applies the parquet-reader session conf like the other mains. */
+    * Any session may come in here, so it is prepared like every query of
+    * [[queries]]. */
   def entry(spark: SparkSession): DataFrame = {
-    graft.core.Tables.configure(spark)
+    Session.prepare(spark)
     Relational.q1PricingSummary(spark, "/root/testdata/sf0.001")
   }
 
@@ -53,14 +54,22 @@ object SparkEntry {
       (Warc.queries, Warc.oracle)
     )
 
-  /** One entry per implemented operator from SURVEY.md §2. */
-  def queries: Map[String, (SparkSession, String) => DataFrame] = {
+  /** One entry per implemented operator from SURVEY.md §2, built once.
+    * Each query first applies [[graft.core.Session.prepare]] to the session
+    * it is given, so any session (one graft did not build included) runs
+    * it: operators never register functions or set confs themselves. */
+  lazy val queries: Map[String, (SparkSession, String) => DataFrame] = {
     val merged = modules.iterator.map(_._1).reduce(_ ++ _)
     // A name reused across modules would silently drop one pipeline while
     // the independently-merged oracle map might keep the other's SQL.
     require(modules.map(_._1.size).sum == merged.size,
       "duplicate query name across operator modules")
-    merged
+    merged.map { case (name, q) =>
+      name -> { (spark: SparkSession, dir: String) =>
+        Session.prepare(spark)
+        q(spark, dir)
+      }
+    }
   }
 
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
@@ -8,15 +7,7 @@ object Verify {
     // the dump to named queries (dev iteration); the driver passes two.
     val Array(sfDir, outDir) = args.take(2)
     val only = args.drop(2).toSet
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    graft.core.Tables.configure(spark)
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.core.Session.local()
     new java.io.File(outDir).mkdirs()
     // Run queries a few at a time: Spark's scheduler handles concurrent
     // jobs from multiple threads, and most of these queries are small

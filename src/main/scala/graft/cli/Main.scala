@@ -1,8 +1,8 @@
 package graft.cli
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
-import graft.functions.Registry
+import graft.core.Session
 import graft.operators.MapReduceTasks
 import graft.sources.{DocSource, TextSink}
 
@@ -24,50 +24,30 @@ import graft.sources.{DocSource, TextSink}
   * operator in the library reachable without writing Scala.
   */
 object Main {
-  def main(args: Array[String]): Unit = {
-    if (args.headOption.contains("query")) { runQuery(args.drop(1)); return }
-    require(args.length == 4,
-      "usage: graft.cli.Main <inputDir> <numFiles> <outputPath> <taskNum>\n" +
-        "   or: graft.cli.Main query <name> <sfDir> <outDir>")
-    val Array(inputDir, numFiles, outputPath, taskNum) = args
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_MASTER", "local[*]"))
-      .appName("graft")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    graft.core.Tables.configure(spark)
-    spark.sparkContext.setLogLevel("WARN")
-    Registry.register(spark)
-    val docs = DocSource.read(spark, inputDir, numFiles.toInt)
-    val result = taskNum.toInt match {
-      case 1 => MapReduceTasks.task1(docs)
-      case 2 => MapReduceTasks.task2(docs)
-      case 3 => MapReduceTasks.task3(docs)
-      case n => throw new IllegalArgumentException(s"unknown task $n (1|2|3)")
-    }
-    TextSink.writeGoldenFile(result, outputPath)
-    spark.stop()
-  }
+  private val usage =
+    "usage: graft.cli.Main <inputDir> <numFiles> <outputPath> <taskNum>\n" +
+      "   or: graft.cli.Main query <name> <sfDir> <outDir>"
 
-  private def runQuery(args: Array[String]): Unit = {
-    require(args.length == 3,
-      "usage: graft.cli.Main query <name> <sfDir> <outDir>")
-    val Array(name, sfDir, outDir) = args
-    val fn = graft.SparkEntry.queries.getOrElse(name,
-      throw new IllegalArgumentException(s"unknown query '$name'; available:\n  " +
-        graft.SparkEntry.queries.keys.toSeq.sorted.mkString("\n  ")))
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_MASTER", "local[*]"))
-      .appName(s"graft-$name")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    graft.core.Tables.configure(spark)
-    spark.sparkContext.setLogLevel("WARN")
-    fn(spark, sfDir).write.mode("overwrite").parquet(s"$outDir/$name")
-    spark.stop()
+  def main(args: Array[String]): Unit = {
+    // the arguments are checked before a session starts
+    val run: SparkSession => Unit = args match {
+      case Array("query", name, sfDir, outDir) =>
+        val fn = graft.SparkEntry.queries.getOrElse(name,
+          throw new IllegalArgumentException(s"unknown query '$name'; available:\n  " +
+            graft.SparkEntry.queries.keys.toSeq.sorted.mkString("\n  ")))
+        spark => fn(spark, sfDir).write.mode("overwrite").parquet(s"$outDir/$name")
+      case Array(inputDir, numFiles, outputPath, taskNum) =>
+        val task: DataFrame => DataFrame = taskNum.toInt match {
+          case 1 => MapReduceTasks.task1
+          case 2 => MapReduceTasks.task2
+          case 3 => MapReduceTasks.task3
+          case n => throw new IllegalArgumentException(s"unknown task $n (1|2|3)")
+        }
+        spark => TextSink.writeGoldenFile(
+          task(DocSource.read(spark, inputDir, numFiles.toInt)), outputPath)
+      case _ => throw new IllegalArgumentException(usage)
+    }
+    val spark = Session.local()
+    try run(spark) finally spark.stop()
   }
 }

@@ -17,9 +17,10 @@ object Tables {
     "region", "nation", "customer", "supplier", "part",
     "orders", "lineitem", "events", "documents", "embeddings")
 
-  /** Parquet-reader session conf every graft entry point applies ONCE at
-    * session construction (alongside the UTC timeZone conf) — load() itself
-    * is side-effect free so a table read never silently reconfigures the
+  /** Parquet-reader session conf that [[Session.prepare]] applies to every
+    * session a query runs in (the graft sessions of [[Session.local]] and
+    * any session `SparkEntry.queries` is handed) — load() itself is
+    * side-effect free so a table read never silently reconfigures the
     * caller's session for unrelated parquet reads.
     *
     *  - `inferTimestampNTZ.enabled=false`: parquet timestamps written

@@ -1,6 +1,7 @@
 package graft.functions
 
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression, UnsafeArrayData}
 import org.apache.spark.sql.types._
@@ -115,57 +116,44 @@ case class LetterHistogram(child: Expression)
     copy(child = newChild)
 }
 
-/** Registers the custom expressions in a session's function registry so
-  * they're usable from both `expr(...)` and `spark.sql(...)`. Idempotent. */
+/** graft's native SQL functions: one `(name, builder)` list, which both
+  * [[Registry.register]] (per session) and `graft.GraftExtensions`
+  * (`spark.sql.extensions`) install. A new native function is one entry
+  * here. */
 object Registry {
+  val functions: Seq[(String, Seq[Expression] => Expression)] = Seq(
+    ("char_class_counts", e => CharClassCounts(e.head)),
+    ("letter_histogram", e => LetterHistogram(e.head)),
+    ("cosine_sim", e => CosineSimilarity(e(0), e(1))),
+    ("dot_product", e => DotProduct(e(0), e(1))),
+    ("sq_dist", e => SqDist(e(0), e(1))),
+    ("portable_hash60", e => PortableHash60(e.head)),
+    ("simhash32", e => Simhash32(e.head)),
+    ("simhash64", e => Simhash64(e.head)),
+    ("sorted_intersect_count", e => SortedIntersectCount(e(0), e(1))),
+    ("array_eq_count", e => ArrayEqCount(e(0), e(1))),
+    ("word_tokens", e => WordTokens(e.head)),
+    ("word_bigrams", e => WordBigrams(e.head)),
+    ("word_bigram_hashes", WordBigramHashes.fromArgs),
+    ("shingle_hashes", ShingleHashes.fromArgs),
+    ("shingle_hash_pairs", ShingleHashPairs.fromArgs),
+    ("segment_hashes", SegmentHashes.fromArgs),
+    ("char_window_hashes", CharWindowHashes.fromArgs),
+    ("winnow_hashes", WinnowHashes.fromArgs),
+    ("zvalue2", e => ZValue2(e(0), e(1))),
+    ("lex_max", e => LexExtreme(e(0), e(1), isMax = true)),
+    ("lex_min", e => LexExtreme(e(0), e(1), isMax = false)))
+
+  /** Registers [[functions]] in the session's function registry, so they
+    * are usable from both `expr(...)` and `spark.sql(...)`. Idempotent: a
+    * name that already holds its builder is left alone, so preparing a
+    * session before every query neither re-registers a function nor logs
+    * Spark's "replaced a previously registered function" warning. */
   def register(spark: SparkSession): Unit = {
     val reg = spark.sessionState.functionRegistry
-    reg.createOrReplaceTempFunction(
-      "char_class_counts", exprs => CharClassCounts(exprs.head), "built-in")
-    reg.createOrReplaceTempFunction(
-      "letter_histogram", exprs => LetterHistogram(exprs.head), "built-in")
-    reg.createOrReplaceTempFunction(
-      "cosine_sim", exprs => CosineSimilarity(exprs(0), exprs(1)), "built-in")
-    reg.createOrReplaceTempFunction(
-      "dot_product", exprs => DotProduct(exprs(0), exprs(1)), "built-in")
-    reg.createOrReplaceTempFunction(
-      "sq_dist", exprs => SqDist(exprs(0), exprs(1)), "built-in")
-    reg.createOrReplaceTempFunction(
-      "portable_hash60", exprs => PortableHash60(exprs.head), "built-in")
-    reg.createOrReplaceTempFunction(
-      "simhash32", exprs => Simhash32(exprs.head), "built-in")
-    reg.createOrReplaceTempFunction(
-      "simhash64", exprs => Simhash64(exprs.head), "built-in")
-    reg.createOrReplaceTempFunction(
-      "sorted_intersect_count",
-      exprs => SortedIntersectCount(exprs(0), exprs(1)), "built-in")
-    reg.createOrReplaceTempFunction(
-      "array_eq_count",
-      exprs => ArrayEqCount(exprs(0), exprs(1)), "built-in")
-    reg.createOrReplaceTempFunction(
-      "word_tokens", exprs => WordTokens(exprs.head), "built-in")
-    reg.createOrReplaceTempFunction(
-      "word_bigrams", exprs => WordBigrams(exprs.head), "built-in")
-    reg.createOrReplaceTempFunction(
-      "word_bigram_hashes",
-      exprs => WordBigramHashes.fromArgs(exprs), "built-in")
-    reg.createOrReplaceTempFunction(
-      "shingle_hashes", exprs => ShingleHashes.fromArgs(exprs), "built-in")
-    reg.createOrReplaceTempFunction(
-      "shingle_hash_pairs", exprs => ShingleHashPairs.fromArgs(exprs), "built-in")
-    reg.createOrReplaceTempFunction(
-      "segment_hashes", exprs => SegmentHashes.fromArgs(exprs), "built-in")
-    reg.createOrReplaceTempFunction(
-      "char_window_hashes", exprs => CharWindowHashes.fromArgs(exprs), "built-in")
-    reg.createOrReplaceTempFunction(
-      "winnow_hashes", exprs => WinnowHashes.fromArgs(exprs), "built-in")
-    reg.createOrReplaceTempFunction(
-      "zvalue2", exprs => ZValue2(exprs(0), exprs(1)), "built-in")
-    reg.createOrReplaceTempFunction(
-      "lex_max", exprs => LexExtreme(exprs(0), exprs(1), isMax = true),
-      "built-in")
-    reg.createOrReplaceTempFunction(
-      "lex_min", exprs => LexExtreme(exprs(0), exprs(1), isMax = false),
-      "built-in")
+    functions.foreach { case (name, build) =>
+      if (!reg.lookupFunctionBuilder(FunctionIdentifier(name)).contains(build))
+        reg.createOrReplaceTempFunction(name, build, "built-in")
+    }
   }
 }

@@ -1308,8 +1308,7 @@ object Multimodal {
     * `energies` column): one row per 4-window landmark per clip —
     * `(landmark, match_doc, match_pos)`. Shared by [[audioFpLookup]] and
     * the streaming catalog matcher. */
-  private[graft] def fpIndex(fps: DataFrame): DataFrame = {
-    graft.functions.Registry.register(fps.sparkSession)
+  private[graft] def fpIndex(fps: DataFrame): DataFrame =
     fps.filter(col("n_windows") >= FpLandmarkWindows)
       .select(col("doc_id").as("match_doc"), col("n_windows"), col("energies"))
       .withColumn("match_pos",
@@ -1321,7 +1320,6 @@ object Multimodal {
           "cast(element_at(energies, cast(match_pos + 3 as int)) as string), " +
           "cast(element_at(energies, cast(match_pos + 4 as int)) as string)))")
           .as("landmark"))
-  }
 
   /** Content-based audio retrieval over the fingerprint corpus — the
     * canonical fingerprint deployment (Wang, "An industrial-strength
@@ -1350,7 +1348,6 @@ object Multimodal {
       audioFpFullTable(spark, dir).toDF()
     }
     val idx = fpIndex(fps)
-    graft.functions.Registry.register(spark)
     val ex = fps.withColumn("excerpt_pos", col("doc_id") % 4)
       .filter(col("n_windows") >= col("excerpt_pos") + FpLandmarkWindows)
       .select(col("doc_id").as("query_doc"), col("excerpt_pos"),

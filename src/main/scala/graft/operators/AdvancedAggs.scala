@@ -182,11 +182,11 @@ object AdvancedAggs {
       (unscaled.cast(org.apache.spark.sql.types.DecimalType(38, 0)) /
         math.pow(10, scale).toLong).cast("double")
     // r17 (r16 advice): Σ qc·pc (per-row terms to 5.5e10) is split
-    // div/mod 10⁶ like Σ pc² — the unsplit BIGINT sum wrapped SILENTLY
-    // under non-ANSI long arithmetic past ~1e8 rows per group, where the
-    // pre-r16 decimal path at least failed loudly. Both components now
-    // stay exact past 10¹² rows per group; reassembly is the identical
-    // exact rational, so the oracle hash is unchanged.
+    // div/mod 10⁶ like Σ pc² — the unsplit BIGINT sum overflows past ~1e8
+    // rows per group, which under the ANSI arithmetic graft sessions pin
+    // fails the query (ARITHMETIC_OVERFLOW) rather than wrapping. Both
+    // components now stay exact past 10¹² rows per group; reassembly is
+    // the identical exact rational, so the oracle hash is unchanged.
     Tables.lineitem(spark, dir)
       .select(col("l_returnflag"), qc.as("qc"), pc.as("pc"))
       .select(col("l_returnflag"), col("qc"), col("pc"),
@@ -400,7 +400,6 @@ object AdvancedAggs {
     * partitions/days by cell-wise addition, which is the whole point of a
     * CMS at 100 TB: frequency estimates for any user in 4 KB of state. */
   def cmsUsers(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.Registry.register(spark)
     // one scan: each event explodes into its 4 (row, column) cells — not a
     // 4-way union of full scans, which would read the stream 4 times
     Tables.events(spark, dir)
@@ -429,7 +428,6 @@ object AdvancedAggs {
     * bitmap is broadcast to the probe side; build and probe are each one
     * scan + one tiny aggregation. */
   def bloomProbe(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.Registry.register(spark)
     val members = Tables.orders(spark, dir)
       .filter(col("o_orderdate") >= lit("1996-01-01").cast("timestamp") &&
         col("o_orderdate") < lit("1996-04-01").cast("timestamp"))
@@ -673,19 +671,16 @@ object AdvancedAggs {
     * the entire point of an HLL at 100 TB: the shuffle carries ≤64 rows
     * per partition no matter how many events feed it, and region-level
     * sketches merge by register-wise MAX. */
-  def hllRegisters(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.Registry.register(spark)
+  def hllRegisters(spark: SparkSession, dir: String): DataFrame =
     spark.range(64).select(col("id").as("register"))
       .join(hllRegisterAgg(spark, dir), Seq("register"), "left")
       .select(col("register"),
         coalesce(col("max_rank"), lit(0)).as("max_rank"))
       .orderBy("register")
-  }
 
   /** Shared register aggregation for [[hllRegisters]]/[[hllEstimate]]:
     * (register, max rank) pairs for registers that saw at least one hash. */
-  private def hllRegisterAgg(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.Registry.register(spark)
+  private def hllRegisterAgg(spark: SparkSession, dir: String): DataFrame =
     Tables.events(spark, dir)
       .select(expr("portable_hash60(concat('hll:', cast(user_id as string)))")
         .as("h"))
@@ -697,7 +692,6 @@ object AdvancedAggs {
           .otherwise(lit(55) - length(bin(col("rem")))).cast("int").as("rnk"))
       .groupBy("register")
       .agg(max(col("rnk")).as("max_rank"))
-  }
 
   /** HLL MERGEABILITY — the property that makes sketches worth shipping
     * at 100 TB: per-shard register tables (here one shard per event
@@ -709,7 +703,6 @@ object AdvancedAggs {
     * the hash gate. Scale: each shard aggregation is ≤64 rows out of a
     * partial-aggregated scan; the merge shuffles ≤ shards·64 rows. */
   def hllMerge(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.Registry.register(spark)
     val shard = Tables.events(spark, dir)
       .select(col("event_type"),
         expr("portable_hash60(concat('hll:', cast(user_id as string)))").as("h"))
@@ -750,7 +743,6 @@ object AdvancedAggs {
     * both engines, so even the float columns hash-gate; exact distinct
     * counts ride along so the estimator's accuracy is itself checked. */
   def hllIntersection(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.Registry.register(spark)
     val ev = Tables.events(spark, dir)
       .select(get_json_object(col("props"), "$.k").cast("int").as("k"),
         col("user_id"))
@@ -878,7 +870,6 @@ object AdvancedAggs {
     * the 1024-cell sketch joins in as a broadcast; est = MIN over the 4
     * probed cells. */
   def cmsTopkProbe(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.Registry.register(spark)
     val cells = Tables.events(spark, dir)
       .select(explode(expr(
         // r16: unrolled 4-element array — transform(sequence) lambdas are
@@ -1089,8 +1080,7 @@ object AdvancedAggs {
     * immutable struct buffer forced the whole aggregation onto
     * interpreted SortAggregate (r15 verdict item 2; same values, so the
     * gate hash is unchanged). */
-  def argExtremes(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.Registry.register(spark)
+  def argExtremes(spark: SparkSession, dir: String): DataFrame =
     Tables.orders(spark, dir)
       .groupBy(col("o_orderpriority"))
       .agg(
@@ -1100,7 +1090,6 @@ object AdvancedAggs {
         col("mx.a").as("max_price"), (-col("mx.b")).as("max_price_orderkey"),
         col("mn.a").as("min_price"), col("mn.b").as("min_price_orderkey"))
       .orderBy("o_orderpriority")
-  }
 
   /** Pearson chi-square test of independence between `event_type` and ISO
     * day-of-week — the distribution-drift / feature-dependence check a
@@ -1118,9 +1107,9 @@ object AdvancedAggs {
     *
     * Exactness bound: dev²·10⁶ must fit DECIMAL(38,0), i.e. |dev| ≤ ~3e15,
     * and |dev| = |o·n − r·c| can approach n² — so the exact path holds to
-    * n ≈ 5e7 events per contingency table (beyond it, non-ANSI Spark
-    * returns NULL chi2_micro rather than a wrong value, and DuckDB's
-    * HUGEINT keeps going — the gate would catch the divergence). For
+    * n ≈ 5e7 events per contingency table (beyond it the decimal
+    * overflows, and under the ANSI arithmetic graft sessions pin the
+    * query fails loudly — it neither wraps nor returns NULL). For
     * larger n, divide dev and n by g = gcd(dev, n·r·c) first or compute
     * per-cell on a uniform row sample; the statistic's scale is the
     * caller's to choose before the decimal width binds. */
@@ -1216,7 +1205,6 @@ object AdvancedAggs {
     * sorted replicate means (nearest-rank 2.5%/97.5%) — exact order
     * stats over bit-identical doubles, so the whole CI is hash-gateable. */
   def bootstrapCi(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.Registry.register(spark)
     val ev = Tables.events(spark, dir)
       .select(col("event_type"), col("event_id"),
         cents(col("value")).as("cents"))
@@ -1260,13 +1248,11 @@ object AdvancedAggs {
     * self-gated via an error-bound boolean), KMV over the portable md5
     * hash is REPRODUCIBLE cross-engine, so the sketch estimate itself is
     * hash-gated, not just its accuracy claim. */
-  private def kmvHashes(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.Registry.register(spark)
+  private def kmvHashes(spark: SparkSession, dir: String): DataFrame =
     Tables.events(spark, dir)
       .select(col("event_type"),
         expr("portable_hash60(concat('kmv:', cast(user_id as string)))").as("h"))
       .distinct()
-  }
 
   /** KMV distinct-count sketch (Bar-Yossef et al., RANDOM 2002 /
     * Beyer et al., SIGMOD 2007): keep the K smallest hash values; with
@@ -1700,7 +1686,6 @@ object AdvancedAggs {
     * BIGINT formulation is the exact-while-exact-is-possible choice, not
     * an unstated assumption. */
   def amsF2(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.Registry.register(spark)
     val freq = Tables.events(spark, dir)
       .groupBy("user_id").agg(count(lit(1)).as("f"))
     val z = freq

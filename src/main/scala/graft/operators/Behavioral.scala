@@ -247,8 +247,7 @@ object Behavioral {
     * Scale shape: the hash predicate is a scan-level filter (no shuffle,
     * no membership table, no join against a user list), then one
     * low-cardinality hash aggregation over the surviving ~10%. */
-  def sampleUsers(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.Registry.register(spark)
+  def sampleUsers(spark: SparkSession, dir: String): DataFrame =
     Tables.events(spark, dir)
       .filter(expr("portable_hash60(concat('usamp:', cast(user_id as string))) % 10 = 0"))
       .groupBy("event_type")
@@ -258,7 +257,6 @@ object Behavioral {
         sum(col("value").cast("decimal(15,2)")).cast("double").as("sum_value"),
         min(col("event_id")).as("first_event"))
       .orderBy("event_type")
-  }
 
   /** Seasonal (hour-of-day) anomaly detection over the error stream: a
     * (day, hour) cell is anomalous when its error count exceeds that
@@ -574,7 +572,6 @@ object Behavioral {
     * rollup, one single-row report. */
   def abTest(spark: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.types.DecimalType
-    graft.functions.Registry.register(spark)
     val d38 = DecimalType(38, 0)
     val users = Tables.events(spark, dir)
       .groupBy(col("user_id"))

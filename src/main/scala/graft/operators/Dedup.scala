@@ -44,11 +44,9 @@ import graft.core.{Artifacts, Fixpoint, Tables}
 object Dedup {
 
   /** (doc_id, toks) with whitespace tokenization. */
-  private[operators] def tokenized(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.Registry.register(spark)
+  private[operators] def tokenized(spark: SparkSession, dir: String): DataFrame =
     Tables.documents(spark, dir)
       .select(col("doc_id"), split(col("text"), "\\s+").as("toks"))
-  }
 
   /** Distinct (doc_id, h) rows where h = h60 of a word 3-gram shingle.
     * One codegen pass ([[graft.functions.ShingleHashes]]) — no 3-gram
@@ -61,14 +59,12 @@ object Dedup {
     * once per corpus at ingest, and the df aggregation, the df-cap join
     * and the prefix-index joins of ngramJaccard / containmentPairs /
     * trigramCoverage all arrive pre-partitioned on `h`. */
-  private[operators] def shingleHashes(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.Registry.register(spark)
+  private[operators] def shingleHashes(spark: SparkSession, dir: String): DataFrame =
     Artifacts.table(spark, dir, "documents", "graft_shidx", "h") {
       tokenized(spark, dir)
         .select(col("doc_id"), explode(expr("shingle_hashes(toks)")).as("h"))
         .distinct()
     }
-  }
 
   /** df cap shared by the jaccard/containment family — a pure scale
     * guard; no shingle in the test data comes close. */
@@ -176,7 +172,6 @@ object Dedup {
     * every real pipeline uses. One row per stage with n_in/kept/dropped;
     * all window mins are hash-partitioned by the stage's own key. */
   def dedupCascade(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.Registry.register(spark)
     val base = Tables.documents(spark, dir)
       .select(col("doc_id"),
         md5(col("text")).as("h_exact"),
@@ -620,7 +615,6 @@ object Dedup {
     * array, nothing driver-side. The left join keeps sub-8-token docs
     * with n_spans = 0, so the output is a total accounting. */
   def spanDedup(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.Registry.register(spark)
     val spans = Tables.documents(spark, dir)
       .select(col("doc_id"), split(col("text"), "\\s+").as("toks"))
       .select(col("doc_id"), explode(expr(
@@ -701,7 +695,6 @@ object Dedup {
     * relation — factored out so CdcSpec can pin the edit-locality
     * property on synthetic edits. */
   private[operators] def cdcChunkTexts(docs: DataFrame): DataFrame = {
-    graft.functions.Registry.register(docs.sparkSession)
     val tok = docs
       .select(col("doc_id"), posexplode(split(col("text"), "\\s+")).as(Seq("pos", "t")))
       .filter(col("t") =!= "")

@@ -225,8 +225,7 @@ object Diagnostics {
     * deterministic given the portable hash family, so every cell,
     * every inner product, and the bound boolean hash-gate exactly. */
   /** One side's 4×[[JsWidth]] CMS over the events user_id key. */
-  private def cmsSide(spark: SparkSession, dir: String, t: String): DataFrame = {
-    graft.functions.Registry.register(spark)
+  private def cmsSide(spark: SparkSession, dir: String, t: String): DataFrame =
     Tables.events(spark, dir)
       .filter(col("event_type") === t)
       .select(explode(expr(
@@ -237,7 +236,6 @@ object Diagnostics {
           .mkString("array(", ", ", ")"))).as("x"))
       .groupBy(col("x.r").as("sketch_row"), col("x.c").as("sketch_col"))
       .agg(count(lit(1)).as("cnt"))
-  }
 
   /** Per-hash-row count-min inner products for the click ⋈ purchase
     * user_id join — shared by [[joinSizeEstimate]] (the gated bound
@@ -386,7 +384,6 @@ object Diagnostics {
     * every advisor scalar. */
   def cmsHotKeyEstimate(spark: SparkSession, dir: String): Long =
     Artifacts.model(spark, dir, "haest", "events") {
-      graft.functions.Registry.register(spark)
       java.lang.Long.valueOf(
         Tables.events(spark, dir)
           .select(explode(expr(

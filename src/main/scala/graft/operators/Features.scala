@@ -44,8 +44,7 @@ object Features {
     * = 0 under a signed hash), weight = Σ signs of the doc's tokens
     * landing in the dim. Only dims a token actually hit are emitted
     * (sparse rows; a weight may still be 0 when signs cancel). */
-  private[operators] def featureRows(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.Registry.register(spark)
+  private[operators] def featureRows(spark: SparkSession, dir: String): DataFrame =
     Tables.documents(spark, dir)
       .select(col("doc_id"), explode(split(col("text"), "\\s+")).as("t"))
       .filter(col("t") =!= "")
@@ -55,7 +54,6 @@ object Features {
           .cast("long").as("sgn"))
       .groupBy("doc_id", "dim")
       .agg(sum(col("sgn")).as("weight"))
-  }
 
   /** Hashed feature vectors as sparse (doc_id, dim, weight) rows. */
   def featureHashing(spark: SparkSession, dir: String): DataFrame =

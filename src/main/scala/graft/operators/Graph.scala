@@ -484,7 +484,6 @@ object Graph {
     * smallest. Factored out so the spec can drive it with a synthetic
     * graph and pin the tie-break semantics. */
   private[operators] def lpaLabels(sym: DataFrame, rounds: Int): DataFrame = {
-    graft.functions.Registry.register(sym.sparkSession)
     val init = sym.select(col("u1").as("v")).distinct()
       .select(col("v"), col("v").as("lbl"))
     Fixpoint.rounds(init, rounds) { lab =>
@@ -684,7 +683,6 @@ object Graph {
   /** Level-1 downward-sweep labeling (v → lbl) — shared by
     * [[louvainOneLevel]] and [[louvainTwoLevel]]. */
   private def louvainLabel1(e: DataFrame, deg: DataFrame, m: DataFrame): DataFrame = {
-    graft.functions.Registry.register(e.sparkSession)
     val sym = e.select(col("u1").as("src"), col("u2").as("dst"))
       .union(e.select(col("u2").as("src"), col("u1").as("dst")))
     val cand = sym

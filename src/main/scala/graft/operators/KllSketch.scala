@@ -79,7 +79,6 @@ object Kll {
 
   private[operators] def build(spark: SparkSession, dir: String): KllModel =
     Artifacts.model(spark, dir, "kll", "lineitem") {
-      graft.functions.Registry.register(spark)
       val base = Tables.lineitem(spark, dir)
         .select(col("l_extendedprice").as("v"),
           concat(col("l_orderkey").cast("string"), lit("-"),

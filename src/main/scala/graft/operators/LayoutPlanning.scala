@@ -49,8 +49,7 @@ object LayoutPlanning {
   /** x-domain range per linear bucket: 8-bit user domain / 64. */
   val XBucketWidth = 4L
 
-  def zorderLocality(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.Registry.register(spark)
+  def zorderLocality(spark: SparkSession, dir: String): DataFrame =
     Tables.events(spark, dir)
       .select(
         (col("user_id") % (DimMask + 1)).as("x"),
@@ -68,7 +67,6 @@ object LayoutPlanning {
       .withColumn("bbox_area",
         (col("x_max") - col("x_min") + 1L) * (col("y_max") - col("y_min") + 1L))
       .orderBy("layout", "bucket")
-  }
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     "layout_zorder_locality" -> (zorderLocality _)

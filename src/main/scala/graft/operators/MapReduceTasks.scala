@@ -4,7 +4,6 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.core.Tables
-import graft.functions.Registry
 
 /** The reference engine's three map tasks + the canonical word count,
   * re-expressed as declarative Spark pipelines over a document corpus.
@@ -86,10 +85,8 @@ object MapReduceTasks {
       .orderBy("key")
 
   /** The documents analytic table presented as a corpus (text ↦ content). */
-  private def corpus(spark: SparkSession, dir: String): DataFrame = {
-    Registry.register(spark)
+  private def corpus(spark: SparkSession, dir: String): DataFrame =
     Tables.documents(spark, dir).select(col("text").as("content"))
-  }
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     "mr_map1_char_classes" -> ((s, d) => task1(corpus(s, d))),

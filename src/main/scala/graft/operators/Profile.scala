@@ -282,7 +282,6 @@ object Profile {
   def profileHll(df: DataFrame,
       sketchHash: Column => Column = PortableHash60,
       nativeValues: Boolean = false): DataFrame = {
-    graft.functions.Registry.register(df.sparkSession)
     val fields = df.schema.fields
     val one = statsRow(df)
     val stacked = fields.map { f =>

@@ -94,7 +94,6 @@ object Sampling {
     * mergeable-sample property downstream caches rely on). */
   def bottomKStratified(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    graft.functions.Registry.register(spark)
     Tables.documents(spark, dir)
       .select(col("lang"), col("doc_id").cast("string").as("doc_id"),
         expr("portable_hash60(concat('samp:', cast(doc_id as string)))").as("h"))
@@ -137,8 +136,7 @@ object Sampling {
     * one band finer. The gate corpus keeps half-bits; the estimator is
     * deterministic and gate-consistent either way, and the coarseness
     * only softens WEIGHTING fidelity, never reproducibility. */
-  def weightedPriority(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.Registry.register(spark)
+  def weightedPriority(spark: SparkSession, dir: String): DataFrame =
     Tables.documents(spark, dir)
       .select(col("doc_id").cast("string").as("doc_id"), col("lang"),
         greatest(col("n_chars").cast("long"), lit(1L)).as("w"),
@@ -150,7 +148,6 @@ object Sampling {
       .select(col("doc_id"), col("lang"), col("w"), col("priority"))
       .orderBy(col("priority"), col("doc_id"))
       .limit(K * 2)
-  }
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     "sample_bottomk_stratified" -> (bottomKStratified _),

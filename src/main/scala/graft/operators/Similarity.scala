@@ -5,7 +5,6 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.core.{Artifacts, Tables}
-import graft.functions.Registry
 
 /** Similarity search over the `embeddings` table (`array<float>` vectors),
   * using the codegen'd [[graft.functions.CosineSimilarity]] expression.
@@ -38,11 +37,9 @@ object Similarity {
     * `dot/(nrm_a*nrm_b)` with norms computed ONCE per vector — one array
     * pass per pair instead of cosine_sim's three, bit-identical results
     * (sqrt(na) is the same IEEE value computed once or per pair). */
-  private def normed(spark: SparkSession, dir: String): DataFrame = {
-    Registry.register(spark)
+  private def normed(spark: SparkSession, dir: String): DataFrame =
     Tables.embeddings(spark, dir)
       .withColumn("nrm", expr("sqrt(dot_product(embedding, embedding))"))
-  }
 
   private val pairSim: Column =
     expr("dot_product(qv, embedding)") / (col("qnrm") * col("nrm"))
@@ -214,7 +211,6 @@ object Similarity {
     * oracle-checkable because both engines fold the same ±v_i terms in the
     * same order, so even the proj > 0 sign boundaries agree bit-for-bit. */
   def topkLsh(spark: SparkSession, dir: String): DataFrame = {
-    Registry.register(spark)
     val emb = lshBucketed(spark, dir)
     // bounded query batch — see topkBucketed's scaladoc for the rationale
     val q = emb.filter(col("vec_id") < 2000)
@@ -346,7 +342,6 @@ object Similarity {
     * themselves, not just the assignment. */
   private def kmeansModel(spark: SparkSession, dir: String)
       : (DataFrame, Array[(Int, Array[Double])]) = {
-    Registry.register(spark)
     val emb = Tables.embeddings(spark, dir)
     val init = emb.filter(col("vec_id") < ivfK(spark, dir))
       .select(col("vec_id").cast("int").as("cid"),
@@ -491,7 +486,6 @@ object Similarity {
     * codebook as s -> cid-sorted (cid, centroid)). */
   private def pqAssigned(spark: SparkSession, dir: String)
       : (DataFrame, Map[Int, Array[(Int, Array[Double])]]) = {
-    Registry.register(spark)
     val emb = Tables.embeddings(spark, dir)
     val init = emb.filter(col("vec_id") <= 3)
       .select(col("vec_id").cast("int").as("cid"), explode(expr(
@@ -1380,7 +1374,6 @@ object Similarity {
     * and full sims are the same in-order IEEE folds the other sim
     * oracles pin, so even the double recalls hash-gate. */
   def matryoshkaRecall(spark: SparkSession, dir: String): DataFrame = {
-    Registry.register(spark)
     val emb = Tables.embeddings(spark, dir)
       .withColumn("nrm", expr("sqrt(dot_product(embedding, embedding))"))
       .withColumn("pre", expr(s"slice(embedding, 1, $MatryoshkaDims)"))
@@ -1424,7 +1417,6 @@ object Similarity {
   }
 
   def annRecall(spark: SparkSession, dir: String): DataFrame = {
-    Registry.register(spark)
     val emb = lshBucketed(spark, dir)
     // every 5th vector, capped to a BOUNDED sample (≤ 200 queries): a
     // RATE-sampled query set kept the exact side at q·n = n²/5 — the 10×

@@ -59,15 +59,13 @@ object SubstringDedup {
     * ingest, exactly how a 100 TB corpus would maintain its window index.
     * The pre-write `repartition` on `h` aligns writer tasks with bucket
     * ids so each bucket is one file, not one-per-task fragments. */
-  private def windowHashes(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.Registry.register(spark)
+  private def windowHashes(spark: SparkSession, dir: String): DataFrame =
     Artifacts.table(spark, dir, "documents", "graft_winidx", "h") {
       Tables.documents(spark, dir)
         .select(col("doc_id"),
           explode(expr(s"char_window_hashes(text, $L)")).as("h"))
         .distinct()
     }
-  }
 
   /** Per-document duplication profile: how much of each document's window
     * set is shared with at least one other document. `dup_ratio` is the
@@ -184,15 +182,13 @@ object SubstringDedup {
     * 100 TB corpus is maintained. Same documents-listing key as
     * the window index; rows are identical to the inline explode by
     * construction, so both gates stay hash-green. */
-  private def winnowFps(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.Registry.register(spark)
+  private def winnowFps(spark: SparkSession, dir: String): DataFrame =
     Artifacts.table(spark, dir, "documents", "graft_wfpidx", "h") {
       Tables.documents(spark, dir)
         .select(col("doc_id"),
           explode(expr(s"winnow_hashes(text, $L, $WinW)")).as("h"))
         .distinct()
     }
-  }
 
   /** Substring-level near-dup CLUSTERS: connected components over the
     * winnowed-fingerprint pair graph ([[substringWinnow]] edges), each doc

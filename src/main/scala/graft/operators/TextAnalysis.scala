@@ -40,11 +40,9 @@ object TextAnalysis {
   private def inList(words: Seq[String]): String =
     words.map(w => s"'$w'").mkString("(", ", ", ")")
 
-  private def tokenized(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.Registry.register(spark)
+  private def tokenized(spark: SparkSession, dir: String): DataFrame =
     Tables.documents(spark, dir)
       .withColumn("toks", split(col("text"), "\\s+"))
-  }
 
   /** The (doc_id, token, tf) term-frequency postings relation — the
     * classic text-retrieval ingest index.
@@ -145,7 +143,6 @@ object TextAnalysis {
     * DECIMAL(38,0) (doc_id·10⁶ + seg_idx) so 100 TB doc-id ranges
     * cannot overflow the packing. */
   def sentenceDedup(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.Registry.register(spark)
     // r17: segment hashes come from the native segment_hashes expression
     // (one byte-level pass, digest fed the token slices) instead of an
     // interpreted transform∘sequence∘slice∘concat_ws chain materializing
@@ -876,7 +873,6 @@ object TextAnalysis {
     * The n-gram LM itself never materializes — exactly how count-based
     * selection runs over a 100 TB corpus. */
   def bigramOov(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.Registry.register(spark)
     // r17: native word_bigram_hashes — one byte-level codegen pass per
     // row (digest fed the token slices directly) instead of the
     // interpreted filter∘split + transform∘sequence HOF chain with a
@@ -1118,7 +1114,6 @@ object TextAnalysis {
     // scan, models derived from db) LOST in r16 — map-side partial
     // aggregation makes the extra scans cheap once the per-row work is
     // codegen.
-    graft.functions.Registry.register(spark)
     val bg = Tables.documents(spark, dir)
       .select(col("doc_id"), explode(expr("word_bigrams(text)")).as("p"))
       .select(col("doc_id"), col("p.l").as("l"), col("p.r").as("r"))
@@ -1163,7 +1158,6 @@ object TextAnalysis {
     * per-doc bigram table. */
   def kneserNey(spark: SparkSession, dir: String): DataFrame = {
     // Native bigram generator — same move as [[lmScore]] (r17).
-    graft.functions.Registry.register(spark)
     val bg = Tables.documents(spark, dir)
       .select(col("doc_id"), explode(expr("word_bigrams(text)")).as("p"))
       .select(col("doc_id"), col("p.l").as("l"), col("p.r").as("r"))

@@ -25,7 +25,6 @@ import graft.core.Tables
 object TrainingPipeline {
 
   def trainingSplitReport(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.Registry.register(spark)
     val docs = Tables.documents(spark, dir)
       .withColumn("toks", split(col("text"), "\\s+"))
     // exact dedup: keep the lowest doc_id per content hash
@@ -62,8 +61,7 @@ object TrainingPipeline {
     * incremental data (a doc's membership never changes as the corpus
     * grows), and stratifies for free — a uniform hash is uniform within
     * every stratum. One scan, one low-cardinality aggregation. */
-  def stratifiedSample(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.Registry.register(spark)
+  def stratifiedSample(spark: SparkSession, dir: String): DataFrame =
     Tables.documents(spark, dir)
       .withColumn("keep",
         expr("portable_hash60(cast(doc_id as string)) % 10 = 0"))
@@ -75,7 +73,6 @@ object TrainingPipeline {
       .withColumn("sample_rate",
         col("n_sampled").cast("double") / col("n_total"))
       .orderBy("lang", "source")
-  }
 
   /** Benchmark decontamination — the step every serious training pipeline
     * runs before the split: find training documents that share a word
@@ -91,7 +88,6 @@ object TrainingPipeline {
     * training shingles. Output is per contaminated doc: how many
     * benchmark docs it collides with and on how many distinct shingles. */
   def decontamination(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.Registry.register(spark)
     val sh = Tables.documents(spark, dir)
       .select(col("doc_id"), split(col("text"), "\\s+").as("toks"))
       .select(col("doc_id"), explode(expr("shingle_hashes(toks, '', 4)")).as("h"))
@@ -119,7 +115,6 @@ object TrainingPipeline {
     * with the cluster, keeping every partition's cumsum bounded. Output is
     * the packing manifest per (shard, chunk). */
   def packSequences(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.Registry.register(spark)
     val docs = Tables.documents(spark, dir)
       .select(col("doc_id"),
         size(split(col("text"), "\\s+")).cast("long").as("n_toks"))
@@ -241,8 +236,7 @@ object TrainingPipeline {
     * the standard trick for composing reproducible splits. One scan,
     * one 25-key hash aggregation; at 100 TB the fold column is a pure
     * map-side expression, so folds can also feed a partitioned write. */
-  def kfold(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.Registry.register(spark)
+  def kfold(spark: SparkSession, dir: String): DataFrame =
     Tables.documents(spark, dir)
       .withColumn("fold",
         expr("portable_hash60(concat('fold:', cast(doc_id as string))) % 5"))
@@ -252,7 +246,6 @@ object TrainingPipeline {
         sum(col("n_chars")).as("n_chars"),
         min(col("doc_id")).as("first_doc"))
       .orderBy("fold", "lang")
-  }
 
   /** Data-mixing quota enforcement: a 50k-token training budget is split
     * across sources proportionally to their token mass (floor division —
@@ -308,7 +301,6 @@ object TrainingPipeline {
     * the shuffle, so a billion-doc stratum moves k rows, not its whole
     * membership, and no full per-stratum sort ever happens. */
   def groupSample(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.Registry.register(spark)
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy(col("lang"), col("source"))
       .orderBy(expr("portable_hash60(concat('samp:', cast(doc_id as string)))"),
@@ -402,7 +394,6 @@ object TrainingPipeline {
     * pair). Reproducible across runs/engines: the split is a pure
     * function of cluster_id via the portable hash. */
   def leakageSafeSplit(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.Registry.register(spark)
     // r17 (guide §2.4): the near-dup CC labeling here is EXACTLY the
     // label table [[Dedup.ccLabels]] already maintains at ingest (same
     // ngramJaccard edge SQL, same min-label propagation) — this query
@@ -442,8 +433,7 @@ object TrainingPipeline {
     * Scale shape: ORDER BY + LIMIT k plans as TakeOrdered — each
     * partition ships at most k rows, no global sort, no RNG state. The
     * reservoir never lives on the driver. */
-  def weightedSample(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.Registry.register(spark)
+  def weightedSample(spark: SparkSession, dir: String): DataFrame =
     Tables.documents(spark, dir)
       .select(col("doc_id"), col("n_chars"),
         expr("portable_hash60(concat('ws:', cast(doc_id as string))) % 1073741824")
@@ -452,7 +442,6 @@ object TrainingPipeline {
       .orderBy(col("priority"), col("doc_id"))
       .limit(50)
       .select("doc_id", "n_chars", "priority")
-  }
 
   /** Context-window chunking: split each document's token stream into
     * training windows of [[ChunkWindow]] tokens with stride
@@ -504,7 +493,6 @@ object TrainingPipeline {
     * One token scan, one 16-row aggregate, zero joins — the hashed
     * feature space is what makes DSIR corpus-scale. */
   def dsirRatios(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.Registry.register(spark)
     val cnt = Tables.documents(spark, dir)
       .select(col("lang"), explode(split(col("text"), "\\s+")).as("t"))
       .filter(col("t") =!= "")
@@ -537,7 +525,6 @@ object TrainingPipeline {
     * (the decile variant would reuse pipeline_quantile_bins' aggregated
     * histogram). */
   def curriculumOrder(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.Registry.register(spark)
     import org.apache.spark.sql.expressions.Window
     val b = Tables.documents(spark, dir)
       .select(col("doc_id"), size(split(col("text"), "\\s+")).as("n_toks"))
@@ -576,7 +563,6 @@ object TrainingPipeline {
     * curriculum-position span [first_pos, last_pos] (which the gate
     * checks is contiguous across chunks by construction). */
   def packCurriculum(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.Registry.register(spark)
     import org.apache.spark.sql.expressions.Window
     val b = Tables.documents(spark, dir)
       .select(col("doc_id"), size(split(col("text"), "\\s+")).cast("long").as("n_toks"))
@@ -651,7 +637,6 @@ object TrainingPipeline {
     * sort by h at 100 TB) is deliberately NOT part of the query
     * contract, only the verifiable positions are. */
   def epochShuffle(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.Registry.register(spark)
     val epochs = Seq(0, 1)
     val hashed = Tables.documents(spark, dir)
       .select(col("doc_id"))

@@ -381,9 +381,12 @@ object Unigram {
     * model, map-side DP over the DISTINCT-word table, one vocab-sized
     * usage aggregation; the only additions are a vocab-sized self-join
     * per round for `n_seg_changed` and a 6-long driver row per round —
-    * the whole trajectory is model-metadata-sized. */
+    * the whole trajectory is model-metadata-sized. `refine` is the E+M
+    * step between rounds: [[refineKept]]'s hard counts by default. */
   private[operators] def emTrajectory(spark: SparkSession, vocab: DataFrame,
-      rounds: Int): DataFrame = {
+      rounds: Int,
+      refine: (SparkSession, DataFrame, collection.Map[String, Long], Array[String])
+        => Map[String, Long] = refineKept): DataFrame = {
     import spark.implicits._
     val alphabet = alphabetOf(spark, vocab)
     var kept = seedKept(spark, vocab)
@@ -401,7 +404,7 @@ object Unigram {
       prevSeg = seg
       val row = (r.toLong, kept.size.toLong, kept.valuesIterator.sum,
         st.getLong(0), st.getLong(1), changed)
-      if (r < rounds) kept = refineKept(spark, vocab, costs, alphabet)
+      if (r < rounds) kept = refine(spark, vocab, costs, alphabet)
       row
     }
     rows.toDF("round", "inv_size", "total_mass", "corpus_cost",
@@ -413,41 +416,14 @@ object Unigram {
   def unigramEmTrain(spark: SparkSession, dir: String): DataFrame =
     emTrajectory(spark, wordVocab(spark, dir).localCheckpoint(), EmRounds)
 
-  /** The SOFT trainer trajectory — [[emTrajectory]] with the E-step
-    * swapped for [[softRefineKept]]'s expected counts (decoding and all
-    * telemetry stay argmin, so the two trajectories are row-comparable:
-    * same schema, same convergence semantics, different training
-    * signal). */
-  private[operators] def softEmTrajectory(spark: SparkSession, vocab: DataFrame,
-      rounds: Int): DataFrame = {
-    import spark.implicits._
-    val alphabet = alphabetOf(spark, vocab)
-    var kept = seedKept(spark, vocab)
-    var prevSeg: DataFrame = null
-    val rows = (1 to rounds).map { r =>
-      val costs = costsOf(kept)
-      val seg = segment(spark, vocab, costs).localCheckpoint()
-      val st = seg.agg(
-        sum(col("freq") * col("total_cost")).as("cc"),
-        sum(col("freq") * col("n_pieces")).as("cp")).head()
-      val changed =
-        if (prevSeg == null) 0L
-        else seg.as("a").join(prevSeg.as("b"), "word")
-          .filter(col("a.seg") =!= col("b.seg")).count()
-      prevSeg = seg
-      val row = (r.toLong, kept.size.toLong, kept.valuesIterator.sum,
-        st.getLong(0), st.getLong(1), changed)
-      if (r < rounds) kept = softRefineKept(spark, vocab, costs, alphabet)
-      row
-    }
-    rows.toDF("round", "inv_size", "total_mass", "corpus_cost",
-        "corpus_pieces", "n_seg_changed")
-      .orderBy("round")
-  }
-
-  /** [[EmRounds]]-round SOFT trainer trajectory over the corpus vocab. */
+  /** [[EmRounds]]-round SOFT trainer trajectory over the corpus vocab:
+    * [[emTrajectory]] with the E-step swapped for [[softRefineKept]]'s
+    * expected counts (decoding and all telemetry stay argmin, so the two
+    * trajectories are row-comparable: same schema, same convergence
+    * semantics, different training signal). */
   def unigramEmSoftTrain(spark: SparkSession, dir: String): DataFrame =
-    softEmTrajectory(spark, wordVocab(spark, dir).localCheckpoint(), EmRounds)
+    emTrajectory(spark, wordVocab(spark, dir).localCheckpoint(), EmRounds,
+      softRefineKept)
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     "text_unigram_viterbi" -> (unigramViterbi _),

@@ -21,10 +21,8 @@ import graft.sources.v2.WarcContainer
   * never overflows, and any single corrupted payload byte changes it. */
 object Warc {
 
-  private def containers(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.Registry.register(spark)
+  private def containers(spark: SparkSession, dir: String): DataFrame =
     spark.read.format("graft-warc").load(WarcContainer.ensureWritten(spark, dir))
-  }
 
   /** Full round-trip: payloads AND reconstructed headers hash-verified
     * per language. `sum_len` gates the UNCOMPRESSED byte totals — the

@@ -236,7 +236,6 @@ object StreamingPipelines {
       threshold: Double = 0.8): Dataset[NearDupPair] = {
     val spark = docs.sparkSession
     import spark.implicits._
-    graft.functions.Registry.register(spark)
     val P = "2305843009213693951L" // 2^61 - 1, the batch family's modulus
     val ttl = s"${ttlMs / 1000} seconds"
     val hashed = docs.selectExpr(
@@ -320,7 +319,6 @@ object StreamingPipelines {
       maxHamming: Int = 3): Dataset[SimhashPair] = {
     val spark = docs.sparkSession
     import spark.implicits._
-    graft.functions.Registry.register(spark)
     val ttl = s"${ttlMs / 1000} seconds"
     val banded = docs
       .selectExpr("doc_id", "ts", "simhash64(split(text, '\\\\s+')) AS sh")
@@ -823,8 +821,6 @@ object StreamingPipelines {
     * (h1, h2m) pairs → sorted h1 set; 16 double-hash minima; 4×4 band
     * keys), so candidates equal the batch band join's exactly. */
   def corpusIndex(corpus: DataFrame): (DataFrame, DataFrame) = {
-    val spark = corpus.sparkSession
-    graft.functions.Registry.register(spark)
     val chashes = corpus.select(sha2(col("text"), 256).as("chash")).distinct()
     val sig = corpus.selectExpr("doc_id",
         "shingle_hashes(split(text, '\\\\s+')) AS h1s",
@@ -866,8 +862,6 @@ object StreamingPipelines {
     * corpus store. */
   def incrementalDedup(docs: DataFrame, corpus: DataFrame,
       threshold: Double = 0.8): DataFrame = {
-    val spark = docs.sparkSession
-    graft.functions.Registry.register(spark)
     val (chashes, buckets) = corpusIndex(corpus)
     val mhCols = (0 until 16).map(j => expr(
       s"cast(array_min(zip_with(h1s, h2ms, (a, b) -> (a + $j * b) % $Mersenne61)) as string)")

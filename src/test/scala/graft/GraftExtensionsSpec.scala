@@ -36,6 +36,10 @@ class GraftExtensionsSpec extends SparkSpec {
       assert(!row.isNullAt(3) && !row.isNullAt(4))
       assert(row.getLong(5) == 2L)
       assert(row.getInt(6) == 2)
+      // every native function on the one list resolves in the session
+      val missing = graft.functions.Registry.functions.map(_._1)
+        .filterNot(s2.catalog.functionExists)
+      assert(missing.isEmpty, s"not injected: ${missing.mkString(", ")}")
     } finally {
       SparkSession.setDefaultSession(spark)
       SparkSession.setActiveSession(spark)
