@@ -91,10 +91,7 @@ case class WordTokens(child: Expression) extends UnaryExpression {
     BigramUtil.wordTokens(input.asInstanceOf[UTF8String])
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c => s"""
-      ${ev.value} = (org.apache.spark.sql.catalyst.util.ArrayData)
-        graft.functions.BigramUtil.wordTokens($c);
-    """)
+    defineCodeGen(ctx, ev, c => s"graft.functions.BigramUtil.wordTokens($c)")
 
   override protected def withNewChildInternal(newChild: Expression): WordTokens =
     copy(child = newChild)
@@ -113,10 +110,7 @@ case class WordBigrams(child: Expression) extends UnaryExpression {
     BigramUtil.wordBigrams(input.asInstanceOf[UTF8String])
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c => s"""
-      ${ev.value} = (org.apache.spark.sql.catalyst.util.ArrayData)
-        graft.functions.BigramUtil.wordBigrams($c);
-    """)
+    defineCodeGen(ctx, ev, c => s"graft.functions.BigramUtil.wordBigrams($c)")
 
   override protected def withNewChildInternal(newChild: Expression): WordBigrams =
     copy(child = newChild)
@@ -136,10 +130,7 @@ case class WordBigramHashes(child: Expression, prefix: String)
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
     val pref = ctx.addReferenceObj("bgPrefix", prefixBytes, "byte[]")
-    nullSafeCodeGen(ctx, ev, c => s"""
-      ${ev.value} = (org.apache.spark.sql.catalyst.util.ArrayData)
-        graft.functions.BigramUtil.wordBigramHashes($c, $pref);
-    """)
+    defineCodeGen(ctx, ev, c => s"graft.functions.BigramUtil.wordBigramHashes($c, $pref)")
   }
 
   override protected def withNewChildInternal(newChild: Expression): WordBigramHashes =

@@ -4,8 +4,8 @@ import java.security.MessageDigest
 
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.util.ArrayData
+import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow, UnaryExpression}
+import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -20,25 +20,41 @@ object HashUtil {
   private val tl: ThreadLocal[MessageDigest] =
     ThreadLocal.withInitial(() => MessageDigest.getInstance("MD5"))
 
-  /** First 15 hex digits of md5(s) as a 60-bit long: digest bytes 0..6
-    * carry nibbles 0..13, plus the high nibble of byte 7. */
+  /** First 15 hex digits of md5(s) as a 60-bit long. */
   def hash60(s: UTF8String): Long = {
     val md = tl.get()
     md.reset()
-    val d = md.digest(s.getBytes)
+    h60Of(md.digest(s.getBytes))
+  }
+
+  /** Whether any token is null: the token-array kernels below then return
+    * null (SQL NULL), matching the null poisoning of the HOF formulations
+    * they replace. */
+  private def anyNull(toks: ArrayData): Boolean = {
+    var i = 0
+    while (i < toks.numElements()) {
+      if (toks.isNullAt(i)) return true
+      i += 1
+    }
+    false
+  }
+
+  /** The first 15 hex digits of an md5 digest as a 60-bit long: bytes 0..6
+    * carry nibbles 0..13, plus the high nibble of byte 7. */
+  @inline private def h60Of(d: Array[Byte]): Long =
     ((d(0) & 0xffL) << 52) | ((d(1) & 0xffL) << 44) | ((d(2) & 0xffL) << 36) |
       ((d(3) & 0xffL) << 28) | ((d(4) & 0xffL) << 20) | ((d(5) & 0xffL) << 12) |
       ((d(6) & 0xffL) << 4) | ((d(7) & 0xffL) >>> 4)
-  }
 
   /** h60 of every word k-gram `"t[i] … t[i+k-1]" + suffix` — one
     * incremental digest per shingle, identical by definition to
     * `hash60(concat_ws(' ', t[i], …, t[i+k-1]) || suffix)` but without
     * materializing any intermediate shingle String (the md5 is fed the
     * token bytes directly; token byte arrays are fetched once, not once
-    * per shingle). Returns an empty array for < k tokens. */
+    * per shingle). Returns an empty array for < k tokens, null for a null
+    * token. */
   def shingleHashes60(toks: ArrayData, suffix: Array[Byte], k: Int): ArrayData = {
-    import org.apache.spark.sql.catalyst.util.GenericArrayData
+    if (anyNull(toks)) return null
     val n = toks.numElements()
     if (n < k) return new GenericArrayData(Array.empty[Long])
     val bytes = new Array[Array[Byte]](n)
@@ -56,11 +72,7 @@ object HashUtil {
         j += 1
       }
       if (suffix.length > 0) md.update(suffix)
-      val d = md.digest()
-      out(i) = ((d(0) & 0xffL) << 52) | ((d(1) & 0xffL) << 44) |
-        ((d(2) & 0xffL) << 36) | ((d(3) & 0xffL) << 28) |
-        ((d(4) & 0xffL) << 20) | ((d(5) & 0xffL) << 12) |
-        ((d(6) & 0xffL) << 4) | ((d(7) & 0xffL) >>> 4)
+      out(i) = h60Of(md.digest())
       i += 1
     }
     new GenericArrayData(out)
@@ -73,10 +85,10 @@ object HashUtil {
     * instead of two. Values are definitionally
     * `zip_with(shingle_hashes(toks), shingle_hashes(toks, suffix),
     * (a, b) -> struct(a, b))` (HashExpressionsSpec pins it), without the
-    * CodegenFallback zip_with or the second token-byte pass. */
+    * CodegenFallback zip_with or the second token-byte pass. Null for a
+    * null token. */
   def shingleHashPairs60(toks: ArrayData, suffix: Array[Byte], k: Int): ArrayData = {
-    import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
-    import org.apache.spark.sql.catalyst.util.GenericArrayData
+    if (anyNull(toks)) return null
     val n = toks.numElements()
     if (n < k) return new GenericArrayData(Array.empty[Any])
     val bytes = new Array[Array[Byte]](n)
@@ -84,11 +96,6 @@ object HashUtil {
     while (i < n) { bytes(i) = toks.getUTF8String(i).getBytes; i += 1 }
     val out = new Array[Any](n - k + 1)
     val md = tl.get()
-    @inline def h60Of(d: Array[Byte]): Long =
-      ((d(0) & 0xffL) << 52) | ((d(1) & 0xffL) << 44) |
-        ((d(2) & 0xffL) << 36) | ((d(3) & 0xffL) << 28) |
-        ((d(4) & 0xffL) << 20) | ((d(5) & 0xffL) << 12) |
-        ((d(6) & 0xffL) << 4) | ((d(7) & 0xffL) >>> 4)
     i = 0
     while (i <= n - k) {
       md.reset()
@@ -113,9 +120,9 @@ object HashUtil {
     * `transform(sequence(0, (n−1) div 3), …)` formulation exactly,
     * including its two edge cases: an n = 0 array yields ONE hash of the
     * bare prefix (sequence(0, 0) over an empty slice), and the tail
-    * segment may carry fewer than `w` tokens. */
+    * segment may carry fewer than `w` tokens. Null for a null token. */
   def segmentHashes60(toks: ArrayData, prefix: Array[Byte], w: Int): ArrayData = {
-    import org.apache.spark.sql.catalyst.util.GenericArrayData
+    if (anyNull(toks)) return null
     val n = toks.numElements()
     val nSeg = (n - 1) / w + 1 // Java division truncates: n=0 -> 1
     val out = new Array[Long](nSeg)
@@ -131,11 +138,7 @@ object HashUtil {
         md.update(toks.getUTF8String(j).getBytes)
         j += 1
       }
-      val d = md.digest()
-      out(s) = ((d(0) & 0xffL) << 52) | ((d(1) & 0xffL) << 44) |
-        ((d(2) & 0xffL) << 36) | ((d(3) & 0xffL) << 28) |
-        ((d(4) & 0xffL) << 20) | ((d(5) & 0xffL) << 12) |
-        ((d(6) & 0xffL) << 4) | ((d(7) & 0xffL) >>> 4)
+      out(s) = h60Of(md.digest())
       s += 1
     }
     new GenericArrayData(out)
@@ -143,8 +146,9 @@ object HashUtil {
 
   /** 32-bit TF-weighted simhash over an array of tokens — one pass, equal
     * by definition to folding `(hash60(t) >> j & 1) * 2 - 1` per bit plane
-    * and setting bit j where the sum is positive. */
-  def simhash32(toks: ArrayData): Long = {
+    * and setting bit j where the sum is positive. Null for a null token. */
+  def simhash32(toks: ArrayData): java.lang.Long = {
+    if (anyNull(toks)) return null
     val counters = new Array[Int](32)
     val n = toks.numElements()
     var i = 0
@@ -163,7 +167,7 @@ object HashUtil {
       if (counters(j) > 0) acc |= 1L << j
       j += 1
     }
-    acc
+    java.lang.Long.valueOf(acc)
   }
 
   /** h60 of `prefix || l || ' ' || r` — definitionally
@@ -177,10 +181,7 @@ object HashUtil {
     md.update(l.getBytes)
     md.update(' '.toByte)
     md.update(r.getBytes)
-    val d = md.digest()
-    ((d(0) & 0xffL) << 52) | ((d(1) & 0xffL) << 44) | ((d(2) & 0xffL) << 36) |
-      ((d(3) & 0xffL) << 28) | ((d(4) & 0xffL) << 20) | ((d(5) & 0xffL) << 12) |
-      ((d(6) & 0xffL) << 4) | ((d(7) & 0xffL) >>> 4)
+    h60Of(md.digest())
   }
 
   private val HiSuffix = "#hi".getBytes(java.nio.charset.StandardCharsets.UTF_8)
@@ -192,10 +193,7 @@ object HashUtil {
     md.reset()
     md.update(s.getBytes)
     md.update(suffix)
-    val d = md.digest()
-    ((d(0) & 0xffL) << 52) | ((d(1) & 0xffL) << 44) | ((d(2) & 0xffL) << 36) |
-      ((d(3) & 0xffL) << 28) | ((d(4) & 0xffL) << 20) | ((d(5) & 0xffL) << 12) |
-      ((d(6) & 0xffL) << 4) | ((d(7) & 0xffL) >>> 4)
+    h60Of(md.digest())
   }
 
   /** 64-bit TF-weighted simhash: bit planes 0..31 from `hash60(t)`, planes
@@ -204,8 +202,10 @@ object HashUtil {
     * oracle states the identical definition with the same `dh60` helper
     * the 32-bit oracles use (a 16-hex-digit fold would overflow DuckDB's
     * checked BIGINT arithmetic). Bit 63 set yields a negative long in
-    * both engines — the signed value IS the fingerprint. */
-  def simhash64(toks: ArrayData): Long = {
+    * both engines — the signed value IS the fingerprint. Null for a null
+    * token. */
+  def simhash64(toks: ArrayData): java.lang.Long = {
+    if (anyNull(toks)) return null
     val counters = new Array[Int](64)
     val n = toks.numElements()
     var i = 0
@@ -227,7 +227,7 @@ object HashUtil {
       if (counters(j) > 0) acc |= 1L << j
       j += 1
     }
-    acc
+    java.lang.Long.valueOf(acc)
   }
 
   // Rabin-Karp double-hash parameters. Two independent 30-bit polynomial
@@ -250,7 +250,6 @@ object HashUtil {
     * ASCII text where DuckDB's char-wise `ord(substr(…))` equals Spark's
     * UTF-8 bytes. Empty array for inputs shorter than `w`. */
   def charWindowHashes(s: UTF8String, w: Int): ArrayData = {
-    import org.apache.spark.sql.catalyst.util.GenericArrayData
     new GenericArrayData(rollHashes(s.getBytes, w))
   }
 
@@ -296,7 +295,6 @@ object HashUtil {
     * winnow as a single window. May contain duplicate VALUES (the same
     * hash selected at different positions); callers dedupe. */
   def winnowHashes(s: UTF8String, w: Int, win: Int): ArrayData = {
-    import org.apache.spark.sql.catalyst.util.GenericArrayData
     val hs = rollHashes(s.getBytes, w)
     val n = hs.length
     if (n == 0) return new GenericArrayData(Array.empty[Long])
@@ -352,9 +350,7 @@ case class CharWindowHashes(child: Expression, width: Int)
     HashUtil.charWindowHashes(input.asInstanceOf[UTF8String], width)
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c =>
-      s"""${ev.value} = (org.apache.spark.sql.catalyst.util.ArrayData)
-         |  graft.functions.HashUtil.charWindowHashes($c, $width);""".stripMargin)
+    defineCodeGen(ctx, ev, c => s"graft.functions.HashUtil.charWindowHashes($c, $width)")
 
   override protected def withNewChildInternal(newChild: Expression): CharWindowHashes =
     copy(child = newChild)
@@ -389,9 +385,7 @@ case class WinnowHashes(child: Expression, width: Int, window: Int)
     HashUtil.winnowHashes(input.asInstanceOf[UTF8String], width, window)
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c =>
-      s"""${ev.value} = (org.apache.spark.sql.catalyst.util.ArrayData)
-         |  graft.functions.HashUtil.winnowHashes($c, $width, $window);""".stripMargin)
+    defineCodeGen(ctx, ev, c => s"graft.functions.HashUtil.winnowHashes($c, $width, $window)")
 
   override protected def withNewChildInternal(newChild: Expression): WinnowHashes =
     copy(child = newChild)
@@ -422,8 +416,7 @@ case class PortableHash60(child: Expression) extends UnaryExpression {
     HashUtil.hash60(input.asInstanceOf[UTF8String])
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = graft.functions.HashUtil.hash60($c);")
+    defineCodeGen(ctx, ev, c => s"graft.functions.HashUtil.hash60($c)")
 
   override protected def withNewChildInternal(newChild: Expression): PortableHash60 =
     copy(child = newChild)
@@ -441,33 +434,12 @@ case class Simhash32(child: Expression) extends UnaryExpression {
       s"simhash32 expects array<string>, got ${t.simpleString}")
   }
 
-  override def nullSafeEval(input: Any): Any = {
-    val arr = input.asInstanceOf[ArrayData]
-    var i = 0
-    val n = arr.numElements()
-    while (i < n) {
-      if (arr.isNullAt(i)) return null
-      i += 1
-    }
-    HashUtil.simhash32(arr)
-  }
+  override def nullSafeEval(input: Any): Any =
+    HashUtil.simhash32(input.asInstanceOf[ArrayData])
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c => {
-      val i = ctx.freshName("i")
-      val hasNull = ctx.freshName("hasNullTok")
-      s"""
-        boolean $hasNull = false;
-        for (int $i = 0; $i < $c.numElements(); $i++) {
-          if ($c.isNullAt($i)) { $hasNull = true; break; }
-        }
-        if ($hasNull) {
-          ${ev.isNull} = true;
-        } else {
-          ${ev.value} = graft.functions.HashUtil.simhash32($c);
-        }
-      """
-    })
+    nullSafeCodeGen(ctx, ev, c =>
+      KernelCall.orNull(ctx, ev, dataType, s"graft.functions.HashUtil.simhash32($c)"))
 
   override protected def withNewChildInternal(newChild: Expression): Simhash32 =
     copy(child = newChild)
@@ -487,33 +459,12 @@ case class Simhash64(child: Expression) extends UnaryExpression {
       s"simhash64 expects array<string>, got ${t.simpleString}")
   }
 
-  override def nullSafeEval(input: Any): Any = {
-    val arr = input.asInstanceOf[ArrayData]
-    var i = 0
-    val n = arr.numElements()
-    while (i < n) {
-      if (arr.isNullAt(i)) return null
-      i += 1
-    }
-    HashUtil.simhash64(arr)
-  }
+  override def nullSafeEval(input: Any): Any =
+    HashUtil.simhash64(input.asInstanceOf[ArrayData])
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c => {
-      val i = ctx.freshName("i")
-      val hasNull = ctx.freshName("hasNullTok")
-      s"""
-        boolean $hasNull = false;
-        for (int $i = 0; $i < $c.numElements(); $i++) {
-          if ($c.isNullAt($i)) { $hasNull = true; break; }
-        }
-        if ($hasNull) {
-          ${ev.isNull} = true;
-        } else {
-          ${ev.value} = graft.functions.HashUtil.simhash64($c);
-        }
-      """
-    })
+    nullSafeCodeGen(ctx, ev, c =>
+      KernelCall.orNull(ctx, ev, dataType, s"graft.functions.HashUtil.simhash64($c)"))
 
   override protected def withNewChildInternal(newChild: Expression): Simhash64 =
     copy(child = newChild)
@@ -540,35 +491,13 @@ case class ShingleHashes(child: Expression, suffix: String, width: Int = 3)
       s"shingle_hashes expects array<string>, got ${t.simpleString}")
   }
 
-  override def nullSafeEval(input: Any): Any = {
-    val arr = input.asInstanceOf[ArrayData]
-    var i = 0
-    val n = arr.numElements()
-    while (i < n) {
-      if (arr.isNullAt(i)) return null
-      i += 1
-    }
-    HashUtil.shingleHashes60(arr, suffixBytes, width)
-  }
+  override def nullSafeEval(input: Any): Any =
+    HashUtil.shingleHashes60(input.asInstanceOf[ArrayData], suffixBytes, width)
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
     val suffixRef = ctx.addReferenceObj("shingleSuffix", suffixBytes, "byte[]")
-    nullSafeCodeGen(ctx, ev, c => {
-      val i = ctx.freshName("i")
-      val hasNull = ctx.freshName("hasNullTok")
-      s"""
-        boolean $hasNull = false;
-        for (int $i = 0; $i < $c.numElements(); $i++) {
-          if ($c.isNullAt($i)) { $hasNull = true; break; }
-        }
-        if ($hasNull) {
-          ${ev.isNull} = true;
-        } else {
-          ${ev.value} = (org.apache.spark.sql.catalyst.util.ArrayData)
-            graft.functions.HashUtil.shingleHashes60($c, $suffixRef, $width);
-        }
-      """
-    })
+    nullSafeCodeGen(ctx, ev, c => KernelCall.orNull(ctx, ev, dataType,
+      s"graft.functions.HashUtil.shingleHashes60($c, $suffixRef, $width)"))
   }
 
   override protected def withNewChildInternal(newChild: Expression): ShingleHashes =
@@ -611,35 +540,13 @@ case class SegmentHashes(child: Expression, prefix: String, width: Int)
       s"segment_hashes expects array<string>, got ${t.simpleString}")
   }
 
-  override def nullSafeEval(input: Any): Any = {
-    val arr = input.asInstanceOf[ArrayData]
-    var i = 0
-    val n = arr.numElements()
-    while (i < n) {
-      if (arr.isNullAt(i)) return null
-      i += 1
-    }
-    HashUtil.segmentHashes60(arr, prefixBytes, width)
-  }
+  override def nullSafeEval(input: Any): Any =
+    HashUtil.segmentHashes60(input.asInstanceOf[ArrayData], prefixBytes, width)
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
     val prefixRef = ctx.addReferenceObj("segPrefix", prefixBytes, "byte[]")
-    nullSafeCodeGen(ctx, ev, c => {
-      val i = ctx.freshName("i")
-      val hasNull = ctx.freshName("hasNullTok")
-      s"""
-        boolean $hasNull = false;
-        for (int $i = 0; $i < $c.numElements(); $i++) {
-          if ($c.isNullAt($i)) { $hasNull = true; break; }
-        }
-        if ($hasNull) {
-          ${ev.isNull} = true;
-        } else {
-          ${ev.value} = (org.apache.spark.sql.catalyst.util.ArrayData)
-            graft.functions.HashUtil.segmentHashes60($c, $prefixRef, $width);
-        }
-      """
-    })
+    nullSafeCodeGen(ctx, ev, c => KernelCall.orNull(ctx, ev, dataType,
+      s"graft.functions.HashUtil.segmentHashes60($c, $prefixRef, $width)"))
   }
 
   override protected def withNewChildInternal(newChild: Expression): SegmentHashes =
@@ -685,35 +592,13 @@ case class ShingleHashPairs(child: Expression, suffix: String, width: Int = 3)
       s"shingle_hash_pairs expects array<string>, got ${t.simpleString}")
   }
 
-  override def nullSafeEval(input: Any): Any = {
-    val arr = input.asInstanceOf[ArrayData]
-    var i = 0
-    val n = arr.numElements()
-    while (i < n) {
-      if (arr.isNullAt(i)) return null
-      i += 1
-    }
-    HashUtil.shingleHashPairs60(arr, suffixBytes, width)
-  }
+  override def nullSafeEval(input: Any): Any =
+    HashUtil.shingleHashPairs60(input.asInstanceOf[ArrayData], suffixBytes, width)
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
     val suffixRef = ctx.addReferenceObj("shingleSuffix", suffixBytes, "byte[]")
-    nullSafeCodeGen(ctx, ev, c => {
-      val i = ctx.freshName("i")
-      val hasNull = ctx.freshName("hasNullTok")
-      s"""
-        boolean $hasNull = false;
-        for (int $i = 0; $i < $c.numElements(); $i++) {
-          if ($c.isNullAt($i)) { $hasNull = true; break; }
-        }
-        if ($hasNull) {
-          ${ev.isNull} = true;
-        } else {
-          ${ev.value} = (org.apache.spark.sql.catalyst.util.ArrayData)
-            graft.functions.HashUtil.shingleHashPairs60($c, $suffixRef, $width);
-        }
-      """
-    })
+    nullSafeCodeGen(ctx, ev, c => KernelCall.orNull(ctx, ev, dataType,
+      s"graft.functions.HashUtil.shingleHashPairs60($c, $suffixRef, $width)"))
   }
 
   override protected def withNewChildInternal(newChild: Expression): ShingleHashPairs =

@@ -52,8 +52,7 @@ case class ZValue2(left: Expression, right: Expression) extends BinaryExpression
     LayoutUtil.zValue2(x.asInstanceOf[Long], y.asInstanceOf[Long])
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (x, y) =>
-      s"${ev.value} = graft.functions.LayoutUtil.zValue2($x, $y);")
+    defineCodeGen(ctx, ev, (x, y) => s"graft.functions.LayoutUtil.zValue2($x, $y)")
 
   override protected def withNewChildrenInternal(
       newLeft: Expression, newRight: Expression): ZValue2 =

@@ -6,6 +6,43 @@ import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types._
 
+/** The set kernels: each is the whole body of one expression below, run
+  * by both its interpreted and its codegen path. */
+object SetUtil {
+
+  /** Intersection size of two sorted-ascending distinct long arrays: one
+    * linear merge, no allocation. */
+  def sortedIntersectCount(x: ArrayData, y: ArrayData): Long = {
+    val nx = x.numElements()
+    val ny = y.numElements()
+    var i = 0
+    var j = 0
+    var c = 0L
+    while (i < nx && j < ny) {
+      val xi = x.getLong(i)
+      val yj = y.getLong(j)
+      if (xi == yj) { c += 1; i += 1; j += 1 }
+      else if (xi < yj) i += 1
+      else j += 1
+    }
+    c
+  }
+
+  /** Positions of the common length where both sides are non-null and
+    * equal. */
+  def arrayEqCount(x: ArrayData, y: ArrayData): Long = {
+    val n = math.min(x.numElements(), y.numElements())
+    var i = 0
+    var c = 0L
+    while (i < n) {
+      if (!x.isNullAt(i) && !y.isNullAt(i) && x.getLong(i) == y.getLong(i))
+        c += 1
+      i += 1
+    }
+    c
+  }
+}
+
 /** `sorted_intersect_count(a, b)` over two SORTED-ASCENDING, DISTINCT
   * `array<bigint>` columns → the intersection cardinality as a long.
   *
@@ -38,48 +75,11 @@ case class SortedIntersectCount(left: Expression, right: Expression)
         s"got (${left.dataType.simpleString}, ${right.dataType.simpleString})")
   }
 
-  override def nullSafeEval(a: Any, b: Any): Any = {
-    val x = a.asInstanceOf[ArrayData]
-    val y = b.asInstanceOf[ArrayData]
-    val nx = x.numElements()
-    val ny = y.numElements()
-    var i = 0
-    var j = 0
-    var c = 0L
-    while (i < nx && j < ny) {
-      val xi = x.getLong(i)
-      val yj = y.getLong(j)
-      if (xi == yj) { c += 1; i += 1; j += 1 }
-      else if (xi < yj) i += 1
-      else j += 1
-    }
-    java.lang.Long.valueOf(c)
-  }
+  override def nullSafeEval(a: Any, b: Any): Any =
+    SetUtil.sortedIntersectCount(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
 
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val i = ctx.freshName("i")
-    val j = ctx.freshName("j")
-    val c = ctx.freshName("c")
-    val xi = ctx.freshName("xi")
-    val yj = ctx.freshName("yj")
-    val nx = ctx.freshName("nx")
-    val ny = ctx.freshName("ny")
-    nullSafeCodeGen(ctx, ev, (x, y) => {
-      s"""
-        int $nx = $x.numElements();
-        int $ny = $y.numElements();
-        int $i = 0, $j = 0;
-        long $c = 0L;
-        while ($i < $nx && $j < $ny) {
-          long $xi = $x.getLong($i);
-          long $yj = $y.getLong($j);
-          if ($xi == $yj) { $c++; $i++; $j++; }
-          else if ($xi < $yj) { $i++; } else { $j++; }
-        }
-        ${ev.value} = $c;
-      """
-    })
-  }
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    defineCodeGen(ctx, ev, (x, y) => s"graft.functions.SetUtil.sortedIntersectCount($x, $y)")
 
   override protected def withNewChildrenInternal(
       newLeft: Expression, newRight: Expression): SortedIntersectCount =
@@ -97,7 +97,7 @@ case class SortedIntersectCount(left: Expression, right: Expression)
   * equal". The HOF chain is CodegenFallback (boxed lambda steps per
   * element per row); the MinHash calibration runs it once per banded
   * candidate PAIR, row-scale at any corpus size, so the interpreted
-  * overhead is per-pair. This is one codegen loop with zero
+  * overhead is per-pair. This is one compiled loop with zero
   * allocation. SetExpressionsSpec pins the equivalence differentially
   * on random inputs (including nulls and ragged lengths). */
 case class ArrayEqCount(left: Expression, right: Expression)
@@ -116,36 +116,11 @@ case class ArrayEqCount(left: Expression, right: Expression)
         s"got (${left.dataType.simpleString}, ${right.dataType.simpleString})")
   }
 
-  override def nullSafeEval(a: Any, b: Any): Any = {
-    val x = a.asInstanceOf[ArrayData]
-    val y = b.asInstanceOf[ArrayData]
-    val n = math.min(x.numElements(), y.numElements())
-    var i = 0
-    var c = 0L
-    while (i < n) {
-      if (!x.isNullAt(i) && !y.isNullAt(i) && x.getLong(i) == y.getLong(i))
-        c += 1
-      i += 1
-    }
-    java.lang.Long.valueOf(c)
-  }
+  override def nullSafeEval(a: Any, b: Any): Any =
+    SetUtil.arrayEqCount(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
 
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val i = ctx.freshName("i")
-    val c = ctx.freshName("c")
-    val n = ctx.freshName("n")
-    nullSafeCodeGen(ctx, ev, (x, y) => {
-      s"""
-        int $n = java.lang.Math.min($x.numElements(), $y.numElements());
-        long $c = 0L;
-        for (int $i = 0; $i < $n; $i++) {
-          if (!$x.isNullAt($i) && !$y.isNullAt($i) &&
-              $x.getLong($i) == $y.getLong($i)) $c++;
-        }
-        ${ev.value} = $c;
-      """
-    })
-  }
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    defineCodeGen(ctx, ev, (x, y) => s"graft.functions.SetUtil.arrayEqCount($x, $y)")
 
   override protected def withNewChildrenInternal(
       newLeft: Expression, newRight: Expression): ArrayEqCount =

@@ -2,8 +2,9 @@ package graft.functions
 
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.codegen.{CodeGenerator, CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression, UnsafeArrayData}
+import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -18,20 +19,14 @@ import org.apache.spark.unsafe.types.UTF8String
   * aggregation collapses them to 26 per partition before any shuffle.
   */
 
-/** `char_class_counts(text)` → array<long>[letters, numbers, others].
-  *
-  * Mirrors the reference's map1 classification (tasks.c:20-29): ASCII
-  * letters / ASCII digits / everything else. Letters and digits are counted
-  * byte-wise (ASCII bytes only appear as single UTF-8 bytes); `others` is
-  * charCount - letters - digits so a multi-byte codepoint counts once.
-  */
-case class CharClassCounts(child: Expression)
-    extends UnaryExpression {
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def nullable: Boolean = child.nullable
+/** The map-task kernels: each is the whole per-document body of one
+  * expression below, run by both its interpreted and its codegen path. */
+object TextUtil {
 
-  override def nullSafeEval(input: Any): Any = {
-    val s = input.asInstanceOf[UTF8String]
+  /** `[letters, digits, others]` of `s`: ASCII letters and digits counted
+    * byte-wise (ASCII bytes only appear as single UTF-8 bytes), `others` as
+    * charCount - letters - digits so a multi-byte codepoint counts once. */
+  def charClassCounts(s: UTF8String): ArrayData = {
     val bytes = s.getBytes
     var letters = 0L
     var digits = 0L
@@ -46,26 +41,36 @@ case class CharClassCounts(child: Expression)
       Array(letters, digits, s.numChars().toLong - letters - digits))
   }
 
+  /** The 26 case-folded ASCII letter counts of `s` (index 0 = 'a'). */
+  def letterHistogram(s: UTF8String): ArrayData = {
+    val bytes = s.getBytes
+    val counts = new Array[Long](26)
+    var i = 0
+    while (i < bytes.length) {
+      val b = bytes(i)
+      if (b >= 'a' && b <= 'z') counts(b - 'a') += 1
+      else if (b >= 'A' && b <= 'Z') counts(b - 'A') += 1
+      i += 1
+    }
+    UnsafeArrayData.fromPrimitiveArray(counts)
+  }
+}
+
+/** `char_class_counts(text)` → array<long>[letters, numbers, others].
+  *
+  * Mirrors the reference's map1 classification (tasks.c:20-29): ASCII
+  * letters / ASCII digits / everything else. See [[TextUtil.charClassCounts]].
+  */
+case class CharClassCounts(child: Expression)
+    extends UnaryExpression {
+  override def dataType: DataType = ArrayType(LongType, containsNull = false)
+  override def nullable: Boolean = child.nullable
+
+  override def nullSafeEval(input: Any): Any =
+    TextUtil.charClassCounts(input.asInstanceOf[UTF8String])
+
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c => {
-      val bytes = ctx.freshName("bytes")
-      val letters = ctx.freshName("letters")
-      val digits = ctx.freshName("digits")
-      val i = ctx.freshName("i")
-      val b = ctx.freshName("b")
-      s"""
-        byte[] $bytes = $c.getBytes();
-        long $letters = 0L, $digits = 0L;
-        for (int $i = 0; $i < $bytes.length; $i++) {
-          byte $b = $bytes[$i];
-          if (($b >= 97 && $b <= 122) || ($b >= 65 && $b <= 90)) $letters++;
-          else if ($b >= 48 && $b <= 57) $digits++;
-        }
-        ${ev.value} = org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
-          .fromPrimitiveArray(new long[]{
-            $letters, $digits, ((long) $c.numChars()) - $letters - $digits});
-      """
-    })
+    defineCodeGen(ctx, ev, c => s"graft.functions.TextUtil.charClassCounts($c)")
 
   override protected def withNewChildInternal(newChild: Expression): CharClassCounts =
     copy(child = newChild)
@@ -80,40 +85,25 @@ case class LetterHistogram(child: Expression)
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
   override def nullable: Boolean = child.nullable
 
-  override def nullSafeEval(input: Any): Any = {
-    val bytes = input.asInstanceOf[UTF8String].getBytes
-    val counts = new Array[Long](26)
-    var i = 0
-    while (i < bytes.length) {
-      val b = bytes(i)
-      if (b >= 'a' && b <= 'z') counts(b - 'a') += 1
-      else if (b >= 'A' && b <= 'Z') counts(b - 'A') += 1
-      i += 1
-    }
-    UnsafeArrayData.fromPrimitiveArray(counts)
-  }
+  override def nullSafeEval(input: Any): Any =
+    TextUtil.letterHistogram(input.asInstanceOf[UTF8String])
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c => {
-      val bytes = ctx.freshName("bytes")
-      val counts = ctx.freshName("counts")
-      val i = ctx.freshName("i")
-      val b = ctx.freshName("b")
-      s"""
-        byte[] $bytes = $c.getBytes();
-        long[] $counts = new long[26];
-        for (int $i = 0; $i < $bytes.length; $i++) {
-          byte $b = $bytes[$i];
-          if ($b >= 97 && $b <= 122) $counts[$b - 97]++;
-          else if ($b >= 65 && $b <= 90) $counts[$b - 65]++;
-        }
-        ${ev.value} = org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
-          .fromPrimitiveArray($counts);
-      """
-    })
+    defineCodeGen(ctx, ev, c => s"graft.functions.TextUtil.letterHistogram($c)")
 
   override protected def withNewChildInternal(newChild: Expression): LetterHistogram =
     copy(child = newChild)
+}
+
+/** Codegen of a kernel whose `null` result is SQL NULL: the generated code
+  * only calls the kernel and reads its (boxed or reference) result, so the
+  * NULL rule lives in the kernel alone. */
+object KernelCall {
+  def orNull(ctx: CodegenContext, ev: ExprCode, dataType: DataType, call: String): String = {
+    val r = ctx.freshName("r")
+    s"""${CodeGenerator.boxedType(dataType)} $r = $call;
+       |if ($r == null) { ${ev.isNull} = true; } else { ${ev.value} = $r; }""".stripMargin
+  }
 }
 
 /** graft's native SQL functions: one `(name, builder)` list, which both

@@ -2,9 +2,105 @@ package graft.functions
 
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression, UnsafeArrayData}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types._
+
+/** The vector kernels: each is the whole body of one expression below,
+  * run by both its interpreted and its codegen path. Every sum widens
+  * each float exactly to double and accumulates in ascending component
+  * order from a 0.0 seed — the IEEE order the DuckDB oracles fold in. */
+object VectorUtil {
+  /** Whether `e` is an array<float> (else array<double>) operand. */
+  def isFloatArray(e: Expression): Boolean = e.dataType match {
+    case ArrayType(FloatType, _) => true
+    case _ => false
+  }
+
+  @inline private def elem(a: ArrayData, isFloat: Boolean, i: Int): Double =
+    if (isFloat) a.getFloat(i).toDouble else a.getDouble(i)
+
+  /** Cosine of two float arrays over their common length, null elements
+    * as 0.0; null (SQL NULL) when either side has zero norm. */
+  def cosine(x: ArrayData, y: ArrayData): java.lang.Double = {
+    val n = math.min(x.numElements(), y.numElements())
+    var dot = 0.0
+    var na = 0.0
+    var nb = 0.0
+    var i = 0
+    while (i < n) {
+      val xi = if (x.isNullAt(i)) 0.0 else x.getFloat(i).toDouble
+      val yi = if (y.isNullAt(i)) 0.0 else y.getFloat(i).toDouble
+      dot += xi * yi
+      na += xi * xi
+      nb += yi * yi
+      i += 1
+    }
+    val denom = math.sqrt(na) * math.sqrt(nb)
+    if (denom == 0.0) null else java.lang.Double.valueOf(dot / denom)
+  }
+
+  /** Dot product of two float arrays over their common length, null
+    * elements as 0.0. */
+  def dot(x: ArrayData, y: ArrayData): Double = {
+    val n = math.min(x.numElements(), y.numElements())
+    var dot = 0.0
+    var i = 0
+    while (i < n) {
+      dot += (if (x.isNullAt(i)) 0.0 else x.getFloat(i).toDouble) *
+        (if (y.isNullAt(i)) 0.0 else y.getFloat(i).toDouble)
+      i += 1
+    }
+    dot
+  }
+
+  /** Squared euclidean distance, `acc += (x[i] − y[i])²`; null (SQL NULL)
+    * for a length mismatch or any null element. */
+  def sqDist(x: ArrayData, xFloat: Boolean, y: ArrayData, yFloat: Boolean): java.lang.Double = {
+    val n = x.numElements()
+    if (n != y.numElements()) return null
+    var acc = 0.0
+    var i = 0
+    while (i < n) {
+      if (x.isNullAt(i) || y.isNullAt(i)) return null
+      val d = elem(x, xFloat, i) - elem(y, yFloat, i)
+      acc += d * d
+      i += 1
+    }
+    java.lang.Double.valueOf(acc)
+  }
+
+  /** [[sqDist]] of `x` to every centroid of `cents`, in codebook order,
+    * with its NULL rule: null when any centroid's width differs from
+    * `x`'s length or `x` has a null element. `x` is widened once, then
+    * each centroid is one pass over plain double arrays. */
+  def centroidSqDists(x: ArrayData, isFloat: Boolean, cents: Array[Array[Double]]): ArrayData = {
+    val n = x.numElements()
+    val v = new Array[Double](n)
+    var i = 0
+    while (i < n) {
+      if (x.isNullAt(i)) return null
+      v(i) = elem(x, isFloat, i)
+      i += 1
+    }
+    val out = new Array[Double](cents.length)
+    var j = 0
+    while (j < cents.length) {
+      val c = cents(j)
+      if (c.length != n) return null
+      var acc = 0.0
+      i = 0
+      while (i < n) {
+        val d = v(i) - c(i)
+        acc += d * d
+        i += 1
+      }
+      out(j) = acc
+      j += 1
+    }
+    UnsafeArrayData.fromPrimitiveArray(out)
+  }
+}
 
 /** `cosine_sim(a, b)` over two `array<float>` embedding columns → double.
   *
@@ -16,8 +112,8 @@ import org.apache.spark.sql.types._
   *
   * Scale rationale: the naive Spark formulation is three `aggregate()` /
   * `zip_with()` passes over the arrays per pair; at N·k similarity
-  * computations per top-k query this expression keeps the hot loop inside
-  * whole-stage codegen with zero per-element boxing or lambda dispatch.
+  * computations per top-k query this expression keeps the hot loop in one
+  * compiled kernel with zero per-element boxing or lambda dispatch.
   * Null elements count as 0.0 so the result is deterministic for ragged
   * data; a zero-norm side yields SQL NULL.
   */
@@ -37,55 +133,12 @@ case class CosineSimilarity(left: Expression, right: Expression)
         s"got (${left.dataType.simpleString}, ${right.dataType.simpleString})")
   }
 
-  override def nullSafeEval(a: Any, b: Any): Any = {
-    val x = a.asInstanceOf[ArrayData]
-    val y = b.asInstanceOf[ArrayData]
-    val n = math.min(x.numElements(), y.numElements())
-    var dot = 0.0
-    var na = 0.0
-    var nb = 0.0
-    var i = 0
-    while (i < n) {
-      val xi = if (x.isNullAt(i)) 0.0 else x.getFloat(i).toDouble
-      val yi = if (y.isNullAt(i)) 0.0 else y.getFloat(i).toDouble
-      dot += xi * yi
-      na += xi * xi
-      nb += yi * yi
-      i += 1
-    }
-    val denom = math.sqrt(na) * math.sqrt(nb)
-    if (denom == 0.0) null else java.lang.Double.valueOf(dot / denom)
-  }
+  override def nullSafeEval(a: Any, b: Any): Any =
+    VectorUtil.cosine(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
 
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val dot = ctx.freshName("dot")
-    val na = ctx.freshName("na")
-    val nb = ctx.freshName("nb")
-    val n = ctx.freshName("n")
-    val i = ctx.freshName("i")
-    val xi = ctx.freshName("xi")
-    val yi = ctx.freshName("yi")
-    val denom = ctx.freshName("denom")
-    nullSafeCodeGen(ctx, ev, (x, y) => {
-      s"""
-        int $n = Math.min($x.numElements(), $y.numElements());
-        double $dot = 0.0, $na = 0.0, $nb = 0.0;
-        for (int $i = 0; $i < $n; $i++) {
-          double $xi = $x.isNullAt($i) ? 0.0 : (double) $x.getFloat($i);
-          double $yi = $y.isNullAt($i) ? 0.0 : (double) $y.getFloat($i);
-          $dot += $xi * $yi;
-          $na += $xi * $xi;
-          $nb += $yi * $yi;
-        }
-        double $denom = Math.sqrt($na) * Math.sqrt($nb);
-        if ($denom == 0.0) {
-          ${ev.isNull} = true;
-        } else {
-          ${ev.value} = $dot / $denom;
-        }
-      """
-    })
-  }
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    nullSafeCodeGen(ctx, ev, (x, y) =>
+      KernelCall.orNull(ctx, ev, dataType, s"graft.functions.VectorUtil.cosine($x, $y)"))
 
   override protected def withNewChildrenInternal(
       newLeft: Expression, newRight: Expression): CosineSimilarity =
@@ -115,37 +168,11 @@ case class DotProduct(left: Expression, right: Expression)
         s"got (${left.dataType.simpleString}, ${right.dataType.simpleString})")
   }
 
-  override def nullSafeEval(a: Any, b: Any): Any = {
-    val x = a.asInstanceOf[ArrayData]
-    val y = b.asInstanceOf[ArrayData]
-    val n = math.min(x.numElements(), y.numElements())
-    var dot = 0.0
-    var i = 0
-    while (i < n) {
-      val xi = if (x.isNullAt(i)) 0.0 else x.getFloat(i).toDouble
-      val yi = if (y.isNullAt(i)) 0.0 else y.getFloat(i).toDouble
-      dot += xi * yi
-      i += 1
-    }
-    java.lang.Double.valueOf(dot)
-  }
+  override def nullSafeEval(a: Any, b: Any): Any =
+    VectorUtil.dot(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
 
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val dot = ctx.freshName("dot")
-    val n = ctx.freshName("n")
-    val i = ctx.freshName("i")
-    nullSafeCodeGen(ctx, ev, (x, y) => {
-      s"""
-        int $n = Math.min($x.numElements(), $y.numElements());
-        double $dot = 0.0;
-        for (int $i = 0; $i < $n; $i++) {
-          $dot += ($x.isNullAt($i) ? 0.0 : (double) $x.getFloat($i))
-                * ($y.isNullAt($i) ? 0.0 : (double) $y.getFloat($i));
-        }
-        ${ev.value} = $dot;
-      """
-    })
-  }
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    defineCodeGen(ctx, ev, (x, y) => s"graft.functions.VectorUtil.dot($x, $y)")
 
   override protected def withNewChildrenInternal(
       newLeft: Expression, newRight: Expression): DotProduct =
@@ -158,7 +185,7 @@ case class DotProduct(left: Expression, right: Expression)
   * fold it replaces (r16): d = (double)a[i] − (double)b[i]; acc += d·d.
   * HOF folds are CodegenFallback, so the exact ground-truth L2 passes in
   * the IVF/ADC recall queries ran 64 boxed lambda steps per candidate
-  * pair; this native codegen loop produces the bit-identical double for
+  * pair; this native loop produces the bit-identical double for
   * every pair, so rankings and gate hashes are unchanged. Accepts
   * array<float> or array<double> on either side independently. */
 case class SqDist(left: Expression, right: Expression)
@@ -176,11 +203,6 @@ case class SqDist(left: Expression, right: Expression)
         s"got (${left.dataType.simpleString}, ${right.dataType.simpleString})")
   }
 
-  private def isFloat(e: Expression): Boolean = e.dataType match {
-    case ArrayType(FloatType, _) => true
-    case _ => false
-  }
-
   // Degenerate inputs NULL-PROPAGATE, mirroring the declarative fold
   // this expression replaced (r16 advice): a null element made the
   // fold's acc null, and an out-of-range a[i] under a length mismatch
@@ -189,51 +211,15 @@ case class SqDist(left: Expression, right: Expression)
   // embeddings are fixed-width non-null, so gate hashes are unchanged.
   override def nullable: Boolean = true
 
-  override def nullSafeEval(a: Any, b: Any): Any = {
-    val x = a.asInstanceOf[ArrayData]
-    val y = b.asInstanceOf[ArrayData]
-    val (xf, yf) = (isFloat(left), isFloat(right))
-    val n = x.numElements()
-    if (n != y.numElements()) return null
-    var acc = 0.0
-    var i = 0
-    while (i < n) {
-      if (x.isNullAt(i) || y.isNullAt(i)) return null
-      val xi = if (xf) x.getFloat(i).toDouble else x.getDouble(i)
-      val yi = if (yf) y.getFloat(i).toDouble else y.getDouble(i)
-      val d = xi - yi
-      acc += d * d
-      i += 1
-    }
-    java.lang.Double.valueOf(acc)
-  }
+  private def xf = VectorUtil.isFloatArray(left)
+  private def yf = VectorUtil.isFloatArray(right)
 
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val n = ctx.freshName("n")
-    val i = ctx.freshName("i")
-    val acc = ctx.freshName("acc")
-    val d = ctx.freshName("d")
-    val bad = ctx.freshName("bad")
-    val getX = if (isFloat(left)) "getFloat" else "getDouble"
-    val getY = if (isFloat(right)) "getFloat" else "getDouble"
-    nullSafeCodeGen(ctx, ev, (x, y) => {
-      s"""
-        int $n = $x.numElements();
-        boolean $bad = $n != $y.numElements();
-        double $acc = 0.0;
-        for (int $i = 0; !$bad && $i < $n; $i++) {
-          if ($x.isNullAt($i) || $y.isNullAt($i)) { $bad = true; break; }
-          double $d = ((double) $x.$getX($i)) - ((double) $y.$getY($i));
-          $acc += $d * $d;
-        }
-        if ($bad) {
-          ${ev.isNull} = true;
-        } else {
-          ${ev.value} = $acc;
-        }
-      """
-    })
-  }
+  override def nullSafeEval(a: Any, b: Any): Any =
+    VectorUtil.sqDist(a.asInstanceOf[ArrayData], xf, b.asInstanceOf[ArrayData], yf)
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    nullSafeCodeGen(ctx, ev, (x, y) => KernelCall.orNull(ctx, ev, dataType,
+      s"graft.functions.VectorUtil.sqDist($x, $xf, $y, $yf)"))
 
   override protected def withNewChildrenInternal(
       newLeft: Expression, newRight: Expression): SqDist =
@@ -250,8 +236,10 @@ case class SqDist(left: Expression, right: Expression)
   * [[graft.operators.Similarity]]) that interpreted constant grew with k
   * and the 10×-probe assignment pass read 3× its k=8 cost
   * (sim_ivf_kmeans 8.1 → 24.8 s at sf1). This expression runs the same
-  * arithmetic as ONE tight codegen'd double loop over a referenced
-  * `double[][]` codebook.
+  * arithmetic as ONE tight double loop ([[VectorUtil.centroidSqDists]])
+  * over a referenced `double[][]` codebook. Its NULL rule is
+  * [[SqDist]]'s: an input whose length differs from the centroid width,
+  * or that holds a null element, gives NULL.
   *
   * Bit-exactness contract: per centroid, terms accumulate in ascending
   * component order from a 0.0 seed — `acc += (emb[i] − c[i])²` —
@@ -264,9 +252,9 @@ case class SqDist(left: Expression, right: Expression)
   * NOT as a child expression — a k×64 literal array child would be
   * re-evaluated generically per row. */
 case class CentroidSqDists(child: Expression, cents: Seq[Seq[Double]])
-    extends org.apache.spark.sql.catalyst.expressions.UnaryExpression {
+    extends UnaryExpression {
   override def dataType: DataType = ArrayType(DoubleType, containsNull = false)
-  override def nullable: Boolean = child.nullable
+  override def nullable: Boolean = true
 
   override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
     case ArrayType(FloatType, _) | ArrayType(DoubleType, _) =>
@@ -275,60 +263,18 @@ case class CentroidSqDists(child: Expression, cents: Seq[Seq[Double]])
       s"centroid_sq_dists expects array<float> or array<double>, got ${t.simpleString}")
   }
 
-  private def childIsFloat: Boolean = child.dataType match {
-    case ArrayType(FloatType, _) => true
-    case _ => false
-  }
-
   @transient private lazy val matrix: Array[Array[Double]] =
     cents.map(_.toArray).toArray
 
-  override def nullSafeEval(input: Any): Any = {
-    val x = input.asInstanceOf[ArrayData]
-    val isF = childIsFloat
-    val out = new Array[Double](matrix.length)
-    var j = 0
-    while (j < matrix.length) {
-      val c = matrix(j)
-      var acc = 0.0
-      var i = 0
-      while (i < c.length) {
-        val d = (if (isF) x.getFloat(i).toDouble else x.getDouble(i)) - c(i)
-        acc += d * d
-        i += 1
-      }
-      out(j) = acc
-      j += 1
-    }
-    org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
-      .fromPrimitiveArray(out)
-  }
+  private def isF = VectorUtil.isFloatArray(child)
+
+  override def nullSafeEval(input: Any): Any =
+    VectorUtil.centroidSqDists(input.asInstanceOf[ArrayData], isF, matrix)
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
     val m = ctx.addReferenceObj("centMatrix", matrix, "double[][]")
-    val out = ctx.freshName("out")
-    val j = ctx.freshName("j")
-    val i = ctx.freshName("i")
-    val acc = ctx.freshName("acc")
-    val c = ctx.freshName("c")
-    val d = ctx.freshName("d")
-    val get = if (childIsFloat) "getFloat" else "getDouble"
-    nullSafeCodeGen(ctx, ev, x => {
-      s"""
-        double[] $out = new double[$m.length];
-        for (int $j = 0; $j < $m.length; $j++) {
-          double[] $c = $m[$j];
-          double $acc = 0.0;
-          for (int $i = 0; $i < $c.length; $i++) {
-            double $d = ((double) $x.$get($i)) - $c[$i];
-            $acc += $d * $d;
-          }
-          $out[$j] = $acc;
-        }
-        ${ev.value} = org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
-          .fromPrimitiveArray($out);
-      """
-    })
+    nullSafeCodeGen(ctx, ev, x => KernelCall.orNull(ctx, ev, dataType,
+      s"graft.functions.VectorUtil.centroidSqDists($x, $isF, $m)"))
   }
 
   override protected def withNewChildInternal(newChild: Expression): CentroidSqDists =

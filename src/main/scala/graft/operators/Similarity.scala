@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, GraftPlanShim, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -394,17 +394,13 @@ object Similarity {
     // same values but HOFs are CodegenFallback, so every row paid k·64
     // BOXED lambda steps — with the corpus-scaled k that interpreted
     // constant grew 3× at the 10× probe (sim_ivf_kmeans 8.1 → 24.8 s at
-    // sf1, r16). CentroidSqDists runs one tight codegen'd double loop
+    // sf1, r16). CentroidSqDists runs one tight compiled double loop
     // with the IDENTICAL ascending-component IEEE accumulation, so every
     // gated hash is unchanged. dists stays in ascending-cid order, so
     // array_position-of-min picks the FIRST minimum — exactly the
     // oracle's ORDER BY dist, cid tiebreak.
     val cidArr: Column = array(cents.toSeq.map(c => lit(c._1)): _*)
-    val dists: Column = org.apache.spark.sql.GraftPlanShim.column(
-      graft.functions.CentroidSqDists(
-        org.apache.spark.sql.GraftPlanShim
-          .expression(col("embedding")),
-        cents.toSeq.map(_._2.toSeq)))
+    val dists: Column = centroidDists(col("embedding"), cents)
     val assigned = emb
       .withColumn("dists", dists)
       .withColumn("dist", array_min(col("dists")))
@@ -534,11 +530,7 @@ object Similarity {
     val withDists = (0 until 4).foldLeft(emb) { case (df, s) =>
       val cells = cb(s)
       val cidArr = array(cells.toSeq.map(c => lit(c._1)): _*)
-      val dists = org.apache.spark.sql.GraftPlanShim.column(
-        graft.functions.CentroidSqDists(
-          org.apache.spark.sql.GraftPlanShim.expression(
-            expr(s"slice(embedding, ${s * 16} + 1, 16)")),
-          cells.toSeq.map(_._2.toSeq)))
+      val dists = centroidDists(subspace("embedding", s), cells)
       df.withColumn(s"dists$s", dists)
         .withColumn(s"d$s", array_min(col(s"dists$s")))
         .withColumn(s"code$s", element_at(cidArr,
@@ -568,39 +560,47 @@ object Similarity {
     broadcast(adcDistTables(queriesDf0, cb).drop("embedding")).crossJoin(codes)
       .filter(col("vec_id") =!= col("query_id"))
       .select(col("query_id"), col("vec_id"),
-        (adcLookup(cb, 0) + adcLookup(cb, 1) + adcLookup(cb, 2)
-          + adcLookup(cb, 3)).as("adc"))
+        adc(cb).as("adc"))
       .withColumn("rank", row_number().over(
         Window.partitionBy(col("query_id")).orderBy(col("adc"), col("vec_id"))))
       .filter(col("rank") <= 3)
       .orderBy("query_id", "rank")
   }
 
-  /** Per query: distance table dt_s[j] to every codeword of subspace s —
-    * the asymmetric-distance precompute both ADC queries share. */
-  private def adcDistTables(
-      queriesDf: DataFrame, cb: Map[Int, Array[(Int, Array[Double])]]): DataFrame =
+  /** The [[graft.functions.CentroidSqDists]] column: squared distances
+    * of the vectors in `v` to every centroid of `cents`, in codebook order. */
+  private def centroidDists(v: Column, cents: Array[(Int, Array[Double])]): Column =
+    GraftPlanShim.column(graft.functions.CentroidSqDists(
+      GraftPlanShim.expression(v), cents.toSeq.map(_._2.toSeq)))
+
+  /** The 16-wide PQ subspace `s` of the vector column `vec`. */
+  private def subspace(vec: String, s: Int): Column =
+    expr(s"slice($vec, ${s * 16} + 1, 16)")
+
+  /** Per query: distance table `<dt>_s[j]` from subspace s of the vector
+    * column `vec` to every codeword of that subspace — the
+    * asymmetric-distance precompute every ADC query shares. */
+  private def adcDistTables(queriesDf: DataFrame,
+      cb: Map[Int, Array[(Int, Array[Double])]],
+      vec: String = "embedding", dt: String = "dt"): DataFrame =
     (0 until 4).foldLeft(queriesDf) { case (df, s) =>
-      val cells = cb(s)
-      val dt = org.apache.spark.sql.GraftPlanShim.column(
-        graft.functions.CentroidSqDists(
-          org.apache.spark.sql.GraftPlanShim.expression(
-            expr(s"slice(embedding, ${s * 16} + 1, 16)")),
-          cells.toSeq.map(_._2.toSeq)))
-      df.withColumn(s"dt$s", dt)
+      df.withColumn(s"$dt$s", centroidDists(subspace(vec, s), cb(s)))
     }
 
-  /** CASE-chain lookup of dt_s by the database row's code (cid values may
-    * be sparse if a cell emptied, so lookup goes through the cid list). */
-  private def adcLookup(
-      cb: Map[Int, Array[(Int, Array[Double])]], s: Int): Column = {
-    val cells = cb(s)
-    cells.zipWithIndex.tail.foldLeft(
-      when(col(s"code$s") === cells.head._1,
-        element_at(col(s"dt$s"), 1))) { case (acc, ((cid, _), idx)) =>
-      acc.when(col(s"code$s") === cid, element_at(col(s"dt$s"), idx + 1))
-    }
-  }
+  /** Approximate distance Σ_s `<dt>_s[<code>_s]`, added in fixed subspace
+    * order. Each term is a CASE-chain lookup of the table by the database
+    * row's code (cid values may be sparse if a cell emptied, so lookup goes
+    * through the cid list). */
+  private def adc(cb: Map[Int, Array[(Int, Array[Double])]],
+      code: String = "code", dt: String = "dt"): Column =
+    (0 until 4).map { s =>
+      val cells = cb(s)
+      cells.zipWithIndex.tail.foldLeft(
+        when(col(s"$code$s") === cells.head._1,
+          element_at(col(s"$dt$s"), 1))) { case (acc, ((cid, _), idx)) =>
+        acc.when(col(s"$code$s") === cid, element_at(col(s"$dt$s"), idx + 1))
+      }
+    }.reduce(_ + _)
 
   /** IVF-ADC: the two trained index structures COMPOSED — the coarse
     * k-means quantizer ([[kmeansAssigned]]) prunes candidates to the
@@ -634,8 +634,7 @@ object Similarity {
       .join(corpus, Seq("cid"))
       .filter(col("vec_id") =!= col("query_id"))
       .select(col("query_id"), col("cid"), col("vec_id"),
-        (adcLookup(cb, 0) + adcLookup(cb, 1) + adcLookup(cb, 2)
-          + adcLookup(cb, 3)).as("adc"))
+        adc(cb).as("adc"))
       .withColumn("rank", row_number().over(
         Window.partitionBy(col("query_id")).orderBy(col("adc"), col("vec_id"))))
       .filter(col("rank") <= 3)
@@ -705,41 +704,13 @@ object Similarity {
     val withDists = (0 until 4).foldLeft(res) { case (df, s) =>
       val cells = cb(s)
       val cidA = array(cells.toSeq.map(c => lit(c._1)): _*)
-      val dists = org.apache.spark.sql.GraftPlanShim.column(
-        graft.functions.CentroidSqDists(
-          org.apache.spark.sql.GraftPlanShim.expression(
-            expr(s"slice(rv, ${s * 16} + 1, 16)")),
-          cells.toSeq.map(_._2.toSeq)))
+      val dists = centroidDists(subspace("rv", s), cells)
       df.withColumn(s"rdists$s", dists)
         .withColumn(s"rd$s", array_min(col(s"rdists$s")))
         .withColumn(s"rcode$s", element_at(cidA,
           array_position(col(s"rdists$s"), col(s"rd$s")).cast("int")))
     }
     (withDists, cb)
-  }
-
-  /** Residual distance tables / code lookup — [[adcDistTables]] /
-    * [[adcLookup]] over the residual columns. */
-  private def adcResDistTables(queriesDf: DataFrame,
-      cb: Map[Int, Array[(Int, Array[Double])]]): DataFrame =
-    (0 until 4).foldLeft(queriesDf) { case (df, s) =>
-      val cells = cb(s)
-      val dt = org.apache.spark.sql.GraftPlanShim.column(
-        graft.functions.CentroidSqDists(
-          org.apache.spark.sql.GraftPlanShim.expression(
-            expr(s"slice(rv, ${s * 16} + 1, 16)")),
-          cells.toSeq.map(_._2.toSeq)))
-      df.withColumn(s"rdt$s", dt)
-    }
-
-  private def adcResLookup(
-      cb: Map[Int, Array[(Int, Array[Double])]], s: Int): Column = {
-    val cells = cb(s)
-    cells.zipWithIndex.tail.foldLeft(
-      when(col(s"rcode$s") === cells.head._1,
-        element_at(col(s"rdt$s"), 1))) { case (acc, ((cid, _), idx)) =>
-      acc.when(col(s"rcode$s") === cid, element_at(col(s"rdt$s"), idx + 1))
-    }
   }
 
   /** RESIDUAL-quantized IVFADC vs the raw-vector variant, at equal code
@@ -811,15 +782,13 @@ object Similarity {
           Seq("cid"))
         .filter(col("vec_id") =!= col("query_id"))
         .select(col("query_id"), col("vec_id"),
-          (adcLookup(rawCb, 0) + adcLookup(rawCb, 1) + adcLookup(rawCb, 2)
-            + adcLookup(rawCb, 3)).as("adc")))
+          adc(rawCb).as("adc")))
     val resTop = top3(
-      broadcast(adcResDistTables(qRes, resCb).drop("rv"))
+      broadcast(adcDistTables(qRes, resCb, "rv", "rdt").drop("rv"))
         .join(resCodes.withColumnRenamed("rcid", "cid"), Seq("cid"))
         .filter(col("vec_id") =!= col("query_id"))
         .select(col("query_id"), col("vec_id"),
-          (adcResLookup(resCb, 0) + adcResLookup(resCb, 1)
-            + adcResLookup(resCb, 2) + adcResLookup(resCb, 3)).as("adc")))
+          adc(resCb, "rcode", "rdt").as("adc")))
 
     def variantRow(name: String, top: DataFrame, err: DataFrame): DataFrame = {
       val hits = top.join(gt, Seq("query_id", "vec_id"), "left_semi")
@@ -885,13 +854,12 @@ object Similarity {
         posexplode(expr("slice(cells, 1, 2)")))
       .select(col("query_id"), col("embedding"),
         (col("pos") + 1).as("crk"), col("col.cid").as("cid"))
-    val qDt = adcResDistTables(residualFrame(qCells, kcents), resCb)
+    val qDt = adcDistTables(residualFrame(qCells, kcents), resCb, "rv", "rdt")
       .drop("embedding", "rv")
     val cand = broadcast(qDt).join(resCodes, Seq("cid"))
       .filter(col("vec_id") =!= col("query_id"))
       .select(col("query_id"), col("crk"), col("vec_id"),
-        (adcResLookup(resCb, 0) + adcResLookup(resCb, 1)
-          + adcResLookup(resCb, 2) + adcResLookup(resCb, 3)).as("adc"))
+        adc(resCb, "rcode", "rdt").as("adc"))
     val np = Seq(1, 2).toDF("nprobe")
     val ivf3 = cand.join(broadcast(np), col("crk") <= col("nprobe"))
       .withColumn("rank", row_number().over(

@@ -1,14 +1,12 @@
 package graft
 
 import graft.core.Tables
-import graft.functions.Registry
 
 /** The pure-SQL user surface: tables registered as temp views plus the
   * custom functions make the whole engine drivable from `spark.sql`. */
 class SqlInterfaceSpec extends SparkSpec {
 
   test("spark.sql can run analytics with custom functions over temp views") {
-    Registry.register(spark)
     Tables.names.foreach { t =>
       Tables.load(spark, sfDir, t).createOrReplaceTempView(t)
     }

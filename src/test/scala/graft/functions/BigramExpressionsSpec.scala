@@ -19,7 +19,6 @@ class BigramExpressionsSpec extends SparkSpec {
     "punct, words. and? more!", "a", "ab cd", "\n\n\nx\n\n\n")
 
   private def df = {
-    Registry.register(spark)
     import spark.implicits._
     texts.toDF("text")
   }

@@ -21,7 +21,6 @@ class HashExpressionsSpec extends SparkSpec {
   }
 
   test("portable_hash60 == cast(conv(substr(md5(x),1,15),16,10) as bigint)") {
-    Registry.register(spark)
     val rows = strings(200).toDF("s")
       .selectExpr("portable_hash60(s) as fast",
         "cast(conv(substr(md5(s), 1, 15), 16, 10) as bigint) as ref")
@@ -30,7 +29,6 @@ class HashExpressionsSpec extends SparkSpec {
   }
 
   test("shingle_hashes == hash60 over concat_ws 3-grams, with and without suffix") {
-    Registry.register(spark)
     // token arrays of varying length (incl. < 3 → empty), multi-byte chars
     val tokGen = Gen.chooseNum(0, 12).flatMap(n =>
       Gen.listOfN(n, Gen.frequency(
@@ -58,7 +56,6 @@ class HashExpressionsSpec extends SparkSpec {
   }
 
   test("shingle_hash_pairs == zip_with of the two shingle_hashes passes") {
-    Registry.register(spark)
     val tokGen = Gen.chooseNum(0, 12).flatMap(n =>
       Gen.listOfN(n, Gen.frequency(
         4 -> Gen.alphaNumStr.map(_.take(6)),
@@ -84,7 +81,6 @@ class HashExpressionsSpec extends SparkSpec {
 
   test("segment_hashes == transform(sequence((n-1) div w)) of prefixed " +
       "concat_ws segments, incl. n=0 and short tails") {
-    Registry.register(spark)
     val tokGen = Gen.chooseNum(0, 13).flatMap(n =>
       Gen.listOfN(n, Gen.frequency(
         4 -> Gen.alphaNumStr.map(_.take(6)),
@@ -104,7 +100,6 @@ class HashExpressionsSpec extends SparkSpec {
   }
 
   test("shingle_hashes width arg == hash60 over concat_ws k-grams (k=1,2,4,5)") {
-    Registry.register(spark)
     val tokGen = Gen.chooseNum(0, 12).flatMap(n =>
       Gen.listOfN(n, Gen.frequency(
         4 -> Gen.alphaNumStr.map(_.take(6)),
@@ -127,7 +122,6 @@ class HashExpressionsSpec extends SparkSpec {
   }
 
   test("simhash32(toks) == the bit-plane HOF fold") {
-    Registry.register(spark)
     val docs = strings(50).filter(_.nonEmpty).toDF("text")
       .selectExpr("split(text, '\\\\s+') as toks")
     val rows = docs.selectExpr(
@@ -141,7 +135,6 @@ class HashExpressionsSpec extends SparkSpec {
   }
 
   test("simhash64(toks) == two independent 32-bit HOF halves, bit 63 signed") {
-    Registry.register(spark)
     val docs = strings(50).filter(_.nonEmpty).toDF("text")
       .selectExpr("split(text, '\\\\s+') as toks")
     // plane j < 32 from h60(t), plane j >= 32 from h60(t || '#hi'); the

@@ -13,7 +13,6 @@ class LexExtremeSpec extends SparkSpec {
   import scala.jdk.CollectionConverters._
 
   private lazy val df = {
-    graft.functions.Registry.register(spark)
     // groups exercising: unique max, tied first field (tie broken on
     // second), single row, negative values
     val rows = Seq(
@@ -51,7 +50,6 @@ class LexExtremeSpec extends SparkSpec {
   }
 
   test("null first fields are ignored; an all-null group yields NULL") {
-    graft.functions.Registry.register(spark)
     val withNulls = spark.sql(
       """SELECT * FROM VALUES
         |  ('a', CAST(NULL AS DOUBLE), 1L), ('a', 2.0, 5L),

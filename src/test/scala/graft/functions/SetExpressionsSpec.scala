@@ -7,8 +7,10 @@ import org.scalacheck.rng.Seed
 import graft.SparkSpec
 
 /** sorted_intersect_count must equal size(array_intersect(..)) on every
-  * sorted-distinct input — the precondition the dedup pipelines satisfy —
-  * through both the codegen and interpreted paths. */
+  * sorted-distinct input — the precondition the dedup pipelines satisfy.
+  * The random pairs come from a local Seq, which the optimizer folds into
+  * a LocalRelation, so these checks run the interpreted path only;
+  * ExecutionModeSpec holds the codegen path to the interpreted one. */
 class SetExpressionsSpec extends SparkSpec {
 
   private val arrGen: Gen[Seq[Long]] = for {
@@ -25,7 +27,6 @@ class SetExpressionsSpec extends SparkSpec {
     }
 
   test("merge count equals size(array_intersect) on 200 random sorted pairs") {
-    Registry.register(spark)
     import spark.implicits._
     val df = sample(200, 7L).toDF("a", "b")
     val rows = df.select(
@@ -43,7 +44,6 @@ class SetExpressionsSpec extends SparkSpec {
 
   test("array_eq_count equals size(filter(zip_with(a,b,eq))) on 200 random " +
       "pairs incl. nulls and ragged lengths") {
-    Registry.register(spark)
     import spark.implicits._
     val pairs = (0 until 200).flatMap { i =>
       for {

@@ -10,7 +10,6 @@ import org.apache.spark.sql.functions._
 class SqDistSpec extends SparkSpec {
 
   test("native sq_dist equals the HOF fold bit-for-bit on real embedding pairs") {
-    graft.functions.Registry.register(spark)
     val emb = graft.core.Tables.embeddings(spark, sfDir)
     val a = emb.filter(col("vec_id") < 20)
       .select(col("vec_id").as("ida"), col("embedding").as("qv"))
@@ -33,7 +32,6 @@ class SqDistSpec extends SparkSpec {
   }
 
   test("mixed float/double operands and null propagation") {
-    graft.functions.Registry.register(spark)
     val r = spark.sql(
       "SELECT sq_dist(array(cast(0.5 as float), cast(3.0 as float)), " +
         "array(cast(1.5 as double), cast(-2.25 as double))) AS d").head()
@@ -47,7 +45,6 @@ class SqDistSpec extends SparkSpec {
 
   test("degenerate inputs null-propagate: ragged lengths and null elements " +
       "(r16 advice — no silent truncation)") {
-    graft.functions.Registry.register(spark)
     val ragged = spark.sql(
       "SELECT sq_dist(array(cast(1.0 as double), cast(2.0 as double)), " +
         "array(cast(1.0 as double))) AS d").head()

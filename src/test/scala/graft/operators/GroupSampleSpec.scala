@@ -17,7 +17,6 @@ class GroupSampleSpec extends SparkSpec {
 
   test("group sample: each stratum contributes exactly min(k, |stratum|) " +
     "docs and they are the k hash-smallest (differential vs full sort)") {
-    graft.functions.Registry.register(spark)
     val s = TrainingPipeline.groupSample(spark, sfDir)
     val perStratum = s.groupBy("lang", "source").agg(count(lit(1)).as("n"))
     val sizes = Tables.documents(spark, sfDir)
@@ -41,7 +40,6 @@ class GroupSampleSpec extends SparkSpec {
 
   test("user sample preserves kept users' event streams intact: per-user " +
     "counts in the sample equal full-table counts for every kept user") {
-    graft.functions.Registry.register(spark)
     val ev = Tables.events(spark, sfDir)
     val keptPred = expr(
       "portable_hash60(concat('usamp:', cast(user_id as string))) % 10 = 0")

@@ -4,13 +4,11 @@ import org.apache.spark.sql.Row
 import org.apache.spark.sql.functions.col
 
 import graft.SparkSpec
-import graft.functions.Registry
 
 class MapReduceTasksSpec extends SparkSpec {
   import spark.implicits._
 
   private def docs(contents: String*) = {
-    Registry.register(spark)
     contents.toSeq.toDF("content")
   }
 

@@ -6,7 +6,6 @@ import org.scalacheck.rng.Seed
 import graft.SparkSpec
 import graft.agg.ReferenceTasks
 import graft.core.Doc
-import graft.functions.Registry
 
 /** SURVEY §5.3 property suite. The pure-function reference tasks carry the
   * per-document invariants (hundreds of cases); one Spark round-trip
@@ -94,7 +93,6 @@ class MapTaskPropertiesSpec extends SparkSpec {
 
   test("optimized Spark pipelines equal the reference fold on random corpora") {
     import spark.implicits._
-    Registry.register(spark)
     for (texts <- samples(Gen.listOfN(5, docGen), 5)) {
       val docs = texts.toDF("content")
       val typedDocs = texts.zipWithIndex.map { case (t, i) => Doc(i.toLong, t) }

@@ -44,7 +44,6 @@ class Round5cSpec extends SparkSpec {
 
   test("count-min sketch: per-row cell sums equal the event count, and " +
     "min-over-rows estimate >= every user's true frequency") {
-    graft.functions.Registry.register(spark)
     val cms = AdvancedAggs.cmsUsers(spark, sfDir).collect()
     val total = Tables.events(spark, sfDir).count()
     (0 until 4).foreach { r =>

@@ -262,7 +262,6 @@ class Round5dSpec extends SparkSpec {
 
   test("containment: prefix-filtered pairs equal a brute-force all-pairs " +
     "recompute, and every pair is directional with ratio >= 0.9") {
-    graft.functions.Registry.register(spark)
     val out = Dedup.containmentPairs(spark, sfDir).collect()
       .map(r => (r.getLong(0), r.getLong(1)) -> r.getDouble(2)).toMap
     out.values.foreach(c => assert(c >= 0.9 && c <= 1.0))

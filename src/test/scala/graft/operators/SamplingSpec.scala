@@ -9,7 +9,6 @@ import graft.core.Tables
 class SamplingSpec extends SparkSpec {
 
   test("bottom-k aggregator equals the window formulation exactly") {
-    graft.functions.Registry.register(spark)
     val viaAgg = Sampling.bottomKStratified(spark, sfDir).collect().toSeq
     val viaWindow = {
       import org.apache.spark.sql.expressions.Window
@@ -30,7 +29,6 @@ class SamplingSpec extends SparkSpec {
     // The KMV-sampling property downstream caches rely on: bottom-k of a
     // union is the bottom-k of the parts' bottom-ks. Split the corpus by
     // doc parity, sample each half, merge, and compare to the full sample.
-    graft.functions.Registry.register(spark)
     val docs = Tables.documents(spark, sfDir)
       .select(col("lang"), col("doc_id").cast("string").as("doc_id"),
         expr("portable_hash60(concat('samp:', cast(doc_id as string)))").as("h"),

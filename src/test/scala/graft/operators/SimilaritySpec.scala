@@ -1,7 +1,6 @@
 package graft.operators
 
 import graft.SparkSpec
-import graft.functions.Registry
 
 /** Semantics of the cosine expression + recall of the bucketed ANN path
   * against the exact baseline (the measurement promised in Similarity's
@@ -9,7 +8,6 @@ import graft.functions.Registry
 class SimilaritySpec extends SparkSpec {
 
   test("cosine_sim matches a hand-computed value exactly") {
-    Registry.register(spark)
     val row = spark.sql(
       """select cosine_sim(array(cast(1.0 as float), cast(2.0 as float)),
         |                  array(cast(3.0 as float), cast(4.0 as float))) as s""".stripMargin)
@@ -20,7 +18,6 @@ class SimilaritySpec extends SparkSpec {
   }
 
   test("cosine_sim: orthogonal = 0, identical = 1, zero vector = null") {
-    Registry.register(spark)
     val r = spark.sql(
       """select
         |  cosine_sim(array(cast(1.0 as float), cast(0.0 as float)),
@@ -40,7 +37,6 @@ class SimilaritySpec extends SparkSpec {
     val exact = {
       import org.apache.spark.sql.expressions.Window
       import org.apache.spark.sql.functions._
-      Registry.register(spark)
       val emb = graft.core.Tables.embeddings(spark, sfDir)
       val q = emb.select(col("vec_id").as("query_id"), col("embedding").as("qv"))
       emb.join(q, col("vec_id") =!= col("query_id"))
@@ -65,7 +61,6 @@ class SimilaritySpec extends SparkSpec {
 
   test("LSH near-dup pairs are a SUBSET of the exact pairs (precision 1.0), recall measured") {
     import org.apache.spark.sql.functions._
-    Registry.register(spark)
     // exact all-pairs at the same threshold the LSH query verifies with
     val emb = graft.core.Tables.embeddings(spark, sfDir)
     val a = emb.select(col("vec_id").as("vec_a"), col("embedding").as("qv"))
@@ -124,7 +119,6 @@ class SimilaritySpec extends SparkSpec {
     import org.apache.spark.sql.functions._
     // within-cell top-3 can't beat the exact global top-3, but every
     // reported sim must equal the exact cosine for that pair
-    Registry.register(spark)
     val emb = graft.core.Tables.embeddings(spark, sfDir)
     val got = Similarity.topkIvfTrained(spark, sfDir)
       .select(col("query_id"), col("vec_id"), col("sim"))

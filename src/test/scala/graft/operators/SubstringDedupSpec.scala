@@ -26,7 +26,6 @@ class SubstringDedupSpec extends SparkSpec {
   }
 
   test("rolling char_window_hashes equals per-window recomputation") {
-    graft.functions.Registry.register(spark)
     val samples = Seq(
       "", "a", "short", "exactly4", "abcabcabcabc",
       "the quick brown fox jumps over the lazy dog",
@@ -93,7 +92,6 @@ class SubstringDedupSpec extends SparkSpec {
   }
 
   test("winnow_hashes equals brute-force rightmost-min selection") {
-    graft.functions.Registry.register(spark)
     // periodic strings force hash ties; short strings hit the n<win path
     val samples = Seq("", "abc", "ab" * 30, "a" * 50, "abcabcabc" * 6,
       "the quick brown fox jumps over the lazy dog again and again")

@@ -29,7 +29,6 @@ class ZOrderLocalitySpec extends SparkSpec {
   }
 
   test("native zvalue2 == the write path's Column-fold curve (sources.Layout.zValue)") {
-    graft.functions.Registry.register(spark)
     val bad = graft.core.Tables.events(spark, sfDir)
       .select((col("user_id") % 2097152).as("a"), (col("event_id") % 2097152).as("b"))
       .withColumn("z1", expr("zvalue2(a, b)"))
@@ -39,7 +38,6 @@ class ZOrderLocalitySpec extends SparkSpec {
   }
 
   test("zvalue2 SQL expression (codegen) == LayoutUtil over a corpus column") {
-    graft.functions.Registry.register(spark)
     val rows = graft.core.Tables.events(spark, sfDir)
       .select((col("user_id") % 256).as("x"), (col("event_id") % 256).as("y"))
       .withColumn("zv", expr("zvalue2(x, y)"))

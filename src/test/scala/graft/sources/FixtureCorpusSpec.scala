@@ -9,7 +9,6 @@ import org.apache.spark.sql.DataFrame
 import graft.SparkSpec
 import graft.agg.{GenericMapTask, ReduceOps, ReferenceTasks}
 import graft.core.Doc
-import graft.functions.Registry
 import graft.operators.MapReduceTasks
 
 /** The document scan, the three map tasks (native and generic), the word
@@ -66,7 +65,6 @@ class FixtureCorpusSpec extends SparkSpec {
   for ((task, fn) <- Seq(
       1 -> MapReduceTasks.task1 _, 2 -> MapReduceTasks.task2 _, 3 -> MapReduceTasks.task3 _))
     test(s"task $task through TextSink.writeGoldenFile byte-matches expected/$task.output") {
-      Registry.register(spark)
       assert(golden(fn(docs())) == expected(task.toString))
     }
 
@@ -78,7 +76,6 @@ class FixtureCorpusSpec extends SparkSpec {
     }
 
   test("task 1 through coalesce(1) + graft-kv byte-matches expected/1.output") {
-    Registry.register(spark)
     val dir = Files.createTempDirectory("graft-fixture-kv")
     MapReduceTasks.task1(docs()).coalesce(1)
       .write.format("graft-kv").mode("overwrite").save(dir.toString)
@@ -88,12 +85,10 @@ class FixtureCorpusSpec extends SparkSpec {
   }
 
   test("wordCount through TextSink.writeGoldenFile byte-matches expected/wordcount.output") {
-    Registry.register(spark)
     assert(golden(MapReduceTasks.wordCount(docs())) == expected("wordcount"))
   }
 
   test("TextSink.write part files concatenate in name order to the sorted stream") {
-    Registry.register(spark)
     val dir = Files.createTempDirectory("graft-fixture-parts").resolve("out")
     withConf("spark.sql.adaptive.coalescePartitions.enabled" -> "false") {
       TextSink.write(MapReduceTasks.task2(docs()), dir.toString)

@@ -19,7 +19,6 @@ class KllStreamSpec extends SparkSpec {
   test("canonical replay of lineitem equals the batch sketch content") {
     implicit val sqlCtx = spark.sqlContext
     import spark.implicits._
-    graft.functions.Registry.register(spark)
     val dir = sfDir
     val batch = graft.operators.Kll.kllContent(spark, dir).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getString(2), r.getDouble(3),
@@ -60,7 +59,6 @@ class KllStreamSpec extends SparkSpec {
     "conserve n exactly, buffers bounded, estimator within its bound") {
     implicit val sqlCtx = spark.sqlContext
     import spark.implicits._
-    graft.functions.Registry.register(spark)
     val K = graft.operators.Kll.K
     val rows = graft.core.Tables.lineitem(spark, sfDir)
       .selectExpr(

@@ -714,7 +714,6 @@ class StreamingPipelinesSpec extends SparkSpec {
     "per-stratum sample after replaying real documents in reversed order") {
     implicit val sqlCtx = spark.sqlContext
     val dir = "/root/testdata/sf0.01"
-    graft.functions.Registry.register(spark)
     val batch = graft.operators.Sampling.bottomKStratified(spark, dir)
       .collect()
       .map(r => (r.getString(0), r.getInt(1), r.getString(2), r.getLong(3)))
