@@ -6,7 +6,7 @@ import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.sources.v2.DocV2Source
+import graft.sources.v2.{DocV2Source, SessionHadoopConf}
 
 /** Whole-file text source with the reference engine's input contract:
   * documents are `{dir}/{i}.txt` for `i ∈ [0, numFiles)` (path convention
@@ -35,8 +35,10 @@ object DocSource {
     require(numFiles > 0, s"numFiles must be positive, got $numFiles")
     // The bare format lets content-free scans run without the directory;
     // the reference reader needs its input, so a missing one fails here.
+    // The check uses the scan's conf, so a file system named only in the
+    // session is found here as it is by the scan.
     val root = new Path(dir)
-    if (!root.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(root))
+    if (!root.getFileSystem(SessionHadoopConf(spark).value.value).exists(root))
       throw new FileNotFoundException(s"input directory $dir does not exist")
     spark.read.format(classOf[DocV2Source].getName)
       .option("numFiles", numFiles.toString)

@@ -4,7 +4,8 @@ import java.io.IOException
 
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.classic.SparkSession
+
+import graft.sources.v2.SessionHadoopConf
 
 /** Text sink with the reference engine's output contract: one `"key value"`
   * line per record (format line main.cpp:171), key-sorted — the reference's
@@ -46,8 +47,7 @@ object TextSink {
     // sort inside the single partition is what orders the file.
     df.coalesce(1).sortWithinPartitions("key")
       .write.format(Format).mode("overwrite").save(staging.toString)
-    val conf = df.sparkSession.asInstanceOf[SparkSession].sessionState.newHadoopConf()
-    val fs = target.getFileSystem(conf)
+    val fs = target.getFileSystem(SessionHadoopConf(df.sparkSession).value.value)
     val part = fs.globStatus(new Path(staging, "part-*"))
     require(part.length == 1, s"expected one staged part file, got ${part.length}")
     if (fs.exists(target)) fs.delete(target, false)

@@ -5,6 +5,7 @@ import java.util.{Map => JMap, UUID}
 
 import org.apache.hadoop.fs.Path
 
+import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.GraftOutputMetrics
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.classic.SparkSession
@@ -35,8 +36,10 @@ import org.apache.spark.util.SerializableConfiguration
   *  - all I/O goes through the Hadoop FileSystem API, so the sink works
   *    unchanged against HDFS/S3A/local paths at cluster scale. The Hadoop
   *    conf is the session's (`sessionState.newHadoopConf()`, so
-  *    `spark.hadoop.*` settings apply), built once on the driver and
-  *    shipped to the writers inside the writer factory;
+  *    `spark.hadoop.*` and session-only settings apply) and reaches the
+  *    writers as the one broadcast [[SessionHadoopConf]] holds per conf
+  *    content, not inside the writer factory, where each task deserialized
+  *    the whole 112 KB conf;
   *  - each writer records its bytes and rows in the task's output metrics;
   *  - one output file per partition: the file count tracks the upstream
   *    partitioning (the scale path), while a single file is `coalesce(1)`
@@ -93,7 +96,7 @@ private[v2] class KvWriteBuilder(path: String, info: LogicalWriteInfo)
   override def build(): Write = {
     KvV2Sink.validate(info.schema())
     val intValue = info.schema().fields(1).dataType == IntegerType
-    val conf = new SerializableConfiguration(SparkSession.active.sessionState.newHadoopConf())
+    val conf = SessionHadoopConf(SparkSession.active)
     new Write {
       override def toBatch: BatchWrite =
         new KvBatchWrite(path, doTruncate, intValue, conf)
@@ -105,7 +108,7 @@ private[v2] case class KvCommitMessage(tempFile: String, rows: Long)
     extends WriterCommitMessage
 
 private[v2] class KvBatchWrite(path: String, truncate: Boolean, intValue: Boolean,
-    conf: SerializableConfiguration) extends BatchWrite {
+    conf: Broadcast[SerializableConfiguration]) extends BatchWrite {
   private val epoch = UUID.randomUUID().toString
   private def tempDir = new Path(path, s"_temporary/$epoch")
 
@@ -114,7 +117,7 @@ private[v2] class KvBatchWrite(path: String, truncate: Boolean, intValue: Boolea
 
   override def commit(messages: Array[WriterCommitMessage]): Unit = {
     val out = new Path(path)
-    val fs = out.getFileSystem(conf.value)
+    val fs = out.getFileSystem(conf.value.value)
     fs.mkdirs(out)
     if (truncate) {
       val existing = Option(fs.globStatus(new Path(out, "part-*"))).getOrElse(Array())
@@ -129,13 +132,13 @@ private[v2] class KvBatchWrite(path: String, truncate: Boolean, intValue: Boolea
   }
 
   override def abort(messages: Array[WriterCommitMessage]): Unit = {
-    val fs = tempDir.getFileSystem(conf.value)
+    val fs = tempDir.getFileSystem(conf.value.value)
     fs.delete(tempDir, true)
   }
 }
 
 private[v2] class KvWriterFactory(path: String, epoch: String, intValue: Boolean,
-    conf: SerializableConfiguration) extends DataWriterFactory {
+    val conf: Broadcast[SerializableConfiguration]) extends DataWriterFactory {
   override def createWriter(partitionId: Int, taskId: Long): DataWriter[InternalRow] =
     new KvDataWriter(path, epoch, partitionId, taskId, intValue, conf)
 }
@@ -146,11 +149,11 @@ private[v2] class KvWriterFactory(path: String, epoch: String, intValue: Boolean
   * file and only the committed attempt's file is ever renamed in. Keys are
   * written as their UTF-8 bytes, unchanged. */
 private[v2] class KvDataWriter(path: String, epoch: String, partitionId: Int,
-    taskId: Long, intValue: Boolean, conf: SerializableConfiguration)
+    taskId: Long, intValue: Boolean, conf: Broadcast[SerializableConfiguration])
     extends DataWriter[InternalRow] {
   private val tmp =
     new Path(path, f"_temporary/$epoch/part-$partitionId%05d-$taskId")
-  private val fs = tmp.getFileSystem(conf.value)
+  private val fs = tmp.getFileSystem(conf.value.value)
   private val out = fs.create(tmp, true)
   private var rows = 0L
   private var bytes = 0L
