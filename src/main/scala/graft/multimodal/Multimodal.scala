@@ -1,15 +1,16 @@
 package graft.multimodal
 
+import java.awt.image.BufferedImage
+
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.core.{Artifacts, Tables}
 
 /** Multimodal column support: image/audio/video payloads ride through the
-  * engine as opaque `binary` columns with typed metadata, and
-  * decode/feature-extract runs partition-wise in batches — the exact shape
-  * a Python `mapInPandas`/Arrow pipeline has, expressed with typed Scala
-  * `mapPartitions` here.
+  * engine as opaque `binary` columns with typed metadata, and every decode
+  * is one function of one whole payload, mapped over the media Dataset
+  * (`Dataset.map`/`flatMap`, a map-only stage).
   *
   * All three media types run REAL codecs (JDK-only, no external
   * dependency): [[ImageSynth]]/[[ImageIoDecoder]] round-trip PNG stills,
@@ -22,19 +23,106 @@ import graft.core.{Artifacts, Tables}
   * (hash-exact), not stub mirrors: any byte a codec gets wrong changes a
   * sum and fails the gate.
   *
+  * Each media kind has one decode path: images and GIF frames go through
+  * [[ImageCodec]], WAV clips through [[WavDecoder.pcm]], and every pixel
+  * box sum through [[BoxSums]].
+  *
   * Scale notes: synthesis and decode are embarrassingly parallel per
-  * partition; batch iteration bounds peak memory to `batchSize` decoded
-  * items per task; metadata aggregation afterwards is an ordinary hash agg
-  * on a low-cardinality key. Binary payloads never pass through the driver.
+  * record; metadata aggregation afterwards is an ordinary hash agg on a
+  * low-cardinality key. Binary payloads never pass through the driver.
   */
 case class MediaRecord(doc_id: Long, media_type: String, media: Array[Byte])
-case class DecodedMedia(width: Int, height: Int, feature: Array[Float])
 case class MediaFeatures(
     doc_id: Long, media_type: String, n_bytes: Long,
     width: Int, height: Int, feature: Array[Float])
 
-trait MediaDecoder extends Serializable {
-  def decode(mediaType: String, bytes: Array[Byte]): DecodedMedia
+/** The one `javax.imageio` entry point: every image and video payload is
+  * encoded and decoded here, so ImageIO's disk cache is off before any
+  * stream exists (in-memory streams; no temp-file churn). */
+object ImageCodec {
+  javax.imageio.ImageIO.setUseCache(false)
+
+  /** Decodes one still image; an undecodable payload fails loudly. */
+  def read(mediaType: String, bytes: Array[Byte]): BufferedImage = {
+    val img = javax.imageio.ImageIO.read(new java.io.ByteArrayInputStream(bytes))
+    require(img != null, s"undecodable $mediaType payload (${bytes.length} bytes)")
+    img
+  }
+
+  /** Every frame of a multi-frame container, in stream order —
+    * `getNumImages(true)` walks the stream, so the count is discovered,
+    * not read from metadata. */
+  def frames(format: String, bytes: Array[Byte]): IndexedSeq[BufferedImage] = {
+    val iis = javax.imageio.ImageIO.createImageInputStream(
+      new java.io.ByteArrayInputStream(bytes))
+    val reader = javax.imageio.ImageIO.getImageReadersByFormatName(format).next()
+    reader.setInput(iis, false, true)
+    val out = (0 until reader.getNumImages(true)).map(f => reader.read(f))
+    reader.dispose()
+    iis.close()
+    out
+  }
+
+  /** Encodes with the `format` writer: `body` writes one image or a
+    * sequence to it. */
+  def write(format: String)(body: javax.imageio.ImageWriter => Unit): Array[Byte] = {
+    val bos = new java.io.ByteArrayOutputStream()
+    val ios = javax.imageio.ImageIO.createImageOutputStream(bos)
+    val writer = javax.imageio.ImageIO.getImageWritersByFormatName(format).next()
+    writer.setOutput(ios)
+    body(writer)
+    writer.dispose()
+    ios.close()
+    bos.toByteArray
+  }
+}
+
+/** Per-channel pixel sums of `img` over a kx × ky grid of floor-division
+  * boxes [⌊i·w/kx⌋, ⌊(i+1)·w/kx⌋) × [⌊j·h/ky⌋, ⌊(j+1)·h/ky⌋) — the one
+  * pixel loop behind the whole-image channel sums, [[Multimodal.AHash]],
+  * [[Multimodal.DHash]] and [[Multimodal.AreaResample]]. Sums are exact
+  * integers, so every kernel built on them stays oracle-gateable. */
+final class BoxSums(img: BufferedImage, kx: Int, ky: Int) {
+  private def bounds(n: Int, k: Int): Array[Int] =
+    Array.tabulate(k + 1)(i => i * n / k)
+
+  private val xs = bounds(img.getWidth, kx)
+  private val ys = bounds(img.getHeight, ky)
+  private val sums = new Array[Long](kx * ky * 3)
+
+  locally {
+    var j = 0
+    while (j < ky) {
+      var y = ys(j)
+      while (y < ys(j + 1)) {
+        var i = 0
+        while (i < kx) {
+          var r = 0L; var g = 0L; var b = 0L
+          var x = xs(i)
+          while (x < xs(i + 1)) {
+            val p = img.getRGB(x, y)
+            r += (p >> 16) & 0xff
+            g += (p >> 8) & 0xff
+            b += p & 0xff
+            x += 1
+          }
+          val c = (j * kx + i) * 3
+          sums(c) += r; sums(c + 1) += g; sums(c + 2) += b
+          i += 1
+        }
+        y += 1
+      }
+      j += 1
+    }
+  }
+
+  /** Channel `c` (0 red, 1 green, 2 blue) summed over box (i, j). */
+  def sum(i: Int, j: Int, c: Int): Long = sums((j * kx + i) * 3 + c)
+
+  /** Gray sum (r + g + b per pixel) of box (i, j). */
+  def gray(i: Int, j: Int): Long = sum(i, j, 0) + sum(i, j, 1) + sum(i, j, 2)
+
+  def area(i: Int, j: Int): Long = (xs(i + 1) - xs(i)).toLong * (ys(j + 1) - ys(j))
 }
 
 /** Deterministic REAL image payloads: a `doc_id`-parameterized RGB pattern
@@ -50,8 +138,6 @@ trait MediaDecoder extends Serializable {
   * row right (PNG rows are independently filtered; a row-level decode bug
   * would break the h· factor). */
 object ImageSynth {
-  javax.imageio.ImageIO.setUseCache(false) // in-memory streams; no temp-file churn
-
   def params(docId: Long): (Int, Int, Int) =
     ((docId % 49 + 16).toInt, ((docId * 3) % 41 + 12).toInt, (docId % 251).toInt)
 
@@ -64,17 +150,14 @@ object ImageSynth {
 
   def png(docId: Long): Array[Byte] = {
     val (w, h, dd) = params(docId)
-    val img = new java.awt.image.BufferedImage(
-      w, h, java.awt.image.BufferedImage.TYPE_INT_RGB)
+    val img = new BufferedImage(w, h, BufferedImage.TYPE_INT_RGB)
     var y = 0
     while (y < h) {
       var x = 0
       while (x < w) { img.setRGB(x, y, rgb(x, dd)); x += 1 }
       y += 1
     }
-    val bos = new java.io.ByteArrayOutputStream()
-    javax.imageio.ImageIO.write(img, "png", bos)
-    bos.toByteArray
+    ImageCodec.write("png")(_.write(img))
   }
 
   /** Closed-form channel sums of the synthesized image — what a correct
@@ -93,31 +176,16 @@ object ImageSynth {
   }
 }
 
-/** REAL image decoder: `javax.imageio.ImageIO.read` over the payload bytes.
+/** REAL image decoder: [[ImageCodec.read]] over the payload bytes.
   * feature = (redSum, greenSum, blueSum) over all decoded pixels — integer
   * values ≤ 255·64·52 < 2²⁴, so the Float carrier is exact. */
-object ImageIoDecoder extends MediaDecoder {
-  javax.imageio.ImageIO.setUseCache(false)
-
-  override def decode(mediaType: String, bytes: Array[Byte]): DecodedMedia = {
-    val img = javax.imageio.ImageIO.read(new java.io.ByteArrayInputStream(bytes))
-    require(img != null, s"undecodable $mediaType payload (${bytes.length} bytes)")
-    val w = img.getWidth
-    val h = img.getHeight
-    var rs = 0L; var gs = 0L; var bs = 0L
-    var y = 0
-    while (y < h) {
-      var x = 0
-      while (x < w) {
-        val p = img.getRGB(x, y)
-        rs += (p >> 16) & 0xff
-        gs += (p >> 8) & 0xff
-        bs += p & 0xff
-        x += 1
-      }
-      y += 1
-    }
-    DecodedMedia(w, h, Array(rs.toFloat, gs.toFloat, bs.toFloat))
+object ImageIoDecoder {
+  def decode(r: MediaRecord): MediaFeatures = {
+    val img = ImageCodec.read(r.media_type, r.media)
+    val s = new BoxSums(img, 1, 1)
+    MediaFeatures(r.doc_id, r.media_type, r.media.length.toLong,
+      img.getWidth, img.getHeight,
+      Array(s.sum(0, 0, 0).toFloat, s.sum(0, 0, 1).toFloat, s.sum(0, 0, 2).toFloat))
   }
 }
 
@@ -169,12 +237,18 @@ case class AudioFeatures(
     n_samples: Long, sample_sum: Long, sample_sq_sum: Long,
     sample_min: Int, sample_max: Int)
 
-/** REAL audio decoder: `AudioSystem.getAudioInputStream` parses the RIFF
-  * container, and the sample stats are computed from the decoded frames
-  * using the HEADER's format (rate/channels/endianness read from the file,
-  * not assumed). */
-object WavDecoder extends Serializable {
-  def decode(docId: Long, bytes: Array[Byte]): AudioFeatures = {
+/** One decoded clip: the header's sample rate and channel count, and the
+  * interleaved int16 samples of every whole frame. */
+final case class Pcm(sampleRate: Long, channels: Int, samples: Array[Int])
+
+/** REAL audio decoder: [[WavDecoder.pcm]] parses the RIFF container
+  * through `javax.sound.sampled`, and the sample stats are computed from
+  * the decoded frames using the HEADER's format (rate/channels/endianness
+  * read from the file, not assumed). */
+object WavDecoder {
+  /** The one PCM decode. Fails fast on any encoding but 16-bit signed
+    * little-endian PCM, which is all the sample extraction below reads. */
+  def pcm(bytes: Array[Byte]): Pcm = {
     import javax.sound.sampled._
     val ais = AudioSystem.getAudioInputStream(
       new java.io.ByteArrayInputStream(bytes))
@@ -182,21 +256,39 @@ object WavDecoder extends Serializable {
     require(fmt.getSampleSizeInBits == 16 && !fmt.isBigEndian &&
       fmt.getEncoding == AudioFormat.Encoding.PCM_SIGNED,
       s"unexpected WAV encoding $fmt")
-    val pcm = ais.readAllBytes()
+    val raw = ais.readAllBytes()
     ais.close()
-    val n = pcm.length / (2 * fmt.getChannels)
+    val ch = fmt.getChannels
+    val s = new Array[Int](raw.length / (2 * ch) * ch)
+    var i = 0
+    while (i < s.length) {
+      s(i) = ((raw(2 * i + 1) << 8) | (raw(2 * i) & 0xff)).toShort.toInt
+      i += 1
+    }
+    Pcm(fmt.getSampleRate.toLong, ch, s)
+  }
+
+  /** [[pcm]] for the per-clip paths that index samples as one channel: a
+    * stereo clip fails instead of yielding statistics of interleaved
+    * samples. */
+  def mono(bytes: Array[Byte]): Pcm = {
+    val p = pcm(bytes)
+    require(p.channels == 1,
+      s"unexpected WAV encoding: ${p.channels} channels, expected mono")
+    p
+  }
+
+  def decode(docId: Long, bytes: Array[Byte]): AudioFeatures = {
+    val p = pcm(bytes)
     var sum = 0L; var sq = 0L
     var mn = Int.MaxValue; var mx = Int.MinValue
-    var i = 0
-    while (i < n * fmt.getChannels) {
-      val s = ((pcm(2 * i + 1) << 8) | (pcm(2 * i) & 0xff)).toShort.toInt
+    for (s <- p.samples) {
       sum += s; sq += s.toLong * s
       if (s < mn) mn = s
       if (s > mx) mx = s
-      i += 1
     }
-    AudioFeatures(docId, bytes.length.toLong, fmt.getSampleRate.toLong,
-      fmt.getChannels, n.toLong, sum, sq, mn, mx)
+    AudioFeatures(docId, bytes.length.toLong, p.sampleRate, p.channels,
+      (p.samples.length / p.channels).toLong, sum, sq, mn, mx)
   }
 }
 
@@ -216,8 +308,6 @@ object WavDecoder extends Serializable {
   * and LZW-decode every raster correctly; one wrong sample anywhere shifts
   * a sum and fails the hash gate. */
 object VideoSynth {
-  javax.imageio.ImageIO.setUseCache(false)
-
   def params(docId: Long): (Int, Int, Int, Int) =
     ((docId % 5 + 2).toInt, (docId % 17 + 8).toInt,
       ((docId * 5) % 13 + 6).toInt, (docId % 199).toInt)
@@ -233,29 +323,23 @@ object VideoSynth {
   def gif(docId: Long): Array[Byte] = {
     val (nf, w, h, dd) = params(docId)
     val cm = grayPalette
-    val bos = new java.io.ByteArrayOutputStream()
-    val ios = javax.imageio.ImageIO.createImageOutputStream(bos)
-    val writer = javax.imageio.ImageIO.getImageWritersBySuffix("gif").next()
-    writer.setOutput(ios)
-    writer.prepareWriteSequence(null)
-    var f = 0
-    while (f < nf) {
-      val img = new java.awt.image.BufferedImage(
-        w, h, java.awt.image.BufferedImage.TYPE_BYTE_INDEXED, cm)
-      val raster = img.getRaster
-      var y = 0
-      while (y < h) {
-        var x = 0
-        while (x < w) { raster.setSample(x, y, 0, idx(x, f, dd)); x += 1 }
-        y += 1
+    ImageCodec.write("gif") { writer =>
+      writer.prepareWriteSequence(null)
+      var f = 0
+      while (f < nf) {
+        val img = new BufferedImage(w, h, BufferedImage.TYPE_BYTE_INDEXED, cm)
+        val raster = img.getRaster
+        var y = 0
+        while (y < h) {
+          var x = 0
+          while (x < w) { raster.setSample(x, y, 0, idx(x, f, dd)); x += 1 }
+          y += 1
+        }
+        writer.writeToSequence(new javax.imageio.IIOImage(img, null, null), null)
+        f += 1
       }
-      writer.writeToSequence(new javax.imageio.IIOImage(img, null, null), null)
-      f += 1
+      writer.endWriteSequence()
     }
-    writer.endWriteSequence()
-    writer.dispose()
-    ios.close()
-    bos.toByteArray
   }
 
   /** Closed-form per-frame gray sum of the synthesized frame — what a
@@ -274,37 +358,18 @@ object VideoSynth {
 case class VideoFrameFeatures(
     doc_id: Long, frame_idx: Int, width: Int, height: Int, gray_sum: Long)
 
-/** REAL video decoder: `javax.imageio` GIF `ImageReader` demuxes the
-  * animated container (`getNumImages(true)` walks the stream — the frame
-  * count is discovered, not assumed) and LZW-decodes each raster; the
-  * gray value of every pixel is read back through the palette. */
-object GifFramesDecoder extends Serializable {
-  javax.imageio.ImageIO.setUseCache(false)
-
-  def decode(docId: Long, bytes: Array[Byte]): Seq[VideoFrameFeatures] = {
-    val iis = javax.imageio.ImageIO.createImageInputStream(
-      new java.io.ByteArrayInputStream(bytes))
-    val reader = javax.imageio.ImageIO.getImageReadersBySuffix("gif").next()
-    reader.setInput(iis, false, true)
-    val n = reader.getNumImages(true)
-    val out = (0 until n).map { f =>
-      val img = reader.read(f)
-      val w = img.getWidth
-      val h = img.getHeight
-      var s = 0L
-      var y = 0
-      while (y < h) {
-        var x = 0
-        while (x < w) { s += img.getRGB(x, y) & 0xff; x += 1 }
-        y += 1
-      }
-      VideoFrameFeatures(docId, f, w, h, s)
+/** REAL video decoder: [[ImageCodec.frames]] demuxes the animated
+  * container and LZW-decodes each raster; the gray value of every pixel is
+  * read back through the palette (a gray palette entry has r = g = b, so
+  * the blue channel is the gray value). */
+object GifFramesDecoder {
+  def decode(docId: Long, bytes: Array[Byte]): Seq[VideoFrameFeatures] =
+    ImageCodec.frames("gif", bytes).zipWithIndex.map { case (img, f) =>
+      VideoFrameFeatures(docId, f, img.getWidth, img.getHeight,
+        new BoxSums(img, 1, 1).sum(0, 0, 2))
     }
-    reader.dispose()
-    iis.close()
-    out
-  }
 }
+
 
 object Multimodal {
 
@@ -324,32 +389,18 @@ object Multimodal {
     * payload synthesized by [[ImageSynth]]. Encoding runs partition-local
     * in the executors — payload bytes never exist on the driver. */
   def imageMedia(spark: SparkSession, dir: String): Dataset[MediaRecord] = {
-    val spark2 = spark
-    import spark2.implicits._
+    import spark.implicits._
     Tables.documents(spark, dir).select(col("doc_id"))
       .where(expr("doc_id % 3 = 0"))
       .as[Long]
       .map(d => MediaRecord(d, "image", ImageSynth.png(d)))
   }
 
-  /** Partition-wise batched decode: the multimodal hot path. One task
-    * decodes its partition in `batchSize` chunks (bounding peak decoded
-    * memory), emitting typed feature rows. */
-  def featureExtract(
-      media: Dataset[MediaRecord],
-      decoder: MediaDecoder,
-      batchSize: Int = 64): Dataset[MediaFeatures] = {
+  /** Image decode, one typed feature row per payload. */
+  def featureExtract(media: Dataset[MediaRecord]): Dataset[MediaFeatures] = {
     val spark = media.sparkSession
     import spark.implicits._
-    media.mapPartitions { it =>
-      it.grouped(batchSize).flatMap { batch =>
-        batch.iterator.map { r =>
-          val d = decoder.decode(r.media_type, r.media)
-          MediaFeatures(r.doc_id, r.media_type, r.media.length.toLong,
-            d.width, d.height, d.feature)
-        }
-      }
-    }
+    media.map(ImageIoDecoder.decode)
   }
 
   /** Frame metadata for sampled video frames. */
@@ -407,14 +458,14 @@ object Multimodal {
   }
 
   /** Decoded-pixel statistics over the REAL codec path — the oracle-gated
-    * query exercising synth PNG → `ImageIO.read` → pixel aggregation end to
+    * query exercising synth PNG → [[ImageCodec.read]] → pixel aggregation end to
     * end. Groups by the decoded width's residue class (4 groups) and sums
     * decoded widths, heights and per-channel pixel values; the oracle
     * recomputes every number analytically from doc_id, so one wrong decoded
     * pixel anywhere in the corpus fails the hash. Channel sums ride the
     * Float feature carrier exactly (< 2²⁴) and aggregate as BIGINTs. */
   def mediaStats(spark: SparkSession, dir: String): DataFrame = {
-    featureExtract(imageMedia(spark, dir), ImageIoDecoder)
+    featureExtract(imageMedia(spark, dir))
       .select(col("width"), col("height"),
         element_at(col("feature"), 1).cast("long").as("r"),
         element_at(col("feature"), 2).cast("long").as("g"),
@@ -435,25 +486,18 @@ object Multimodal {
     * RIFF/WAVE payload synthesized by [[AudioSynth]], encoded
     * partition-local in the executors. */
   def audioMedia(spark: SparkSession, dir: String): Dataset[MediaRecord] = {
-    val spark2 = spark
-    import spark2.implicits._
+    import spark.implicits._
     Tables.documents(spark, dir).select(col("doc_id"))
       .where(expr("doc_id % 3 = 1"))
       .as[Long]
       .map(d => MediaRecord(d, "audio", AudioSynth.wav(d)))
   }
 
-  /** Partition-wise batched audio decode — same bounded-peak-memory batch
-    * shape as [[featureExtract]], typed for PCM sample statistics. */
-  def audioExtract(
-      media: Dataset[MediaRecord], batchSize: Int = 64): Dataset[AudioFeatures] = {
+  /** Audio decode, one row of PCM sample statistics per clip. */
+  def audioExtract(media: Dataset[MediaRecord]): Dataset[AudioFeatures] = {
     val spark = media.sparkSession
     import spark.implicits._
-    media.mapPartitions { it =>
-      it.grouped(batchSize).flatMap { batch =>
-        batch.iterator.map(r => WavDecoder.decode(r.doc_id, r.media))
-      }
-    }
+    media.map(r => WavDecoder.decode(r.doc_id, r.media))
   }
 
   /** Decoded-PCM statistics over the REAL audio codec path — the
@@ -479,7 +523,7 @@ object Multimodal {
     * box) — oracle-gated: [[resizeMeta]]'s integer fit arithmetic over the
     * ImageIO-decoded dimensions, mirrored analytically in SQL. */
   def resizeStats(spark: SparkSession, dir: String): DataFrame = {
-    resizeMeta(featureExtract(imageMedia(spark, dir), ImageIoDecoder), 32)
+    resizeMeta(featureExtract(imageMedia(spark, dir)), 32)
       .toDF("doc_id", "width", "height", "r_width", "r_height")
       .orderBy("doc_id")
   }
@@ -489,26 +533,19 @@ object Multimodal {
     * animated GIF payload synthesized by [[VideoSynth]], encoded
     * partition-local in the executors. */
   def videoMedia(spark: SparkSession, dir: String): Dataset[MediaRecord] = {
-    val spark2 = spark
-    import spark2.implicits._
+    import spark.implicits._
     Tables.documents(spark, dir).select(col("doc_id"))
       .where(expr("doc_id % 3 = 2"))
       .as[Long]
       .map(d => MediaRecord(d, "video", VideoSynth.gif(d)))
   }
 
-  /** Partition-wise batched video demux + per-frame decode — the one
-    * payload → n typed frame rows expansion of a real keyframe pipeline,
-    * with peak decoded memory bounded to `batchSize` containers per task. */
-  def videoExtract(
-      media: Dataset[MediaRecord], batchSize: Int = 64): Dataset[VideoFrameFeatures] = {
+  /** Video demux + per-frame decode — the one payload → n typed frame
+    * rows expansion of a real keyframe pipeline. */
+  def videoExtract(media: Dataset[MediaRecord]): Dataset[VideoFrameFeatures] = {
     val spark = media.sparkSession
     import spark.implicits._
-    media.mapPartitions { it =>
-      it.grouped(batchSize).flatMap { batch =>
-        batch.iterator.flatMap(r => GifFramesDecoder.decode(r.doc_id, r.media))
-      }
-    }
+    media.flatMap(r => GifFramesDecoder.decode(r.doc_id, r.media))
   }
 
   /** Per-video decoded-frame statistics over the REAL video codec path —
@@ -617,70 +654,35 @@ object Multimodal {
     * 32-bit halves: DuckDB sums BIGINT as HUGEINT, so packing bit 63
     * into one signed BIGINT could not hash-gate. */
   object AHash {
-    private def bounds(n: Int): Array[Int] =
-      (0 to 8).map(i => i * n / 8).toArray
-
-    def halves(img: java.awt.image.BufferedImage): (Long, Long) = {
-      val w = img.getWidth
-      val h = img.getHeight
-      val bx = bounds(w)
-      val by = bounds(h)
-      val cs = Array.ofDim[Long](8, 8)
-      var j = 0
-      while (j < 8) {
-        var y = by(j)
-        while (y < by(j + 1)) {
-          var i = 0
-          while (i < 8) {
-            var x = bx(i)
-            var s = 0L
-            while (x < bx(i + 1)) {
-              val p = img.getRGB(x, y)
-              s += ((p >> 16) & 0xff) + ((p >> 8) & 0xff) + (p & 0xff)
-              x += 1
-            }
-            cs(j)(i) += s
-            i += 1
-          }
-          y += 1
-        }
-        j += 1
-      }
-      val totalSum = cs.map(_.sum).sum
-      val totalArea = w.toLong * h
-      var lo = 0L
-      var hi = 0L
-      j = 0
-      while (j < 8) {
-        var i = 0
-        while (i < 8) {
-          val area = (bx(i + 1) - bx(i)).toLong * (by(j + 1) - by(j))
-          if (cs(j)(i) * totalArea > totalSum * area) {
-            val k = j * 8 + i
-            if (k < 32) lo |= 1L << k else hi |= 1L << (k - 32)
-          }
-          i += 1
-        }
-        j += 1
-      }
-      (hi, lo)
+    def halves(img: BufferedImage): (Long, Long) = {
+      val b = new BoxSums(img, 8, 8)
+      val totalSum = (for (j <- 0 until 8; i <- 0 until 8) yield b.gray(i, j)).sum
+      val totalArea = img.getWidth.toLong * img.getHeight
+      packBits((i, j) => b.gray(i, j) * totalArea > totalSum * b.area(i, j))
     }
   }
 
-  /** Decode + hash, partition-batched like [[featureExtract]]. */
-  private def imageAhashes(spark: SparkSession, dir: String): Dataset[AHashRecord] = {
-    val spark2 = spark
-    import spark2.implicits._
-    imageMedia(spark, dir).mapPartitions { it =>
-      it.grouped(64).flatMap { batch =>
-        batch.iterator.map { r =>
-          val img = javax.imageio.ImageIO.read(
-            new java.io.ByteArrayInputStream(r.media))
-          val (hi, lo) = AHash.halves(img)
-          AHashRecord(r.doc_id, img.getWidth, img.getHeight, hi, lo)
-        }
-      }
+  /** Packs an 8×8 bit predicate, bit k = 8j + i, into the two nonnegative
+    * 32-bit halves (hi, lo) both perceptual hashes ship. */
+  private def packBits(bit: (Int, Int) => Boolean): (Long, Long) = {
+    var lo = 0L
+    var hi = 0L
+    for (j <- 0 until 8; i <- 0 until 8 if bit(i, j)) {
+      val k = j * 8 + i
+      if (k < 32) lo |= 1L << k else hi |= 1L << (k - 32)
     }
+    (hi, lo)
+  }
+
+  private[graft] def ahashOne(docId: Long, media: Array[Byte]): AHashRecord = {
+    val img = ImageCodec.read("image", media)
+    val (hi, lo) = AHash.halves(img)
+    AHashRecord(docId, img.getWidth, img.getHeight, hi, lo)
+  }
+
+  private def imageAhashes(spark: SparkSession, dir: String): Dataset[AHashRecord] = {
+    import spark.implicits._
+    imageMedia(spark, dir).map(r => ahashOne(r.doc_id, r.media))
   }
 
   /** The gated aHash table: one wrong decoded pixel anywhere flips a
@@ -750,53 +752,10 @@ object Multimodal {
     * float, exact under unequal box widths (w is rarely divisible by
     * 9). Same two nonnegative 32-bit halves so HUGEINT sums gate. */
   object DHash {
-    private def bounds(n: Int, k: Int): Array[Int] =
-      (0 to k).map(i => i * n / k).toArray
-
-    def halves(img: java.awt.image.BufferedImage): (Long, Long) = {
-      val w = img.getWidth
-      val h = img.getHeight
-      val bx = bounds(w, 9)
-      val by = bounds(h, 8)
-      val cs = Array.ofDim[Long](8, 9)
-      var j = 0
-      while (j < 8) {
-        var y = by(j)
-        while (y < by(j + 1)) {
-          var i = 0
-          while (i < 9) {
-            var x = bx(i)
-            var s = 0L
-            while (x < bx(i + 1)) {
-              val p = img.getRGB(x, y)
-              s += ((p >> 16) & 0xff) + ((p >> 8) & 0xff) + (p & 0xff)
-              x += 1
-            }
-            cs(j)(i) += s
-            i += 1
-          }
-          y += 1
-        }
-        j += 1
-      }
-      var lo = 0L
-      var hi = 0L
-      j = 0
-      while (j < 8) {
-        val rowH = (by(j + 1) - by(j)).toLong
-        var i = 0
-        while (i < 8) {
-          val aL = (bx(i + 1) - bx(i)).toLong * rowH
-          val aR = (bx(i + 2) - bx(i + 1)).toLong * rowH
-          if (cs(j)(i) * aR > cs(j)(i + 1) * aL) {
-            val k = j * 8 + i
-            if (k < 32) lo |= 1L << k else hi |= 1L << (k - 32)
-          }
-          i += 1
-        }
-        j += 1
-      }
-      (hi, lo)
+    def halves(img: BufferedImage): (Long, Long) = {
+      val b = new BoxSums(img, 9, 8)
+      packBits((i, j) =>
+        b.gray(i, j) * b.area(i + 1, j) > b.gray(i + 1, j) * b.area(i, j))
     }
   }
 
@@ -805,19 +764,16 @@ object Multimodal {
 
   /** The gated dHash table over REALLY-decoded PNG pixels — one wrong
     * pixel anywhere flips a gradient bit and fails the hash gate. */
+  private[graft] def dhashOne(docId: Long, media: Array[Byte]): DHashRecord = {
+    val img = ImageCodec.read("image", media)
+    val (hi, lo) = DHash.halves(img)
+    DHashRecord(docId, img.getWidth, img.getHeight, hi, lo)
+  }
+
   def imageDhash(spark: SparkSession, dir: String): DataFrame = {
-    val spark2 = spark
-    import spark2.implicits._
-    imageMedia(spark, dir).mapPartitions { it =>
-      it.grouped(64).flatMap { batch =>
-        batch.iterator.map { r =>
-          val img = javax.imageio.ImageIO.read(
-            new java.io.ByteArrayInputStream(r.media))
-          val (hi, lo) = DHash.halves(img)
-          DHashRecord(r.doc_id, img.getWidth, img.getHeight, hi, lo)
-        }
-      }
-    }.toDF().orderBy("doc_id")
+    import spark.implicits._
+    imageMedia(spark, dir).map(r => dhashOne(r.doc_id, r.media))
+      .toDF().orderBy("doc_id")
   }
 
   /** 128-bit perceptual fingerprint: aHash(64) ++ dHash(64), both
@@ -828,18 +784,12 @@ object Multimodal {
 
   private def imagePhash128s(
       spark: SparkSession, dir: String): Dataset[PHash128Record] = {
-    val spark2 = spark
-    import spark2.implicits._
-    imageMedia(spark, dir).mapPartitions { it =>
-      it.grouped(64).flatMap { batch =>
-        batch.iterator.map { r =>
-          val img = javax.imageio.ImageIO.read(
-            new java.io.ByteArrayInputStream(r.media))
-          val (ahi, alo) = AHash.halves(img)
-          val (dhi, dlo) = DHash.halves(img)
-          PHash128Record(r.doc_id, ahi, alo, dhi, dlo)
-        }
-      }
+    import spark.implicits._
+    imageMedia(spark, dir).map { r =>
+      val img = ImageCodec.read("image", r.media)
+      val (ahi, alo) = AHash.halves(img)
+      val (dhi, dlo) = DHash.halves(img)
+      PHash128Record(r.doc_id, ahi, alo, dhi, dlo)
     }
   }
 
@@ -901,36 +851,25 @@ object Multimodal {
   case class SilenceRecord(doc_id: Long, sample_rate: Long, n_samples: Long,
       n_quiet: Long, n_runs: Long, max_run: Long)
 
+  private[graft] def silenceOne(docId: Long, media: Array[Byte]): SilenceRecord = {
+    val pcm = WavDecoder.mono(media)
+    var quiet = 0L; var runs = 0L; var maxRun = 0L
+    var cur = 0L
+    for (s <- pcm.samples) {
+      if (math.abs(s) < 512) {
+        quiet += 1; cur += 1
+        if (cur == 1) runs += 1
+        if (cur > maxRun) maxRun = cur
+      } else cur = 0
+    }
+    SilenceRecord(docId, pcm.sampleRate, pcm.samples.length.toLong,
+      quiet, runs, maxRun)
+  }
+
   def audioSilence(spark: SparkSession, dir: String): DataFrame = {
-    val spark2 = spark
-    import spark2.implicits._
-    audioMedia(spark, dir).mapPartitions { it =>
-      it.grouped(64).flatMap { batch =>
-        batch.iterator.map { r =>
-          import javax.sound.sampled._
-          val ais = AudioSystem.getAudioInputStream(
-            new java.io.ByteArrayInputStream(r.media))
-          val fmt = ais.getFormat
-          val pcm = ais.readAllBytes()
-          ais.close()
-          val n = pcm.length / (2 * fmt.getChannels)
-          var quiet = 0L; var runs = 0L; var maxRun = 0L
-          var cur = 0L
-          var i = 0
-          while (i < n) {
-            val s = ((pcm(2 * i + 1) << 8) | (pcm(2 * i) & 0xff)).toShort.toInt
-            if (math.abs(s) < 512) {
-              quiet += 1; cur += 1
-              if (cur == 1) runs += 1
-              if (cur > maxRun) maxRun = cur
-            } else cur = 0
-            i += 1
-          }
-          SilenceRecord(r.doc_id, fmt.getSampleRate.toLong, n.toLong,
-            quiet, runs, maxRun)
-        }
-      }
-    }.toDF().orderBy("doc_id")
+    import spark.implicits._
+    audioMedia(spark, dir).map(r => silenceOne(r.doc_id, r.media))
+      .toDF().orderBy("doc_id")
   }
 
   /** One resampled clip: header-decoded input rate, the 4:3-downsampled
@@ -954,54 +893,34 @@ object Multimodal {
     * one: RIFF header parse via `javax.sound.sampled`, little-endian
     * int16 frame extraction, THEN the resample.
     *
-    * Scale shape: clips are independent — batched partition-local
-    * decode+resample ([[audioExtract]]'s bounded-memory shape), no
-    * shuffle until the final per-doc row lands; at 100 TB this is a
+    * Scale shape: clips are independent — one decode+resample per clip,
+    * no shuffle until the final per-doc row lands; at 100 TB this is a
     * pure map stage over the media column. */
   def audioResample(spark: SparkSession, dir: String): DataFrame = {
-    val spark2 = spark
-    import spark2.implicits._
-    audioMedia(spark, dir).mapPartitions { it =>
-      it.grouped(64).flatMap { batch =>
-        batch.iterator.map { r =>
-          import javax.sound.sampled._
-          val ais = AudioSystem.getAudioInputStream(
-            new java.io.ByteArrayInputStream(r.media))
-          val fmt = ais.getFormat
-          require(fmt.getSampleSizeInBits == 16 && !fmt.isBigEndian &&
-            fmt.getEncoding == AudioFormat.Encoding.PCM_SIGNED &&
-            fmt.getChannels == 1,
-            s"unexpected WAV encoding $fmt")
-          val pcm = ais.readAllBytes()
-          ais.close()
-          val n = pcm.length / 2
-          val s = new Array[Int](n)
-          var i = 0
-          while (i < n) {
-            s(i) = ((pcm(2 * i + 1) << 8) | (pcm(2 * i) & 0xff)).toShort.toInt
-            i += 1
-          }
-          val n2 = (n * 3) / 4
-          var j = 0
-          var sum = 0L; var sq = 0L
-          var mn = Long.MaxValue; var mx = Long.MinValue
-          while (j < n2) {
-            val lo = ((j.toLong * n) / n2).toInt
-            val hi = (((j + 1).toLong * n) / n2).toInt
-            var bs = 0L
-            var k = lo
-            while (k < hi) { bs += s(k); k += 1 }
-            val y = Math.floorDiv(bs, (hi - lo).toLong)
-            sum += y; sq += y * y
-            if (y < mn) mn = y
-            if (y > mx) mx = y
-            j += 1
-          }
-          val rate = fmt.getSampleRate.toLong
-          ResampleRecord(r.doc_id, rate, rate * 3 / 4, n.toLong, n2.toLong,
-            sum, sq, mn, mx)
-        }
+    import spark.implicits._
+    audioMedia(spark, dir).map { r =>
+      val pcm = WavDecoder.mono(r.media)
+      val s = pcm.samples
+      val n = s.length
+      val n2 = (n * 3) / 4
+      var j = 0
+      var sum = 0L; var sq = 0L
+      var mn = Long.MaxValue; var mx = Long.MinValue
+      while (j < n2) {
+        val lo = ((j.toLong * n) / n2).toInt
+        val hi = (((j + 1).toLong * n) / n2).toInt
+        var bs = 0L
+        var k = lo
+        while (k < hi) { bs += s(k); k += 1 }
+        val y = Math.floorDiv(bs, (hi - lo).toLong)
+        sum += y; sq += y * y
+        if (y < mn) mn = y
+        if (y > mx) mx = y
+        j += 1
       }
+      val rate = pcm.sampleRate
+      ResampleRecord(r.doc_id, rate, rate * 3 / 4, n.toLong, n2.toLong,
+        sum, sq, mn, mx)
     }.toDF().orderBy("doc_id")
   }
 
@@ -1016,9 +935,6 @@ object Multimodal {
     * native size (the thumbnailing rule), which also guarantees w ≥ w2
     * and h ≥ h2 so every box is non-empty. */
   object AreaResample {
-    private def bounds(n: Int, k: Int): Array[Int] =
-      (0 to k).map(i => i * n / k).toArray
-
     /** Fitted dims: identity when the image already fits, else the
       * integer aspect fit (longest side → maxSide). */
     def dims(w: Int, h: Int, maxSide: Int): (Int, Int) = {
@@ -1029,36 +945,15 @@ object Multimodal {
 
     /** (r_width, r_height, Σout_r, Σout_g, Σout_b) over the resampled
       * output grid. */
-    def stats(img: java.awt.image.BufferedImage, maxSide: Int)
-        : (Int, Int, Long, Long, Long) = {
-      val w = img.getWidth
-      val h = img.getHeight
-      val (w2, h2) = dims(w, h, maxSide)
-      val bx = bounds(w, w2)
-      val by = bounds(h, h2)
+    def stats(img: BufferedImage, maxSide: Int): (Int, Int, Long, Long, Long) = {
+      val (w2, h2) = dims(img.getWidth, img.getHeight, maxSide)
+      val b = new BoxSums(img, w2, h2)
       var sr = 0L; var sg = 0L; var sb = 0L
-      var j = 0
-      while (j < h2) {
-        var i = 0
-        while (i < w2) {
-          var cr = 0L; var cg = 0L; var cb = 0L
-          var y = by(j)
-          while (y < by(j + 1)) {
-            var x = bx(i)
-            while (x < bx(i + 1)) {
-              val p = img.getRGB(x, y)
-              cr += (p >> 16) & 0xff
-              cg += (p >> 8) & 0xff
-              cb += p & 0xff
-              x += 1
-            }
-            y += 1
-          }
-          val area = (bx(i + 1) - bx(i)).toLong * (by(j + 1) - by(j))
-          sr += cr / area; sg += cg / area; sb += cb / area
-          i += 1
-        }
-        j += 1
+      for (j <- 0 until h2; i <- 0 until w2) {
+        val area = b.area(i, j)
+        sr += b.sum(i, j, 0) / area
+        sg += b.sum(i, j, 1) / area
+        sb += b.sum(i, j, 2) / area
       }
       (w2, h2, sr, sg, sb)
     }
@@ -1078,19 +973,15 @@ object Multimodal {
     * decoder still averages every real 2-D box. [[resizeStats]] stays as
     * the dims-only cheap twin (its fit formula upscales; this path is
     * no-upscale — see [[AreaResample]]). */
+  private[graft] def resizeOne(docId: Long, media: Array[Byte]): ResizedRecord = {
+    val (w2, h2, sr, sg, sb) = AreaResample.stats(ImageCodec.read("image", media), 32)
+    ResizedRecord(docId, w2, h2, sr, sg, sb)
+  }
+
   def resizePixels(spark: SparkSession, dir: String): DataFrame = {
-    val spark2 = spark
-    import spark2.implicits._
-    imageMedia(spark, dir).mapPartitions { it =>
-      it.grouped(64).flatMap { batch =>
-        batch.iterator.map { r =>
-          val img = javax.imageio.ImageIO.read(
-            new java.io.ByteArrayInputStream(r.media))
-          val (w2, h2, sr, sg, sb) = AreaResample.stats(img, 32)
-          ResizedRecord(r.doc_id, w2, h2, sr, sg, sb)
-        }
-      }
-    }.toDF().orderBy("doc_id")
+    import spark.implicits._
+    imageMedia(spark, dir).map(r => resizeOne(r.doc_id, r.media))
+      .toDF().orderBy("doc_id")
   }
 
   /** Deterministic REAL JPEG payloads — the pillar's first LOSSY codec.
@@ -1119,10 +1010,8 @@ object Multimodal {
       ((x / 8) * 17 + (y / 8) * 29 + dd) % 256
 
     def jpeg(docId: Long): Array[Byte] = {
-      import javax.imageio._
       val (w, h, dd) = params(docId)
-      val img = new java.awt.image.BufferedImage(
-        w, h, java.awt.image.BufferedImage.TYPE_BYTE_GRAY)
+      val img = new BufferedImage(w, h, BufferedImage.TYPE_BYTE_GRAY)
       var y = 0
       while (y < h) {
         var x = 0
@@ -1132,17 +1021,12 @@ object Multimodal {
         }
         y += 1
       }
-      val wr = ImageIO.getImageWritersByFormatName("jpeg").next()
-      val p = wr.getDefaultWriteParam
-      p.setCompressionMode(ImageWriteParam.MODE_EXPLICIT)
-      p.setCompressionQuality(1.0f)
-      val bos = new java.io.ByteArrayOutputStream()
-      val ios = ImageIO.createImageOutputStream(bos)
-      wr.setOutput(ios)
-      wr.write(null, new IIOImage(img, null, null), p)
-      ios.close()
-      wr.dispose()
-      bos.toByteArray
+      ImageCodec.write("jpeg") { wr =>
+        val p = wr.getDefaultWriteParam
+        p.setCompressionMode(javax.imageio.ImageWriteParam.MODE_EXPLICIT)
+        p.setCompressionQuality(1.0f)
+        wr.write(null, new javax.imageio.IIOImage(img, null, null), p)
+      }
     }
   }
 
@@ -1158,37 +1042,32 @@ object Multimodal {
     * even one pixel. The encoded byte size is encoder metadata (not
     * analytically predictable) and is deliberately excluded from the
     * gated output. */
+  private[graft] def jpegOne(docId: Long, media: Array[Byte]): JpegRecord = {
+    val img = ImageCodec.read("image", media)
+    val w = img.getWidth
+    val h = img.getHeight
+    var s = 0L
+    val blocks = scala.collection.mutable.HashSet[Int]()
+    var y = 0
+    while (y < h) {
+      var x = 0
+      while (x < w) {
+        val g = img.getRaster.getSample(x, y, 0)
+        s += g
+        if (x % 8 == 0 && y % 8 == 0) blocks += g
+        x += 1
+      }
+      y += 1
+    }
+    JpegRecord(docId, w, h, media.length.toLong, s, blocks.size.toLong)
+  }
+
   def jpegStats(spark: SparkSession, dir: String): DataFrame = {
-    val spark2 = spark
-    import spark2.implicits._
+    import spark.implicits._
     Tables.documents(spark, dir).select(col("doc_id"))
       .where(expr("doc_id % 3 = 0"))
       .as[Long]
-      .mapPartitions { it =>
-        it.grouped(64).flatMap { batch =>
-          batch.iterator.map { docId =>
-            val bytes = JpegSynth.jpeg(docId)
-            val img = javax.imageio.ImageIO.read(
-              new java.io.ByteArrayInputStream(bytes))
-            val w = img.getWidth
-            val h = img.getHeight
-            var s = 0L
-            val blocks = scala.collection.mutable.HashSet[Int]()
-            var y = 0
-            while (y < h) {
-              var x = 0
-              while (x < w) {
-                val g = img.getRaster.getSample(x, y, 0)
-                s += g
-                if (x % 8 == 0 && y % 8 == 0) blocks += g
-                x += 1
-              }
-              y += 1
-            }
-            JpegRecord(docId, w, h, bytes.length.toLong, s, blocks.size.toLong)
-          }
-        }
-      }
+      .map(d => jpegOne(d, JpegSynth.jpeg(d)))
       .toDF()
       .select(col("doc_id"), col("width"), col("height"),
         col("sum_gray"), col("distinct_blocks"))
@@ -1216,31 +1095,19 @@ object Multimodal {
     * E_w = Σ s² exactly in int64, and bit w = [E_{w+1} > E_w], packed
     * MSB-first. Clips are 200..800 samples → 6..25 windows → 5..24 bits;
     * a production system runs the identical per-clip shape with 256-bit
-    * blocks over overlapping spectral bands. Computed INSIDE the batched
-    * partition-local decode ([[audioExtract]]'s bounded-memory shape):
-    * samples never enter a shuffle, so at 100 TB this is a pure map stage
-    * over the media column. The oracle recomputes every energy and bit
-    * analytically from the synth closed form — one mis-decoded frame or a
-    * wrong window boundary anywhere flips a bit and fails the hash. */
-  /** One clip's fingerprint from its RIFF/WAVE bytes — shared by the
+    * blocks over overlapping spectral bands. Computed inside the per-clip
+    * decode: samples never enter a shuffle, so at 100 TB this is a pure
+    * map stage over the media column. The oracle recomputes every energy
+    * and bit analytically from the synth closed form — one mis-decoded
+    * frame or a wrong window boundary anywhere flips a bit and fails the
+    * hash.
+    *
+    * One clip's fingerprint from its RIFF/WAVE bytes — shared by the
     * batch table and the streaming catalog matcher
     * ([[graft.streaming.StreamingPipelines.audioFpMatch]]). */
   private[graft] def fingerprintOne(docId: Long, media: Array[Byte]): AudioFpFull = {
-    import javax.sound.sampled._
-    val ais = AudioSystem.getAudioInputStream(
-      new java.io.ByteArrayInputStream(media))
-    val fmt = ais.getFormat
-    // Fail fast on any format the mono little-endian 16-bit indexing
-    // below would silently mis-fingerprint (same guard as the sibling
-    // decoders; r13 advice — a stereo or big-endian WAV previously
-    // produced wrong fingerprints instead of an error).
-    require(fmt.getSampleSizeInBits == 16 && !fmt.isBigEndian &&
-      fmt.getEncoding == AudioFormat.Encoding.PCM_SIGNED &&
-      fmt.getChannels == 1,
-      s"unexpected WAV encoding $fmt")
-    val pcm = ais.readAllBytes()
-    ais.close()
-    val n = pcm.length / (2 * fmt.getChannels)
+    val pcm = WavDecoder.mono(media)
+    val n = pcm.samples.length
     val nw = n / 32
     val e = new Array[Long](nw)
     var w = 0
@@ -1248,7 +1115,7 @@ object Multimodal {
       var acc = 0L
       var i = w * 32
       while (i < w * 32 + 32) {
-        val s = ((pcm(2 * i + 1) << 8) | (pcm(2 * i) & 0xff)).toShort.toLong
+        val s = pcm.samples(i).toLong
         acc += s * s
         i += 1
       }
@@ -1261,25 +1128,19 @@ object Multimodal {
       fp = (fp << 1) | (if (e(w + 1) > e(w)) 1L else 0L)
       w += 1
     }
-    AudioFpFull(docId, fmt.getSampleRate.toLong, n.toLong,
+    AudioFpFull(docId, pcm.sampleRate, n.toLong,
       nw.toLong, (nw - 1).toLong, fp, e.toSeq)
   }
 
   private[graft] def audioFpFullTable(spark: SparkSession, dir: String)
       : org.apache.spark.sql.Dataset[AudioFpFull] = {
-    val spark2 = spark
-    import spark2.implicits._
-    audioMedia(spark, dir).mapPartitions { it =>
-      it.grouped(64).flatMap { batch =>
-        batch.iterator.map(r => fingerprintOne(r.doc_id, r.media))
-      }
-    }
+    import spark.implicits._
+    audioMedia(spark, dir).map(r => fingerprintOne(r.doc_id, r.media))
   }
 
   private[graft] def audioFpTable(spark: SparkSession, dir: String)
       : org.apache.spark.sql.Dataset[AudioFpRecord] = {
-    val spark2 = spark
-    import spark2.implicits._
+    import spark.implicits._
     audioFpFullTable(spark, dir).map(_.record)
   }
 

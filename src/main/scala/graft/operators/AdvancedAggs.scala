@@ -542,12 +542,6 @@ object AdvancedAggs {
       .orderBy("l_returnflag")
   }
 
-  /** Queries with no SQL-expressible cross-engine oracle. Empty since round
-    * 6: the two engine-private sketches became self-checking (estimate
-    * validated against the exact answer in-query, only exact columns +
-    * error-bound booleans shipped), so every entry carries a hard gate. */
-  val rowsOnly: Set[String] = Set.empty
-
   /** Fixed-width numeric histogram of lineitem prices (20 buckets of
     * 5000): one partial-aggregated scan, bucket = floor division in double
     * space (identical IEEE result in both engines), top bucket clamped.

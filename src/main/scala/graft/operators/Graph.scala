@@ -241,6 +241,20 @@ object Graph {
     * capped projection of a synthetic hub graph. */
   private[operators] def triangleCensus(e: DataFrame): DataFrame = {
     val deg = degrees(e)
+    val tri = triangles(e).agg(count(lit(1)).as("n_triangles"))
+    val nodes = deg.agg(count(lit(1)).as("n_nodes"))
+    val edgesN = e.agg(count(lit(1)).as("n_edges"))
+    // three 1-row aggregates; the cross joins are broadcast scalars
+    nodes.crossJoin(edgesN).crossJoin(tri)
+  }
+
+  /** Every triangle of a canonical (u1 < u2) edge list exactly once, as
+    * (src, b, c): each edge is oriented from its lower-(degree, id)
+    * endpoint, the wedges src→b, src→c with b < c are enumerated, and the
+    * closing edge (b, c) is joined back. Shared by [[triangleCensus]] and
+    * [[localClustering]]. */
+  private def triangles(e: DataFrame): DataFrame = {
+    val deg = degrees(e)
     val withDeg = e
       .join(deg.select(col("v").as("u1"), col("deg").as("deg1")), "u1")
       .join(deg.select(col("v").as("u2"), col("deg").as("deg2")), "u2")
@@ -249,16 +263,10 @@ object Graph {
     val oriented = withDeg.select(
       when(lowFirst, col("u1")).otherwise(col("u2")).as("src"),
       when(lowFirst, col("u2")).otherwise(col("u1")).as("dst"))
-    val wedges = oriented.select(col("src"), col("dst").as("b"))
+    oriented.select(col("src"), col("dst").as("b"))
       .join(oriented.select(col("src"), col("dst").as("c")), "src")
       .filter(col("b") < col("c"))
-    val tri = wedges
       .join(e.select(col("u1").as("b"), col("u2").as("c")), Seq("b", "c"))
-      .agg(count(lit(1)).as("n_triangles"))
-    val nodes = deg.agg(count(lit(1)).as("n_nodes"))
-    val edgesN = e.agg(count(lit(1)).as("n_edges"))
-    // three 1-row aggregates; the cross joins are broadcast scalars
-    nodes.crossJoin(edgesN).crossJoin(tri)
   }
 
   /** Influence scores: 3 iterations of damped PageRank over the symmetric
@@ -294,8 +302,8 @@ object Graph {
     * Watts-Strogatz local density signal (collective dynamics of
     * small-world networks, Nature 1998); in a behavioral graph, high-lcc
     * high-degree nodes are tight coordinated pods (bot rings), low-lcc
-    * hubs are organic broadcast. Triangles are enumerated ONCE each via
-    * the same degree-ordered wedge scheme as [[triangleCount]], then each
+    * hubs are organic broadcast. Triangles are enumerated ONCE each by
+    * [[triangles]] (the degree-ordered wedge scheme), then each
     * triangle credits its three corners (explode — no per-node
     * re-enumeration). Wedge counts are exact integers; lcc is one double
     * division. Nodes with deg < 2 (no possible triangle) are excluded. */
@@ -304,19 +312,7 @@ object Graph {
     val e = copresenceEdges(spark, dir, 1L, adaptiveCap(spark, dir))
       .select("u1", "u2")
     val deg = degrees(e)
-    val withDeg = e
-      .join(deg.select(col("v").as("u1"), col("deg").as("deg1")), "u1")
-      .join(deg.select(col("v").as("u2"), col("deg").as("deg2")), "u2")
-    val lowFirst = col("deg1") < col("deg2") ||
-      (col("deg1") === col("deg2") && col("u1") < col("u2"))
-    val oriented = withDeg.select(
-      when(lowFirst, col("u1")).otherwise(col("u2")).as("src"),
-      when(lowFirst, col("u2")).otherwise(col("u1")).as("dst"))
-    val tri = oriented.select(col("src"), col("dst").as("b"))
-      .join(oriented.select(col("src"), col("dst").as("c")), "src")
-      .filter(col("b") < col("c"))
-      .join(e.select(col("u1").as("b"), col("u2").as("c")), Seq("b", "c"))
-    val perNode = tri.select(explode(array(col("src"), col("b"), col("c"))).as("v"))
+    val perNode = triangles(e).select(explode(array(col("src"), col("b"), col("c"))).as("v"))
       .groupBy("v").agg(count(lit(1)).as("n_tri"))
     deg.filter(col("deg") >= 2)
       .join(perNode, Seq("v"), "left")
@@ -597,6 +593,18 @@ object Graph {
     "graph_louvain_twolevel" -> (louvainTwoLevel _)
   )
 
+  /** Component labels of the weight≥2 co-presence graph, persisted as a
+    * bucketed table on `v` ([[graft.core.Artifacts]]): the O(log d)
+    * pointer-doubling rounds run ONCE per corpus — [[ccSizes]] and
+    * [[modularity]] (and every bench rep) start from the label table,
+    * exactly how a deployment maintains its component index at ingest. */
+  private def ccLabels2(spark: SparkSession, dir: String): DataFrame =
+    Artifacts.table(spark, dir, "events", "graft_cclab2", "v") {
+      Dedup.connectedComponents(
+        copresenceEdges(spark, dir, 2L)
+          .select(col("u1").as("doc_a"), col("u2").as("doc_b")))
+    }
+
   /** Newman modularity Q of the connected-component partition of the
     * repeated co-presence graph — the standard partition-quality score
     * (Newman & Girvan 2004): Q = Σ_c [e_c/m − (d_c/2m)²]. For a CC
@@ -611,42 +619,12 @@ object Graph {
     *
     * Scale shape: CC via [[Dedup.connectedComponents]] (O(log d)
     * rounds), then two broadcast-scalar joins; the community aggregate
-    * is component-count-sized. */
-  /** Component labels of the weight≥2 co-presence graph, persisted as a
-    * bucketed table on `v` ([[graft.core.Artifacts]]): the O(log d)
-    * pointer-doubling rounds run ONCE per corpus — [[ccSizes]] and
-    * [[modularity]] (and every bench rep) start from the label table,
-    * exactly how a deployment maintains its component index at ingest. */
-  private def ccLabels2(spark: SparkSession, dir: String): DataFrame =
-    Artifacts.table(spark, dir, "events", "graft_cclab2", "v") {
-      Dedup.connectedComponents(
-        copresenceEdges(spark, dir, 2L)
-          .select(col("u1").as("doc_a"), col("u2").as("doc_b")))
-    }
-
+    * is component-count-sized. The arithmetic is [[scoreQ]]'s, shared
+    * with the Louvain scorers. */
   def modularity(spark: SparkSession, dir: String): DataFrame = {
     val e = copresenceEdges(spark, dir, 2L).select("u1", "u2")
-    val lab = ccLabels2(spark, dir)
     val m = e.agg(count(lit(1)).as("m"))
-    val deg = degrees(e)
-    val dc = deg.join(lab, Seq("v")).groupBy("lbl")
-      .agg(sum(col("deg")).as("d_c"))
-    val ec = e
-      .join(lab.select(col("v").as("u1"), col("lbl").as("l1")), "u1")
-      .join(lab.select(col("v").as("u2"), col("lbl").as("l2")), "u2")
-      .filter(col("l1") === col("l2"))
-      .groupBy(col("l1").as("lbl")).agg(count(lit(1)).as("e_c"))
-    dc.join(ec, Seq("lbl"), "left")
-      .select(col("lbl"), col("d_c"), coalesce(col("e_c"), lit(0L)).as("e_c"))
-      .crossJoin(broadcast(m))
-      .select(
-        expr("""cast(4 as decimal(38,0)) * m * e_c
-               |  - cast(d_c as decimal(38,0)) * d_c""".stripMargin).as("num"),
-        expr("cast(4 as decimal(38,0)) * m * m").as("den"))
-      .select(when(col("num") >= 0, expr("(num * 1000000) div den"))
-        .otherwise(-expr("((-num) * 1000000) div den")).as("contrib_micro"))
-      .agg(count(lit(1)).as("n_communities"),
-        sum(col("contrib_micro")).cast("long").as("q_micro"))
+    scoreQ(e, ccLabels2(spark, dir), degrees(e), m)
       .crossJoin(broadcast(m))
       .select(col("m").as("n_edges"), col("n_communities"), col("q_micro"))
   }
@@ -704,8 +682,6 @@ object Graph {
       .select(col("v"), coalesce(col("blbl"), col("v")).as("lbl"))
   }
 
-  /** General-form Q scorer of ANY labeling: (n_communities, q_micro) —
-    * the same exact-integer contribution [[modularity]] gates. */
   /** The exact-integer Q arithmetic over already-aggregated per-community
     * (d_c, e_c) relations — shared by the one-pass and two-level scorers
     * so the micro-Q values can never drift between them. */
@@ -723,6 +699,8 @@ object Graph {
       .agg(count(lit(1)).as("n_communities"),
         sum(col("contrib_micro")).cast("long").as("q_micro"))
 
+  /** General-form Q scorer of ANY labeling: (n_communities, q_micro) —
+    * what [[modularity]] gates and [[louvainOneLevel]] reports. */
   private def scoreQ(e: DataFrame, lab: DataFrame, deg: DataFrame,
       m: DataFrame): DataFrame = {
     val dc = deg.join(lab, Seq("v")).groupBy("lbl")

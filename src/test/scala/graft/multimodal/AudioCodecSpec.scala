@@ -57,4 +57,44 @@ class AudioCodecSpec extends SparkSpec {
     }.toSeq.sortBy(_._1)
     assert(got.toSeq == expected)
   }
+
+  test("audio silence runs match the analytic sample formula") {
+    import spark.implicits._
+    val ids = graft.core.Tables.documents(spark, sfDir)
+      .select("doc_id").as[Long].collect().filter(_ % 3 == 1).sorted
+    def expected(docId: Long): (Long, Long, Long, Long, Long) = {
+      val n = (docId % 601 + 200).toInt
+      val rate = 8000 + (docId % 4) * 4000
+      val base = ((docId % 997) * 7).toInt
+      var quiet = 0L; var runs = 0L; var maxRun = 0L; var cur = 0L
+      for (i <- 0 until n) {
+        val s = (i * 31 + base) % 4096 - 2048
+        if (math.abs(s) < 512) {
+          quiet += 1; cur += 1
+          if (cur == 1) runs += 1
+          if (cur > maxRun) maxRun = cur
+        } else cur = 0
+      }
+      (rate, n.toLong, quiet, runs, maxRun)
+    }
+    val got = Multimodal.audioSilence(spark, sfDir)
+      .as[(Long, Long, Long, Long, Long, Long)].collect().toSeq
+    assert(got == ids.map(d => {
+      val (r, n, q, ru, m) = expected(d); (d, r, n, q, ru, m)
+    }).toSeq)
+    // the quiet threshold actually bites: some clips have runs
+    assert(got.exists(_._5 > 0))
+  }
+
+  test("a 2-channel WAV fails the per-clip silence computation") {
+    import javax.sound.sampled._
+    val pcm = Array[Byte](0x10, 0x00, 0x20, 0x00, 0x30, 0x00, 0x40, 0x00)
+    val bos = new java.io.ByteArrayOutputStream()
+    AudioSystem.write(new AudioInputStream(new java.io.ByteArrayInputStream(pcm),
+      new AudioFormat(44100f, 16, 2, true, false), 2L),
+      AudioFileFormat.Type.WAVE, bos)
+    val e = intercept[IllegalArgumentException](
+      Multimodal.silenceOne(0L, bos.toByteArray))
+    assert(e.getMessage.contains("unexpected WAV encoding"), e.getMessage)
+  }
 }

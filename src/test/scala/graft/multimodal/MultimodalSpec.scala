@@ -11,7 +11,7 @@ class MultimodalSpec extends SparkSpec {
       // PNG signature: this is an actual container, not a fake payload
       assert((bytes(0) & 0xff) == 0x89 && bytes(1) == 'P'.toByte &&
         bytes(2) == 'N'.toByte && bytes(3) == 'G'.toByte)
-      val dec = ImageIoDecoder.decode("image", bytes)
+      val dec = ImageIoDecoder.decode(MediaRecord(d, "image", bytes))
       val (w, h, _) = ImageSynth.params(d)
       assert(dec.width == w && dec.height == h,
         s"doc $d: decoded ${dec.width}x${dec.height}, expected ${w}x$h")
@@ -34,7 +34,7 @@ class MultimodalSpec extends SparkSpec {
 
   test("featureExtract decodes actual bytes and preserves every row") {
     val media = Multimodal.imageMedia(spark, sfDir).repartition(7)
-    val out = Multimodal.featureExtract(media, ImageIoDecoder, batchSize = 16)
+    val out = Multimodal.featureExtract(media)
     assert(out.count() == media.count())
     assert(out.columns.toSeq ==
       Seq("doc_id", "media_type", "n_bytes", "width", "height", "feature"))
@@ -74,8 +74,7 @@ class MultimodalSpec extends SparkSpec {
   }
 
   test("resizeMeta preserves aspect ratio within integer truncation") {
-    val decoded = Multimodal.featureExtract(
-      Multimodal.imageMedia(spark, sfDir), ImageIoDecoder)
+    val decoded = Multimodal.featureExtract(Multimodal.imageMedia(spark, sfDir))
     val resized = Multimodal.resizeMeta(decoded, 32).collect()
     assert(resized.nonEmpty)
     assert(resized.forall { case (_, _, _, w, h) =>
@@ -122,5 +121,97 @@ class MultimodalSpec extends SparkSpec {
       .map(r => (r._1, r._2) -> r._3).toMap
     assert(got == expected)
     assert(got.nonEmpty, "synth corpus must contain perceptual near-dups")
+  }
+
+  test("image dhash matches the analytic gradient bits from the " +
+    "synthesis formula") {
+    val ids = graft.core.Tables.documents(spark, sfDir)
+      .select("doc_id").as[Long].collect().filter(_ % 3 == 0).sorted
+    def expected(docId: Long): (Int, Int, Long, Long) = {
+      val w = (docId % 49 + 16).toInt
+      val h = ((docId * 3) % 41 + 12).toInt
+      val dd = (docId % 251).toInt
+      def g(x: Int): Long =
+        ((x * 7 + dd) % 256 + (x * 11 + 2 * dd) % 256 + (x * 13 + 3 * dd) % 256).toLong
+      val bx = (0 to 9).map(i => i * w / 9)
+      val by = (0 to 8).map(j => j * h / 8)
+      val colSum = (0 until 9).map(i => (bx(i) until bx(i + 1)).map(g).sum)
+      var lo = 0L; var hi = 0L
+      for (j <- 0 until 8; i <- 0 until 8) {
+        val rowH = (by(j + 1) - by(j)).toLong
+        val csL = colSum(i) * rowH
+        val csR = colSum(i + 1) * rowH
+        val aL = (bx(i + 1) - bx(i)).toLong * rowH
+        val aR = (bx(i + 2) - bx(i + 1)).toLong * rowH
+        if (csL * aR > csR * aL) {
+          val k = j * 8 + i
+          if (k < 32) lo |= 1L << k else hi |= 1L << (k - 32)
+        }
+      }
+      (w, h, hi, lo)
+    }
+    val got = Multimodal.imageDhash(spark, sfDir)
+      .as[(Long, Int, Int, Long, Long)].collect().toSeq
+    assert(got == ids.map(d => {
+      val (w, h, hi, lo) = expected(d); (d, w, h, hi, lo)
+    }).toSeq)
+    // gradient bits are non-degenerate: some set, some clear
+    assert(got.exists(r => r._4 != 0L || r._5 != 0L))
+    assert(got.exists(r => r._4 != -1L && r._5 != -1L))
+  }
+
+  test("resize pixels match a closed-form driver recompute") {
+    val docIds = graft.core.Tables.documents(spark, sfDir)
+      .select("doc_id").collect().map(_.getLong(0)).filter(_ % 3 == 0).sorted
+    val expected = docIds.map { id =>
+      val (w, h, dd) = ImageSynth.params(id)
+      val (w2, h2) = Multimodal.AreaResample.dims(w, h, 32)
+      def bounds(n: Int, k: Int) = (0 to k).map(i => i * n / k)
+      val bx = bounds(w, w2)
+      // pixels are column-constant, so the box sum factors as rows*colSum
+      // and floor((rows*S)/(rows*nx)) = floor(S/nx) — sum per channel is
+      // h2 * sum_i floor(colSum_i / nx_i)
+      def chanSum(f: Int => Long): Long =
+        h2.toLong * (0 until w2).map { i =>
+          val s = (bx(i) until bx(i + 1)).map(f).sum
+          s / (bx(i + 1) - bx(i))
+        }.sum
+      (id, w2, h2,
+        chanSum(x => (x * 7 + dd) % 256),
+        chanSum(x => (x * 11 + 2 * dd) % 256),
+        chanSum(x => (x * 13 + 3 * dd) % 256))
+    }.toSeq
+    val got = Multimodal.resizePixels(spark, sfDir).collect()
+      .map(r => (r.getLong(0), r.getInt(1), r.getInt(2),
+        r.getLong(3), r.getLong(4), r.getLong(5))).toSeq
+    assert(got === expected)
+  }
+
+  test("JPEG decode stats match the closed form (lossy round trip exact)") {
+    val docIds = graft.core.Tables.documents(spark, sfDir)
+      .select("doc_id").collect().map(_.getLong(0)).filter(_ % 3 == 0).sorted
+    val expected = docIds.map { id =>
+      val (w, h, dd) = Multimodal.JpegSynth.params(id)
+      val blocks = for (bj <- 0 until h / 8; bi <- 0 until w / 8)
+        yield (bi * 17 + bj * 29 + dd) % 256
+      (id, w, h, blocks.map(_.toLong * 64).sum, blocks.distinct.size.toLong)
+    }.toSeq
+    val got = Multimodal.jpegStats(spark, sfDir).collect()
+      .map(r => (r.getLong(0), r.getInt(1), r.getInt(2),
+        r.getLong(3), r.getLong(4))).toSeq
+    assert(got === expected)
+  }
+
+  test("undecodable bytes fail the aHash, dHash, resize and JPEG paths " +
+    "with the decoder's message") {
+    val junk = Array[Byte](1, 2, 3, 4, 5)
+    val paths: Seq[(String, (Long, Array[Byte]) => Any)] = Seq(
+      "ahash" -> Multimodal.ahashOne, "dhash" -> Multimodal.dhashOne,
+      "resize" -> Multimodal.resizeOne, "jpeg" -> Multimodal.jpegOne)
+    for ((name, path) <- paths) {
+      val e = intercept[IllegalArgumentException](path(0L, junk))
+      assert(e.getMessage.contains("undecodable image payload (5 bytes)"),
+        s"$name: ${e.getMessage}")
+    }
   }
 }

@@ -72,10 +72,8 @@ class OperatorsSpec extends SparkSpec {
   }
 
   test("every query's oracle entry exists or is a declared rows-only check") {
-    // every queries key should have oracle SQL unless explicitly declared
-    // rows-only (sketches); catches a renamed key on one side only
-    val missing = SparkEntry.queries.keySet -- SparkEntry.oracleSql.keySet --
-      AdvancedAggs.rowsOnly
+    // every queries key has oracle SQL; catches a renamed key on one side
+    val missing = SparkEntry.queries.keySet -- SparkEntry.oracleSql.keySet
     assert(missing.isEmpty, s"queries without oracle SQL: $missing")
     val orphaned = SparkEntry.oracleSql.keySet -- SparkEntry.queries.keySet
     assert(orphaned.isEmpty, s"oracle SQL without queries: $orphaned")
