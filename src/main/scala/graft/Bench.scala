@@ -194,9 +194,6 @@ object Bench {
     } catch { case _: Throwable => Map.empty }
   }
 
-  /** Render the output lines from measured results — pure, so the
-    * JSON shape and both suspect detectors are spec-pinnable without a
-    * bench run (BenchJsonSpec replays round 9's pollution pattern). */
   /** One adjudicated cross-round anomaly: the prior-round converged, the
     * suite-measured reps, and the fresh end-of-run min-of-3 — the record
     * a consumer needs to tell "run artifact" (adjudicated min ≈ prior)
@@ -224,6 +221,9 @@ object Bench {
     * future field honest. */
   private[graft] val HeadlineMaxChars = 1800
 
+  /** Render the output lines from measured results — pure, so the
+    * JSON shape and both suspect detectors are spec-pinnable without a
+    * bench run (BenchJsonSpec replays round 9's pollution pattern). */
   private[graft] def renderLines(
       rs: Seq[QRes], calibs: IndexedSeq[Double], calibEvery: Int,
       sfDir: String, builds: Map[String, Double] = Map.empty,

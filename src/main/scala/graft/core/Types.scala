@@ -1,6 +1,6 @@
 package graft.core
 
-/** Core record types of the engine.
+/* Core record types of the engine.
   *
   * The reference engine (kohyida1997/MPI_MapReduce) has exactly two data
   * abstractions: a whole-file document and a fixed-width key/value record

@@ -8,7 +8,7 @@ import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
-/** Custom Catalyst expressions for the reference's map-task semantics.
+/* Custom Catalyst expressions for the reference's map-task semantics.
   *
   * Rationale (100 TB design): the naive Spark formulation of the reference's
   * letter histogram (tasks.c:53-88) is `explode(split(lower(text), ""))` —

@@ -583,13 +583,6 @@ object Multimodal {
       .orderBy("doc_id")
   }
 
-  /** Frame-level exact dedup across videos: every sampled frame's content
-    * slice is fingerprinted (md5) and counted corpus-wide — the multimodal
-    * twin of [[graft.operators.Dedup.exactDedup]], catching payload reuse
-    * across containers (e.g. the same intro frames in many videos). The
-    * slice arithmetic is [[frameSample]]'s, applied to the payload text so
-    * the oracle can recompute identical fingerprints; the ONE shuffle is
-    * the fingerprint window. */
   /** (doc_id, frame_idx, frame_text) for every sampled video frame —
     * [[frameSample]]'s slice arithmetic applied to the payload text so
     * oracles can recompute identical content. */
@@ -608,6 +601,13 @@ object Multimodal {
     }.toDF("doc_id", "frame_idx", "frame_text")
   }
 
+  /** Frame-level exact dedup across videos: every sampled frame's content
+    * slice is fingerprinted (md5) and counted corpus-wide — the multimodal
+    * twin of [[graft.operators.Dedup.exactDedup]], catching payload reuse
+    * across containers (e.g. the same intro frames in many videos). The
+    * slice arithmetic is [[frameSample]]'s, applied to the payload text so
+    * the oracle can recompute identical fingerprints; the ONE shuffle is
+    * the fingerprint window. */
   def frameDedup(spark: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     videoFrames(spark, dir)
@@ -690,15 +690,6 @@ object Multimodal {
   def imageAhash(spark: SparkSession, dir: String): DataFrame =
     imageAhashes(spark, dir).toDF().orderBy("doc_id")
 
-  /** Perceptual near-duplicate image pairs at Hamming ≤ 3 via PIGEONHOLE
-    * banding: the 64-bit hash splits into four 16-bit bands; ≤ 3
-    * differing bits cannot touch all 4 bands, so every qualifying pair
-    * shares at least one EXACT band — candidates come from 4 equality
-    * joins on (band, value) keys and are then verified by exact
-    * bit_count(xor) Hamming, the same band-then-verify contract as the
-    * SimHash text family. Only 8-byte band keys shuffle; the oracle runs
-    * the naive all-pairs comparison and must agree exactly, proving the
-    * banding lossless. */
   /** The decoded 128-bit image fingerprints as a PERSISTED BUCKETED
     * TABLE (r17; guide §8's "decide with small rows" discipline): the
     * PNG synth + decode — the dominant cost of both image dedups, paid
@@ -714,6 +705,15 @@ object Multimodal {
       imagePhash128s(spark, dir).toDF()
     }
 
+  /** Perceptual near-duplicate image pairs at Hamming ≤ 3 via PIGEONHOLE
+    * banding: the 64-bit hash splits into four 16-bit bands; ≤ 3
+    * differing bits cannot touch all 4 bands, so every qualifying pair
+    * shares at least one EXACT band — candidates come from 4 equality
+    * joins on (band, value) keys and are then verified by exact
+    * bit_count(xor) Hamming, the same band-then-verify contract as the
+    * SimHash text family. Only 8-byte band keys shuffle; the oracle runs
+    * the naive all-pairs comparison and must agree exactly, proving the
+    * banding lossless. */
   def ahashDedup(spark: SparkSession, dir: String): DataFrame = {
     val hs = imgFingerprints(spark, dir)
       .select("doc_id", "ahash_hi", "ahash_lo")
@@ -1245,11 +1245,6 @@ object Multimodal {
     "mm_video_cuts" -> (videoCuts _)
   )
 
-  /** The oracle re-derives the stub's deterministic metadata arithmetic in
-    * SQL over the same payload bytes. */
-  /** Shared analytic aHash CTE: recomputes the hash halves in SQL from
-    * the synthesized pixel formula (pixels are column-constant, so cell
-    * sums factor into per-column gray sums × row counts). */
   /** Shared analytic fingerprint CTE: window energies from the synth
     * sample closed form, delta-sign bits via lead(), MSB-first integer
     * shift packing — `fpt(doc_id, rate, n, nw, fp)`. */
@@ -1271,6 +1266,9 @@ object Multimodal {
       |             AS BIGINT) AS fp
       |      FROM bt WHERE w < nw - 1 GROUP BY 1, 2, 3)""".stripMargin
 
+  /** Shared analytic aHash CTE: recomputes the hash halves in SQL from
+    * the synthesized pixel formula (pixels are column-constant, so cell
+    * sums factor into per-column gray sums × row counts). */
   private val ahashCte: String =
     """p AS (SELECT doc_id, CAST(doc_id % 49 + 16 AS BIGINT) AS w,
       |         CAST((doc_id * 3) % 41 + 12 AS BIGINT) AS h,

@@ -213,14 +213,6 @@ object Bpe {
     accepted.result()
   }
 
-  /** EXACT sequential greedy over collected vocab metadata — the
-    * driver-finishing path (see the object scaladoc). One full pair count
-    * and one fold-apply per merge over in-memory arrays; for any vocab
-    * under [[DriverVocabLimit]] this is sub-second for hundreds of
-    * merges. Identical selection ((count desc, l, r) argmax) and
-    * identical left-fold application as the distributed path — the
-    * BpeBatchSpec differential and the sequential DuckDB oracles gate
-    * both. */
   /** One merge rule applied left-to-right at the earliest opportunity —
     * the shared fold of [[trainDriver]]'s vocab update and the
     * corpus-wide encode ([[bpePhraseCorpusEncode]]); the DuckDB oracles
@@ -266,6 +258,14 @@ object Bpe {
     if (n == syms.length) syms else java.util.Arrays.copyOf(out, n)
   }
 
+  /** EXACT sequential greedy over collected vocab metadata — the
+    * driver-finishing path (see the object scaladoc). One full pair count
+    * and one fold-apply per merge over in-memory arrays; for any vocab
+    * under [[DriverVocabLimit]] this is sub-second for hundreds of
+    * merges. Identical selection ((count desc, l, r) argmax) and
+    * identical left-fold application as the distributed path — the
+    * BpeBatchSpec differential and the sequential DuckDB oracles gate
+    * both. */
   private[graft] def trainDriver(
       init: Array[(String, Long, Array[String])],
       steps: Int, joiner: String)

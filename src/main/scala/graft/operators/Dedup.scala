@@ -246,15 +246,6 @@ object Dedup {
       .orderBy("doc_a", "doc_b")
   }
 
-  /** MinHash-LSH near-dedup: 16 portable minhashes per doc, banded 4×4;
-    * pairs sharing a band become candidates; exact Jaccard is computed for
-    * candidates only (array intersection of shingle-hash sets).
-    *
-    * The 16 hash functions use the standard double-hashing family
-    * h_j = h1 + j·h2 (mod P): only two md5s per shingle instead of 16, with
-    * h2 reduced below 2^56 so j·h2 + h1 < 2^61 never overflows int64 —
-    * DuckDB errors on BIGINT overflow, so the oracle needs this bound too.
-    */
   /** Per-doc MinHash state: `hs` = the sorted distinct shingle-hash set
     * (for exact-Jaccard verification) plus the 16 minhash signature
     * components `mh0..mh15` (long columns). One aggregation computes
@@ -327,6 +318,15 @@ object Dedup {
         size(col("hs_a")).cast("long").as("ca"), size(col("hs_b")).cast("long").as("cb"))
       .filter(col("common") > 0)
 
+  /** MinHash-LSH near-dedup: 16 portable minhashes per doc, banded 4×4;
+    * pairs sharing a band become candidates; exact Jaccard is computed for
+    * candidates only (array intersection of shingle-hash sets).
+    *
+    * The 16 hash functions use the standard double-hashing family
+    * h_j = h1 + j·h2 (mod P): only two md5s per shingle instead of 16, with
+    * h2 reduced below 2^56 so j·h2 + h1 < 2^61 never overflows int64 —
+    * DuckDB errors on BIGINT overflow, so the oracle needs this bound too.
+    */
   def minhashLsh(spark: SparkSession, dir: String): DataFrame =
     minhashVerified(minhashPerDoc(spark, dir))
       .select(col("doc_a"), col("doc_b"),
@@ -385,9 +385,6 @@ object Dedup {
       .orderBy("est_bin")
   }
 
-  /** 32-bit SimHash fingerprint per document (term-frequency weighted,
-    * portable h60 token hashes) + the size of each identical-fingerprint
-    * cluster. One pass per doc via nested higher-order aggregates. */
   /** SimHash near-dup PAIRS at Hamming distance ≤ 3, by banded candidate
     * generation (Manku/Jain/Sarma, "Detecting near-duplicates for web
     * crawling", WWW 2007): split the 32-bit fingerprint into 4 bands of 8
@@ -476,6 +473,9 @@ object Dedup {
       .orderBy("doc_a", "doc_b")
   }
 
+  /** 32-bit SimHash fingerprint per document (term-frequency weighted,
+    * portable h60 token hashes) + the size of each identical-fingerprint
+    * cluster. One pass per doc via nested higher-order aggregates. */
   def simhash(spark: SparkSession, dir: String): DataFrame = {
     // one-pass codegen expression: per token one md5, 32 stack counters —
     // equal by definition to the bit-plane HOF fold the oracle SQL uses
@@ -673,24 +673,6 @@ object Dedup {
   /** Average CDC chunk length in tokens (boundary probability 1/8). */
   val CdcDivisor = 8
 
-  /** CONTENT-DEFINED CHUNKING dedup — the storage-dedup classic (LBFS,
-    * Muthitacharoen et al. SOSP 2001; FastCDC, Xia et al. ATC 2016)
-    * applied at token granularity: a chunk boundary falls AFTER any token
-    * whose portable hash ≡ 0 (mod [[CdcDivisor]]), so boundaries depend
-    * only on local content — inserting or deleting text re-chunks only
-    * the edited neighborhood, never the whole document (the property
-    * fixed-size blocks lack, and the reason CDC is the sub-document
-    * dedup scheme that survives edits; CdcSpec pins it). Each doc's
-    * chunks are hashed and counted corpus-wide; the per-doc report gives
-    * chunk counts, duplicated-chunk counts, and the dup ratio in exact
-    * micro-units.
-    *
-    * Scale shape: the per-doc window is doc-length bounded; after
-    * chunking, everything shuffles as 8-byte chunk hashes (one count
-    * aggregation + one hash-partitioned join back) — never chunk text,
-    * never doc pairs. This is exactly how sub-document dedup runs at
-    * corpus scale: dedup_substring_* find shared substrings pairwise,
-    * CDC instead buckets globally at O(corpus) cost. */
   /** (doc_id, chunk, chunk_text) CDC chunking of ANY (doc_id, text)
     * relation — factored out so CdcSpec can pin the edit-locality
     * property on synthetic edits. */
@@ -710,6 +692,24 @@ object Dedup {
         .as("chunk_text"))
   }
 
+  /** CONTENT-DEFINED CHUNKING dedup — the storage-dedup classic (LBFS,
+    * Muthitacharoen et al. SOSP 2001; FastCDC, Xia et al. ATC 2016)
+    * applied at token granularity: a chunk boundary falls AFTER any token
+    * whose portable hash ≡ 0 (mod [[CdcDivisor]]), so boundaries depend
+    * only on local content — inserting or deleting text re-chunks only
+    * the edited neighborhood, never the whole document (the property
+    * fixed-size blocks lack, and the reason CDC is the sub-document
+    * dedup scheme that survives edits; CdcSpec pins it). Each doc's
+    * chunks are hashed and counted corpus-wide; the per-doc report gives
+    * chunk counts, duplicated-chunk counts, and the dup ratio in exact
+    * micro-units.
+    *
+    * Scale shape: the per-doc window is doc-length bounded; after
+    * chunking, everything shuffles as 8-byte chunk hashes (one count
+    * aggregation + one hash-partitioned join back) — never chunk text,
+    * never doc pairs. This is exactly how sub-document dedup runs at
+    * corpus scale: dedup_substring_* find shared substrings pairwise,
+    * CDC instead buckets globally at O(corpus) cost. */
   def cdcChunks(spark: SparkSession, dir: String): DataFrame = {
     val chunks = cdcChunkTexts(Tables.documents(spark, dir).select("doc_id", "text"))
     val hashed = chunks.select(col("doc_id"),

@@ -206,24 +206,6 @@ object Diagnostics {
     * unchanged (the sketch is the shuffled object either way). */
   private val JsWidth = 1024
 
-  /** JOIN-SIZE ESTIMATION without running the join — the classic
-    * planning sketch (Alon/Gibbons/Matias/Szegedy STOC'99 for the F₂
-    * view; Cormode & Muthukrishnan, J.Alg 2005 §4.2 for the count-min
-    * inner product): |A ⋈ B| = Σ_k c_A(k)·c_B(k) is estimated by
-    * min over hash rows of Σ_col cms_A[r][col]·cms_B[r][col]. Each side
-    * is a 4×[[JsWidth]] CMS over the join key — ONE scan per side,
-    * mergeable cell-wise (the 100 TB shape: sketches maintained per
-    * partition/day, the estimate read from 4·width integers without
-    * touching either table again). The estimate NEVER undercounts
-    * (every true pair lands in a shared cell) and overshoots by the
-    * collision mass — bounded here both ways as a gated boolean:
-    * est ≥ exact AND est − exact ≤ 3·(n_a·n_b − exact)/width (3× the
-    * expected slack, Markov). Demonstrated on the funnel join every
-    * attribution query pays — click events ⋈ purchase events on
-    * user_id, a genuinely skewed key — with the exact join size
-    * computed alongside as the gate's ground truth. The CMS is
-    * deterministic given the portable hash family, so every cell,
-    * every inner product, and the bound boolean hash-gate exactly. */
   /** One side's 4×[[JsWidth]] CMS over the events user_id key. */
   private def cmsSide(spark: SparkSession, dir: String, t: String): DataFrame =
     Tables.events(spark, dir)
@@ -261,6 +243,24 @@ object Diagnostics {
         coalesce(col("inner_product"), lit(0L)).as("inner_product"))
   }
 
+  /** JOIN-SIZE ESTIMATION without running the join — the classic
+    * planning sketch (Alon/Gibbons/Matias/Szegedy STOC'99 for the F₂
+    * view; Cormode & Muthukrishnan, J.Alg 2005 §4.2 for the count-min
+    * inner product): |A ⋈ B| = Σ_k c_A(k)·c_B(k) is estimated by
+    * min over hash rows of Σ_col cms_A[r][col]·cms_B[r][col]. Each side
+    * is a 4×[[JsWidth]] CMS over the join key — ONE scan per side,
+    * mergeable cell-wise (the 100 TB shape: sketches maintained per
+    * partition/day, the estimate read from 4·width integers without
+    * touching either table again). The estimate NEVER undercounts
+    * (every true pair lands in a shared cell) and overshoots by the
+    * collision mass — bounded here both ways as a gated boolean:
+    * est ≥ exact AND est − exact ≤ 3·(n_a·n_b − exact)/width (3× the
+    * expected slack, Markov). Demonstrated on the funnel join every
+    * attribution query pays — click events ⋈ purchase events on
+    * user_id, a genuinely skewed key — with the exact join size
+    * computed alongside as the gate's ground truth. The CMS is
+    * deterministic given the portable hash family, so every cell,
+    * every inner product, and the bound boolean hash-gate exactly. */
   def joinSizeEstimate(spark: SparkSession, dir: String): DataFrame = {
     val ev = Tables.events(spark, dir)
     val prods = cmsProds(spark, dir)

@@ -171,15 +171,6 @@ object Events {
       .orderBy("user_id", "start_ts", "start_event_id")
   }
 
-  /** Range (interval) join, expressed scalably: count how many OTHER
-    * users' events fall inside each session's time span. A naive
-    * `ts BETWEEN start AND end` join is a nested-loop/cartesian in Spark;
-    * instead both sides are bucketized to fixed 1-hour epochs — intervals
-    * explode to the buckets they cover, points map to one bucket — turning
-    * the range join into an equi-join on the bucket key plus an exact
-    * residual filter. Shuffle cost is linear in (events + interval-hours),
-    * never quadratic. A point matches an interval through exactly one
-    * bucket (its own), so no post-join dedup is needed. */
   /** Inter-arrival time histogram per event type: consecutive same-user
     * same-type gaps at minute resolution, capped at 60 (the diagnostic
     * behind every session-gap / rate-limit / bot-cadence threshold —
@@ -244,6 +235,15 @@ object Events {
       .orderBy("day")
   }
 
+  /** Range (interval) join, expressed scalably: count how many OTHER
+    * users' events fall inside each session's time span. A naive
+    * `ts BETWEEN start AND end` join is a nested-loop/cartesian in Spark;
+    * instead both sides are bucketized to fixed 1-hour epochs — intervals
+    * explode to the buckets they cover, points map to one bucket — turning
+    * the range join into an equi-join on the bucket key plus an exact
+    * residual filter. Shuffle cost is linear in (events + interval-hours),
+    * never quadratic. A point matches an interval through exactly one
+    * bucket (its own), so no post-join dedup is needed. */
   def rangeJoinSessions(spark: SparkSession, dir: String): DataFrame = {
     val sessions = sessionize(spark, dir)
       .filter(col("n_events") >= 2)

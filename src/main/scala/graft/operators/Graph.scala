@@ -629,35 +629,6 @@ object Graph {
       .select(col("m").as("n_edges"), col("n_communities"), col("q_micro"))
   }
 
-  /** ONE-LEVEL Louvain-style modularity OPTIMIZATION pass (Blondel et
-    * al., "Fast unfolding of communities in large networks", J. Stat.
-    * Mech. 2008 — the first level's first sweep, made synchronous and
-    * deterministic so it is distributable AND oracle-gateable): starting
-    * from the singleton partition, every node simultaneously evaluates
-    * joining each neighbor's (singleton) community and takes the best
-    * strictly-positive modularity gain. For an isolated node i joining
-    * {j} on a simple graph, ΔQ·2m² = 2m − d_i·d_j exactly — integer
-    * arithmetic, no floats — so the argmax (gain desc, neighbor id asc)
-    * is bit-deterministic. Moves are restricted DOWNWARD (a node may
-    * only join a smaller-id neighbor's community): unrestricted
-    * synchronous updates let adjacent pairs swap INTO each other's
-    * vacated singletons — the classic label-oscillation artifact, which
-    * measurably WORSENS Q (−0.033 vs the −0.027 baseline on the sf0.01
-    * graph) — while the asymmetric rule keeps the smaller endpoint
-    * anchored so every accepted move lands in a community that retains
-    * its shared edge (Q = +0.729 on the same graph). Nodes with no
-    * positive downward move keep their own label. The synchronous sweep
-    * is the standard distributed Louvain relaxation (sequential Louvain
-    * is order-dependent and inherently driver-bound); the resulting
-    * labeling is a valid partition and is
-    * scored with the SAME general-form Q scorer [[modularity]] uses,
-    * reported next to the singleton baseline Q₀ = −Σd_v²/4m² so the
-    * optimization's improvement is part of the gated output.
-    *
-    * Scale shape: one symmetric edge scan joined twice against the
-    * degree table, a src-partitioned argmax window, then the
-    * community-count-sized scoring aggregates — no iteration, no
-    * unpartitioned window, hub-capped edges like every graph query. */
   /** Level-1 downward-sweep labeling (v → lbl) — shared by
     * [[louvainOneLevel]] and [[louvainTwoLevel]]. */
   private def louvainLabel1(e: DataFrame, deg: DataFrame, m: DataFrame): DataFrame = {
@@ -713,6 +684,35 @@ object Graph {
     scoreQParts(dc, ec, m)
   }
 
+  /** ONE-LEVEL Louvain-style modularity OPTIMIZATION pass (Blondel et
+    * al., "Fast unfolding of communities in large networks", J. Stat.
+    * Mech. 2008 — the first level's first sweep, made synchronous and
+    * deterministic so it is distributable AND oracle-gateable): starting
+    * from the singleton partition, every node simultaneously evaluates
+    * joining each neighbor's (singleton) community and takes the best
+    * strictly-positive modularity gain. For an isolated node i joining
+    * {j} on a simple graph, ΔQ·2m² = 2m − d_i·d_j exactly — integer
+    * arithmetic, no floats — so the argmax (gain desc, neighbor id asc)
+    * is bit-deterministic. Moves are restricted DOWNWARD (a node may
+    * only join a smaller-id neighbor's community): unrestricted
+    * synchronous updates let adjacent pairs swap INTO each other's
+    * vacated singletons — the classic label-oscillation artifact, which
+    * measurably WORSENS Q (−0.033 vs the −0.027 baseline on the sf0.01
+    * graph) — while the asymmetric rule keeps the smaller endpoint
+    * anchored so every accepted move lands in a community that retains
+    * its shared edge (Q = +0.729 on the same graph). Nodes with no
+    * positive downward move keep their own label. The synchronous sweep
+    * is the standard distributed Louvain relaxation (sequential Louvain
+    * is order-dependent and inherently driver-bound); the resulting
+    * labeling is a valid partition and is
+    * scored with the SAME general-form Q scorer [[modularity]] uses,
+    * reported next to the singleton baseline Q₀ = −Σd_v²/4m² so the
+    * optimization's improvement is part of the gated output.
+    *
+    * Scale shape: one symmetric edge scan joined twice against the
+    * degree table, a src-partitioned argmax window, then the
+    * community-count-sized scoring aggregates — no iteration, no
+    * unpartitioned window, hub-capped edges like every graph query. */
   def louvainOneLevel(spark: SparkSession, dir: String): DataFrame = {
     // Labeling feeds both the intra-edge scoring joins and the degree
     // rollup — checkpoint it like the edge list (see copresenceEdges).

@@ -193,37 +193,6 @@ object Profile {
   private def nativeCell60(f: StructField, i: Int): Column =
     xxhash64(lit(i), col(f.name)).bitwiseAND(lit((1L << 60) - 1))
 
-  /** THE 100 TB PROFILE (r11 verdict item 3, gated as
-    * `profile_lineitem_approx`): every exact statistic of [[profile]]
-    * (nulls, typed min/max, n_rows — the single global aggregate) plus a
-    * PORTABLE per-column HLL distinct sketch in place of the ×cols exact
-    * COUNT(DISTINCT) jobs: one extra scan unpivots each row into
-    * (col_name, canonical value) pairs map-side, partial-aggregates into
-    * ≤ cols·64 (column, register, max-rank) groups, and each column's
-    * estimate is the `sketch_hll_estimate` arithmetic — exact BIGINT
-    * n_zero_regs/harmonic_num and ONE double division — so the sketch
-    * output hash-gates exactly in DuckDB (stronger than an in-bounds
-    * boolean: the estimator's value itself is cross-engine-pinned).
-    * ProfileApproxSpec separately asserts the small-range-corrected
-    * estimates sit inside HLL's published error envelope of the exact
-    * counts, so accuracy is tested where ln() can't hash-gate.
-    *
-    * Scale shape vs the exact profiler: 2 scans and a ≤ cols·64-row
-    * shuffle total, independent of row count — no per-column distinct
-    * jobs anywhere on the plan, which is exactly the swap the exact
-    * profiler's scaladoc documents for cluster scale.
-    *
-    * Honest cost accounting (SCALE r12: 4.8s → 47.8s, a LINEAR 10.0x,
-    * vs the exact profiler's 1.2s → 10.5s): the approx path trades
-    * shuffle volume for map-side CPU — one portable md5 per (row ×
-    * column) cell (~66M digests at sf1) vs the exact plan's EXPAND of
-    * n·cols rows through the shuffle. On single-node local[32] there is
-    * no network, so the md5 constant dominates and the exact plan wins;
-    * on a cluster the ≤ cols·64-row exchange is the scalable side. The
-    * md5 is the cross-engine gate discipline, not a production choice —
-    * a deployment swaps in xxhash64 (≥10x cheaper per digest) without
-    * touching the plan shape — [[XxHash60]], exercised by
-    * `profile_lineitem_approx_fast` and ProfileFastHashSpec. */
   /** One column's finished sketch: the exact-BIGINT estimator inputs. */
   case class HllOut(n_zero_regs: Long, harmonic_num: Long)
 
@@ -340,25 +309,40 @@ object Profile {
       .orderBy("col_name")
   }
 
+  /** THE 100 TB PROFILE (r11 verdict item 3, gated as
+    * `profile_lineitem_approx`): every exact statistic of [[profile]]
+    * (nulls, typed min/max, n_rows — the single global aggregate) plus a
+    * PORTABLE per-column HLL distinct sketch in place of the ×cols exact
+    * COUNT(DISTINCT) jobs: one extra scan unpivots each row into
+    * (col_name, canonical value) pairs map-side, partial-aggregates into
+    * ≤ cols·64 (column, register, max-rank) groups, and each column's
+    * estimate is the `sketch_hll_estimate` arithmetic — exact BIGINT
+    * n_zero_regs/harmonic_num and ONE double division — so the sketch
+    * output hash-gates exactly in DuckDB (stronger than an in-bounds
+    * boolean: the estimator's value itself is cross-engine-pinned).
+    * ProfileApproxSpec separately asserts the small-range-corrected
+    * estimates sit inside HLL's published error envelope of the exact
+    * counts, so accuracy is tested where ln() can't hash-gate.
+    *
+    * Scale shape vs the exact profiler: 2 scans and a ≤ cols·64-row
+    * shuffle total, independent of row count — no per-column distinct
+    * jobs anywhere on the plan, which is exactly the swap the exact
+    * profiler's scaladoc documents for cluster scale.
+    *
+    * Honest cost accounting (SCALE r12: 4.8s → 47.8s, a LINEAR 10.0x,
+    * vs the exact profiler's 1.2s → 10.5s): the approx path trades
+    * shuffle volume for map-side CPU — one portable md5 per (row ×
+    * column) cell (~66M digests at sf1) vs the exact plan's EXPAND of
+    * n·cols rows through the shuffle. On single-node local[32] there is
+    * no network, so the md5 constant dominates and the exact plan wins;
+    * on a cluster the ≤ cols·64-row exchange is the scalable side. The
+    * md5 is the cross-engine gate discipline, not a production choice —
+    * a deployment swaps in xxhash64 (≥10x cheaper per digest) without
+    * touching the plan shape — [[XxHash60]], exercised by
+    * `profile_lineitem_approx_fast` and ProfileFastHashSpec. */
   def profileLineitemApprox(spark: SparkSession, dir: String): DataFrame =
     profileHll(Tables.lineitem(spark, dir))
 
-  /** The PRODUCTION-HASH profile, gated (r12 verdict item 1; r14 item 1
-    * shipped the native-value lever): the same 2-scan /
-    * ≤cols·64-row-shuffle sketch plan as `profile_lineitem_approx` but
-    * hashing NATIVE column values with ordinal-seeded codegen xxhash64
-    * ([[nativeCell60]]) — no md5 digest AND no per-cell canonical-string
-    * materialization (the canon concat alone was 4.6× the remaining
-    * sketch cost at sf1). xxhash64 digests are Spark-private, so
-    * the DuckDB gate rides (a) the exact base stats, (b) the exact
-    * per-column distinct counts, and (c) `nd_in_envelope` — the
-    * small-range-corrected xxhash64 estimate landing within the HLL
-    * 3·rsd envelope (rsd = 1.04/√64) of the exact count, TRUE for every
-    * column in the oracle. The boolean genuinely depends on the
-    * production sketch (a broken hash or split fails the gate), and the
-    * exact-distinct arm exists ONLY as the gate harness — the deployment
-    * plan is the pure sketch, whose shape ProfileFastHashSpec pins
-    * against the md5 twin (2 scans, no distinct aggregation anywhere). */
   /** SHARED EXACT-DISTINCT GATE CACHE (r13 verdict item 5): the gate's
     * exact per-column distincts, built ONCE per lineitem listing as a
     * managed table and served to the `_fast` gate — the sim family's
@@ -385,6 +369,22 @@ object Profile {
     }
   }
 
+  /** The PRODUCTION-HASH profile, gated (r12 verdict item 1; r14 item 1
+    * shipped the native-value lever): the same 2-scan /
+    * ≤cols·64-row-shuffle sketch plan as `profile_lineitem_approx` but
+    * hashing NATIVE column values with ordinal-seeded codegen xxhash64
+    * ([[nativeCell60]]) — no md5 digest AND no per-cell canonical-string
+    * materialization (the canon concat alone was 4.6× the remaining
+    * sketch cost at sf1). xxhash64 digests are Spark-private, so
+    * the DuckDB gate rides (a) the exact base stats, (b) the exact
+    * per-column distinct counts, and (c) `nd_in_envelope` — the
+    * small-range-corrected xxhash64 estimate landing within the HLL
+    * 3·rsd envelope (rsd = 1.04/√64) of the exact count, TRUE for every
+    * column in the oracle. The boolean genuinely depends on the
+    * production sketch (a broken hash or split fails the gate), and the
+    * exact-distinct arm exists ONLY as the gate harness — the deployment
+    * plan is the pure sketch, whose shape ProfileFastHashSpec pins
+    * against the md5 twin (2 scans, no distinct aggregation anywhere). */
   def profileLineitemApproxFast(spark: SparkSession, dir: String): DataFrame = {
     val li = Tables.lineitem(spark, dir)
     val fast = profileHll(li, nativeValues = true)

@@ -27,6 +27,11 @@ import graft.core.{Artifacts, Tables}
   * float→double products in the same sequential order (list_reduce), so
   * similarity doubles match bit-for-bit.
   *
+  * Every trained quantizer — the coarse k-means cells, the PQ codebook and
+  * the residual PQ codebook — comes from one Lloyd trainer ([[lloyd]]) and
+  * assigns rows through one encoder ([[encode]]); every ranked result
+  * (top-k, ground truth, ADC, kNN vote, recall) is cut by one [[topK]].
+  *
   * Reference: the coarse-quantizer/bucket-probe structure follows the IVF
   * family (Jégou/Douze/Schmid, "Product quantization for nearest neighbor
   * search", TPAMI 2011 — the inverted-file part, without PQ compression).
@@ -43,6 +48,22 @@ object Similarity {
 
   private val pairSim: Column =
     expr("dot_product(qv, embedding)") / (col("qnrm") * col("nrm"))
+
+  /** The `k` first rows of each `part` group under `order`, numbered 1..k
+    * in `rank` — the one ranking step of every top-k, ground-truth, ADC,
+    * vote and recall result here. Every `order` ends on a unique key
+    * (vec_id, cid or label), so the cut is deterministic and matches the
+    * oracle's ROW_NUMBER. */
+  private def topK(df: DataFrame, k: Int, part: Seq[String], order: Column*): DataFrame =
+    df.withColumn("rank", row_number().over(
+        Window.partitionBy(part.map(col): _*).orderBy(order: _*)))
+      .filter(col("rank") <= k)
+
+  /** Cosine ranking: most similar first, ties to the smaller vec_id. */
+  private val bySim: Seq[Column] = Seq(col("sim").desc, col("vec_id"))
+
+  /** ADC ranking: smallest approximate distance first, ties to vec_id. */
+  private val byAdc: Seq[Column] = Seq(col("adc"), col("vec_id"))
 
   /** (vec_id, embedding, nrm, bucket): the hyperplane-LSH bucket assignment
     * shared by [[topkLsh]] and [[embeddingLshDedup]]. The plane-sign matrix
@@ -94,19 +115,22 @@ object Similarity {
     * n/B), linear in corpus size; the all-pairs GRAPH need (full knn
     * graph) is the banded dedup family's job ([[embeddingLshDedup]]),
     * which emits sparse threshold pairs, not per-vector top-k. */
-  def topkBucketed(spark: SparkSession, dir: String): DataFrame = {
-    val emb = normed(spark, dir)
+  def topkBucketed(spark: SparkSession, dir: String): DataFrame =
+    cellTopK(normed(spark, dir), "label", 5)
+
+  /** Top-`k` cosine neighbors of each query of the bounded batch (vec_id <
+    * 2000, see [[topkBucketed]]) among the other vectors of its `cell`:
+    * the shared plan of the label-bucket, LSH and trained-IVF searches,
+    * one bucket join on the cell key. */
+  private def cellTopK(emb: DataFrame, cell: String, k: Int): DataFrame = {
     val q = emb.filter(col("vec_id") < 2000)
-      .select(col("label"), col("vec_id").as("query_id"),
+      .select(col(cell), col("vec_id").as("query_id"),
         col("embedding").as("qv"), col("nrm").as("qnrm"))
-    val c = emb.select(col("label"), col("vec_id"), col("embedding"), col("nrm"))
-    q.join(c, Seq("label"))
-      .filter(col("vec_id") =!= col("query_id"))
-      .select(col("query_id"), col("label"), col("vec_id"), pairSim.as("sim"))
-      .withColumn("rank", row_number().over(
-        Window.partitionBy(col("query_id")).orderBy(col("sim").desc, col("vec_id"))))
-      .filter(col("rank") <= 5)
-      .select(col("query_id"), col("label"), col("vec_id"), col("sim"), col("rank"))
+    val c = emb.select(col(cell), col("vec_id"), col("embedding"), col("nrm"))
+    topK(q.join(c, Seq(cell))
+        .filter(col("vec_id") =!= col("query_id"))
+        .select(col("query_id"), col(cell), col("vec_id"), pairSim.as("sim")),
+      k, Seq("query_id"), bySim: _*)
       .orderBy("query_id", "rank")
   }
 
@@ -152,19 +176,19 @@ object Similarity {
   private def exactNeighbors(spark: SparkSession, dir: String): DataFrame = {
     Artifacts.table(spark, dir, "embeddings", "graft_simgt", "query_id") {
       val emb = normed(spark, dir)
-      val q = emb.filter(col("vec_id") < KnnProbeN ||
-          (col("vec_id") % 5 === 0 && col("vec_id") < 1000))
+      val q = emb.filter(col("vec_id") < KnnProbeN || recallSample(col("vec_id")))
         .select(col("vec_id").as("query_id"), col("label").as("true_label"),
           col("embedding").as("qv"), col("nrm").as("qnrm"))
-      emb.join(broadcast(q), col("vec_id") =!= col("query_id"))
-        .select(col("query_id"), col("true_label"), col("vec_id"),
-          col("label"), pairSim.as("sim"))
-        .withColumn("rank", row_number().over(
-          Window.partitionBy(col("query_id"))
-            .orderBy(col("sim").desc, col("vec_id"))))
-        .filter(col("rank") <= GroundTruthK)
+      topK(emb.join(broadcast(q), col("vec_id") =!= col("query_id"))
+          .select(col("query_id"), col("true_label"), col("vec_id"),
+            col("label"), pairSim.as("sim")),
+        GroundTruthK, Seq("query_id"), bySim: _*)
     }
   }
+
+  /** The recall query sample: every 5th vector, vec_id < 1000 (a bounded
+    * ≤ 200-query sample, see [[annRecall]]). */
+  private def recallSample(id: Column): Column = id % 5 === 0 && id < 1000
 
   /** Cached ground-truth depth: 10 covers every consumer ([[topkExact]]
     * reads the full 10, the vote/recall family takes rank ≤ 5 / ≤ 3
@@ -175,9 +199,14 @@ object Similarity {
     * vec_id) pairs for the vec_id % 5 = 0, < 1000 probe set. */
   private def exactTop3Sample(spark: SparkSession, dir: String): DataFrame =
     exactNeighbors(spark, dir)
-      .filter(col("query_id") % 5 === 0 && col("query_id") < 1000 &&
-        col("rank") <= 3)
+      .filter(recallSample(col("query_id")) && col("rank") <= 3)
       .select("query_id", "vec_id")
+
+  /** The classifier-batch slice of [[exactNeighbors]]: the exact top-5
+    * neighbors of every probe vec_id < [[KnnProbeN]]. */
+  private def exactTop5Probes(spark: SparkSession, dir: String): DataFrame =
+    exactNeighbors(spark, dir)
+      .filter(col("query_id") < KnnProbeN && col("rank") <= 5)
 
   /** Embedding-cosine near-duplicate pairs: the exact baseline at
     * threshold 0.5 (this synthetic corpus's near-dup ceiling — vectors
@@ -210,21 +239,8 @@ object Similarity {
     * planes are pure functions of (plane, dim) — and stays exactly
     * oracle-checkable because both engines fold the same ±v_i terms in the
     * same order, so even the proj > 0 sign boundaries agree bit-for-bit. */
-  def topkLsh(spark: SparkSession, dir: String): DataFrame = {
-    val emb = lshBucketed(spark, dir)
-    // bounded query batch — see topkBucketed's scaladoc for the rationale
-    val q = emb.filter(col("vec_id") < 2000)
-      .select(col("bucket"), col("vec_id").as("query_id"),
-        col("embedding").as("qv"), col("nrm").as("qnrm"))
-    val c = emb.select(col("bucket"), col("vec_id"), col("embedding"), col("nrm"))
-    q.join(c, Seq("bucket"))
-      .filter(col("vec_id") =!= col("query_id"))
-      .select(col("query_id"), col("bucket"), col("vec_id"), pairSim.as("sim"))
-      .withColumn("rank", row_number().over(
-        Window.partitionBy(col("query_id")).orderBy(col("sim").desc, col("vec_id"))))
-      .filter(col("rank") <= 3)
-      .orderBy("query_id", "rank")
-  }
+  def topkLsh(spark: SparkSession, dir: String): DataFrame =
+    cellTopK(lshBucketed(spark, dir), "bucket", 3)
 
   /** Embedding near-dup pairs through the LSH candidate generator — the
     * scale path [[embeddingNearDup]]'s scaladoc promises: only vectors in
@@ -319,101 +335,131 @@ object Similarity {
         math.min(256L, math.max(8L, n / 1000L)).toInt)
     }.intValue()
 
-  /** TRAINED coarse quantizer: k-means (k = [[ivfK]] corpus-scaled
-    * cells, 2 Lloyd iterations, deterministic init = vectors 0..k−1) —
-    * the training step [[topkBucketed]]
-    * assumes precomputed and [[topkLsh]] avoids. Exactly oracle-checkable
-    * because every step is determinized: centroid means come from exact
-    * fixed-point BIGINT sums (Σ round-half-up(v·10⁶)) — never a float sum
-    * whose accumulation order could differ — and distances fold identical
-    * IEEE terms in identical order on both engines, so even argmin
-    * boundaries agree bit-for-bit; ties break on centroid id.
+  /** A trained quantizer: per subspace, its cells as (cid, centroid) in
+    * cid order. */
+  private type Codebook = Map[Int, Array[(Int, Array[Double])]]
+
+  /** Lloyd training of a quantizer over the vector column `vec` of `vecs`
+    * (vec_id, vec): `subspaces` slices of `width` components, each with
+    * its own `k` cells — the coarse k-means is 1 subspace × 64, PQ and
+    * residual PQ 4 × 16. Deterministic init (cell cid of subspace s = the
+    * s-slice of vector cid < k), one assignment to the nearest cell with
+    * ties on the cid, one update, then [[encode]] assigns every row to the
+    * trained cells — two assignments in all, as the oracle's unrolled
+    * chains. Exactly oracle-checkable because every step is determinized:
+    * centroid means come from exact fixed-point BIGINT sums (Σ
+    * round-half-up(v·10⁶), divided once) — never a float sum whose
+    * accumulation order could differ — and distances fold identical IEEE
+    * terms in identical order on both engines, so even argmin boundaries
+    * agree bit-for-bit.
     *
-    * Scale shape per iteration: assignment is a broadcast of k tiny
-    * centroid rows against one corpus scan (no shuffle of vectors), and
-    * the update is one partial-aggregated (cid, component) hash agg —
-    * exactly how distributed k-means is deployed; iterations are a fixed
-    * small constant (quantizer training, not convergence-chasing). */
+    * Scale shape: the subspace is one more grouping key, so every
+    * subspace trains in ONE pipeline — the assignment is a broadcast of
+    * k·subspaces tiny centroid rows against one scan (no shuffle of
+    * vectors) and the update one partial-aggregated (s, cid, component)
+    * hash agg, exactly how distributed k-means is deployed. The codebook
+    * is collected and memoized per embeddings listing under `name`
+    * ([[graft.core.Artifacts.model]]), the way a deployed index trains
+    * once at ingest: every query and bench rep starts from it. */
+  private def lloyd(spark: SparkSession, dir: String, name: String,
+      vecs: DataFrame, vec: String, subspaces: Int, width: Int, k: Int): Codebook =
+    Artifacts.model(spark, dir, name, "embeddings") {
+      val init = vecs.filter(col("vec_id") < k)
+        .select(col("vec_id").cast("int").as("cid"), explode(expr(
+          s"""transform(sequence(0, ${subspaces - 1}), s -> named_struct(
+             |  's', s,
+             |  'c', slice(transform($vec, x -> cast(x as double)), s*$width+1, $width)))"""
+            .stripMargin)).as("sc"))
+        .select(col("sc.s").as("s"), col("cid"), col("sc.c").as("c"))
+      val xi = s"cast($vec[s*$width + i] as double)"
+      val assigned = topK(
+        vecs.select(col("vec_id"), col(vec)).crossJoin(broadcast(init))
+          .withColumn("dist", expr(s"aggregate(sequence(0, ${width - 1}), " +
+            s"cast(0.0 as double), (acc, i) -> acc + ($xi - c[i]) * ($xi - c[i]))")),
+        1, Seq("vec_id", "s"), col("dist"), col("cid"))
+      assigned
+        .select(col("s"), col("cid"), posexplode(expr(s"slice($vec, s*$width+1, $width)")))
+        .toDF("s", "cid", "i", "v")
+        .groupBy(col("s"), col("cid"), col("i"))
+        .agg(
+          sum(expr("cast(floor(cast(v as double) * 1000000.0d + 0.5d) as bigint)")).as("ss"),
+          count(lit(1)).as("n"))
+        .withColumn("m", col("ss").cast("double") / 1000000.0 / col("n"))
+        .groupBy(col("s"), col("cid"))
+        .agg(expr("transform(array_sort(collect_list(struct(i, m))), x -> x.m)").as("c"))
+        .collect()
+        .groupBy(_.getInt(0))
+        .map { case (s, rows) =>
+          s -> rows.map(r => (r.getInt(1), r.getSeq[Double](2).toArray)).sortBy(_._1)
+        }
+    }
+
+  /** The cids of `cells`, in codebook order. */
+  private def cidArr(cells: Array[(Int, Array[Double])]): Column =
+    array(cells.toSeq.map(c => lit(c._1)): _*)
+
+  /** Squared distances of subspace `s` of the vector column `vec` to every
+    * cell of that subspace of `cb`, in cid order; the slice width is the
+    * centroids' length. The codebook rides as reference metadata of ONE
+    * native codegen expression ([[graft.functions.CentroidSqDists]];
+    * bit-exact — no string round trip, no literal tree): the earlier
+    * transform(sequence)/aggregate HOF fold computed the same values, but
+    * HOFs are CodegenFallback, so every row paid k·64 BOXED lambda steps —
+    * with the corpus-scaled k that interpreted constant grew 3× at the 10×
+    * probe (sim_ivf_kmeans 8.1 → 24.8 s at sf1, r16; sim_pq 3.39 → 0.80 s).
+    * CentroidSqDists runs one tight compiled double loop with the
+    * IDENTICAL ascending-component IEEE accumulation, so every gated hash
+    * is unchanged. */
+  private def subspaceDists(vec: String, cb: Codebook, s: Int): Column = {
+    val cells = cb(s)
+    val w = cells.head._2.length
+    GraftPlanShim.column(graft.functions.CentroidSqDists(
+      GraftPlanShim.expression(expr(s"slice($vec, ${s * w} + 1, $w)")),
+      cells.toSeq.map(_._2.toSeq)))
+  }
+
+  /** Assigns every row of `df` to the trained cells of each subspace s of
+    * `cb`, map-side: `<p>dists<s>` (the distances of [[subspaceDists]]),
+    * `<p>d<s>` (their minimum) and `<p>code<s>` (the cid of the FIRST
+    * minimum: dists are in ascending-cid order, so array_position-of-min
+    * is exactly the oracle's ORDER BY dist, cid tie-break). The trained
+    * codebook is tiny collected metadata, the IVF/PQ "codebook", so the
+    * assignment costs one codegen'd argmin per row and subspace: no
+    * crossJoin, no window, no shuffle, and a downstream self-join does
+    * not re-run training per branch. */
+  private def encode(df: DataFrame, vec: String, cb: Codebook, p: String): DataFrame =
+    (0 until cb.size).foldLeft(df) { case (acc, s) =>
+      acc.withColumn(s"${p}dists$s", subspaceDists(vec, cb, s))
+        .withColumn(s"${p}d$s", array_min(col(s"${p}dists$s")))
+        .withColumn(s"${p}code$s", element_at(cidArr(cb(s)),
+          array_position(col(s"${p}dists$s"), col(s"${p}d$s")).cast("int")))
+    }
+
+  /** TRAINED coarse quantizer: k-means with k = [[ivfK]] corpus-scaled
+    * cells and deterministic init = vectors 0..k−1, trained by [[lloyd]]
+    * (1 subspace × 64) — the training step [[topkBucketed]] assumes
+    * precomputed and [[topkLsh]] avoids. Per vector (over [[normed]], so
+    * every cosine consumer has its norm): `cid`, `dist` and `cells`, the
+    * (dist, cid)-sorted cell ranking — struct array_sort orders by field
+    * position, exactly the oracle's ORDER BY dist, cid — kept on every row
+    * so nprobe > 1 consumers ([[probedCells]]) can take their top-r cells
+    * without re-deriving the codebook. */
   private def kmeansAssigned(spark: SparkSession, dir: String): DataFrame =
     kmeansModel(spark, dir)._1
 
-  /** [[kmeansAssigned]] plus the collected trained centroid table — the
-    * residual quantizer ([[ivfadcResidual]]) needs the centroids
-    * themselves, not just the assignment. */
+  /** [[kmeansAssigned]] plus the trained centroid table — the residual
+    * quantizer ([[pqResidualAssigned]]) needs the centroids themselves,
+    * not just the assignment. */
   private def kmeansModel(spark: SparkSession, dir: String)
       : (DataFrame, Array[(Int, Array[Double])]) = {
-    val emb = Tables.embeddings(spark, dir)
-    val init = emb.filter(col("vec_id") < ivfK(spark, dir))
-      .select(col("vec_id").cast("int").as("cid"),
-        expr("transform(embedding, x -> cast(x as double))").as("c"))
-
-    def assign(cents: DataFrame): DataFrame =
-      emb.crossJoin(broadcast(cents))
-        .withColumn("dist", expr(
-          """aggregate(sequence(0, 63), cast(0.0 as double),
-            |  (acc, i) -> acc + (cast(embedding[i] as double) - c[i])
-            |                * (cast(embedding[i] as double) - c[i]))""".stripMargin))
-        .withColumn("rn", row_number().over(
-          Window.partitionBy(col("vec_id")).orderBy(col("dist"), col("cid"))))
-        .filter(col("rn") === 1)
-        .select(col("vec_id"), col("label"), col("embedding"), col("cid"), col("dist"))
-
-    def update(assigned: DataFrame): DataFrame =
-      assigned
-        .select(col("cid"), posexplode(col("embedding")))
-        .toDF("cid", "i", "v")
-        .groupBy(col("cid"), col("i"))
-        .agg(
-          sum(expr("cast(floor(cast(v as double) * 1000000.0d + 0.5d) as bigint)")).as("s"),
-          count(lit(1)).as("n"))
-        .withColumn("m", col("s").cast("double") / 1000000.0 / col("n"))
-        .groupBy(col("cid"))
-        .agg(expr("transform(array_sort(collect_list(struct(i, m))), x -> x.m)").as("c"))
-
-    // Materialize the TRAINED centroid table — k tiny rows of quantizer
-    // metadata, the IVF "codebook". Collecting it (like any dim lookup)
-    // makes the final assignment a pure map-side expression, so a
-    // downstream self-join doesn't re-run training per branch and the
-    // assignment costs one codegen'd argmin per row, no crossJoin, no
-    // window, no shuffle. Training itself (both Lloyd passes) runs fully
-    // distributed — and exactly ONCE PER EMBEDDINGS LISTING per JVM: a
-    // dozen sim queries (and every bench rep) start from the same coarse
-    // model, so the centroid table memoizes ([[graft.core.Artifacts.model]])
-    // the way a deployed IVF index trains once at ingest.
-    val cents: Array[(Int, Array[Double])] =
-      Artifacts.model(spark, dir, "kmeans", "embeddings") {
-        update(assign(init))
-          .collect()
-          .map(r => (r.getInt(0), r.getSeq[Double](1).toArray))
-          .sortBy(_._1)
-      }
-
-    // The codebook rides as reference metadata of ONE native codegen
-    // expression (bit-exact — no string round trip, no literal tree):
-    // the earlier transform(sequence)/aggregate HOF fold computed the
-    // same values but HOFs are CodegenFallback, so every row paid k·64
-    // BOXED lambda steps — with the corpus-scaled k that interpreted
-    // constant grew 3× at the 10× probe (sim_ivf_kmeans 8.1 → 24.8 s at
-    // sf1, r16). CentroidSqDists runs one tight compiled double loop
-    // with the IDENTICAL ascending-component IEEE accumulation, so every
-    // gated hash is unchanged. dists stays in ascending-cid order, so
-    // array_position-of-min picks the FIRST minimum — exactly the
-    // oracle's ORDER BY dist, cid tiebreak.
-    val cidArr: Column = array(cents.toSeq.map(c => lit(c._1)): _*)
-    val dists: Column = centroidDists(col("embedding"), cents)
-    val assigned = emb
-      .withColumn("dists", dists)
-      .withColumn("dist", array_min(col("dists")))
-      .withColumn("cid",
-        element_at(cidArr, array_position(col("dists"), col("dist")).cast("int")))
-      .select(col("vec_id"), col("label"), col("embedding"), col("cid"), col("dist"),
-        // (dist, cid)-sorted cell ranking — struct array_sort orders by
-        // field position, exactly the oracle's ORDER BY dist, cid. Kept
-        // on every row so nprobe > 1 consumers ([[ivfRecall]]) can slice
-        // their top-r cells without re-deriving the codebook.
-        array_sort(zip_with(col("dists"), cidArr,
+    val emb = normed(spark, dir)
+    val cb = lloyd(spark, dir, "kmeans", emb, "embedding", 1, 64, ivfK(spark, dir))
+    val assigned = encode(emb, "embedding", cb, "")
+      .select(col("vec_id"), col("label"), col("embedding"), col("nrm"),
+        col("code0").as("cid"), col("d0").as("dist"),
+        array_sort(zip_with(col("dists0"), cidArr(cb(0)),
           (d, c) => struct(d.as("dist"), c.as("cid")))).as("cells"))
-    (assigned, cents)
+    (assigned, cb(0))
   }
 
   /** Final k-means cell assignment per vector (2 trained iterations),
@@ -429,22 +475,8 @@ object Similarity {
   /** IVF search over the TRAINED cells: top-3 cosine neighbors within each
     * vector's k-means cell — [[topkBucketed]] with a real trained quantizer
     * instead of the label stand-in. Bucket join on one int key. */
-  def topkIvfTrained(spark: SparkSession, dir: String): DataFrame = {
-    val asg = kmeansAssigned(spark, dir)
-      .withColumn("nrm", expr("sqrt(dot_product(embedding, embedding))"))
-    // bounded query batch — see topkBucketed's scaladoc for the rationale
-    val q = asg.filter(col("vec_id") < 2000)
-      .select(col("cid"), col("vec_id").as("query_id"),
-        col("embedding").as("qv"), col("nrm").as("qnrm"))
-    val c = asg.select(col("cid"), col("vec_id"), col("embedding"), col("nrm"))
-    q.join(c, Seq("cid"))
-      .filter(col("vec_id") =!= col("query_id"))
-      .select(col("query_id"), col("cid"), col("vec_id"), pairSim.as("sim"))
-      .withColumn("rank", row_number().over(
-        Window.partitionBy(col("query_id")).orderBy(col("sim").desc, col("vec_id"))))
-      .filter(col("rank") <= 3)
-      .orderBy("query_id", "rank")
-  }
+  def topkIvfTrained(spark: SparkSession, dir: String): DataFrame =
+    cellTopK(kmeansAssigned(spark, dir), "cid", 3)
 
   /** Product quantization (Jégou/Douze/Schmid, "Product quantization for
     * nearest neighbor search", TPAMI 2011) — the codebook half that
@@ -455,19 +487,11 @@ object Similarity {
     * 0..3), and every vector compresses to 4 codes (8 bits here, 4·log₂k
     * in general) plus a reconstruction MSE.
     *
-    * All four subspace quantizers train in ONE distributed pipeline —
-    * subspace id is just another grouping key, so the assignment is one
-    * broadcast of 16 tiny centroid rows against one corpus scan and the
-    * update one (s, cid, component) hash agg, exactly [[kmeansAssigned]]'s
-    * shape with a wider key. Determinism discipline is identical: exact
-    * fixed-point centroid sums, in-order IEEE distance folds, first-min
-    * argmin = the oracle's (dist, cid) tiebreak. The trained codebook
-    * (4·4·16 doubles) rides back into the final per-row assignment as
-    * [[graft.functions.CentroidSqDists]] reference metadata over the
-    * subspace slice (r16: the same codegen treatment as the coarse
-    * assignment — the per-(row,subspace) HOF fold was interpreted and
-    * cost sim_pq 3.39 s isolated at sf1 vs 0.80 s native) — and the
-    * total MSE adds the four subspace minima in fixed subspace order. */
+    * All four subspace quantizers train in ONE distributed pipeline — the
+    * coarse quantizer's own [[lloyd]] trainer with 4 subspaces instead of
+    * 1 — and the trained codebook (4·4·16 doubles) assigns every row
+    * map-side through [[encode]]; the total MSE adds the four subspace
+    * minima in fixed subspace order. */
   def productQuantize(spark: SparkSession, dir: String): DataFrame = {
     val (withDists, _) = pqAssigned(spark, dir)
     withDists
@@ -478,65 +502,12 @@ object Similarity {
   }
 
   /** Trains the PQ codebook and assigns codes — shared by [[productQuantize]]
-    * and [[topkPqAdc]]. Returns (per-vector frame with code/dist columns,
-    * codebook as s -> cid-sorted (cid, centroid)). */
-  private def pqAssigned(spark: SparkSession, dir: String)
-      : (DataFrame, Map[Int, Array[(Int, Array[Double])]]) = {
+    * and the ADC queries. Returns (per-vector frame with code/dist columns,
+    * codebook). */
+  private def pqAssigned(spark: SparkSession, dir: String): (DataFrame, Codebook) = {
     val emb = Tables.embeddings(spark, dir)
-    val init = emb.filter(col("vec_id") <= 3)
-      .select(col("vec_id").cast("int").as("cid"), explode(expr(
-        """transform(sequence(0, 3), s -> named_struct(
-          |  's', s,
-          |  'c', slice(transform(embedding, x -> cast(x as double)), s*16+1, 16)))"""
-          .stripMargin)).as("sc"))
-      .select(col("sc.s").as("s"), col("cid"), col("sc.c").as("c"))
-
-    def assign(cents: DataFrame): DataFrame =
-      emb.crossJoin(broadcast(cents))
-        .withColumn("dist", expr(
-          """aggregate(sequence(0, 15), cast(0.0 as double),
-            |  (acc, i) -> acc + (cast(embedding[s*16 + i] as double) - c[i])
-            |                * (cast(embedding[s*16 + i] as double) - c[i]))"""
-            .stripMargin))
-        .withColumn("rn", row_number().over(
-          Window.partitionBy(col("vec_id"), col("s"))
-            .orderBy(col("dist"), col("cid"))))
-        .filter(col("rn") === 1)
-        .select(col("vec_id"), col("embedding"), col("s"), col("cid"))
-
-    val trained = assign(init)
-      .select(col("s"), col("cid"),
-        posexplode(expr("slice(embedding, s*16+1, 16)")))
-      .toDF("s", "cid", "i", "v")
-      .groupBy(col("s"), col("cid"), col("i"))
-      .agg(
-        sum(expr("cast(floor(cast(v as double) * 1000000.0d + 0.5d) as bigint)")).as("ss"),
-        count(lit(1)).as("n"))
-      .withColumn("m", col("ss").cast("double") / 1000000.0 / col("n"))
-      .groupBy(col("s"), col("cid"))
-      .agg(expr("transform(array_sort(collect_list(struct(i, m))), x -> x.m)").as("c"))
-
-    // Codebook: Map s -> (cids sorted, centroid matrix), 256 doubles
-    // total — memoized per corpus like the coarse model (train once,
-    // every ADC/PQ query and bench rep starts from the codebook).
-    val cb: Map[Int, Array[(Int, Array[Double])]] =
-      Artifacts.model(spark, dir, "pq", "embeddings") {
-        trained.collect()
-          .map(r => (r.getInt(0), r.getInt(1), r.getSeq[Double](2).toArray))
-          .groupBy(_._1)
-          .map { case (s, rows) => s -> rows.map(t => (t._2, t._3)).sortBy(_._1) }
-      }
-
-    val withDists = (0 until 4).foldLeft(emb) { case (df, s) =>
-      val cells = cb(s)
-      val cidArr = array(cells.toSeq.map(c => lit(c._1)): _*)
-      val dists = centroidDists(subspace("embedding", s), cells)
-      df.withColumn(s"dists$s", dists)
-        .withColumn(s"d$s", array_min(col(s"dists$s")))
-        .withColumn(s"code$s", element_at(cidArr,
-          array_position(col(s"dists$s"), col(s"d$s")).cast("int")))
-    }
-    (withDists, cb)
+    val cb = lloyd(spark, dir, "pq", emb, "embedding", 4, 16, 4)
+    (encode(emb, "embedding", cb, ""), cb)
   }
 
   /** PQ search by ASYMMETRIC DISTANCE COMPUTATION (ADC; Jégou et al. 2011
@@ -557,43 +528,28 @@ object Similarity {
     val queriesDf0 = Tables.embeddings(spark, dir)
       .filter(col("vec_id") <= 9)
       .select(col("vec_id").as("query_id"), col("embedding"))
-    broadcast(adcDistTables(queriesDf0, cb).drop("embedding")).crossJoin(codes)
-      .filter(col("vec_id") =!= col("query_id"))
-      .select(col("query_id"), col("vec_id"),
-        adc(cb).as("adc"))
-      .withColumn("rank", row_number().over(
-        Window.partitionBy(col("query_id")).orderBy(col("adc"), col("vec_id"))))
-      .filter(col("rank") <= 3)
+    topK(broadcast(adcDistTables(queriesDf0, cb).drop("embedding")).crossJoin(codes)
+        .filter(col("vec_id") =!= col("query_id"))
+        .select(col("query_id"), col("vec_id"), adc(cb).as("adc")),
+      3, Seq("query_id"), byAdc: _*)
       .orderBy("query_id", "rank")
   }
-
-  /** The [[graft.functions.CentroidSqDists]] column: squared distances
-    * of the vectors in `v` to every centroid of `cents`, in codebook order. */
-  private def centroidDists(v: Column, cents: Array[(Int, Array[Double])]): Column =
-    GraftPlanShim.column(graft.functions.CentroidSqDists(
-      GraftPlanShim.expression(v), cents.toSeq.map(_._2.toSeq)))
-
-  /** The 16-wide PQ subspace `s` of the vector column `vec`. */
-  private def subspace(vec: String, s: Int): Column =
-    expr(s"slice($vec, ${s * 16} + 1, 16)")
 
   /** Per query: distance table `<dt>_s[j]` from subspace s of the vector
     * column `vec` to every codeword of that subspace — the
     * asymmetric-distance precompute every ADC query shares. */
-  private def adcDistTables(queriesDf: DataFrame,
-      cb: Map[Int, Array[(Int, Array[Double])]],
+  private def adcDistTables(queriesDf: DataFrame, cb: Codebook,
       vec: String = "embedding", dt: String = "dt"): DataFrame =
-    (0 until 4).foldLeft(queriesDf) { case (df, s) =>
-      df.withColumn(s"$dt$s", centroidDists(subspace(vec, s), cb(s)))
+    (0 until cb.size).foldLeft(queriesDf) { case (df, s) =>
+      df.withColumn(s"$dt$s", subspaceDists(vec, cb, s))
     }
 
   /** Approximate distance Σ_s `<dt>_s[<code>_s]`, added in fixed subspace
     * order. Each term is a CASE-chain lookup of the table by the database
     * row's code (cid values may be sparse if a cell emptied, so lookup goes
     * through the cid list). */
-  private def adc(cb: Map[Int, Array[(Int, Array[Double])]],
-      code: String = "code", dt: String = "dt"): Column =
-    (0 until 4).map { s =>
+  private def adc(cb: Codebook, code: String = "code", dt: String = "dt"): Column =
+    (0 until cb.size).map { s =>
       val cells = cb(s)
       cells.zipWithIndex.tail.foldLeft(
         when(col(s"$code$s") === cells.head._1,
@@ -630,14 +586,11 @@ object Similarity {
       .filter(col("vec_id") <= 9)
       .join(coarse, "vec_id")
       .select(col("vec_id").as("query_id"), col("cid"), col("embedding"))
-    broadcast(adcDistTables(queriesDf0, cb).drop("embedding"))
-      .join(corpus, Seq("cid"))
-      .filter(col("vec_id") =!= col("query_id"))
-      .select(col("query_id"), col("cid"), col("vec_id"),
-        adc(cb).as("adc"))
-      .withColumn("rank", row_number().over(
-        Window.partitionBy(col("query_id")).orderBy(col("adc"), col("vec_id"))))
-      .filter(col("rank") <= 3)
+    topK(broadcast(adcDistTables(queriesDf0, cb).drop("embedding"))
+        .join(corpus, Seq("cid"))
+        .filter(col("vec_id") =!= col("query_id"))
+        .select(col("query_id"), col("cid"), col("vec_id"), adc(cb).as("adc")),
+      3, Seq("query_id"), byAdc: _*)
       .orderBy("query_id", "rank")
   }
 
@@ -649,69 +602,35 @@ object Similarity {
     val centMatrix: Column = array(cents.toSeq.map { case (_, c) =>
       array(c.toSeq.map(lit): _*)
     }: _*)
-    val cidArr: Column = array(cents.toSeq.map(c => lit(c._1)): _*)
     val cvec = element_at(centMatrix,
-      array_position(cidArr, col("cid")).cast("int"))
+      array_position(cidArr(cents), col("cid")).cast("int"))
     asg.withColumn("rv", transform(sequence(lit(0), lit(63)),
       j => element_at(col("embedding"), (j + 1).cast("int")).cast("double") -
         element_at(cvec, (j + 1).cast("int"))))
   }
 
-  /** PQ training over the RESIDUAL frame — [[pqAssigned]]'s exact
-    * pipeline (deterministic init = vectors 0..3, one Lloyd iteration
-    * with fixed-point centroid means, first-min argmin) re-run on the
-    * `rv` column. Kept separate from pqAssigned rather than
-    * parameterized so the three raw-code gates keep their byte-exact
-    * plans. Returns (frame with rcode/rd columns, residual codebook). */
-  private def pqResidualAssigned(res: DataFrame, spark: SparkSession,
-      dir: String)
-      : (DataFrame, Map[Int, Array[(Int, Array[Double])]]) = {
-    // `res` carries the COARSE cell as `cid`; the PQ cells reuse that
-    // column name inside training, so train on a trimmed projection.
-    val rv0 = res.select(col("vec_id"), col("rv"))
-    val init = rv0.filter(col("vec_id") <= 3)
-      .select(col("vec_id").cast("int").as("cid"), explode(expr(
-        """transform(sequence(0, 3), s -> named_struct(
-          |  's', s, 'c', slice(rv, s*16+1, 16)))""".stripMargin)).as("sc"))
-      .select(col("sc.s").as("s"), col("cid"), col("sc.c").as("c"))
-    val assigned = rv0.crossJoin(broadcast(init))
-      .withColumn("dist", expr(
-        """aggregate(sequence(0, 15), cast(0.0 as double),
-          |  (acc, i) -> acc + (rv[s*16 + i] - c[i]) * (rv[s*16 + i] - c[i]))"""
-          .stripMargin))
-      .withColumn("rn", row_number().over(
-        Window.partitionBy(col("vec_id"), col("s"))
-          .orderBy(col("dist"), col("cid"))))
-      .filter(col("rn") === 1)
-      .select(col("vec_id"), col("rv"), col("s"), col("cid"))
-    val trained = assigned
-      .select(col("s"), col("cid"), posexplode(expr("slice(rv, s*16+1, 16)")))
-      .toDF("s", "cid", "i", "v")
-      .groupBy(col("s"), col("cid"), col("i"))
-      .agg(
-        sum(expr("cast(floor(v * 1000000.0d + 0.5d) as bigint)")).as("ss"),
-        count(lit(1)).as("n"))
-      .withColumn("m", col("ss").cast("double") / 1000000.0 / col("n"))
-      .groupBy(col("s"), col("cid"))
-      .agg(expr("transform(array_sort(collect_list(struct(i, m))), x -> x.m)").as("c"))
-    val cb: Map[Int, Array[(Int, Array[Double])]] =
-      Artifacts.model(spark, dir, "pqres", "embeddings") {
-        trained.collect()
-          .map(r => (r.getInt(0), r.getInt(1), r.getSeq[Double](2).toArray))
-          .groupBy(_._1)
-          .map { case (s, rows) => s -> rows.map(t => (t._2, t._3)).sortBy(_._1) }
-      }
-    val withDists = (0 until 4).foldLeft(res) { case (df, s) =>
-      val cells = cb(s)
-      val cidA = array(cells.toSeq.map(c => lit(c._1)): _*)
-      val dists = centroidDists(subspace("rv", s), cells)
-      df.withColumn(s"rdists$s", dists)
-        .withColumn(s"rd$s", array_min(col(s"rdists$s")))
-        .withColumn(s"rcode$s", element_at(cidA,
-          array_position(col(s"rdists$s"), col(s"rd$s")).cast("int")))
-    }
-    (withDists, cb)
+  /** The RESIDUAL quantizer: PQ trained by [[lloyd]] (4 × 16, k = 4,
+    * init = vectors 0..3) over the `rv` column of the residual frame,
+    * which is checkpointed because training and every consumer read it.
+    * Returns (coarse assignment, coarse centroids, residual frame —
+    * vec_id, coarse `cid`, `rv` — with its rdists/rd/rcode columns,
+    * residual codebook). */
+  private def pqResidualAssigned(spark: SparkSession, dir: String)
+      : (DataFrame, Array[(Int, Array[Double])], DataFrame, Codebook) = {
+    val (asg, kcents) = kmeansModel(spark, dir)
+    val res = residualFrame(asg.select("vec_id", "cid", "embedding"), kcents)
+      .drop("embedding").localCheckpoint()
+    val cb = lloyd(spark, dir, "pqres", res, "rv", 4, 16, 4)
+    (asg, kcents, encode(res, "rv", cb, "r"), cb)
   }
+
+  /** Exact L2 top-3 of each query among its candidate rows (query_id,
+    * vec_id, qv, embedding): the in-order IEEE `sq_dist` fold, ties to
+    * the smaller vec_id. */
+  private def l2Top3(cands: DataFrame): DataFrame =
+    topK(cands.withColumn("l2", expr("sq_dist(qv, embedding)")),
+      3, Seq("query_id"), col("l2"), col("vec_id"))
+      .select("query_id", "vec_id")
 
   /** RESIDUAL-quantized IVFADC vs the raw-vector variant, at equal code
     * size — the accuracy half of the Jégou, Douze & Schmid composition
@@ -740,17 +659,14 @@ object Similarity {
     * scan that assigns codes; training adds one Lloyd pass over the
     * residual frame (same partial-agg shape); nothing new shuffles. */
   def ivfadcResidual(spark: SparkSession, dir: String): DataFrame = {
-    val (asg, kcents) = kmeansModel(spark, dir)
-    val res = residualFrame(asg, kcents).localCheckpoint()
+    val (asg, _, res, resCb) = pqResidualAssigned(spark, dir)
     // raw codes + codebook (shared with sim_pq/sim_topk_pq_adc)
     val (rawDists, rawCb) = pqAssigned(spark, dir)
-    val rawCodes = rawDists.select(col("vec_id"),
-      col("code0"), col("code1"), col("code2"), col("code3"),
-      col("d0"), col("d1"), col("d2"), col("d3"))
-    val (resDists, resCb) = pqResidualAssigned(res, spark, dir)
-    val resCodes = resDists.select(col("vec_id"), col("cid").as("rcid"),
-      col("rcode0"), col("rcode1"), col("rcode2"), col("rcode3"),
-      col("rd0"), col("rd1"), col("rd2"), col("rd3"))
+    def codes(df: DataFrame, p: String, cols: Column*): DataFrame =
+      df.select(cols ++ Seq("code", "d").flatMap(c =>
+        (0 until 4).map(s => col(s"$p$c$s"))): _*)
+    val rawCodes = codes(rawDists, "", col("vec_id"))
+    val resCodes = codes(res, "r", col("vec_id"), col("cid"))
 
     val coarse = asg.select(col("vec_id"), col("cid"), col("embedding"))
     val qRaw = Tables.embeddings(spark, dir).filter(col("vec_id") <= 9)
@@ -759,23 +675,15 @@ object Similarity {
     val qRes = res.filter(col("vec_id") <= 9)
       .select(col("vec_id").as("query_id"), col("cid"), col("rv"))
 
-    // exact within-cell ground truth: in-order IEEE L2 fold
-    val gt = qRaw.select(col("query_id"), col("cid"),
+    // exact within-cell ground truth
+    val gt = l2Top3(qRaw.select(col("query_id"), col("cid"),
         col("embedding").as("qv"))
       .join(coarse.select(col("cid"), col("vec_id"), col("embedding")), Seq("cid"))
-      .filter(col("vec_id") =!= col("query_id"))
-      .withColumn("l2", expr("sq_dist(qv, embedding)"))
-      .withColumn("rank", row_number().over(
-        Window.partitionBy(col("query_id")).orderBy(col("l2"), col("vec_id"))))
-      .filter(col("rank") <= 3)
-      .select(col("query_id"), col("vec_id"))
+      .filter(col("vec_id") =!= col("query_id")))
       .localCheckpoint() // fans into both variants' hit joins
 
-    def top3(adcRanked: DataFrame): DataFrame = adcRanked
-      .withColumn("rank", row_number().over(
-        Window.partitionBy(col("query_id")).orderBy(col("adc"), col("vec_id"))))
-      .filter(col("rank") <= 3)
-      .select(col("query_id"), col("vec_id"))
+    def top3(adcRanked: DataFrame): DataFrame =
+      topK(adcRanked, 3, Seq("query_id"), byAdc: _*).select(col("query_id"), col("vec_id"))
     val rawTop = top3(
       broadcast(adcDistTables(qRaw, rawCb).drop("embedding"))
         .join(rawCodes.join(coarse.select(col("vec_id"), col("cid")), "vec_id"),
@@ -785,7 +693,7 @@ object Similarity {
           adc(rawCb).as("adc")))
     val resTop = top3(
       broadcast(adcDistTables(qRes, resCb, "rv", "rdt").drop("rv"))
-        .join(resCodes.withColumnRenamed("rcid", "cid"), Seq("cid"))
+        .join(resCodes, Seq("cid"))
         .filter(col("vec_id") =!= col("query_id"))
         .select(col("query_id"), col("vec_id"),
           adc(resCb, "rcode", "rdt").as("adc")))
@@ -799,16 +707,47 @@ object Similarity {
           (col("hits").cast("double") / col("n_gt").cast("double")).as("recall"),
           col("err_micro"))
     }
-    val rawErr = rawCodes.select(
-      explode(array(col("d0"), col("d1"), col("d2"), col("d3"))).as("d"))
+    def errMicro(df: DataFrame, p: String): DataFrame = df
+      .select(explode(array((0 until 4).map(s => col(s"${p}d$s")): _*)).as("d"))
       .agg(sum(expr("cast(floor(d * 1000000.0d + 0.5d) as bigint)")).as("err_micro"))
-    val resErr = resCodes.select(
-      explode(array(col("rd0"), col("rd1"), col("rd2"), col("rd3"))).as("d"))
-      .agg(sum(expr("cast(floor(d * 1000000.0d + 0.5d) as bigint)")).as("err_micro"))
-    variantRow("adc_raw", rawTop, rawErr)
-      .unionByName(variantRow("adc_residual", resTop, resErr))
+    variantRow("adc_raw", rawTop, errMicro(rawCodes, ""))
+      .unionByName(variantRow("adc_residual", resTop, errMicro(resCodes, "r")))
       .orderBy("variant")
   }
+
+  /** The nprobe settings every probe curve gates. */
+  private val NProbes = Seq(1, 2)
+
+  /** [[NProbes]] as a one-column (nprobe) frame. */
+  private def nprobes(spark: SparkSession): DataFrame = {
+    import spark.implicits._
+    NProbes.toDF("nprobe")
+  }
+
+  /** One row per (query, probed cell) of the query rows `q`: its `crk`-th
+    * nearest coarse cell `cid`, crk ≤ max [[NProbes]], read from the
+    * (dist, cid)-sorted `cells` ranking [[kmeansAssigned]] keeps on every
+    * row. A curve attaches its nprobe settings by `crk <= nprobe`, so a
+    * probe at nprobe = r searches exactly its r nearest cells. */
+  private def probedCells(q: DataFrame): DataFrame =
+    q.select(col("*"), posexplode(expr(s"slice(cells, 1, ${NProbes.max})")))
+      .select(q.columns.toSeq.filter(_ != "cells").map(col) ++ Seq(
+        (col("pos") + 1).as("crk"), col("col.cid").as("cid")): _*)
+
+  /** Recall@3 accounting: every probe row of `probes` (the `by` columns
+    * and query_id) takes its `hits` (0..3) from `ov`, none counting 0,
+    * and each `by` group (none: one row) tallies queries, hits, full and
+    * zero recalls; `more` aggregates sit between n_hits and n_full. */
+  private def recall3(probes: DataFrame, ov: DataFrame, by: Seq[String],
+      more: Column*): DataFrame =
+    probes.join(ov, by :+ "query_id", "left")
+      .withColumn("hits", coalesce(col("hits"), lit(0L)))
+      .groupBy(by.map(col): _*)
+      .agg(count(lit(1)).as("n_queries"), (sum(col("hits")).as("n_hits") +: more) ++ Seq(
+        sum(when(col("hits") === 3L, 1L).otherwise(0L)).as("n_full"),
+        sum(when(col("hits") === 0L, 1L).otherwise(0L)).as("n_zero")): _*)
+      .withColumn("recall_at_3",
+        col("n_hits").cast("double") / (col("n_queries") * 3))
 
   /** The nprobe/recall CURVE for the residual-quantized IVFADC — the best
     * quantizer in the family finally carries the knob a production user
@@ -837,46 +776,31 @@ object Similarity {
     * 10-query exact ground truth scans the corpus (bounded probe batch,
     * the family-wide baseline cost). */
   def ivfadcResidualNprobe(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
-    val (asg, kcents) = kmeansModel(spark, dir)
-    val res = residualFrame(asg, kcents).localCheckpoint()
-    val (resDists, resCb) = pqResidualAssigned(res, spark, dir)
-    val resCodes = resDists.select(col("vec_id"), col("cid"),
+    val (asg, kcents, res, resCb) = pqResidualAssigned(spark, dir)
+    val resCodes = res.select(col("vec_id"), col("cid"),
       col("rcode0"), col("rcode1"), col("rcode2"), col("rcode3"))
 
     val q0 = asg.filter(col("vec_id") <= 9)
       .select(col("vec_id").as("query_id"), col("embedding"), col("cells"))
-    // one row per (query, probed cell) with the cell's probe rank; the
-    // residual + distance tables are computed once per pair and shared by
-    // every nprobe ≥ rank (the nprobe axis attaches at candidate time)
-    val qCells = q0
-      .select(col("query_id"), col("embedding"),
-        posexplode(expr("slice(cells, 1, 2)")))
-      .select(col("query_id"), col("embedding"),
-        (col("pos") + 1).as("crk"), col("col.cid").as("cid"))
+    // the residual + distance tables are computed once per (query, probed
+    // cell) and shared by every nprobe ≥ crk (the nprobe axis attaches at
+    // candidate time)
+    val qCells = probedCells(q0)
     val qDt = adcDistTables(residualFrame(qCells, kcents), resCb, "rv", "rdt")
       .drop("embedding", "rv")
     val cand = broadcast(qDt).join(resCodes, Seq("cid"))
       .filter(col("vec_id") =!= col("query_id"))
       .select(col("query_id"), col("crk"), col("vec_id"),
         adc(resCb, "rcode", "rdt").as("adc"))
-    val np = Seq(1, 2).toDF("nprobe")
-    val ivf3 = cand.join(broadcast(np), col("crk") <= col("nprobe"))
-      .withColumn("rank", row_number().over(
-        Window.partitionBy(col("nprobe"), col("query_id"))
-          .orderBy(col("adc"), col("vec_id"))))
-      .filter(col("rank") <= 3)
+    val np = nprobes(spark)
+    val ivf3 = topK(cand.join(broadcast(np), col("crk") <= col("nprobe")),
+        3, Seq("nprobe", "query_id"), byAdc: _*)
       .select("nprobe", "query_id", "vec_id")
 
     // exact GLOBAL L2 top-3 — the truth both probe depths chase
-    val gt = broadcast(q0.select(col("query_id"), col("embedding").as("qv")))
+    val gt = l2Top3(broadcast(q0.select(col("query_id"), col("embedding").as("qv")))
       .join(asg.select(col("vec_id"), col("embedding")),
-        col("vec_id") =!= col("query_id"))
-      .withColumn("l2", expr("sq_dist(qv, embedding)"))
-      .withColumn("rk", row_number().over(
-        Window.partitionBy(col("query_id")).orderBy(col("l2"), col("vec_id"))))
-      .filter(col("rk") <= 3)
-      .select("query_id", "vec_id")
+        col("vec_id") =!= col("query_id")))
 
     val ov = ivf3.join(gt, Seq("query_id", "vec_id"))
       .groupBy("nprobe", "query_id").agg(count(lit(1)).as("hits"))
@@ -888,20 +812,11 @@ object Similarity {
         Seq("query_id", "cid"))
       .join(broadcast(np), col("crk") <= col("nprobe"))
       .groupBy("nprobe", "query_id").agg(count(lit(1)).as("reachable"))
-    q0.select("query_id").crossJoin(broadcast(np))
-      .join(ov, Seq("nprobe", "query_id"), "left")
-      .join(reach, Seq("nprobe", "query_id"), "left")
-      .withColumn("hits", coalesce(col("hits"), lit(0L)))
-      .withColumn("reachable", coalesce(col("reachable"), lit(0L)))
-      .groupBy("nprobe")
-      .agg(
-        count(lit(1)).as("n_queries"),
-        sum(col("hits")).as("n_hits"),
-        sum(col("reachable")).as("n_reachable"),
-        sum(when(col("hits") === 3L, 1L).otherwise(0L)).as("n_full"),
-        sum(when(col("hits") === 0L, 1L).otherwise(0L)).as("n_zero"))
-      .withColumn("recall_at_3",
-        col("n_hits").cast("double") / (col("n_queries") * 3))
+    recall3(
+      q0.select("query_id").crossJoin(broadcast(np))
+        .join(reach, Seq("nprobe", "query_id"), "left"),
+      ov, Seq("nprobe"),
+      sum(coalesce(col("reachable"), lit(0L))).as("n_reachable"))
       .withColumn("reachable_at_3",
         col("n_reachable").cast("double") / (col("n_queries") * 3))
       .orderBy("nprobe")
@@ -945,7 +860,6 @@ object Similarity {
     * — test-only surface for BoundedBaselineSpec's exact recompute. */
   private[graft] def semanticDupPairs(spark: SparkSession, dir: String): DataFrame = {
     val asg = kmeansAssigned(spark, dir)
-      .withColumn("nrm", expr("sqrt(dot_product(embedding, embedding))"))
     val a = asg.select(col("cid"), col("vec_id").as("vec_a"),
       col("embedding").as("qv"), col("nrm").as("qnrm"))
     val b = asg.select(col("cid"), col("vec_id").as("vec_b"),
@@ -959,7 +873,6 @@ object Similarity {
   private[graft] def semanticDedupBounded(
       spark: SparkSession, dir: String, repN: Long): DataFrame = {
     val asg = kmeansAssigned(spark, dir)
-      .withColumn("nrm", expr("sqrt(dot_product(embedding, embedding))"))
     val a = asg.select(col("cid"), col("vec_id").as("vec_a"),
       col("embedding").as("qv"), col("nrm").as("qnrm"))
     val b = asg.filter(col("vec_id") < repN)
@@ -1010,18 +923,31 @@ object Similarity {
     val q = emb.filter(col("vec_id") <= 9)
       .select(col("vec_id").as("query_id"), col("embedding").as("qv"),
         col("nrm").as("qnrm"))
-    emb.join(broadcast(q), col("vec_id") =!= col("query_id"))
+    val cands = emb.join(broadcast(q), col("vec_id") =!= col("query_id"))
       .select(col("query_id"), col("vec_id"), col("label"), pairSim.as("sim"))
-      .withColumn("lr", row_number().over(
-        Window.partitionBy(col("query_id"), col("label"))
-          .orderBy(col("sim").desc, col("vec_id"))))
-      .filter(col("lr") === 1)
-      .withColumn("rank", row_number().over(
-        Window.partitionBy(col("query_id")).orderBy(col("sim").desc, col("vec_id"))))
-      .filter(col("rank") <= 5)
+    topK(topK(cands, 1, Seq("query_id", "label"), bySim: _*),
+        5, Seq("query_id"), bySim: _*)
       .select(col("query_id"), col("vec_id"), col("label"), col("sim"), col("rank"))
       .orderBy("query_id", "rank")
   }
+
+  /** Majority label vote over each `part` group's neighbor rows (columns
+    * true_label, label): the most frequent label, ties to the smaller
+    * label, with its `n_votes` — the one vote of the exact and IVF
+    * classifiers. */
+  private def vote(neighbors: DataFrame, part: Seq[String]): DataFrame =
+    topK(neighbors.groupBy((part :+ "true_label" :+ "label").map(col): _*)
+        .agg(count(lit(1)).as("n_votes")),
+      1, part, col("n_votes").desc, col("label"))
+
+  /** The classifier output: [[vote]] per probe over its top-5 `neighbors`,
+    * and whether the prediction recovers the probe's own label. */
+  private def classify(neighbors: DataFrame): DataFrame =
+    vote(neighbors, Seq("query_id"))
+      .select(col("query_id"), col("true_label"), col("label").as("pred_label"),
+        col("n_votes"),
+        (col("label") === col("true_label")).as("correct"))
+      .orderBy("query_id")
 
   /** k-NN label classification over the embedding space (Fix & Hodges
     * 1951; the label-propagation workhorse of weakly-supervised data
@@ -1040,21 +966,8 @@ object Similarity {
     * [[knnClassifyIvf]], which swaps the full scan for
     * [[topkIvfTrained]]'s cell-probe candidate generation with the vote
     * logic unchanged. */
-  def knnClassify(spark: SparkSession, dir: String): DataFrame = {
-    val votes = exactNeighbors(spark, dir)
-      .filter(col("query_id") < KnnProbeN && col("rank") <= 5)
-      .groupBy(col("query_id"), col("true_label"), col("label"))
-      .agg(count(lit(1)).as("n_votes"))
-    votes
-      .withColumn("vr", row_number().over(
-        Window.partitionBy(col("query_id"))
-          .orderBy(col("n_votes").desc, col("label"))))
-      .filter(col("vr") === 1)
-      .select(col("query_id"), col("true_label"), col("label").as("pred_label"),
-        col("n_votes"),
-        (col("label") === col("true_label")).as("correct"))
-      .orderBy("query_id")
-  }
+  def knnClassify(spark: SparkSession, dir: String): DataFrame =
+    classify(exactTop5Probes(spark, dir))
 
   /** PRODUCTION k-NN label classification: [[knnClassify]]'s vote logic
     * over [[topkIvfTrained]]'s candidate generation instead of the
@@ -1070,8 +983,7 @@ object Similarity {
     * on the sphere with geometry-independent labels, so nprobe = 1
     * agreement is bounded (~2.7× chance here); on real label-clustered
     * corpora recall rises steeply with nprobe (probe the r nearest
-    * cells — the standard recall/cost knob this plan exposes by
-    * swapping the argmin for a top-r cell rank).
+    * cells — the standard recall/cost knob [[knnNprobe]] measures).
     *
     * Scale shape — why this is the 100 TB form: candidate pairs are
     * O(probe · cell_size) = O(probe · n/k) instead of O(probe · n); the
@@ -1083,98 +995,57 @@ object Similarity {
     * vocabulary-sized aggs. */
   def knnClassifyIvf(spark: SparkSession, dir: String): DataFrame = {
     val asg = kmeansAssigned(spark, dir)
-      .withColumn("nrm", expr("sqrt(dot_product(embedding, embedding))"))
     val q = asg.filter(col("vec_id") < KnnProbeN)
       .select(col("cid"), col("vec_id").as("query_id"),
         col("label").as("true_label"),
         col("embedding").as("qv"), col("nrm").as("qnrm"))
     val c = asg.select(col("cid"), col("vec_id"), col("label"),
       col("embedding"), col("nrm"))
-    val votes = broadcast(q).join(c, Seq("cid"))
-      .filter(col("vec_id") =!= col("query_id"))
-      .select(col("query_id"), col("true_label"), col("vec_id"), col("label"),
-        pairSim.as("sim"))
-      .withColumn("rank", row_number().over(
-        Window.partitionBy(col("query_id")).orderBy(col("sim").desc, col("vec_id"))))
-      .filter(col("rank") <= 5)
-      .groupBy(col("query_id"), col("true_label"), col("label"))
-      .agg(count(lit(1)).as("n_votes"))
-    votes
-      .withColumn("vr", row_number().over(
-        Window.partitionBy(col("query_id"))
-          .orderBy(col("n_votes").desc, col("label"))))
-      .filter(col("vr") === 1)
-      .select(col("query_id"), col("true_label"), col("label").as("pred_label"),
-        col("n_votes"),
-        (col("label") === col("true_label")).as("correct"))
-      .orderBy("query_id")
+    classify(topK(broadcast(q).join(c, Seq("cid"))
+        .filter(col("vec_id") =!= col("query_id"))
+        .select(col("query_id"), col("true_label"), col("vec_id"), col("label"),
+          pairSim.as("sim")),
+      5, Seq("query_id"), bySim: _*))
   }
 
   /** The CLASSIFIER's nprobe curve: [[knnClassifyIvf]]'s accuracy/cost
     * trade-off measured at nprobe = 1 AND 2 in one gated output — the
     * [[ivfRecall]] pattern applied to VOTES instead of neighbor sets.
     * For each probe (vec_id < [[KnnProbeN]]) and each nprobe r, the IVF
-    * classifier searches the probe's r nearest trained cells (the exact
-    * (dist, cid)-sorted ranking [[kmeansAssigned]] emits on every row),
-    * votes over the within-candidate top-5, and the output aggregates per
-    * nprobe: probes covered, agreement with the EXACT-scan prediction,
-    * and self-label recovery. Gating both points makes the knob a
-    * measured artifact — the r8 verdict's ask — instead of prose: on
-    * label-clustered corpora `n_agree` rises with nprobe toward the
-    * exact scan, and the candidate cost is r·n/k per probe.
+    * classifier searches the probe's r nearest trained cells
+    * ([[probedCells]]), votes over the within-candidate top-5, and the
+    * output aggregates per nprobe: probes covered, agreement with the
+    * EXACT-scan prediction, and self-label recovery. Gating both points
+    * makes the knob a measured artifact — the r8 verdict's ask — instead
+    * of prose: on label-clustered corpora `n_agree` rises with nprobe
+    * toward the exact scan, and the candidate cost is r·n/k per probe.
     *
     * Scale shape: the exact side is one bounded O(probe·n) scan (paid
     * once, the same plan as [[knnClassify]]); the IVF side broadcasts
     * probe×nprobe cell keys against one corpus scan keyed on the 8-value
     * cid; vote aggregation and the final 2-row agg are trivial. */
   def knnNprobe(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
     val asg = kmeansAssigned(spark, dir)
-      .withColumn("nrm", expr("sqrt(dot_product(embedding, embedding))"))
     val q = asg.filter(col("vec_id") < KnnProbeN)
       .select(col("vec_id").as("query_id"), col("label").as("true_label"),
         col("embedding").as("qv"), col("nrm").as("qnrm"), col("cells"))
 
-    def votePred(cands: DataFrame, part: Seq[String]): DataFrame = cands
-      .withColumn("rank", row_number().over(
-        Window.partitionBy(part.map(col): _*)
-          .orderBy(col("sim").desc, col("vec_id"))))
-      .filter(col("rank") <= 5)
-      .groupBy((part :+ "true_label" :+ "label").map(col): _*)
-      .agg(count(lit(1)).as("n_votes"))
-      .withColumn("vr", row_number().over(
-        Window.partitionBy(part.map(col): _*)
-          .orderBy(col("n_votes").desc, col("label"))))
-      .filter(col("vr") === 1)
-
-    // exact side served from the shared once-per-corpus ground truth:
-    // the cached top-5 ordering is identical to the inline window's
-    // (same pairSim, same (sim DESC, vec_id) tie-break), so the vote
-    // stage consumes its rows directly
-    val exactPred = exactNeighbors(spark, dir)
-      .filter(col("query_id") < KnnProbeN && col("rank") <= 5)
-      .groupBy(col("query_id"), col("true_label"), col("label"))
-      .agg(count(lit(1)).as("n_votes"))
-      .withColumn("vr", row_number().over(
-        Window.partitionBy(col("query_id"))
-          .orderBy(col("n_votes").desc, col("label"))))
-      .filter(col("vr") === 1)
+    // exact side served from the shared once-per-corpus ground truth
+    val exactPred = vote(exactTop5Probes(spark, dir), Seq("query_id"))
       .select(col("query_id"), col("label").as("exact_pred"))
 
-    val np = Seq(1, 2).toDF("nprobe")
-    val qCells = broadcast(q).crossJoin(broadcast(np))
-      .select(col("nprobe"), col("query_id"), col("true_label"), col("qv"),
-        col("qnrm"), explode(expr("slice(cells, 1, nprobe)")).as("cell"))
-      .select(col("nprobe"), col("query_id"), col("true_label"), col("qv"),
-        col("qnrm"), col("cell.cid").as("cid"))
+    val qCells = probedCells(q)
+      .join(broadcast(nprobes(spark)), col("crk") <= col("nprobe"))
     val corpus = asg.select(col("cid"), col("vec_id"), col("label"),
       col("embedding"), col("nrm"))
-    val ivfPred = votePred(
-      broadcast(qCells).join(corpus, Seq("cid"))
-        .filter(col("vec_id") =!= col("query_id"))
-        .select(col("nprobe"), col("query_id"), col("true_label"), col("vec_id"),
-          col("label"), pairSim.as("sim")),
-      Seq("nprobe", "query_id"))
+    val part = Seq("nprobe", "query_id")
+    val ivfPred = vote(
+      topK(broadcast(qCells).join(corpus, Seq("cid"))
+          .filter(col("vec_id") =!= col("query_id"))
+          .select(col("nprobe"), col("query_id"), col("true_label"), col("vec_id"),
+            col("label"), pairSim.as("sim")),
+        5, part, bySim: _*),
+      part)
       .select(col("nprobe"), col("query_id"), col("true_label"),
         col("label").as("ivf_pred"))
 
@@ -1208,45 +1079,24 @@ object Similarity {
     * recall division is a double. Exact side is paid once on the bounded
     * sample (O(s·n)), the IVF side twice at r·n/k each. */
   def ivfRecall(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
     val asg = kmeansAssigned(spark, dir)
-      .withColumn("nrm", expr("sqrt(dot_product(embedding, embedding))"))
-    val q = asg.filter(col("vec_id") % 5 === 0 && col("vec_id") < 1000)
+    val q = asg.filter(recallSample(col("vec_id")))
       .select(col("vec_id").as("query_id"), col("embedding").as("qv"),
         col("nrm").as("qnrm"), col("cells"))
     val corpus = asg.select(col("cid"), col("vec_id"), col("embedding"), col("nrm"))
-    def top3(cands: DataFrame, part: Seq[String]): DataFrame = cands
-      .withColumn("rank", row_number().over(
-        Window.partitionBy(part.map(col): _*)
-          .orderBy(col("sim").desc, col("vec_id"))))
-      .filter(col("rank") <= 3)
     // exact top-3 from the shared ground-truth table (same ordering,
     // rank ≤ 3 prefix of the cached top-5)
     val exact3 = exactTop3Sample(spark, dir)
-    val np = Seq(1, 2).toDF("nprobe")
-    val qCells = broadcast(q).crossJoin(broadcast(np))
-      .select(col("nprobe"), col("query_id"), col("qv"), col("qnrm"),
-        explode(expr("slice(cells, 1, nprobe)")).as("cell"))
-      .select(col("nprobe"), col("query_id"), col("qv"), col("qnrm"),
-        col("cell.cid").as("cid"))
-    val ivf3 = top3(
-      broadcast(qCells).join(corpus, Seq("cid"))
+    val np = nprobes(spark)
+    val qCells = probedCells(q).join(broadcast(np), col("crk") <= col("nprobe"))
+    val ivf3 = topK(broadcast(qCells).join(corpus, Seq("cid"))
         .filter(col("vec_id") =!= col("query_id"))
         .select(col("nprobe"), col("query_id"), col("vec_id"), pairSim.as("sim")),
-      Seq("nprobe", "query_id")).select("nprobe", "query_id", "vec_id")
+      3, Seq("nprobe", "query_id"), bySim: _*)
+      .select("nprobe", "query_id", "vec_id")
     val ov = exact3.join(ivf3, Seq("query_id", "vec_id"))
       .groupBy("nprobe", "query_id").agg(count(lit(1)).as("hits"))
-    q.select("query_id").crossJoin(np)
-      .join(ov, Seq("nprobe", "query_id"), "left")
-      .withColumn("hits", coalesce(col("hits"), lit(0L)))
-      .groupBy("nprobe")
-      .agg(
-        count(lit(1)).as("n_queries"),
-        sum(col("hits")).as("n_hits"),
-        sum(when(col("hits") === 3L, 1L).otherwise(0L)).as("n_full"),
-        sum(when(col("hits") === 0L, 1L).otherwise(0L)).as("n_zero"))
-      .withColumn("recall_at_3",
-        col("n_hits").cast("double") / (col("n_queries") * 3))
+    recall3(q.select("query_id").crossJoin(np), ov, Seq("nprobe"))
       .orderBy("nprobe")
   }
 
@@ -1268,14 +1118,11 @@ object Similarity {
       .select(col("vec_id").as("query_id"), col("embedding").as("qv"),
         col("nrm").as("qnrm"))
     val c = emb.select(col("vec_id"), col("embedding"), col("nrm"))
-    val w = Window.partitionBy("query_id")
-    broadcast(q).join(c, col("vec_id") =!= col("query_id"))
-      .select(col("query_id"), col("vec_id"), pairSim.as("cos"))
-      .filter(col("cos") >= 0.2)
-      .withColumn("n_neighbors", count(lit(1)).over(w))
-      .withColumn("rk", row_number().over(
-        w.orderBy(col("cos").desc, col("vec_id"))))
-      .filter(col("rk") === 1)
+    topK(broadcast(q).join(c, col("vec_id") =!= col("query_id"))
+        .select(col("query_id"), col("vec_id"), pairSim.as("cos"))
+        .filter(col("cos") >= 0.2)
+        .withColumn("n_neighbors", count(lit(1)).over(Window.partitionBy("query_id"))),
+      1, Seq("query_id"), col("cos").desc, col("vec_id"))
       .select(col("query_id"), col("n_neighbors"),
         col("vec_id").as("best_vec"), col("cos").as("best_cos"))
       .orderBy("query_id")
@@ -1308,18 +1155,6 @@ object Similarity {
     "dedup_embedding_cosine" -> (embeddingNearDup _)
   )
 
-  /** ANN-recall evaluation: recall@3 of the hyperplane-LSH search
-    * ([[topkLsh]]) against the exact brute-force top-3, over a
-    * deterministic 20% query sample (vec_id % 5 = 0). This is the
-    * standard quality metric for any approximate index — the number that
-    * justifies (or vetoes) the n²→n²/256 cost cut the LSH path buys.
-    * Recall evaluation ALWAYS runs on a sample: the exact side is the
-    * all-pairs scan the index exists to avoid, so the sample is the only
-    * place it is ever paid.
-    *
-    * Exactness: both top-3 sets use the same sequential-fold cosines and
-    * vec_id tiebreaks as their parent queries, so the overlap counts are
-    * engine-exact; the only double is the final recall division. */
   /** Prefix dimensionality for [[matryoshkaRecall]] (16 of 64 dims =
     * 4× cheaper ranking FLOPs/bandwidth). */
   val MatryoshkaDims = 16
@@ -1342,11 +1177,10 @@ object Similarity {
     * and full sims are the same in-order IEEE folds the other sim
     * oracles pin, so even the double recalls hash-gate. */
   def matryoshkaRecall(spark: SparkSession, dir: String): DataFrame = {
-    val emb = Tables.embeddings(spark, dir)
-      .withColumn("nrm", expr("sqrt(dot_product(embedding, embedding))"))
+    val emb = normed(spark, dir)
       .withColumn("pre", expr(s"slice(embedding, 1, $MatryoshkaDims)"))
       .withColumn("pnrm", expr("sqrt(dot_product(pre, pre))"))
-    val q = emb.filter(col("vec_id") % 5 === 0 && col("vec_id") < 1000)
+    val q = emb.filter(recallSample(col("vec_id")))
       .select(col("vec_id").as("query_id"), col("embedding").as("qv"),
         col("nrm").as("qnrm"), col("pre").as("qpre"), col("pnrm").as("qpnrm"))
     val cands = emb.select("vec_id", "embedding", "nrm", "pre", "pnrm")
@@ -1354,23 +1188,19 @@ object Similarity {
     // exact full-dim top-3 from the shared once-per-corpus ground truth
     // (tiny bucketed table — cheap to scan for each recall variant)
     val exact3 = exactTop3Sample(spark, dir)
-    val shortlist = cands
-      .select(col("query_id"), col("vec_id"),
-        (expr("dot_product(qpre, pre)") / (col("qpnrm") * col("pnrm")))
-          .as("psim"))
-      .withColumn("rankp", row_number().over(
-        Window.partitionBy(col("query_id")).orderBy(col("psim").desc, col("vec_id"))))
-      .filter(col("rankp") <= MatryoshkaShortlist)
+    val shortlist = topK(cands
+        .select(col("query_id"), col("vec_id"),
+          (expr("dot_product(qpre, pre)") / (col("qpnrm") * col("pnrm")))
+            .as("psim")),
+      MatryoshkaShortlist, Seq("query_id"), col("psim").desc, col("vec_id"))
       .localCheckpoint() // fanned into the prefix-only and re-rank paths
-    val prefix3 = shortlist.filter(col("rankp") <= 3)
+    val prefix3 = shortlist.filter(col("rank") <= 3)
       .select("query_id", "vec_id")
-    val rerank3 = shortlist.select("query_id", "vec_id")
-      .join(emb.select(col("vec_id"), col("embedding"), col("nrm")), "vec_id")
-      .join(broadcast(q.select("query_id", "qv", "qnrm")), "query_id")
-      .select(col("query_id"), col("vec_id"), pairSim.as("sim"))
-      .withColumn("rank", row_number().over(
-        Window.partitionBy(col("query_id")).orderBy(col("sim").desc, col("vec_id"))))
-      .filter(col("rank") <= 3)
+    val rerank3 = topK(shortlist.select("query_id", "vec_id")
+        .join(emb.select(col("vec_id"), col("embedding"), col("nrm")), "vec_id")
+        .join(broadcast(q.select("query_id", "qv", "qnrm")), "query_id")
+        .select(col("query_id"), col("vec_id"), pairSim.as("sim")),
+      3, Seq("query_id"), bySim: _*)
       .select("query_id", "vec_id")
     def hits(sel: DataFrame, name: String): DataFrame =
       exact3.join(sel, Seq("query_id", "vec_id")).agg(count(lit(1)).as(name))
@@ -1384,37 +1214,37 @@ object Similarity {
           .as("recall_rerank"))
   }
 
+  /** ANN-recall evaluation: recall@3 of the hyperplane-LSH search
+    * ([[topkLsh]]) against the exact brute-force top-3, over a
+    * deterministic 20% query sample (vec_id % 5 = 0). This is the
+    * standard quality metric for any approximate index — the number that
+    * justifies (or vetoes) the n²→n²/256 cost cut the LSH path buys.
+    * Recall evaluation ALWAYS runs on a sample: the exact side is the
+    * all-pairs scan the index exists to avoid, so the sample is the only
+    * place it is ever paid.
+    *
+    * Exactness: both top-3 sets use the same sequential-fold cosines and
+    * vec_id tiebreaks as their parent queries, so the overlap counts are
+    * engine-exact; the only double is the final recall division. */
   def annRecall(spark: SparkSession, dir: String): DataFrame = {
     val emb = lshBucketed(spark, dir)
     // every 5th vector, capped to a BOUNDED sample (≤ 200 queries): a
     // RATE-sampled query set kept the exact side at q·n = n²/5 — the 10×
     // probe measured it 186× on 10× data. A fixed-size sample makes the
     // exact baseline O(n) while estimating the same corpus-wide recall.
-    val q = emb.filter(col("vec_id") % 5 === 0 && col("vec_id") < 1000)
+    val q = emb.filter(recallSample(col("vec_id")))
       .select(col("vec_id").as("query_id"), col("embedding").as("qv"),
         col("nrm").as("qnrm"), col("bucket").as("qbucket"))
-    def top3(cands: DataFrame): DataFrame = cands
-      .select(col("query_id"), col("vec_id"), pairSim.as("sim"))
-      .withColumn("rank", row_number().over(
-        Window.partitionBy(col("query_id")).orderBy(col("sim").desc, col("vec_id"))))
-      .filter(col("rank") <= 3)
-      .select("query_id", "vec_id")
     // exact top-3 from the shared once-per-corpus ground truth
     val exact3 = exactTop3Sample(spark, dir)
-    val lsh3 = top3(emb.join(broadcast(q),
-      col("bucket") === col("qbucket") && col("vec_id") =!= col("query_id")))
+    val lsh3 = topK(emb.join(broadcast(q),
+          col("bucket") === col("qbucket") && col("vec_id") =!= col("query_id"))
+        .select(col("query_id"), col("vec_id"), pairSim.as("sim")),
+      3, Seq("query_id"), bySim: _*)
+      .select("query_id", "vec_id")
     val ov = exact3.join(lsh3, Seq("query_id", "vec_id"))
       .groupBy("query_id").agg(count(lit(1)).as("hits"))
-    q.select("query_id")
-      .join(ov, Seq("query_id"), "left")
-      .withColumn("hits", coalesce(col("hits"), lit(0L)))
-      .agg(
-        count(lit(1)).as("n_queries"),
-        sum(col("hits")).as("n_hits"),
-        sum(when(col("hits") === 3L, 1L).otherwise(0L)).as("n_full"),
-        sum(when(col("hits") === 0L, 1L).otherwise(0L)).as("n_zero"))
-      .withColumn("recall_at_3",
-        col("n_hits").cast("double") / (col("n_queries") * 3))
+    recall3(q.select("query_id"), ov, Nil)
   }
 
   /** DuckDB mirror of [[lshBucketed]]'s bucket assignment (same md5 plane

@@ -184,32 +184,6 @@ object Unigram {
   def unigramViterbi(spark: SparkSession, dir: String): DataFrame =
     viterbiSegment(spark, wordVocab(spark, dir).localCheckpoint())
 
-  /** One hard-EM refinement round (Viterbi training — the hard-count
-    * variant of Kudo's E/M alternation, which uses forward–backward
-    * expected counts; hard counts keep every quantity an exact BIGINT so
-    * the round stays cross-engine gateable):
-    *
-    *   E — segment the vocabulary under the SEED inventory (round 1's
-    *       Viterbi) and count each piece's usage, weighted by word
-    *       frequency, with multiplicity;
-    *   M — rebuild the inventory from usage: multi-char pieces below
-    *       [[MinPieceCount]] usage drop out (Kudo's inventory pruning —
-    *       pieces that merely OCCUR but are never CHOSEN disappear),
-    *       single chars stay unconditionally (segmentability; zero usage
-    *       costs c2l(T₂) − 1, the maximal finite penalty), and costs are
-    *       re-quantized against the new total mass T₂;
-    *   then re-segment under the refined inventory.
-    *
-    * The re-estimated model concentrates probability on pieces the DP
-    * actually uses rather than all substrings that occur — the defining
-    * difference between a trainer and a scorer — and CAN change
-    * segmentations (UnigramEmSpec pins a vocab where a round-1 choice
-    * flips). Distribution shape is round 1's exactly: the E-step usage
-    * count is one explode of the segmented DISTINCT-word table (never
-    * per occurrence), both models are alphabet-bounded broadcast maps,
-    * segmentation is map-side DP — no shuffle beyond the vocab-sized
-    * usage aggregation, no iteration driver round-trips beyond the two
-    * model collects. */
   /** The corpus alphabet (every single character of every vocab word) —
     * invariant across EM rounds, computed once per trainer run. */
   private def alphabetOf(spark: SparkSession, vocab: DataFrame): Array[String] = {
@@ -243,6 +217,32 @@ object Unigram {
       usage.iterator.filter { case (p, c) => p.length > 1 && c >= MinPieceCount }
   }
 
+  /** One hard-EM refinement round (Viterbi training — the hard-count
+    * variant of Kudo's E/M alternation, which uses forward–backward
+    * expected counts; hard counts keep every quantity an exact BIGINT so
+    * the round stays cross-engine gateable):
+    *
+    *   E — segment the vocabulary under the SEED inventory (round 1's
+    *       Viterbi) and count each piece's usage, weighted by word
+    *       frequency, with multiplicity;
+    *   M — rebuild the inventory from usage: multi-char pieces below
+    *       [[MinPieceCount]] usage drop out (Kudo's inventory pruning —
+    *       pieces that merely OCCUR but are never CHOSEN disappear),
+    *       single chars stay unconditionally (segmentability; zero usage
+    *       costs c2l(T₂) − 1, the maximal finite penalty), and costs are
+    *       re-quantized against the new total mass T₂;
+    *   then re-segment under the refined inventory.
+    *
+    * The re-estimated model concentrates probability on pieces the DP
+    * actually uses rather than all substrings that occur — the defining
+    * difference between a trainer and a scorer — and CAN change
+    * segmentations (UnigramEmSpec pins a vocab where a round-1 choice
+    * flips). Distribution shape is round 1's exactly: the E-step usage
+    * count is one explode of the segmented DISTINCT-word table (never
+    * per occurrence), both models are alphabet-bounded broadcast maps,
+    * segmentation is map-side DP — no shuffle beyond the vocab-sized
+    * usage aggregation, no iteration driver round-trips beyond the two
+    * model collects. */
   private[operators] def emSegment(spark: SparkSession, vocab: DataFrame): DataFrame = {
     val kept2 = refineKept(spark, vocab, seedCosts(spark, vocab),
       alphabetOf(spark, vocab))

@@ -559,7 +559,6 @@ object StreamingPipelines {
       .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.EventTimeTimeout)(update)
   }
 
-  /** Bounded Misra-Gries summary for one token shard. */
   /** Streaming KMV state: the ≤ K smallest DISTINCT portable user hashes
     * seen so far for one event type (ascending). */
   case class KmvState(hashes: List[Long], seen: Long)
@@ -757,6 +756,7 @@ object StreamingPipelines {
         OutputMode.Update, GroupStateTimeout.NoTimeout)(update)
   }
 
+  /** Bounded Misra-Gries summary for one token shard. */
   case class MgSummary(counts: Map[String, Long], processed: Long)
   /** One summary row per (shard, surviving token) after a trigger. */
   case class MgRow(shard: Int, token: String, mg_count: Long, shard_processed: Long)

@@ -108,65 +108,6 @@ class Round5bSpec extends SparkSpec {
     assert(totalCf == expected)
   }
 
-  test("product quantization equals a sequential in-memory PQ reference " +
-    "(codes exactly, MSE within float tolerance) and Lloyd did not regress") {
-    val out = Similarity.productQuantize(spark, sfDir).collect()
-      .map(r => r.getAs[Long]("vec_id") ->
-        ((0 to 3).map(s => r.getAs[Int](s"code$s")), r.getAs[Double]("mse"))).toMap
-    val vecs = Tables.embeddings(spark, sfDir)
-      .select(col("vec_id"), col("embedding")).collect()
-      .map(r => r.getAs[Long]("vec_id") ->
-        r.getSeq[Float](1).map(_.toDouble).toArray)
-      .sortBy(_._1)
-    def sub(v: Array[Double], s: Int) = v.slice(s * 16, s * 16 + 16)
-    def d2(a: Array[Double], b: Array[Double]) =
-      a.zip(b).map { case (x, y) => (x - y) * (x - y) }.sum
-    // Sequential reference: same init, one Lloyd step with fixed-point
-    // means, final assignment; ties break on lowest cid.
-    def train(s: Int): Array[(Int, Array[Double])] = {
-      val init = vecs.take(4).map { case (id, v) => (id.toInt, sub(v, s)) }
-      val asg1 = vecs.map { case (_, v) =>
-        init.minBy { case (cid, c) => (d2(sub(v, s), c), cid) }._1 -> sub(v, s) }
-      asg1.groupBy(_._1).toSeq.map { case (cid, members) =>
-        val n = members.length
-        val mean = (0 until 16).map { k =>
-          members.map(m => math.floor(m._2(k) * 1e6 + 0.5).toLong).sum
-            .toDouble / 1e6 / n
-        }.toArray
-        (cid, mean)
-      }.sortBy(_._1).toArray
-    }
-    val books = (0 to 3).map(train)
-    var initTotal = 0.0; var trainedTotal = 0.0
-    vecs.foreach { case (id, v) =>
-      val expectCodes = (0 to 3).map { s =>
-        books(s).minBy { case (cid, c) => (d2(sub(v, s), c), cid) }._1 }
-      val (gotCodes, gotMse) = out(id)
-      assert(gotCodes == expectCodes, s"codes mismatch for vec $id")
-      val expMse = (0 to 3).map(s =>
-        d2(sub(v, s), books(s).find(_._1 == gotCodes(s)).get._2)).sum / 64.0
-      assert(math.abs(gotMse - expMse) < 1e-9, s"mse mismatch for vec $id")
-      trainedTotal += gotMse
-      initTotal += (0 to 3).map(s => (0 to 3).map(cid =>
-        d2(sub(v, s), sub(vecs(cid)._2, s))).min).sum / 64.0
-    }
-    assert(trainedTotal <= initTotal + 1e-9, "Lloyd step regressed the objective")
-  }
-
-  test("ADC search: 3 ranked rows per query, adc nondecreasing in rank, " +
-    "and adc >= 0") {
-    val adc = Similarity.topkPqAdc(spark, sfDir).collect()
-    val byQ = adc.groupBy(_.getAs[Long]("query_id"))
-    assert(byQ.size == 10)
-    byQ.foreach { case (_, rows) =>
-      val sorted = rows.sortBy(_.getAs[Int]("rank"))
-      assert(sorted.map(_.getAs[Int]("rank")).sameElements(Array(1, 2, 3)))
-      val ds = sorted.map(_.getAs[Double]("adc"))
-      assert(ds.forall(_ >= 0.0))
-      assert(ds.sameElements(ds.sorted), "adc not nondecreasing in rank")
-    }
-  }
-
   test("RFM: scores in 1..4, segment rules hold, purchases bounded by events") {
     val rfm = Behavioral.rfmSegments(spark, sfDir).collect()
     assert(rfm.length == Tables.events(spark, sfDir)

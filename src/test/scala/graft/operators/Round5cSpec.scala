@@ -96,21 +96,6 @@ class Round5cSpec extends SparkSpec {
     }
   }
 
-  test("ANN recall report: accounting bounds hold and recall is the " +
-    "hit ratio") {
-    val r = Similarity.annRecall(spark, sfDir).head()
-    val nq = r.getAs[Long]("n_queries")
-    val hits = r.getAs[Long]("n_hits")
-    val full = r.getAs[Long]("n_full")
-    val zero = r.getAs[Long]("n_zero")
-    assert(nq > 0)
-    assert(hits >= 0 && hits <= 3 * nq)
-    assert(full + zero <= nq)
-    assert(hits >= 3 * full) // full-recall queries contribute 3 each
-    assert(math.abs(r.getAs[Double]("recall_at_3") -
-      hits.toDouble / (3 * nq)) < 1e-12)
-  }
-
   test("edit-1 linkage equals the brute-force all-pairs join on the " +
     "supplier name dictionary") {
     val fast = Dedup.edit1Names(spark, sfDir)

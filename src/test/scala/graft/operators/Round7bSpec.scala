@@ -4,7 +4,7 @@ import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
 
-/** Round-7 second wave: TextRank keywords, k-NN label classification,
+/** Round-7 second wave: TextRank keywords,
   * Theil-Sen robust trend, normalized-exact dedup, salted skew join
   * parity, and peak session concurrency. Each test recomputes the
   * operator's result independently on the driver (or proves a declared
@@ -45,38 +45,6 @@ class Round7bSpec extends SparkSpec {
     val got = TextAnalysis.textrank(spark, sfDir)
       .select("word", "wdeg", "pr").as[(String, Long, Long)].collect().toSeq
     assert(got == expected)
-  }
-
-  // ---- k-NN classification ----
-
-  test("knn classification matches a driver recompute of vote and " +
-    "tie-break for the first queries") {
-    val emb = graft.core.Tables.embeddings(spark, sfDir)
-      .select("vec_id", "embedding", "label")
-      .as[(Long, Array[Float], Int)].collect()
-    def cos(a: Array[Float], b: Array[Float]): Double = {
-      var dot = 0.0; var na = 0.0; var nb = 0.0
-      var i = 0
-      while (i < a.length) {
-        dot += a(i).toDouble * b(i).toDouble
-        na += a(i).toDouble * a(i).toDouble
-        nb += b(i).toDouble * b(i).toDouble
-        i += 1
-      }
-      dot / (math.sqrt(na) * math.sqrt(nb))
-    }
-    val got = Similarity.knnClassify(spark, sfDir)
-      .select("query_id", "pred_label", "n_votes")
-      .as[(Long, Int, Long)].collect().map(r => r._1 -> (r._2, r._3)).toMap
-    emb.take(5).foreach { case (qid, qv, _) =>
-      val top5 = emb.filter(_._1 != qid)
-        .map { case (vid, v, lbl) => (vid, lbl, cos(qv, v)) }
-        .sortBy { case (vid, _, s) => (-s, vid) }.take(5)
-      val votes = top5.groupBy(_._2).view.mapValues(_.length.toLong).toSeq
-      val (predLabel, nVotes) = votes.minBy { case (l, n) => (-n, l) }
-      assert(got(qid) == ((predLabel, nVotes)),
-        s"query $qid: got ${got(qid)}, expected ($predLabel, $nVotes)")
-    }
   }
 
   // ---- Theil-Sen ----
