@@ -23,14 +23,22 @@ import graft.core.Tables
   *
   * Character-unit decision (deliberate, documented divergence): the
   * reference counts BYTES (`strlen`, tasks.c:14/54/99); these pipelines
-  * count CODEPOINTS (`length`, and `others` = numChars − letters − digits
-  * in CharClassCounts). The two agree on any ASCII corpus — verified
-  * byte-exact against all three golden outputs (GoldenParitySpec; the
-  * sample corpus is pure ASCII) — and codepoints are the right unit for a
-  * multilingual documents table: one é is one character, not two bytes.
-  * The DuckDB oracle's `length` is also codepoints, keeping the
+  * count CHARACTERS (`num_chars` in task3, and `others` = characters −
+  * letters − digits in CharClassCounts). The two agree on any ASCII corpus —
+  * verified byte-exact against all three golden outputs (GoldenParitySpec;
+  * the sample corpus is pure ASCII) — and characters are the right unit
+  * for a multilingual documents table: one é is one character, not two
+  * bytes. The DuckDB oracle's `length` also counts characters, keeping the
   * correctness gate aligned. Byte-parity on non-ASCII input, if ever
   * needed, is `octet_length` on both sides.
+  *
+  * The rule: one character per byte outside 0x80–0xBF (a UTF-8
+  * continuation byte). On valid UTF-8 that is the code point count (Spark's
+  * `length`). `DocSource` does not validate UTF-8, and on invalid input the
+  * rule still counts every byte exactly once: the bytes `E9 61 62` (a
+  * 3-byte lead followed by two ASCII letters) are 3 characters, 2 of them
+  * letters and 1 other, where Spark's `length` reads one 3-byte character
+  * and would make `others` −1.
   */
 object MapReduceTasks {
 
@@ -58,7 +66,7 @@ object MapReduceTasks {
       .orderBy("key")
 
   /** map3 — keyed row generator (tasks.c:98-133): per document, emits the
-    * keys `we, love, cs, 3210` cycled `strlen(content) % 49` times with
+    * keys `we, love, cs, 3210` cycled `num_chars(content) % 49` times with
     * value 1, then sum-reduces. The generator shape is kept (`explode` = the
     * UDTF slot) but each document contributes its partial count directly
     * instead of `4*(len%49)` unit rows — same reduced output, O(4) rows per
@@ -66,7 +74,7 @@ object MapReduceTasks {
   def task3(docs: DataFrame): DataFrame =
     docs.select(
         explode(array(lit("we"), lit("love"), lit("cs"), lit("3210"))).as("key"),
-        (length(col("content")) % 49).cast("long").as("value"))
+        (expr("num_chars(content)") % 49).cast("long").as("value"))
       .groupBy("key")
       .agg(sum("value").as("value"))
       .orderBy("key")

@@ -88,6 +88,7 @@ class ExecutionModeSpec extends SparkSpec with AdaptiveSparkPlanHelper {
   private val cases: Seq[(String, DataFrame => DataFrame)] = Seq(
     "char_class_counts" -> sel("char_class_counts(s)"),
     "letter_histogram" -> sel("letter_histogram(s)"),
+    "num_chars" -> sel("num_chars(s)"),
     "cosine_sim" -> sel("cosine_sim(fa, fb)", "cosine_sim(fa, fa)"),
     "dot_product" -> sel("dot_product(fa, fb)"),
     "sq_dist" -> sel("sq_dist(fa, fb)", "sq_dist(da, fa)", "sq_dist(da, da)"),
